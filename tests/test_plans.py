@@ -212,3 +212,30 @@ def test_arg_minmax_mapside_topk(spark):
     i_exch = p.index("Exchange hashpartitioning")
     assert re.search(r"WindowGroupLimit.*Partial", p[i_exch:]), \
         "no map-side partial window-group limit below the exchange"
+
+
+def test_plan_shapes_match_golden(spark):
+    """Every registry query's physical-plan node counts (Exchange, Sort,
+    Window, joins, aggregates, Union, Python evals, CollectMetrics) equal
+    plans/shape.json, so "same plan" across a refactor is a test, not a
+    reviewer reading a diff. An intended plan change regenerates the file
+    and commits the diff."""
+    import json
+
+    from tools import capture_plans as cp
+
+    with open(cp.SHAPE_PATH) as fh:
+        golden = json.load(fh)
+    got = cp.capture(spark, cp.SHAPE_SF_DIR)
+    diffs = []
+    for name in sorted(set(golden) | set(got)):
+        old, new = golden.get(name), got.get(name)
+        if old is None or new is None:
+            diffs.append(f"{name}: {'new query' if old is None else 'gone'}")
+        elif old != new:
+            delta = ", ".join(f"{n} {old[n]}->{new[n]}" for n in cp.NODES
+                              if old.get(n) != new.get(n))
+            diffs.append(f"{name}: {delta}")
+    assert not diffs, ("plan shapes differ from plans/shape.json:\n  "
+                       + "\n  ".join(diffs)
+                       + f"\nif intended, regenerate with: {cp.REGEN_CMD}")

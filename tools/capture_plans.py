@@ -1,59 +1,82 @@
-"""Capture .explain('formatted') for declared queries into plans/<tag>/.
+"""Write plans/shape.json: per-query physical-plan node counts, the
+plan-shape golden that tests/test_plans.py checks.
 
 Usage:
-    python tools/capture_plans.py <tag> [q1,q2,...]
+    python tools/capture_plans.py [sf_dir]
 
-Writes plans/<tag>/<query>_<suffix>.txt (suffix from $PLAN_SUFFIX,
-default 'before'). With no query list, captures every declared query.
-Queries whose construction runs eager jobs (censuses, localCheckpoints)
-still only PLAN here — nothing is executed beyond what construction
-itself triggers.
+For every registry query in ``__spark_entry__.queries()`` (default
+sf_dir: the test scale, /root/testdata/sf0.001) it counts the nodes of
+``executedPlan().toString()`` named in ``NODES``. Queries are only
+PLANNED: nothing runs beyond the eager jobs their construction itself
+submits (censuses, localCheckpoints). The counts do not depend on the
+core count or the process, so a refactor that claims "same plan" must
+leave the file byte-identical; rerun this after an intended plan change
+and commit the diff.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import sys
+from collections import Counter
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+SHAPE_PATH = os.path.join(REPO, "plans", "shape.json")
+SHAPE_SF_DIR = "/root/testdata/sf0.001"
+REGEN_CMD = "python tools/capture_plans.py"
+
+NODES = ("Exchange", "Sort", "Window", "SortMergeJoin", "BroadcastHashJoin",
+         "HashAggregate", "Union", "ArrowEvalPython", "BatchEvalPython",
+         "CollectMetrics")
+
+# one node per line: tree glyphs, an optional codegen stage tag "*(n) ",
+# then the node name
+_NODE_RE = re.compile(r"^[ \t:|+\-]*(?:\*\(\d+\) )?(\w+)", re.M)
+
+
+def node_counts(plan: str) -> dict:
+    """{node: count} over ``NODES`` for one plan string. Names match as
+    whole words, so ReusedExchange / BroadcastExchange / WindowGroupLimit
+    are not counted as Exchange / Window."""
+    seen = Counter(m.group(1) for m in _NODE_RE.finditer(plan))
+    return {n: seen[n] for n in NODES}
+
+
+def query_shape(spark, name: str, sf_dir: str = SHAPE_SF_DIR) -> dict:
+    import __spark_entry__ as entry_mod
+    df = entry_mod.queries()[name](spark, sf_dir)
+    return node_counts(df._jdf.queryExecution().executedPlan().toString())
+
+
+def capture(spark, sf_dir: str = SHAPE_SF_DIR) -> dict:
+    import __spark_entry__ as entry_mod
+    return {name: query_shape(spark, name, sf_dir)
+            for name in sorted(entry_mod.queries())}
+
+
+def dumps(shapes: dict) -> str:
+    """The file's canonical text: one query per line, stable order."""
+    body = ",\n".join(f"  {json.dumps(k)}: {json.dumps(shapes[k])}"
+                      for k in sorted(shapes))
+    return "{\n" + body + "\n}\n"
 
 
 def main():
-    tag = sys.argv[1] if len(sys.argv) > 1 else "r14"
-    names = ([n.strip() for n in sys.argv[2].split(",") if n.strip()]
-             if len(sys.argv) > 2 else None)
-    suffix = os.environ.get("PLAN_SUFFIX", "before")
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else SHAPE_SF_DIR
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out_dir = os.path.join(repo, "plans", tag)
-    os.makedirs(out_dir, exist_ok=True)
-
-    import __spark_entry__ as entry_mod
     from omigo_data_analytics_spark import get_spark
     spark = get_spark("omigo_spark_plans", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entry_mod.queries()
-    todo = names if names is not None else list(qs)
-    n_ok = 0
-    for name in todo:
-        if name not in qs:
-            print(f"# unknown query: {name}", file=sys.stderr)
-            continue
-        try:
-            df = qs[name](spark, sf_dir)
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode
-                .fromString("formatted"))
-        except Exception as e:
-            plan = f"ERROR capturing plan: {type(e).__name__}: {e}"
-            print(f"# plan error {name}: {type(e).__name__}: {e}",
-                  file=sys.stderr)
-        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as fh:
-            fh.write(plan)
-        n_ok += 1
-    print(f"captured {n_ok} plans -> {out_dir} (suffix={suffix})")
+    shapes = capture(spark, sf_dir)
     spark.stop()
+    os.makedirs(os.path.dirname(SHAPE_PATH), exist_ok=True)
+    with open(SHAPE_PATH, "w") as fh:
+        fh.write(dumps(shapes))
+    print(f"wrote {len(shapes)} query shapes -> {SHAPE_PATH}")
 
 
 if __name__ == "__main__":
