@@ -189,7 +189,7 @@ def asof_join(left, right, on: list[str] | str, left_time: str,
     if direction == "nearest":
         u = _asof_union(ldf, rdf, keys, left_time, rt, r_payload)
         carried, pick = _asof_nearest(u, keys, tb, tolerance_sec,
-                                      time_buckets_sec)
+                                      time_buckets_sec, hot_key_rows)
     else:
         # forward as-of is backward as-of on negated time
         sign = F.lit(1.0) if direction == "backward" else F.lit(-1.0)
@@ -332,7 +332,8 @@ def _asof_tiebreak(tiebreak_cols, r_payload):
     return [F.col("__r__").getField(c) for c in tiebreak_cols]
 
 
-def _asof_nearest(u, keys, tb, tolerance_sec, time_buckets_sec=None):
+def _asof_nearest(u, keys, tb, tolerance_sec, time_buckets_sec=None,
+                  hot_key_rows=None):
     """Nearest-match as-of over the tagged union ``u``: both directional
     carries over ONE union — the backward and forward windows share the
     hash partitioning (one Exchange, two Sorts) — then a map-side pick
@@ -344,7 +345,12 @@ def _asof_nearest(u, keys, tb, tolerance_sec, time_buckets_sec=None):
     backward carry on NEGATED time — (-t asc, side, tb) is exactly the
     (t desc, side, tb) window order, and max_by over the negated
     struct picks the same winner — so one helper serves both; the pick
-    logic is unchanged."""
+    logic is unchanged.
+
+    Without ``time_buckets_sec``, ``hot_key_rows`` arms the hot-key
+    watch as on the directional carry; its row counter rides the
+    backward window (computed last, so the counter's Window collapses
+    into it and needs no Sort of its own)."""
     if time_buckets_sec is not None:
         span = float(time_buckets_sec)
         c1 = _asof_carry_bucketed(u, keys, tb, span,
@@ -365,19 +371,23 @@ def _asof_nearest(u, keys, tb, tolerance_sec, time_buckets_sec=None):
         # tiebreak ASC in BOTH windows: among equal-time right rows,
         # last() picks the max tiebreak tuple in each direction, so the
         # backward and forward carries agree on the winner of a tie
-        wb = (Window.partitionBy(*map(qcol, keys))
-              .orderBy("__t__", "__side__", *tb)
-              .rowsBetween(*frame))
+        wb_base = (Window.partitionBy(*map(qcol, keys))
+                   .orderBy("__t__", "__side__", *tb))
+        wb = wb_base.rowsBetween(*frame)
         wf = (Window.partitionBy(*map(qcol, keys))
               .orderBy(F.col("__t__").desc(), "__side__", *tb)
               .rowsBetween(*frame))
-        sel = ["*",
-               F.last("__r__", ignorenulls=True).over(wb).alias("__b__"),
-               F.last("__r__", ignorenulls=True).over(wf).alias("__f__")]
         rt_col = F.when(F.col("__side__") == 0, F.col("__t__"))
-        sel.append(F.last(rt_col, ignorenulls=True).over(wb).alias("__bt__"))
-        sel.append(F.last(rt_col, ignorenulls=True).over(wf).alias("__ft__"))
-        carried = u.select(*sel).where(F.col("__side__") == 1)
+        carried = (u.select(
+            "*",
+            F.last("__r__", ignorenulls=True).over(wf).alias("__f__"),
+            F.last(rt_col, ignorenulls=True).over(wf).alias("__ft__"))
+            .select(
+            "*",
+            F.last("__r__", ignorenulls=True).over(wb).alias("__b__"),
+            F.last(rt_col, ignorenulls=True).over(wb).alias("__bt__")))
+        carried = _watch_hot_keys(carried, wb_base, "asof_join",
+                                  hot_key_rows).where(F.col("__side__") == 1)
 
     bd = F.col("__t__") - F.col("__bt__")
     fd = F.col("__ft__") - F.col("__t__")

@@ -251,3 +251,35 @@ def test_rolling_aggregate_overflow_raises(spark):
     with pytest.raises(Exception, match="decimal overflow"):
         (TS.rolling_aggregate(df, "k", "t", ["v"], ["mean"], window_rows=2)
          .df.collect())
+
+
+def test_asof_nearest_plain_carry_arms_hot_key_watch(spark):
+    """direction='nearest' honours hot_key_rows on the plain carry like
+    the directional carries do: the watch's row counter rides the
+    backward window (no Sort of its own) and a key group at the
+    threshold warns on the first action; results are unchanged."""
+    import time
+    import warnings
+
+    left = OmigoDF(spark.createDataFrame(
+        [("k", float(i)) for i in range(30)], ["k", "t"]))
+    right = OmigoDF(spark.createDataFrame(
+        [("k", float(i) + 0.5, i) for i in range(30)], ["k", "t", "v"]))
+    out = TS.asof_join(left, right, "k", "t", direction="nearest",
+                       hot_key_rows=20)
+    plan = out.df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("CollectMetrics") == 1
+    assert plan.count("Sort [") == 2  # backward + forward windows only
+    with warnings.catch_warnings(record=True) as rec:
+        warnings.simplefilter("always")
+        rows = {r["t"]: r["r:v"] for r in out.df.collect()}
+        # equidistant t=5.0 prefers the backward match (t=4.5 -> v=4);
+        # t=0.0 has only the forward match (t=0.5 -> v=0)
+        assert rows[5.0] == 4 and rows[0.0] == 0
+        deadline = time.time() + 15.0
+        while time.time() < deadline and not any(
+                "asof_join: a key group holds 60" in str(w.message)
+                for w in rec):
+            time.sleep(0.25)
+        assert any("asof_join: a key group holds 60" in str(w.message)
+                   for w in rec)
