@@ -93,9 +93,13 @@ def ensure_min_parallelism(df, min_parts: int | None = None):
     the probe would finalize AQE query stages — eagerly executing every
     upstream shuffle before the operator's own action — and the
     repartition it guards would discard AQE's coalesced partitioning.
-    There the plan is returned untouched: the upstream shuffle already
-    ran at ``spark.sql.shuffle.partitions`` (sized to cores by
-    get_spark / spark-submit), so parallelism is already guaranteed.
+    There the plan is returned untouched, and parallelism is NOT
+    guaranteed: the shuffle writes ``spark.sql.shuffle.partitions``
+    partitions, but AQE partition coalescing may merge small ones
+    (below ``spark.sql.adaptive.coalescePartitions.minPartitionSize``)
+    down to a single reduce task. Widening there would cost an eager
+    stage run per call, so the trade is accepted; a caller that needs
+    the width after a small shuffle repartitions explicitly.
     Only shuffle exchanges count: a BroadcastExchange never
     repartitions the probe side (a corpus scan broadcast-joined to a
     small dim is still single-task if the scan was one split), so the
