@@ -332,8 +332,8 @@ def _asof_tiebreak(tiebreak_cols, r_payload):
     return [F.col("__r__").getField(c) for c in tiebreak_cols]
 
 
-def _asof_nearest(u, keys, tb, tolerance_sec, time_buckets_sec=None,
-                  hot_key_rows=None):
+def _asof_nearest(u, keys, tb, tolerance_sec, time_buckets_sec,
+                  hot_key_rows):
     """Nearest-match as-of over the tagged union ``u``: both directional
     carries over ONE union — the backward and forward windows share the
     hash partitioning (one Exchange, two Sorts) — then a map-side pick

@@ -226,7 +226,7 @@ def test_plan_shapes_match_golden(spark):
 
     with open(cp.SHAPE_PATH) as fh:
         golden = json.load(fh)
-    got = cp.capture(spark, cp.SHAPE_SF_DIR)
+    got = cp.capture(spark)
     diffs = []
     for name in sorted(set(golden) | set(got)):
         old, new = golden.get(name), got.get(name)

@@ -2,16 +2,15 @@
 plan-shape golden that tests/test_plans.py checks.
 
 Usage:
-    python tools/capture_plans.py [sf_dir]
+    python tools/capture_plans.py
 
-For every registry query in ``__spark_entry__.queries()`` (default
-sf_dir: the test scale, /root/testdata/sf0.001) it counts the nodes of
-``executedPlan().toString()`` named in ``NODES``. Queries are only
-PLANNED: nothing runs beyond the eager jobs their construction itself
-submits (censuses, localCheckpoints). The counts do not depend on the
-core count or the process, so a refactor that claims "same plan" must
-leave the file byte-identical; rerun this after an intended plan change
-and commit the diff.
+For every registry query in ``__spark_entry__.queries()`` at sf0.001 it
+counts the nodes of ``executedPlan().toString()`` named in ``NODES``.
+Queries are only PLANNED: nothing runs beyond the eager jobs their
+construction itself submits (censuses, localCheckpoints). The counts do
+not depend on the core count or the process, so a refactor that claims
+"same plan" must leave the file byte-identical; rerun this after an
+intended plan change and commit the diff.
 """
 
 from __future__ import annotations
@@ -46,16 +45,12 @@ def node_counts(plan: str) -> dict:
     return {n: seen[n] for n in NODES}
 
 
-def query_shape(spark, name: str, sf_dir: str = SHAPE_SF_DIR) -> dict:
+def capture(spark) -> dict:
     import __spark_entry__ as entry_mod
-    df = entry_mod.queries()[name](spark, sf_dir)
-    return node_counts(df._jdf.queryExecution().executedPlan().toString())
-
-
-def capture(spark, sf_dir: str = SHAPE_SF_DIR) -> dict:
-    import __spark_entry__ as entry_mod
-    return {name: query_shape(spark, name, sf_dir)
-            for name in sorted(entry_mod.queries())}
+    qs = entry_mod.queries()
+    return {name: node_counts(qs[name](spark, SHAPE_SF_DIR)._jdf
+                              .queryExecution().executedPlan().toString())
+            for name in sorted(qs)}
 
 
 def dumps(shapes: dict) -> str:
@@ -66,14 +61,12 @@ def dumps(shapes: dict) -> str:
 
 
 def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else SHAPE_SF_DIR
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     from omigo_data_analytics_spark import get_spark
     spark = get_spark("omigo_spark_plans", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    shapes = capture(spark, sf_dir)
+    shapes = capture(spark)
     spark.stop()
-    os.makedirs(os.path.dirname(SHAPE_PATH), exist_ok=True)
     with open(SHAPE_PATH, "w") as fh:
         fh.write(dumps(shapes))
     print(f"wrote {len(shapes)} query shapes -> {SHAPE_PATH}")
