@@ -61,9 +61,8 @@ def dumps(shapes: dict) -> str:
 
 
 def main():
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     from omigo_data_analytics_spark import get_spark
-    spark = get_spark("omigo_spark_plans", cpus=cpus)
+    spark = get_spark("omigo_spark_plans")
     spark.sparkContext.setLogLevel("ERROR")
     shapes = capture(spark)
     spark.stop()

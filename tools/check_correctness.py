@@ -83,7 +83,7 @@ def main():
     import __spark_entry__ as entry_mod
     from omigo_data_analytics_spark import get_spark
 
-    spark = get_spark("correctness", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark("correctness")
     # robustness sweeps (r12): SPARK_GRAFT_CONF="k=v;k=v" overrides
     # runtime confs so the same battery can run AQE-off / odd
     # shuffle-partition postures without a separate harness

@@ -78,8 +78,7 @@ def timed(label, fn):
 
 
 def main():
-    spark = get_spark("skew_probe", cpus=int(os.environ.get(
-        "SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("skew_probe")
     dim = OmigoDF(spark.range(N_KEYS).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("grp")))
 

@@ -61,8 +61,7 @@ def timed(label, fn, results):
 
 
 def main():
-    spark = get_spark("wide_probe", cpus=int(os.environ.get(
-        "SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("wide_probe")
     build_fixture(spark)
     d = OmigoDF(spark.read.parquet(FIXTURE))
     int_cols = [f"c{i:04d}" for i in range(2, N_COLS, 2)]
