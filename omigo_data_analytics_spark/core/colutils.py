@@ -111,3 +111,12 @@ def qcol(name: str):
     from pyspark.sql import functions as F
 
     return F.col(quote(name))
+
+
+def aliased(side: str, name: str):
+    """Column ``name`` of the join side aliased ``side``, the name QUOTED:
+    ``F.col(f"{side}.{name}")`` parses a dot or backtick in a user column
+    as a struct access or a syntax error (r13 hostile-name sweep)."""
+    from pyspark.sql import functions as F
+
+    return F.col(side + "." + quote(name))

@@ -17,6 +17,11 @@ resolves the moment ``localCheckpoint()`` returns — verified: resolves in
 <50 ms, including AQE empty-relation-propagated plans and calls from
 worker threads). One job per round, zero extra passes over the blocks.
 
+The eager censuses use the same idiom (the ordered carries' hot-key
+router, ``ngram_jaccard_pairs``' DF cap): ``keep`` observes the counts
+below a threshold filter and checkpoints only the hot set, so one job
+yields both the set and the counts that decide the plan.
+
 The observation read cannot hang: ``Observation.get`` blocks only until
 the observed dataset's first action completes, and we call it strictly
 AFTER the eager checkpoint (that first action) has returned. If the
@@ -25,30 +30,41 @@ checkpoint itself fails, the exception propagates before any read.
 
 from __future__ import annotations
 
+import logging
 import threading
 import time
 from collections import deque
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.observation import Observation
 
 
 def checkpoint_with_metrics(
         df: DataFrame,
-        metrics: dict[str, Column]) -> tuple[DataFrame, dict]:
+        metrics: dict[str, Column],
+        keep: Column | None = None) -> tuple[DataFrame, dict]:
     """Eagerly localCheckpoint ``df`` and return ``(checkpointed_df,
     observed_metrics)`` where the metrics (a name -> aggregate-Column
     mapping, e.g. ``{"n": F.count(F.lit(1))}``) are computed BY the
     checkpoint's materialization job itself — no separate terminator job.
+
+    ``keep`` (a boolean Column over ``df``) filters the checkpoint ABOVE
+    the observation: the metrics see every row of ``df`` while the
+    checkpoint stores only the kept rows — a census that counts every
+    group but materializes just the hot set, in one job. It must not
+    fold to a literal false (the optimizer would prune the observed
+    subtree and the metrics would never fill).
 
     Metric expressions must be deterministic aggregates over ``df``'s
     columns (the ``observe`` contract). Over an empty frame, ``count``
     metrics read 0 and value aggregates read None — same as the separate
     aggregate they replace."""
     obs = Observation()
-    ck = (df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
-            .localCheckpoint())
-    return ck, obs.get
+    ck = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
+    if keep is not None:
+        ck = ck.where(keep)
+    return ck.localCheckpoint(), obs.get
 
 
 # --------------------------------------------------------------- async form
@@ -58,26 +74,62 @@ def checkpoint_with_metrics(
 # Zero extra jobs, zero extra scans; a plan that is never executed simply
 # ages out of the bounded registry. The poller reads the JVM Observation
 # non-blockingly (getRowOrEmpty) so nothing ever parks on an unexecuted
-# plan.
+# plan. That read is not public PySpark API, so each watch first probes
+# it; a PySpark without it gets no watch (the frame goes back
+# unobserved) rather than a poller that could fail or block.
 
 _WATCH_MAX = 256
 _POLL_SEC = 0.5
 _watches: deque = deque(maxlen=_WATCH_MAX)
 _watch_lock = threading.Lock()
 _poller_alive = False
+_logged: set[str] = set()
+_log = logging.getLogger(__name__)
+
+
+def _log_once(key: str, msg: str, *args, exc_info=False) -> None:
+    """Log ``msg`` the first time ``key`` is seen: a diagnostic that keeps
+    failing must neither flood the log nor fail silently."""
+    with _watch_lock:
+        if key in _logged:
+            return
+        _logged.add(key)
+    _log.warning(msg, *args, exc_info=exc_info)
+
+
+def _nonblocking_read(obs: Observation):
+    """The observation's non-blocking row read (a callable returning a
+    JVM Option), or None when this PySpark's Observation lacks the
+    private ``_jo.getRowOrEmpty`` the poller relies on. Probed once per
+    watch: before any action the Option is simply empty."""
+    try:
+        read = obs._jo.getRowOrEmpty
+        read().isDefined()
+        return read
+    except (AttributeError, Py4JError):
+        return None
 
 
 def observe_async(df: DataFrame, metrics: dict[str, Column],
                   callback) -> DataFrame:
     """Return ``df`` with ``metrics`` attached via ``observe()``;
     ``callback(metrics_dict)`` runs on a shared daemon thread after the
-    returned frame's first action completes. Callback errors are
-    swallowed (a diagnostic must never fail the caller's query)."""
+    returned frame's first action completes. A callback error never
+    reaches the caller's query; it is logged once per callback. When
+    the non-blocking read is unavailable, ``df`` comes back unobserved
+    and the callback never runs."""
     global _poller_alive
     obs = Observation()
     out = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
+    read = _nonblocking_read(obs)
+    if read is None:
+        _log_once("observe_async:no-read",
+                  "observe_async: this PySpark's Observation has no "
+                  "non-blocking read (_jo.getRowOrEmpty); asynchronous "
+                  "diagnostics are disabled")
+        return df
     with _watch_lock:
-        _watches.append((obs, callback))
+        _watches.append((obs, read, callback))
         if not _poller_alive:
             _poller_alive = True
             threading.Thread(target=_poll_loop, daemon=True,
@@ -96,19 +148,22 @@ def _poll_loop():
                 return
         done = []
         for item in items:
-            obs, cb = item
+            obs, read, cb = item
             try:
-                r = obs._jo.getRowOrEmpty()
-                if r is not None and r.isDefined():
-                    m = obs.get  # resolved: returns immediately
-                    done.append(item)
-                    try:
-                        cb(m)
-                    except Exception:
-                        pass
+                if not read().isDefined():
+                    continue
+                m = obs.get  # resolved: returns immediately
             except Exception:
                 # gateway gone / session stopped: drop the watch
                 done.append(item)
+                continue
+            done.append(item)
+            try:
+                cb(m)
+            except Exception:
+                name = getattr(cb, "__qualname__", repr(cb))
+                _log_once(name, "observe_async: callback %s failed",
+                          name, exc_info=True)
         if done:
             with _watch_lock:
                 for item in done:

@@ -18,11 +18,12 @@ bit-for-bit — the approximate pipeline itself is exactly checkable.
 from __future__ import annotations
 
 import random
+from functools import partial
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..core.colutils import qcol, quote
+from ..core.colutils import aliased, qcol, quote
 
 from ..core.dataframe import OmigoDF
 from ..core.jobs import checkpoint_with_metrics
@@ -561,31 +562,48 @@ def ngram_jaccard_pairs(odf: OmigoDF, id_col: str = "doc_id", col: str = "text",
     40× scale-up (SCALE.md §Measured 20-40× scale-up) hit 2.2 BILLION
     candidate pairs with every shingle df under the cap — the
     quadratic was the workload, and the LSH path handled the same
-    input ~20× faster. ``warn_candidate_pairs`` runs one shingle-df
-    census — an aggregate over the already-checkpointed exploded
-    stream, post DF-cap — and warns with the estimated pair count and
-    the LSH remedy when Σ df·(df-1)/2 exceeds the given count.
-    Default-ON at 10M since r11 (r10 verdict: the one operator with a
-    measured 208× quadratic cliff should not be silent) — the census
-    job costs one partial agg over data the self-join reads anyway;
-    pass None to opt out and leave the plan untouched."""
+    input ~20× faster. ``warn_candidate_pairs`` warns with the
+    estimated pair count and the LSH remedy when Σ df·(df-1)/2 over the
+    shingles that survive the cap exceeds the given count. Default-ON
+    at 10M since r11 (r10 verdict: the one operator with a measured
+    208× quadratic cliff should not be silent); pass None to opt out.
+
+    Per-shingle DF is counted ONCE. With the warning on, that count is
+    one eager job at construction, before the quadratic join runs: it
+    localCheckpoints the over-cap shingle set and observes both the
+    estimate and the over-cap count on the same job. No shingle over the
+    cap means the anti-join is left out of the plan; otherwise both
+    self-join sides anti-join the checkpointed set instead of
+    re-aggregating. With the warning off, the cap stays a lazy
+    anti-join and construction submits no job."""
     base = ensure_min_parallelism(odf.df).select(
         qcol(id_col), F.expr(_shingles_spark(col, n)).alias("sh"))
     base = base.withColumn("sh_n", F.size("sh"))
-    # the exploded (id, shingle) projection feeds the DF-cap count and
+    # the exploded (id, shingle) projection feeds the DF census and
     # BOTH self-join sides — checkpoint it so tokenization+explode run
     # once, not three times
     ex = (base.select(qcol(id_col), "sh_n", F.explode("sh").alias("s"))
           .localCheckpoint(eager=False))
-    if max_shingle_df is not None:
-        hot = (ex.groupBy("s").agg(F.count(F.lit(1)).alias("__df__"))
-               .where(F.col("__df__") > max_shingle_df).select("s"))
-        ex = ex.join(hot, on="s", how="left_anti")
+    dfs = ex.groupBy("s").agg(F.count(F.lit(1)).alias("__df__"))
+    df_n = F.col("__df__")
+    # only a non-NULL shingle can be removed: the anti-join's equality
+    # never matches the NULL-text group, which therefore stays in the
+    # estimate whatever its df
+    over_cap = (F.lit(False) if max_shingle_df is None
+                else (df_n > max_shingle_df) & F.col("s").isNotNull())
+    hot = None
     if warn_candidate_pairs is not None:
-        est = (ex.groupBy("s").agg(F.count(F.lit(1)).alias("__df__"))
-               .agg(F.sum(F.expr("__df__ * (__df__ - 1) / 2")).alias("p"))
-               .first()["p"]) or 0
-        if est > warn_candidate_pairs:
+        pairs = F.sum(F.when(~over_cap, df_n * (df_n - 1) / 2))
+        if max_shingle_df is None:
+            est = dfs.agg(pairs.alias("p")).first()["p"]
+        else:
+            hot, m = checkpoint_with_metrics(
+                dfs, {"p": pairs, "hot": F.count_if(over_cap)},
+                keep=over_cap)
+            est = m["p"]
+            if m["hot"] == 0:
+                hot = None
+        if (est or 0) > warn_candidate_pairs:
             import warnings
             warnings.warn(
                 f"ngram_jaccard_pairs: ~{int(est):,} candidate pairs "
@@ -594,13 +612,15 @@ def ngram_jaccard_pairs(odf: OmigoDF, id_col: str = "doc_id", col: str = "text",
                 "quadratic even under max_shingle_df; use the LSH path "
                 "(lsh_candidate_pairs / dedup_near) at this scale",
                 UserWarning, stacklevel=2)
-    a = ex.alias("a")
-    b = ex.alias("b")
-    shared = (a.join(b, on=[F.col("a.s") == F.col("b.s"),
-                            F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
-              .groupBy(F.col(f"a.{id_col}").alias("id_a"),
-                       F.col(f"b.{id_col}").alias("id_b"),
-                       F.col("a.sh_n").alias("na"), F.col("b.sh_n").alias("nb"))
+    elif max_shingle_df is not None:
+        hot = dfs.where(over_cap)
+    if hot is not None:
+        ex = ex.join(hot.select("s"), on="s", how="left_anti")
+    a, b = partial(aliased, "a"), partial(aliased, "b")
+    shared = (ex.alias("a").join(ex.alias("b"),
+                                 on=[a("s") == b("s"), a(id_col) < b(id_col)])
+              .groupBy(a(id_col).alias("id_a"), b(id_col).alias("id_b"),
+                       a("sh_n").alias("na"), b("sh_n").alias("nb"))
               .agg(F.count(F.lit(1)).alias("shared")))
     out = (shared
            .withColumn("jaccard", F.round(F.col("shared").cast("double")

@@ -30,13 +30,17 @@ Hot-key routing. The four ordered carries (``asof_join``,
 partitioned by the key, so a skewed key is ONE task — the shuffle-skew
 class AQE cannot split. Given ``time_buckets_sec``, each carry has an
 exact bucketed plan over (key, time-bucket) partitions, and
-``_route_hot_keys`` sends only the hot keys there: one eager,
-localCheckpointed census counts rows per key (for ``asof_join`` over
-the combined left and right keys, so an as-of pair never splits across
-the two plans), a null-safe semi/anti join splits every input by that
-key set, hot rows take the bucketed plan, cold rows the plain one, and
-the results union hot-then-cold. ``hot_key_rows`` is the threshold
-(``"auto"`` = 262,144 rows, an int pins it, ``None`` buckets every key).
+``_route_hot_keys`` sends only the hot keys there. One eager census job
+counts rows per key (for ``asof_join`` over the combined left and right
+keys, so an as-of pair never splits across the two plans); it
+localCheckpoints the hot-key set and observes the distinct and hot key
+counts on the same job, and those counts decide the plan. No hot key
+(empty input included): the plain plan alone. Every key hot: the
+bucketed plan alone. Only a mixed census splits every input by the hot
+set with a null-safe semi/anti join, runs hot rows bucketed and cold
+rows plain, and unions the results hot-then-cold. ``hot_key_rows`` is
+the threshold (``"auto"`` = 262,144 rows, an int pins it, ``None``
+buckets every key without a census).
 Without ``time_buckets_sec`` the same threshold arms a zero-extra-job
 hot-key warning on the plain carry instead (``_watch_hot_keys``).
 """
@@ -48,8 +52,9 @@ from functools import partial
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..core.colutils import qcol, quote
+from ..core.colutils import aliased, qcol
 from ..core.dataframe import OmigoDF
+from ..core.jobs import checkpoint_with_metrics, observe_async
 
 
 def _df(x) -> DataFrame:
@@ -69,20 +74,13 @@ def _epoch_sec(df: DataFrame, col: str, ref: Column | None = None) -> Column:
     return c.cast("double")
 
 
-def _aliased(side: str, c: str) -> Column:
-    """Column ``c`` of the join side aliased ``side``, the name QUOTED
-    (a dot or backtick in a user column must not parse as a struct
-    access; r13 hostile-name sweep)."""
-    return F.col(side + "." + quote(c))
-
-
 def _bucket_join(lhs, rhs, keys, how: str = "inner"):
     """Join ``lhs`` to ``rhs`` on ``keys + ["__b__"]``, NULL-SAFE: plain
     ``on=`` equality would DROP the NULL-key / NULL-bucket groups the
     single-window plans keep. The sides are aliased because one usually
     derives from the other, so bare names would be ambiguous. Returns
     ``(joined, lc, rc)``; ``lc(c)`` / ``rc(c)`` name a side's column."""
-    lc, rc = partial(_aliased, "__jl__"), partial(_aliased, "__jr__")
+    lc, rc = partial(aliased, "__jl__"), partial(aliased, "__jr__")
     cond = [lc(c).eqNullSafe(rc(c)) for c in keys + ["__b__"]]
     joined = lhs.alias("__jl__").join(rhs.alias("__jr__"), on=cond, how=how)
     return joined, lc, rc
@@ -447,7 +445,7 @@ def range_join(points, intervals, point_col: str, start_col: str,
     # alias-qualified QUOTED refs, not the bracket accessor (p[k] PARSES
     # the name — a dot or backtick in a user column breaks; r13
     # hostile-name sweep)
-    pc, ic = partial(_aliased, "__rp__"), partial(_aliased, "__ri__")
+    pc, ic = partial(aliased, "__rp__"), partial(aliased, "__ri__")
     p = pdf.withColumn(
         "__bin__", F.floor(_epoch_sec(pdf, point_col) / bin_width)) \
         .alias("__rp__")
@@ -490,17 +488,23 @@ def _hot_threshold(hot_key_rows) -> int:
 
 def _route_hot_keys(inputs, keys, hot_key_rows, run_hot, run_cold) -> OmigoDF:
     """The one hot-key router of the ordered carries (module docstring):
-    census the keys of all ``inputs`` combined, split every input by
-    that one hot-key set, run ``run_hot`` on the hot parts and
-    ``run_cold`` on the cold parts (one frame per input, in order), and
-    union the results hot-then-cold."""
+    census the keys of all ``inputs`` combined, then let the census
+    decide the plan. No hot key (empty input included): ``run_cold`` on
+    the inputs as they are. Every key hot: ``run_hot`` on them. Only a
+    mixed census splits every input by the one hot-key set, runs
+    ``run_hot`` on the hot parts and ``run_cold`` on the cold parts (one
+    frame per input, in order), and unions the results hot-then-cold."""
     thr = _hot_threshold(hot_key_rows)
     counted = inputs[0]
     if len(inputs) > 1:
         counted = counted.select(*map(qcol, keys))
         for d in inputs[1:]:
             counted = counted.unionByName(d.select(*map(qcol, keys)))
-    hot_keys = _hot_keys_census(counted, keys, thr)
+    hot_keys, n = _hot_keys_census(counted, keys, thr)
+    if n["hot"] == 0:
+        return run_cold(*inputs)
+    if n["hot"] == n["keys"]:
+        return run_hot(*inputs)
     hot, cold = zip(*[_hot_key_split(d, keys, thr, hot_keys)
                       for d in inputs])
     return OmigoDF(run_hot(*hot).df.unionByName(run_cold(*cold).df))
@@ -531,7 +535,6 @@ def _watch_hot_keys(df, w_base, op_name: str, hot_key_rows):
                 f"time_buckets_sec=... to run hot keys bucketed",
                 RuntimeWarning, stacklevel=2)
 
-    from ..core.jobs import observe_async
     out = df.withColumn("__hk_rn__", F.row_number().over(w_base))
     out = observe_async(out, {"max_key_rows": F.max("__hk_rn__")}, _cb)
     return out.drop("__hk_rn__")
@@ -551,18 +554,22 @@ def _hot_key_split(d, keys, threshold: int, hot_keys=None):
     persist/localCheckpoint it before routing; the census itself is
     localCheckpointed so its aggregation runs exactly once."""
     if hot_keys is None:
-        hot_keys = _hot_keys_census(d, keys, threshold)
+        hot_keys, _ = _hot_keys_census(d, keys, threshold)
     dl = d.alias("__dd__")
     hk = hot_keys.alias("__hk__")
     if threshold >= BROADCAST_HINT_MIN_THRESHOLD:
         hk = F.broadcast(hk)
-    cond = [_aliased("__dd__", c).eqNullSafe(_aliased("__hk__", c))
+    cond = [aliased("__dd__", c).eqNullSafe(aliased("__hk__", c))
             for c in keys]
     return dl.join(hk, on=cond, how="left_semi"), \
         dl.join(hk, on=cond, how="left_anti")
 
 
 def _hot_keys_census(d, keys, threshold: int):
+    """``(hot_keys, counts)``: the keys holding >= ``threshold`` rows,
+    localCheckpointed, and ``{"keys": distinct keys, "hot": hot keys}``
+    observed on the checkpoint's own job (the counts see every key
+    group; the checkpoint holds only the hot ones)."""
     # localCheckpoint: the census feeds 2-4 semi/anti joins (4 for asof's
     # shared left+right split) — without it each join re-evaluates the
     # full input lineage through the aggregation (r12 advice). Bounded
@@ -571,12 +578,13 @@ def _hot_keys_census(d, keys, threshold: int):
     # UNDER its multiple consumer joins inside one action, which read
     # consistently slower (+5..+14%) in clean-box isolated A/B than
     # materializing once up front; the construct-time job it costs is
-    # census-sized, not input-sized.
-    return (d.groupBy(*map(qcol, keys))
-            .agg(F.count(F.lit(1)).alias("__kc__"))
-            .where(F.col("__kc__") >= F.lit(int(threshold)))
-            .select(*map(qcol, keys))
-            .localCheckpoint())
+    # census-sized, not input-sized, and its counts decide the plan.
+    is_hot = F.col("__kc__") >= F.lit(int(threshold))
+    ck, counts = checkpoint_with_metrics(
+        d.groupBy(*map(qcol, keys)).agg(F.count(F.lit(1)).alias("__kc__")),
+        {"keys": F.count(F.lit(1)), "hot": F.count_if(is_hot)},
+        keep=is_hot)
+    return ck.select(*map(qcol, keys)), counts
 
 
 def sessionize(odf, key_cols: list[str] | str, time_col: str,
@@ -599,18 +607,20 @@ def sessionize(odf, key_cols: list[str] | str, time_col: str,
     span/bucket tasks; (2) a per-(key, bucket) summary (first/last
     event time, local session count) merges sessions across bucket
     boundaries on a bucket-counted frame orders of magnitude smaller
-    than the data; (3) one join back on (key, bucket) — which reuses
-    the phase-1 exchange, so the big side never reshuffles. The result
-    is IDENTICAL to the single-window plan (property-tested, including
+    than the data; (3) one join back on (key, bucket). That join does
+    NOT reuse the phase-1 exchange: the final AQE plan holds 3 hash
+    exchanges and no ReusedExchange, even for key+time-only input, so
+    phase 1 runs twice. The result is IDENTICAL to the single-window plan (property-tested, including
     NULL times and boundary-straddling sessions); pick a span well
     above ``gap_sec`` so most sessions close within one bucket.
 
     ``hot_key_rows`` routes ONLY hot keys through the bucketed plan
-    (default ``"auto"`` = 262,144 rows): a one-pass key census splits
-    the input, cold keys take the plain single-window plan (their
+    (default ``"auto"`` = 262,144 rows): a one-job key census decides
+    the plan. Cold keys take the plain single-window plan (their
     partitions are small — bucketing them is pure overhead and, for
     rolling, trips the density guard), hot keys take the two-phase
-    plan, results union. ``None`` buckets every key; an int pins the
+    plan; only when both kinds exist is the input split and the results
+    unioned. ``None`` buckets every key; an int pins the
     threshold. Without ``time_buckets_sec`` the same threshold instead
     arms a zero-extra-job hot-key WARNING on the single-window plan
     (r15): a row counter rides the existing window pass, its max rides
@@ -912,8 +922,9 @@ def merge_intervals(odf, key_cols: list[str] | str, start_col: str,
     ``floor(start / span)`` and runs the carry in two exact phases. The
     running max-end is ASSOCIATIVE, so a per-(key, bucket) summary
     (max end) rolls up into a per-key running carry-in over the tiny
-    bucket frame; joined back on (key, bucket) — reusing the phase-1
-    exchange — it recomputes every break against
+    bucket frame; joined back on (key, bucket) — the final AQE plan
+    runs phase 1 once per consumer, three times with no ReusedExchange
+    (see sessionize) — it recomputes every break against
     ``greatest(local_prev_max_end, carry_in)``, which equals the
     single window's full-prefix max exactly. Island numbers come from
     the sessionize-style prefix sum: per-bucket break counts prefix-
@@ -1018,8 +1029,9 @@ def _merge_intervals_bucketed(d, keys, s, e, span: float) -> OmigoDF:
                  wl.rowsBetween(Window.unboundedPreceding,
                                 Window.currentRow))))
     # carry-in: running max of bucket max-ends over the bucket frame.
-    # The summary groups the WINDOWED frame so its aggregation reuses
-    # the phase-1 exchange (no second scan of the input); the per-bucket
+    # The summary groups the WINDOWED frame so its aggregation needs no
+    # exchange of its own (the plan still re-runs phase 1 for this
+    # branch: no ReusedExchange, see sessionize); the per-bucket
     # break count nlb rides the SAME aggregate (r15 — it only needs
     # phase-1 columns, so it no longer waits for the carry-in join).
     summ = local.groupBy(*map(qcol, keys), "__b__").agg(
@@ -1041,7 +1053,7 @@ def _merge_intervals_bucketed(d, keys, s, e, span: float) -> OmigoDF:
     # K itself needs only the BREAK rows (r15 — r13 #7): the last
     # suppressed break is the K-th break, so K = max(L | lbrk=1,
     # s <= cin), 0 when none. Joining cin onto the breaks-only
-    # projection (which reuses the phase-1 exchange) and re-aggregating
+    # projection (another phase-1 run, not reused) and re-aggregating
     # is break-count-sized work, so the data-level carry-in join of the
     # old shape disappears: ONE row-level summary join remains (below).
     breaks = (local.where(F.col("__lbrk__") == 1)

@@ -1,5 +1,5 @@
 """bench.py helper units (the committed-history growth cap) and the
-registry-query profiler, tools/profile.py."""
+registry-query profiler, tools/query_profile.py."""
 
 import importlib.util
 import json
@@ -8,7 +8,7 @@ import subprocess
 import sys
 
 ROOT = os.path.join(os.path.dirname(__file__), "..")
-PROFILE_TOOL = os.path.join(ROOT, "tools", "profile.py")
+PROFILE_TOOL = os.path.join(ROOT, "tools", "query_profile.py")
 
 
 def _load(name, path):

@@ -1,0 +1,82 @@
+"""core/jobs.py: the observe-on-checkpoint census and the asynchronous
+observe() watch, including its fallback when PySpark lacks the private
+non-blocking read."""
+
+import logging
+import time
+
+from pyspark.sql import functions as F
+
+from omigo_data_analytics_spark.core import jobs
+
+
+def test_checkpoint_with_metrics_keep_observes_below_filter(spark):
+    """``keep`` bounds the checkpoint to the kept rows while the metrics
+    still see every row, and both come from one job."""
+    sc = spark.sparkContext
+    df = spark.range(1000).select((F.col("id") % 10).alias("g"))
+    sc.setJobGroup("ckeep", "census")
+    try:
+        ck, m = jobs.checkpoint_with_metrics(
+            df, {"n": F.count(F.lit(1)), "kept": F.count_if(F.col("g") < 3)},
+            keep=F.col("g") < 3)
+    finally:
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("ckeep"))
+        sc.setJobGroup(None, None)
+    assert n_jobs == 1
+    assert m == {"n": 1000, "kept": 300}
+    assert ck.count() == 300
+    assert "Scan ExistingRDD" in ck._jdf.queryExecution().executedPlan().toString()
+
+
+def test_observe_async_without_nonblocking_read_falls_back(
+        spark, monkeypatch, caplog):
+    """A PySpark whose Observation has no ``_jo`` (the private handle the
+    poller reads) gets no watch: the frame comes back unobserved, the
+    query runs, the callback never fires, and the fallback logs once."""
+    class NoHandle(jobs.Observation):
+        def _on(self, df, *exprs):
+            out = super()._on(df, *exprs)
+            del self._jo
+            return out
+
+    monkeypatch.setattr(jobs, "Observation", NoHandle)
+    monkeypatch.setattr(jobs, "_logged", set())
+    n_watches = len(jobs._watches)
+    calls = []
+    df = spark.range(10)
+    with caplog.at_level(logging.WARNING, logger=jobs.__name__):
+        outs = [jobs.observe_async(df, {"n": F.count(F.lit(1))}, calls.append)
+                for _ in range(2)]
+    assert all(o is df for o in outs)
+    assert outs[0].count() == 10
+    assert len(jobs._watches) == n_watches
+    time.sleep(2 * jobs._POLL_SEC)
+    assert calls == []
+    msgs = [r.getMessage() for r in caplog.records if r.name == jobs.__name__]
+    assert len(msgs) == 1 and "getRowOrEmpty" in msgs[0]
+
+
+def test_observe_async_callback_error_logged_once(spark, monkeypatch, caplog):
+    """A failing callback never fails the query and is logged once, not
+    swallowed and not once per delivery."""
+    monkeypatch.setattr(jobs, "_logged", set())
+    calls = []
+
+    def boom(m):
+        calls.append(m)
+        raise RuntimeError("diagnostic bug")
+
+    with caplog.at_level(logging.WARNING, logger=jobs.__name__):
+        for _ in range(2):
+            out = jobs.observe_async(spark.range(7), {"n": F.count(F.lit(1))},
+                                     boom)
+            assert out.count() == 7
+        deadline = time.time() + 15.0
+        while len(calls) < 2 and time.time() < deadline:
+            time.sleep(0.1)
+        time.sleep(0.1)
+    assert calls == [{"n": 7}, {"n": 7}]
+    recs = [r for r in caplog.records if r.name == jobs.__name__]
+    assert len(recs) == 1
+    assert "boom" in recs[0].getMessage() and recs[0].exc_info

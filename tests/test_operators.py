@@ -94,6 +94,83 @@ def test_ngram_jaccard_hot_shingle_df_cap(spark):
     assert uncapped.df.count() == 780 + 1
 
 
+
+def _pairs(odf):
+    return sorted(map(tuple, odf.df.collect()))
+
+
+def _optimized(odf):
+    return odf.df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_ngram_jaccard_census_decides_anti_join(spark):
+    """The construct-time DF census decides the plan: with no shingle
+    over the cap there is no anti-join (results equal the uncapped run);
+    with one over it the anti-join stays (results equal the lazy
+    warn_candidate_pairs=None plan, which always anti-joins)."""
+    docs = [(i, f"x1 x2 x3 u{i}a u{i}b") for i in range(12)]
+    docs += [(100, "y1 y2 y3 y4 y5"), (101, "y1 y2 y3 y4 zz"), (102, None)]
+    d = OmigoDF(spark.createDataFrame(docs, "doc_id int, text string"))
+    roomy = DD.ngram_jaccard_pairs(d, max_shingle_df=12)
+    assert "LeftAnti" not in _optimized(roomy)
+    assert _pairs(roomy) == _pairs(DD.ngram_jaccard_pairs(d, max_shingle_df=None))
+    tight = DD.ngram_jaccard_pairs(d, max_shingle_df=11)
+    assert "LeftAnti" in _optimized(tight)
+    lazy = DD.ngram_jaccard_pairs(d, max_shingle_df=11, warn_candidate_pairs=None)
+    assert "LeftAnti" in _optimized(lazy)
+    assert _pairs(tight) == _pairs(lazy)
+    assert {(a, b) for a, b, *_ in _pairs(tight)} == {(100, 101)}
+
+
+def test_ngram_jaccard_census_threshold_boundary(spark):
+    """12 identical docs share 2 shingles of df 12: the estimate is
+    2 * 12*11/2 = 132. At exactly the threshold nothing warns; one below
+    it the warning names the same estimate as before."""
+    import warnings
+
+    d = OmigoDF(spark.createDataFrame(
+        [(i, "alpha beta gamma delta") for i in range(12)],
+        "doc_id int, text string"))
+    with warnings.catch_warnings(record=True) as rec:
+        warnings.simplefilter("always")
+        DD.ngram_jaccard_pairs(d, warn_candidate_pairs=132)
+        assert not [w for w in rec if "candidate pairs" in str(w.message)]
+        DD.ngram_jaccard_pairs(d, warn_candidate_pairs=131)
+        msgs = [str(w.message) for w in rec if "candidate pairs" in str(w.message)]
+    assert len(msgs) == 1
+    assert msgs[0].startswith("ngram_jaccard_pairs: ~132 candidate pairs (> 131)")
+
+
+def test_ngram_jaccard_no_census_job_when_warning_off(spark):
+    """warn_candidate_pairs=None keeps the DF cap a lazy anti-join:
+    construction submits no Spark job."""
+    sc = spark.sparkContext
+    d = OmigoDF(spark.createDataFrame(
+        [(i, "alpha beta gamma delta") for i in range(12)],
+        "doc_id int, text string"))
+    sc.setJobGroup("ngram_build", "plan construction only")
+    try:
+        out = DD.ngram_jaccard_pairs(d, warn_candidate_pairs=None)
+    finally:
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("ngram_build"))
+        sc.setJobGroup(None, None)
+    assert n_jobs == 0, f"construction launched {n_jobs} jobs"
+    assert out.df.count() == 66
+
+
+def test_ngram_jaccard_hostile_id_col(spark):
+    """A dot or backtick in id_col is a plain column name, not a struct
+    access or a syntax error."""
+    rows = [(1, "w1 w2 w3 w4 w5"), (2, "w1 w2 w3 w4 zz"), (3, "q1 q2 q3")]
+    want = _pairs(DD.ngram_jaccard_pairs(OmigoDF(spark.createDataFrame(
+        rows, "doc_id int, text string"))))
+    assert want
+    for name in ("doc.id", "doc`id"):
+        df = spark.createDataFrame(rows, "doc_id int, text string") \
+            .withColumnRenamed("doc_id", name)
+        assert _pairs(DD.ngram_jaccard_pairs(OmigoDF(df), id_col=name)) == want
+
+
 def test_simhash_near_dup_low_hamming(spark):
     a = "the quick brown fox jumps over the lazy dog again and again today"
     b = a + " tomorrow"

@@ -110,7 +110,8 @@ def test_hot_key_census_runs_once_localcheckpointed(spark):
     from omigo_data_analytics_spark.operators.timeseries import _hot_keys_census
 
     df = spark.createDataFrame([("a", 1)] * 5 + [("b", 2)], ["k", "v"])
-    hk = _hot_keys_census(df, ["k"], 3)
+    hk, counts = _hot_keys_census(df, ["k"], 3)
+    assert counts == {"keys": 2, "hot": 1}
     # a checkpointed frame's plan is a scan of materialized blocks
     assert "Scan ExistingRDD" in hk._jdf.queryExecution().executedPlan().toString()
     assert [r["k"] for r in hk.collect()] == ["a"]

@@ -283,3 +283,119 @@ def test_asof_nearest_plain_carry_arms_hot_key_watch(spark):
             time.sleep(0.25)
         assert any("asof_join: a key group holds 60" in str(w.message)
                    for w in rec)
+
+
+# ---------------------------------------------------------------- hot-key
+# router: the census's observed counts decide the plan. Every case must
+# equal both the all-bucketed (hot_key_rows=None) and the plain plan.
+
+def _shape(df):
+    """Optimized plan with expression ids and observation details
+    stripped, so two builds of the same plan compare equal."""
+    import re
+    s = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"CollectMetrics[^\n]*", "CollectMetrics",
+                  re.sub(r"#\d+L?", "", s))
+
+
+def _carry(op, d, **kw):
+    if op == "sessionize":
+        return TS.sessionize(d, "k", "t", gap_sec=25.0, **kw).df
+    if op == "rolling_aggregate":
+        return TS.rolling_aggregate(d, "k", "t", ["t"], ["sum"],
+                                    window_rows=2, **kw).df
+    return TS.merge_intervals(d.withColumn("e", F.col("t") + 15.0),
+                              "k", "t", "e", **kw).df
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+@pytest.fixture(scope="module")
+def skewed(spark):
+    # key "h": 40 rows (a session break halfway), "c" and NULL: 3 rows
+    rows = [("h", float(i * 10 + (100 if i >= 20 else 0))) for i in range(40)]
+    rows += [("c", 5.0), ("c", 15.0), ("c", 200.0)]
+    rows += [(None, 1.0), (None, 2.0), (None, 500.0)]
+    return spark.createDataFrame(rows, "k string, t double")
+
+
+@pytest.mark.parametrize("op", ["sessionize", "rolling_aggregate",
+                                "merge_intervals"])
+def test_router_census_decides_plan(skewed, op):
+    """All hot → the hot plan alone (the hot_key_rows=None plan, no
+    semi/anti split or union); none hot → the plain plan alone; only a
+    mixed census splits and unions. Results equal both references."""
+    bucketed = _carry(op, skewed, time_buckets_sec=60.0, hot_key_rows=None)
+    plain = _carry(op, skewed)
+    want = _rows(plain)
+    assert _rows(bucketed) == want
+    for thr, ref in ((1, bucketed), (10_000, plain)):
+        out = _carry(op, skewed, time_buckets_sec=60.0, hot_key_rows=thr)
+        assert _shape(out) == _shape(ref)
+        assert "LeftSemi" not in _shape(out)
+        assert _rows(out) == want
+    mixed = _carry(op, skewed, time_buckets_sec=60.0, hot_key_rows=10)
+    plan = _shape(mixed)
+    assert "LeftSemi" in plan and "LeftAnti" in plan and "Union" in plan
+    assert _rows(mixed) == want
+
+
+def test_router_empty_input_takes_plain_plan(spark):
+    """Empty input: the census counts 0 keys and 0 hot keys, and the
+    no-hot test comes first, so even hot_key_rows=1 runs the plain
+    plan."""
+    empty = spark.createDataFrame([], "k string, t double")
+    out = TS.sessionize(empty, "k", "t", time_buckets_sec=60.0,
+                        hot_key_rows=1).df
+    assert _shape(out) == _shape(TS.sessionize(empty, "k", "t").df)
+    assert out.collect() == []
+    assert out.columns == ["k", "t", "session_id"]
+
+
+def test_router_hot_null_key_group(spark):
+    """A NULL key is a real group and can be the hot one: the census
+    counts it, the null-safe split routes its rows to the hot side, and
+    the mixed plan equals both references."""
+    rows = [(None, float(i)) for i in range(12)] + [("a", 1.0), ("b", 2.0)]
+    d = spark.createDataFrame(rows, "k string, t double")
+    hot_keys, counts = TS._hot_keys_census(d, ["k"], 5)
+    assert counts == {"keys": 3, "hot": 1}
+    assert [r["k"] for r in hot_keys.collect()] == [None]
+    hot, cold = TS._hot_key_split(d, ["k"], 5, hot_keys)
+    assert hot.count() == 12 and cold.count() == 2
+    out = TS.sessionize(d, "k", "t", gap_sec=3.0, time_buckets_sec=4.0,
+                        hot_key_rows=5).df
+    assert "LeftSemi" in _shape(out)
+    want = _rows(TS.sessionize(d, "k", "t", gap_sec=3.0).df)
+    assert _rows(out) == want
+    assert _rows(TS.sessionize(d, "k", "t", gap_sec=3.0,
+                               time_buckets_sec=4.0,
+                               hot_key_rows=None).df) == want
+
+
+def test_asof_router_counts_both_inputs(spark):
+    """asof_join censuses the COMBINED left and right keys: key "x" holds
+    3 left + 3 right rows, hot only together at threshold 5, so with
+    "x" alone every key is hot and the bucketed carry runs unsplit;
+    adding a cold key "y" makes the census mixed."""
+    left = [("x", 1.0), ("x", 5.0), ("x", 9.0)]
+    right = [("x", 0.5, 1), ("x", 4.0, 2), ("x", 8.5, 3)]
+
+    def run(lrows, rrows, **kw):
+        lf = spark.createDataFrame(lrows, "k string, t double")
+        rf = spark.createDataFrame(rrows, "k string, t double, v int")
+        return TS.asof_join(lf, rf, "k", "t", **kw).df
+
+    for extra_l, extra_r, mixed in (([], [], False),
+                                    ([("y", 2.0)], [("y", 1.0, 9)], True)):
+        lr, rr = left + extra_l, right + extra_r
+        want = _rows(run(lr, rr))
+        bucketed = run(lr, rr, time_buckets_sec=3.0, hot_key_rows=None)
+        assert _rows(bucketed) == want
+        out = run(lr, rr, time_buckets_sec=3.0, hot_key_rows=5)
+        assert _rows(out) == want
+        assert ("LeftSemi" in _shape(out)) == mixed
+        if not mixed:
+            assert _shape(out) == _shape(bucketed)

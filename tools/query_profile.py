@@ -1,7 +1,7 @@
 """Profile registry queries layer by layer, from the Spark event log.
 
 Usage:
-    python tools/profile.py [sf_dir] [query ...]
+    python tools/query_profile.py [sf_dir] [query ...]
 
 Runs the named queries of ``__spark_entry__.queries()`` (default: all, in
 registry order) on ``sf_dir`` (default: the sf0.1 set beside the
@@ -41,11 +41,7 @@ from dataclasses import asdict
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
-# Run as a script, this directory heads sys.path, where this file would
-# shadow the standard library's ``profile`` that pyspark imports through
-# cProfile: search it last instead.
-sys.path[:] = ([REPO] + [p for p in sys.path
-                         if os.path.abspath(p or os.curdir) != HERE] + [HERE])
+sys.path[:0] = [REPO, HERE]  # HERE for capture_plans when loaded by path
 
 from capture_plans import SHAPE_SF_DIR, dumps as dumps_by_query, node_counts  # noqa: E402
 from perfbench.eventlog import GroupCounters, find_logs, parse  # noqa: E402
