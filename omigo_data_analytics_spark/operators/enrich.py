@@ -34,6 +34,7 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from ..core.colutils import aliased, qcol, quote
 from ..core.dataframe import OmigoDF
 
 _PLACEHOLDER = re.compile(r"\{([^{}]+)\}")
@@ -50,6 +51,22 @@ def _find_placeholders(*templates) -> list[str]:
                 if m.group(1) not in cols:
                     cols.append(m.group(1))
     return cols
+
+
+def _join_back(df, enriched, keys: list[str], out_cols: list[str]) -> OmigoDF:
+    """The dedup rewrite's join back: every row of ``df`` gets the
+    ``out_cols`` of the ``enriched`` distinct-``keys`` frame. NULL-SAFE:
+    dropDuplicates keeps a NULL key row and a call is issued for it, but
+    a plain equi-join would never match it back (NULL != NULL) — those
+    rows would get NULL outputs instead of the non-dedup path's values.
+    Sides are aliased and names quoted, so a dot or backtick in a
+    column name cannot parse as a struct access."""
+    cond = [aliased("__src__", c).eqNullSafe(aliased("__enr__", c))
+            for c in keys]
+    joined = df.alias("__src__").join(enriched.alias("__enr__"), cond, "left")
+    return OmigoDF(joined.select(
+        *[aliased("__src__", c) for c in df.columns],
+        *[aliased("__enr__", c) for c in out_cols]))
 
 
 def _resolve(template: str, row: dict) -> str:
@@ -146,24 +163,13 @@ def call_web_service(odf: OmigoDF, url: str, prefix: str,
             yield pdf
 
     if enable_opt_exec and ph_cols:
-        # dedup rewrite: call once per distinct placeholder combination.
-        # The join back is NULL-SAFE: dropDuplicates keeps a NULL key row
-        # and a call is issued for it, but a plain equi-join would never
-        # match it back (NULL != NULL) — those rows would get NULL in all
-        # four response columns instead of the non-dedup path's strings
-        distinct = odf.df.select(*ph_cols).dropDuplicates(ph_cols)
+        # dedup rewrite: call once per distinct placeholder combination
+        distinct = odf.df.select(*map(qcol, ph_cols)).dropDuplicates()
         schema = StructType(
             [distinct.schema[c] for c in ph_cols]
             + [StructField(f, StringType()) for f in out_fields])
         enriched = distinct.mapInPandas(_run, schema=schema)
-        cond = None
-        for c in ph_cols:
-            eq = odf.df[c].eqNullSafe(enriched[c])
-            cond = eq if cond is None else (cond & eq)
-        joined = odf.df.join(enriched, cond, "left").select(
-            *[odf.df[c] for c in odf.df.columns],
-            *[enriched[f] for f in out_fields])
-        return OmigoDF(joined)
+        return _join_back(odf.df, enriched, ph_cols, out_fields)
     schema = StructType(
         list(odf.df.schema.fields)
         + [StructField(f, StringType()) for f in out_fields])
@@ -179,8 +185,8 @@ def enrich_with_model(odf: OmigoDF, input_cols, model_fn: Callable,
     inside mapInPandas. Deduped on input_cols then joined back, same
     rewrite as call_web_service."""
     in_cols = list(input_cols)
-    distinct = odf.df.select(*in_cols).dropDuplicates(in_cols)
-    out_field = StructType.fromDDL(f"`{out_col}` {out_type}").fields[0]
+    distinct = odf.df.select(*map(qcol, in_cols)).dropDuplicates()
+    out_field = StructType.fromDDL(f"{quote(out_col)} {out_type}").fields[0]
     schema = StructType([distinct.schema[c] for c in in_cols] + [out_field])
 
     def _run(pdf_iter: Iterator) -> Iterator:
@@ -192,12 +198,5 @@ def enrich_with_model(odf: OmigoDF, input_cols, model_fn: Callable,
             pdf[out_col] = vals
             yield pdf
 
-    enriched = distinct.mapInPandas(_run, schema=schema)
-    # NULL-safe join back, as in call_web_service's dedup rewrite
-    cond = None
-    for c in in_cols:
-        eq = odf.df[c].eqNullSafe(enriched[c])
-        cond = eq if cond is None else (cond & eq)
-    joined = odf.df.join(enriched, cond, "left").select(
-        *[odf.df[c] for c in odf.df.columns], enriched[out_col])
-    return OmigoDF(joined)
+    return _join_back(odf.df, distinct.mapInPandas(_run, schema=schema),
+                      in_cols, [out_col])

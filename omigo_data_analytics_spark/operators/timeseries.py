@@ -28,21 +28,26 @@ Scale design (the point of each implementation):
 Hot-key routing. The four ordered carries (``asof_join``,
 ``sessionize``, ``rolling_aggregate``, ``merge_intervals``) run a window
 partitioned by the key, so a skewed key is ONE task — the shuffle-skew
-class AQE cannot split. Given ``time_buckets_sec``, each carry has an
-exact bucketed plan over (key, time-bucket) partitions, and
-``_route_hot_keys`` sends only the hot keys there. One eager census job
-counts rows per key (for ``asof_join`` over the combined left and right
-keys, so an as-of pair never splits across the two plans); it
-localCheckpoints the hot-key set and observes the distinct and hot key
-counts on the same job, and those counts decide the plan. No hot key
-(empty input included): the plain plan alone. Every key hot: the
-bucketed plan alone. Only a mixed census splits every input by the hot
-set with a null-safe semi/anti join, runs hot rows bucketed and cold
-rows plain, and unions the results hot-then-cold. ``hot_key_rows`` is
-the threshold (``"auto"`` = 262,144 rows, an int pins it, ``None``
-buckets every key without a census).
-Without ``time_buckets_sec`` the same threshold arms a zero-extra-job
-hot-key warning on the plain carry instead (``_watch_hot_keys``).
+class AQE cannot split. Each carry normalizes and checks its arguments
+once, then hands two builders to ``_ordered_carry``, the one dispatcher:
+the plain single-window plan and an exact bucketed plan over (key,
+time-bucket) partitions. The dispatcher alone checks
+``time_buckets_sec`` and picks the plan. Without ``time_buckets_sec``
+the plain plan runs, and ``hot_key_rows`` arms a zero-extra-job hot-key
+warning on it (``_watch_hot_keys``). With it, ``hot_key_rows=None``
+buckets every key without a census; any other value lets
+``_route_hot_keys`` send only the hot keys to the bucketed plan. One
+eager census job counts rows per key (for ``asof_join`` over the
+combined left and right keys, so an as-of pair never splits across the
+two plans); it localCheckpoints the hot-key set and observes the
+distinct and hot key counts on the same job, and those counts decide
+the plan. No hot key (empty input included): the plain plan alone.
+Every key hot: the bucketed plan alone. Only a mixed census splits
+every input by the hot set with a null-safe semi/anti join, runs hot
+rows bucketed and cold rows plain, and unions the results
+hot-then-cold. ``hot_key_rows`` is the threshold (``"auto"`` = 262,144
+rows, an int pins it) for the census and for the plain plan's watch
+alike, cold side included.
 """
 
 from __future__ import annotations
@@ -102,6 +107,36 @@ def _time_bucket(t, span: float):
         F.floor(t / F.lit(float(span))))
 
 
+def _bucket_frame(d, keys, t_col: str, span: float):
+    """``(d with __b__, ws)``: ``__b__`` is the time bucket of column
+    ``t_col``, and ``ws`` orders each key's (key, bucket) summary frame
+    by bucket. NULL times bucket to NULL, which sorts FIRST in ``ws``,
+    exactly as a NULL time sorts first in the single-window plans'
+    ascending order."""
+    return (d.withColumn("__b__", _time_bucket(F.col(t_col), span)),
+            Window.partitionBy(*map(qcol, keys))
+            .orderBy(F.col("__b__").asc_nulls_first()))
+
+
+def _ordered_carry(op: str, inputs, keys, time_buckets_sec, hot_key_rows,
+                   plain, bucketed) -> OmigoDF:
+    """The one plain/bucketed/routed dispatch of the ordered carries
+    (module docstring). ``plain(*frames, hot_key_rows)`` builds the
+    single-window plan, its hot-key watch armed at ``hot_key_rows``;
+    ``bucketed(*frames, span)`` builds the bucketed plan. Both take one
+    frame per input, in order."""
+    if time_buckets_sec is None:
+        return plain(*inputs, hot_key_rows)
+    if time_buckets_sec <= 0:
+        raise ValueError(f"{op}: time_buckets_sec must be positive")
+    span = float(time_buckets_sec)
+    if hot_key_rows is None:
+        return bucketed(*inputs, span)
+    return _route_hot_keys(inputs, keys, hot_key_rows,
+                           lambda *d: bucketed(*d, span),
+                           lambda *d: plain(*d, hot_key_rows))
+
+
 def asof_join(left, right, on: list[str] | str, left_time: str,
               right_time: str | None = None, suffix: str = "r",
               tolerance_sec: float | None = None,
@@ -139,91 +174,81 @@ def asof_join(left, right, on: list[str] | str, left_time: str,
     fix — per-column carries used to backfill such a cell from an
     EARLIER right row, tearing the result across two source rows).
 
-    ``time_buckets_sec`` (r12, hot-key scale path — same straggler as
-    sessionize/rolling: the carry window partitioned by a skewed key
-    is ONE task, the shuffle-skew class AQE cannot split): the carry
-    runs inside (key, time-bucket) partitions; each bucket's LAST
-    right row (struct + match time, max (t, tiebreaks) — the same
-    winner the window would pick) aggregates into a per-bucket
-    summary, a tiny per-key running carry propagates it across bucket
-    boundaries, and one null-safe join feeds it back as the carry-in
-    for rows with no in-bucket match. Exact — identical to the
-    single-window plan (equal times share a bucket, so tie semantics
-    are untouched; property-tested). ``hot_key_rows`` (default
-    ``"auto"`` = 262,144) routes only hot keys through it, censusing
-    the COMBINED left+right rows per key so an as-of pair never splits
-    across plans. 'nearest' runs the same bucketed carry in both
-    directions before its pick. Without ``time_buckets_sec`` the
-    threshold instead arms the zero-extra-job hot-key warning on the
-    single-window carry (r15 — see sessionize)."""
+    ``time_buckets_sec`` (the hot-key scale path, see the module
+    docstring; ``hot_key_rows`` likewise): the carry runs inside (key,
+    time-bucket) partitions; each bucket's LAST right row (struct +
+    match time, max (t, tiebreaks) — the same winner the window would
+    pick) aggregates into a per-bucket summary, a tiny per-key running
+    carry propagates it across bucket boundaries, and one null-safe
+    join feeds it back as the carry-in for rows with no in-bucket
+    match. Exact — identical to the single-window plan (equal times
+    share a bucket, so tie semantics are untouched; property-tested).
+    The census counts the COMBINED left+right rows per key.
+    'nearest' runs the same bucketed carry in both directions before
+    its pick."""
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"asof_join: unknown direction: {direction}")
     ldf, rdf = _df(left), _df(right)
     keys = [on] if isinstance(on, str) else list(on)
     rt = right_time or left_time
-
-    if time_buckets_sec is not None and time_buckets_sec <= 0:
-        raise ValueError("asof_join: time_buckets_sec must be positive")
-    if time_buckets_sec is not None and hot_key_rows is not None:
-        run = partial(asof_join, on=on, left_time=left_time,
-                      right_time=right_time, suffix=suffix,
-                      tolerance_sec=tolerance_sec, direction=direction,
-                      tiebreak_cols=tiebreak_cols)
-        return _route_hot_keys(
-            [ldf, rdf], keys, hot_key_rows,
-            partial(run, time_buckets_sec=time_buckets_sec,
-                    hot_key_rows=None),
-            partial(run, time_buckets_sec=None))
-
     r_payload = [c for c in rdf.columns if c not in keys]
-    # validated BEFORE the empty-payload early return, in every direction
-    # (r12 advice): invalid tiebreak_cols raise even with nothing to carry
+    # validated BEFORE the empty-payload return, in every direction:
+    # invalid tiebreak_cols raise even with nothing to carry
     tb = _asof_tiebreak(tiebreak_cols, r_payload)
 
-    # degenerate: right has no payload beyond the keys — nothing to carry
     if not r_payload:
-        return OmigoDF(ldf)
-
-    if direction == "nearest":
-        u = _asof_union(ldf, rdf, keys, left_time, rt, r_payload)
-        carried, pick = _asof_nearest(u, keys, tb, tolerance_sec,
-                                      time_buckets_sec, hot_key_rows)
-    else:
-        # forward as-of is backward as-of on negated time
-        sign = F.lit(1.0) if direction == "backward" else F.lit(-1.0)
-        u = _asof_union(ldf, rdf, keys, left_time, rt, r_payload, sign)
-        # tiebreak cols order AFTER (__t__, __side__): they only order
-        # right rows among themselves (left rows carry NULL payload and
-        # sort as a block behind the side tag), so the inclusive
-        # same-time semantics are untouched; last() then
-        # deterministically picks the max tuple
-        if time_buckets_sec is not None:
-            carried = _asof_carry_bucketed(u, keys, tb,
-                                           float(time_buckets_sec))
-        else:
-            w_base = Window.partitionBy(*map(qcol, keys)).orderBy(
-                "__t__", "__side__", *tb)
-            w = w_base.rowsBetween(Window.unboundedPreceding,
-                                   Window.currentRow)
-            carried = u.select(
-                "*",
-                F.last("__r__", ignorenulls=True).over(w).alias("__c__"),
-                F.last(F.when(F.col("__side__") == 0, F.col("__t__")),
-                       ignorenulls=True).over(w).alias("__match_t__"))
-            carried = _watch_hot_keys(carried, w_base, "asof_join",
-                                      hot_key_rows)
-        carried = carried.where(F.col("__side__") == 1)
-        if tolerance_sec is not None:
-            keep = (F.col("__match_t__")
-                    >= F.col("__t__") - F.lit(tolerance_sec))
-            carried = carried.withColumn("__c__",
-                                         F.when(keep, F.col("__c__")))
-        pick = F.col("__c__")
+        # right has no payload beyond the keys — nothing to carry. The
+        # router stays off (no census job); the span is still checked.
+        def same(lf, _arg):
+            return OmigoDF(lf)
+        return _ordered_carry("asof_join", [ldf], keys, time_buckets_sec,
+                              None, same, same)
 
     proj = keys + [c for c in ldf.columns if c not in keys]
-    return OmigoDF(carried.select(
-        *map(qcol, proj),
-        *[pick.getField(c).alias(f"{suffix}:{c}") for c in r_payload]))
+
+    def carry(lf, rf, span, hot_key_rows):
+        if direction == "nearest":
+            u = _asof_union(lf, rf, keys, left_time, rt, r_payload)
+            carried, pick = _asof_nearest(u, keys, tb, tolerance_sec, span,
+                                          hot_key_rows)
+        else:
+            # forward as-of is backward as-of on negated time
+            sign = F.lit(1.0) if direction == "backward" else F.lit(-1.0)
+            u = _asof_union(lf, rf, keys, left_time, rt, r_payload, sign)
+            # tiebreak cols order AFTER (__t__, __side__): they only
+            # order right rows among themselves (left rows carry NULL
+            # payload and sort as a block behind the side tag), so the
+            # inclusive same-time semantics are untouched; last() then
+            # deterministically picks the max tuple
+            if span is not None:
+                carried = _asof_carry_bucketed(u, keys, tb, span)
+            else:
+                w_base = Window.partitionBy(*map(qcol, keys)).orderBy(
+                    "__t__", "__side__", *tb)
+                w = w_base.rowsBetween(Window.unboundedPreceding,
+                                       Window.currentRow)
+                carried = u.select(
+                    "*",
+                    F.last("__r__", ignorenulls=True).over(w).alias("__c__"),
+                    F.last(F.when(F.col("__side__") == 0, F.col("__t__")),
+                           ignorenulls=True).over(w).alias("__match_t__"))
+                carried = _watch_hot_keys(carried, w_base, "asof_join",
+                                          hot_key_rows)
+            carried = carried.where(F.col("__side__") == 1)
+            if tolerance_sec is not None:
+                keep = (F.col("__match_t__")
+                        >= F.col("__t__") - F.lit(tolerance_sec))
+                carried = carried.withColumn("__c__",
+                                             F.when(keep, F.col("__c__")))
+            pick = F.col("__c__")
+        return OmigoDF(carried.select(
+            *map(qcol, proj),
+            *[pick.getField(c).alias(f"{suffix}:{c}") for c in r_payload]))
+
+    return _ordered_carry(
+        "asof_join", [ldf, rdf], keys, time_buckets_sec, hot_key_rows,
+        lambda lf, rf, hkr: carry(lf, rf, None, hkr),
+        lambda lf, rf, span: carry(lf, rf, span, None))
 
 
 def _asof_union(ldf, rdf, keys, left_time, right_time, r_payload,
@@ -277,7 +302,7 @@ def _asof_carry_bucketed(u, keys, tb, span: float,
     single-window carry. NULL-time left rows land in the NULL bucket,
     which sorts FIRST (no carry-in) — the same nothing-precedes-them
     the NULLS-FIRST window gives."""
-    u2 = u.withColumn("__b__", _time_bucket(F.col("__t__"), span))
+    u2, ws = _bucket_frame(u, keys, "__t__", span)
     wl = (Window.partitionBy(*map(qcol, keys), "__b__")
           .orderBy("__t__", "__side__", *tb)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -298,9 +323,7 @@ def _asof_carry_bucketed(u, keys, tb, span: float,
     bf = bf.select(*[lc(c).alias(c) for c in keys + ["__b__"]],
                    rc("__lr__").alias("__lr__"),
                    rc("__lt__").alias("__lt__"))
-    wb = (Window.partitionBy(*map(qcol, keys))
-          .orderBy(F.col("__b__").asc_nulls_first())
-          .rowsBetween(Window.unboundedPreceding, -1))
+    wb = ws.rowsBetween(Window.unboundedPreceding, -1)
     carry = bf.select(
         *map(qcol, keys), "__b__",
         F.last("__lr__", ignorenulls=True).over(wb).alias("__cin__"),
@@ -330,27 +353,25 @@ def _asof_tiebreak(tiebreak_cols, r_payload):
     return [F.col("__r__").getField(c) for c in tiebreak_cols]
 
 
-def _asof_nearest(u, keys, tb, tolerance_sec, time_buckets_sec,
-                  hot_key_rows):
+def _asof_nearest(u, keys, tb, tolerance_sec, span, hot_key_rows):
     """Nearest-match as-of over the tagged union ``u``: both directional
     carries over ONE union — the backward and forward windows share the
     hash partitioning (one Exchange, two Sorts) — then a map-side pick
     of the closer match (ties prefer the backward/earlier row, pandas
     merge_asof style). Returns (left rows, picked payload struct).
 
-    With ``time_buckets_sec`` the two carries each run through the
+    Given a bucket ``span`` the two carries each run through the
     bucketed plan (_asof_carry_bucketed): the forward carry is the
     backward carry on NEGATED time — (-t asc, side, tb) is exactly the
     (t desc, side, tb) window order, and max_by over the negated
     struct picks the same winner — so one helper serves both; the pick
     logic is unchanged.
 
-    Without ``time_buckets_sec``, ``hot_key_rows`` arms the hot-key
-    watch as on the directional carry; its row counter rides the
-    backward window (computed last, so the counter's Window collapses
-    into it and needs no Sort of its own)."""
-    if time_buckets_sec is not None:
-        span = float(time_buckets_sec)
+    Without a span, ``hot_key_rows`` arms the hot-key watch as on the
+    directional carry; its row counter rides the backward window
+    (computed last, so the counter's Window collapses into it and needs
+    no Sort of its own)."""
+    if span is not None:
         c1 = _asof_carry_bucketed(u, keys, tb, span,
                                   out_c="__bk__", out_mt="__bkt__")
         c1n = c1.withColumn("__t__", -F.col("__t__"))
@@ -540,21 +561,19 @@ def _watch_hot_keys(df, w_base, op_name: str, hot_key_rows):
     return out.drop("__hk_rn__")
 
 
-def _hot_key_split(d, keys, threshold: int, hot_keys=None):
-    """(hot_rows, cold_rows): rows whose key holds >= threshold rows vs
-    the rest. One partial-aggregated census + a null-safe semi/anti
-    join (NULL keys are real groups and can be hot — plain `on=`
-    equality would silently misroute them to cold). The broadcast hint
-    applies only when ``threshold`` bounds the census to <= n/1024 keys;
-    below that AQE picks the strategy from the census's real size. Pass
-    a precomputed ``hot_keys`` frame to split several inputs by the SAME
-    key set (asof splits left and right by the combined census). The
-    probe side ``d`` is still scanned once by each of the two joins —
-    callers with an expensive upstream plan (not a plain scan) should
+def _hot_key_split(d, keys, threshold: int, hot_keys):
+    """(hot_rows, cold_rows): rows whose key is in ``hot_keys`` (the
+    ``_hot_keys_census`` frame at ``threshold``) vs the rest, by a
+    null-safe semi/anti join (NULL keys are real groups and can be hot —
+    plain `on=` equality would silently misroute them to cold). One
+    census splits several inputs by the SAME key set (asof splits left
+    and right by the combined census). The broadcast hint applies only
+    when ``threshold`` bounds the census to <= n/1024 keys; below that
+    AQE picks the strategy from the census's real size. The probe side
+    ``d`` is scanned once by each of the two joins — callers with an
+    expensive upstream plan (not a plain scan) should
     persist/localCheckpoint it before routing; the census itself is
     localCheckpointed so its aggregation runs exactly once."""
-    if hot_keys is None:
-        hot_keys, _ = _hot_keys_census(d, keys, threshold)
     dl = d.alias("__dd__")
     hk = hot_keys.alias("__hk__")
     if threshold >= BROADCAST_HINT_MIN_THRESHOLD:
@@ -597,12 +616,10 @@ def sessionize(odf, key_cols: list[str] | str, time_col: str,
     Adds ``{session_col}`` (1-based per key) — one shuffle on the key,
     both window functions share the same sort order.
 
-    ``time_buckets_sec`` (r12, the hot-key scale path): a window
-    partitioned by a SKEWED key puts the whole hot group in ONE task —
-    the one shuffle-skew class AQE cannot split (measured 2.1× at 30%
-    skew on the r12 skew probe; at 100 TB the hot key is a straggler
-    that never finishes). Passing a bucket span switches to an exact
-    two-phase plan: (1) sessionize WITHIN (key, time-bucket) windows —
+    ``time_buckets_sec`` (the hot-key scale path, see the module
+    docstring; ``hot_key_rows`` likewise; measured 2.1× at 30% skew on
+    a skew probe): passing a bucket span switches to an exact two-phase
+    plan: (1) sessionize WITHIN (key, time-bucket) windows —
     parallelism = buckets per key, so the hot key spreads over
     span/bucket tasks; (2) a per-(key, bucket) summary (first/last
     event time, local session count) merges sessions across bucket
@@ -610,32 +627,20 @@ def sessionize(odf, key_cols: list[str] | str, time_col: str,
     than the data; (3) one join back on (key, bucket). That join does
     NOT reuse the phase-1 exchange: the final AQE plan holds 3 hash
     exchanges and no ReusedExchange, even for key+time-only input, so
-    phase 1 runs twice. The result is IDENTICAL to the single-window plan (property-tested, including
-    NULL times and boundary-straddling sessions); pick a span well
-    above ``gap_sec`` so most sessions close within one bucket.
-
-    ``hot_key_rows`` routes ONLY hot keys through the bucketed plan
-    (default ``"auto"`` = 262,144 rows): a one-job key census decides
-    the plan. Cold keys take the plain single-window plan (their
-    partitions are small — bucketing them is pure overhead and, for
-    rolling, trips the density guard), hot keys take the two-phase
-    plan; only when both kinds exist is the input split and the results
-    unioned. ``None`` buckets every key; an int pins the
-    threshold. Without ``time_buckets_sec`` the same threshold instead
-    arms a zero-extra-job hot-key WARNING on the single-window plan
-    (r15): a row counter rides the existing window pass, its max rides
-    the caller's first action as an observe() metric, and a key group
-    at/over the threshold warns asynchronously naming
-    ``time_buckets_sec`` as the remedy (``None`` disables)."""
+    phase 1 runs twice. The result is IDENTICAL to the single-window
+    plan (property-tested, including NULL times and
+    boundary-straddling sessions); pick a span well above ``gap_sec``
+    so most sessions close within one bucket."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     d = _df(odf)
     t: Column = _epoch_sec(d, time_col)
-    if time_buckets_sec is None:
-        # the order key is MATERIALIZED as a column before the windows
-        # (r15): ordering by the raw epoch-cast EXPRESSION gave every
-        # Window node its own internal `_w0` projection, so the lag,
-        # running-sum and hot-key-counter windows each paid a separate
-        # Sort pass and never collapsed (plan: 3 Sort + 3 Window).
+
+    def plain(d, hot_key_rows):
+        # the order key is MATERIALIZED as a column before the windows:
+        # ordering by the raw epoch-cast EXPRESSION gives every Window
+        # node its own internal `_w0` projection, so the lag,
+        # running-sum and hot-key-counter windows would each pay a
+        # separate Sort pass and never collapse (3 Sort + 3 Window).
         # Over a real column the specs share attributes: one Sort, the
         # counter fuses into the running-sum Window (CollapseWindow),
         # and the values — hence results — are identical.
@@ -650,23 +655,20 @@ def sessionize(odf, key_cols: list[str] | str, time_col: str,
                                              Window.currentRow)) + 1)))
         out = _watch_hot_keys(out, w, "sessionize", hot_key_rows)
         return OmigoDF(out.drop("__brk__", "__ot__"))
-    if time_buckets_sec <= 0:
-        raise ValueError("sessionize: time_buckets_sec must be positive")
-    if hot_key_rows is not None:
-        run = partial(sessionize, key_cols=keys, time_col=time_col,
-                      gap_sec=gap_sec, session_col=session_col)
-        return _route_hot_keys(
-            [d], keys, hot_key_rows,
-            partial(run, time_buckets_sec=time_buckets_sec,
-                    hot_key_rows=None),
-            partial(run, time_buckets_sec=None))
+
+    return _ordered_carry(
+        "sessionize", [d], keys, time_buckets_sec, hot_key_rows, plain,
+        lambda d, span: _sessionize_bucketed(d, keys, t, gap_sec,
+                                             session_col, span))
+
+
+def _sessionize_bucketed(d, keys, t, gap_sec, session_col,
+                         span: float) -> OmigoDF:
+    """Exact two-phase sessionize (see sessionize) over time buckets of
+    ``t``: local sessions per (key, bucket), merged across bucket
+    boundaries on the per-bucket summary frame."""
     cols = list(d.columns)
-    # NULL times bucket to NULL, which sorts FIRST over the bucket
-    # order exactly as NULL t sorts first in the single-window plan;
-    # their NULL boundary gaps read as "continue" in both plans.
-    d2 = (d.withColumn("__t__", t)
-          .withColumn("__b__", _time_bucket(F.col("__t__"),
-                                           float(time_buckets_sec))))
+    d2, ws = _bucket_frame(d.withColumn("__t__", t), keys, "__t__", span)
     wl = Window.partitionBy(*map(qcol, keys), "__b__").orderBy("__t__")
     brk = (F.col("__t__") - F.lag("__t__").over(wl)
            > F.lit(gap_sec)).cast("bigint")
@@ -678,8 +680,6 @@ def sessionize(odf, key_cols: list[str] | str, time_col: str,
             .agg(F.min("__t__").alias("__ft__"),
                  F.max("__t__").alias("__lt__"),
                  F.max("__lid__").alias("__ns__")))
-    ws = Window.partitionBy(*map(qcol, keys)).orderBy(
-        F.col("__b__").asc_nulls_first())
     has_prev = F.lag(F.lit(1)).over(ws).isNotNull()
     # boundary gap NULL (either side's time NULL) = continue, matching
     # the single-window plan's NULL-gap-is-not-a-break rule
@@ -722,60 +722,43 @@ def rolling_aggregate(odf, key_cols: list[str] | str, order_col: str,
     order per key — when ``(key, order_col)`` can repeat; with the
     default None the caller asserts the order is already total.
 
-    ``time_buckets_sec`` (r12, the hot-key scale path — same hazard as
-    sessionize: a window partitioned by a skewed key is ONE task, the
-    shuffle-skew class AQE cannot split; measured 2.4× at 30% skew on
-    the r12 skew probe). Passing a bucket span runs the window inside
-    (key, time-bucket) partitions with a HALO: the last
-    ``window_rows - 1`` rows of each bucket are replicated into the
-    key's NEXT non-empty bucket (successor by per-key bucket order, so
-    empty buckets cannot break the chain), the frame is computed over
-    local+halo rows, and halo outputs are dropped. Exact — identical
-    to the single-window plan (property-tested) — PROVIDED every
-    interior bucket holds at least ``window_rows - 1`` rows, which one
-    cheap summary check enforces (raises with the pick-a-bigger-span
-    remedy otherwise; a boundary row would silently miss predecessors
-    two buckets back). Ties never straddle buckets (equal times share
-    a bucket), so the tiebreak contract is unchanged.
-
-    ``hot_key_rows`` (default ``"auto"`` = 262,144 rows) routes only
-    hot keys through the halo plan via a one-pass key census — cold
-    keys' partitions are small (no straggler to fix) and their sparse
-    buckets would trip the density guard; they keep the single-window
-    plan, and the two results union. ``None`` buckets every key.
-    Without ``time_buckets_sec`` the threshold instead arms the
-    zero-extra-job hot-key warning on the single-window plan (r15 —
-    see sessionize)."""
+    ``time_buckets_sec`` (the hot-key scale path, see the module
+    docstring; ``hot_key_rows`` likewise; measured 2.4× at 30% skew on
+    a skew probe): passing a bucket span runs the window inside (key,
+    time-bucket) partitions with a HALO: the last ``window_rows - 1``
+    rows of each bucket are replicated into the key's NEXT non-empty
+    bucket (successor by per-key bucket order, so empty buckets cannot
+    break the chain), the frame is computed over local+halo rows, and
+    halo outputs are dropped. Exact — identical to the single-window
+    plan (property-tested) — PROVIDED every interior bucket holds at
+    least ``window_rows - 1`` rows, which one cheap summary check
+    enforces (raises with the pick-a-bigger-span remedy otherwise; a
+    boundary row would silently miss predecessors two buckets back).
+    Ties never straddle buckets (equal times share a bucket), so the
+    tiebreak contract is unchanged. Cold keys keep the single-window
+    plan: their sparse buckets would trip the density guard."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     d = _df(odf)
-    if time_buckets_sec is not None:
-        if time_buckets_sec <= 0:
-            raise ValueError("rolling_aggregate: time_buckets_sec must "
-                             "be positive")
-        if hot_key_rows is not None:
-            run = partial(rolling_aggregate, key_cols=keys,
-                          order_col=order_col, agg_cols=agg_cols,
-                          agg_funcs=agg_funcs, window_rows=window_rows,
-                          precision=precision, tiebreak_cols=tiebreak_cols)
-            return _route_hot_keys(
-                [d], keys, hot_key_rows,
-                partial(run, time_buckets_sec=time_buckets_sec,
-                        hot_key_rows=None),
-                partial(run, time_buckets_sec=None))
-        return _rolling_bucketed(d, keys, order_col, agg_cols, agg_funcs,
-                                 window_rows, precision, tiebreak_cols,
-                                 float(time_buckets_sec))
-    # order key materialized as a column (r15, see sessionize): an
-    # expression orderBy denies Sort sharing and Window collapse, so
-    # the hot-key counter would pay its own Sort + Window pass
-    order = [F.col("__ot__")] + [qcol(c) for c in (tiebreak_cols or [])]
-    w_base = Window.partitionBy(*map(qcol, keys)).orderBy(*order)
-    w = w_base.rowsBetween(-(window_rows - 1), Window.currentRow)
-    out = d.withColumn("__ot__", _epoch_sec(d, order_col))
-    for name, expr in _rolling_exprs(w, agg_cols, agg_funcs, precision):
-        out = out.withColumn(name, expr)
-    return OmigoDF(_watch_hot_keys(out, w_base, "rolling_aggregate",
-                                   hot_key_rows).drop("__ot__"))
+
+    def plain(d, hot_key_rows):
+        # order key materialized as a column (see sessionize): an
+        # expression orderBy denies Sort sharing and Window collapse, so
+        # the hot-key counter would pay its own Sort + Window pass
+        order = [F.col("__ot__")] + [qcol(c) for c in (tiebreak_cols or [])]
+        w_base = Window.partitionBy(*map(qcol, keys)).orderBy(*order)
+        w = w_base.rowsBetween(-(window_rows - 1), Window.currentRow)
+        out = d.withColumn("__ot__", _epoch_sec(d, order_col))
+        for name, expr in _rolling_exprs(w, agg_cols, agg_funcs, precision):
+            out = out.withColumn(name, expr)
+        return OmigoDF(_watch_hot_keys(out, w_base, "rolling_aggregate",
+                                       hot_key_rows).drop("__ot__"))
+
+    return _ordered_carry(
+        "rolling_aggregate", [d], keys, time_buckets_sec, hot_key_rows,
+        plain,
+        lambda d, span: _rolling_bucketed(d, keys, order_col, agg_cols,
+                                          agg_funcs, window_rows, precision,
+                                          tiebreak_cols, span))
 
 
 def _rolling_exprs(w, agg_cols, agg_funcs, precision):
@@ -824,12 +807,10 @@ def _rolling_bucketed(d, keys, order_col, agg_cols, agg_funcs,
     last ``window_rows - 1`` rows replicated into the key's successor
     bucket so boundary frames are complete; halo outputs dropped."""
     cols = list(d.columns)
-    d2 = (d.withColumn("__t__", _epoch_sec(d, order_col))
-          .withColumn("__b__", _time_bucket(F.col("__t__"), span)))
+    d2, ws = _bucket_frame(d.withColumn("__t__", _epoch_sec(d, order_col)),
+                           keys, "__t__", span)
     summ = d2.groupBy(*map(qcol, keys), "__b__").agg(
         F.count(F.lit(1)).alias("__cnt__"))
-    ws = Window.partitionBy(*map(qcol, keys)).orderBy(
-        F.col("__b__").asc_nulls_first())
     summ = (summ.withColumn("__nxt__", F.lead("__b__").over(ws))
             .withColumn("__haspred__",
                         F.lag(F.lit(1)).over(ws).isNotNull()))
@@ -839,10 +820,9 @@ def _rolling_bucketed(d, keys, order_col, agg_cols, agg_funcs,
         # both a predecessor and a successor) must hold >= W-1 rows —
         # otherwise the first rows of its successor would silently
         # miss predecessors from two buckets back.
-        # The guard rides IN-PLAN (r14): the old construct-time
-        # limit(1).count() probe was a separate full-input aggregation
-        # job whose result nothing reused — one extra pass over the
-        # input per call. As a broadcast 1-row scalar it shares the
+        # The guard rides IN-PLAN: a construct-time probe would be a
+        # separate full-input aggregation job whose result nothing
+        # reuses. As a broadcast 1-row scalar it shares the
         # summary's groupBy exchange with the main plan
         # (ReusedExchange) and raises when its broadcast stage
         # materializes (raise-parity with the nb_classify/dsir/
@@ -916,9 +896,8 @@ def merge_intervals(odf, key_cols: list[str] | str, start_col: str,
     number is the running sum of those breaks. Both windows and the
     final collapse share one hash partitioning on the key.
 
-    ``time_buckets_sec`` (r13, the hot-key scale path — same straggler
-    as sessionize/rolling/asof: a window partitioned by a skewed key is
-    ONE task, the shuffle-skew class AQE cannot split): buckets rows by
+    ``time_buckets_sec`` (the hot-key scale path, see the module
+    docstring; ``hot_key_rows`` likewise): buckets rows by
     ``floor(start / span)`` and runs the carry in two exact phases. The
     running max-end is ASSOCIATIVE, so a per-(key, bucket) summary
     (max end) rolls up into a per-key running carry-in over the tiny
@@ -932,14 +911,7 @@ def merge_intervals(odf, key_cols: list[str] | str, start_col: str,
     Exact for ANY bucket span (no density requirement — an interval
     spanning many buckets is covered by the running max); equal starts
     share a bucket, so tie order is untouched. Property-tested
-    bit-identical to the single-window plan.
-
-    ``hot_key_rows`` (default ``"auto"`` = 262,144 rows) routes only
-    hot keys through the bucketed plan via the shared key census; cold
-    keys keep the plain plan and the outputs union. ``None`` buckets
-    every key. Without ``time_buckets_sec`` the threshold instead arms
-    the zero-extra-job hot-key warning on the single-window plan (r15 —
-    see sessionize)."""
+    bit-identical to the single-window plan."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     d = _df(odf)
 
@@ -958,45 +930,38 @@ def merge_intervals(odf, key_cols: list[str] | str, start_col: str,
 
     s = _c0(qcol(start_col).cast("double"))
     e = _c0(qcol(end_col).cast("double"))
-    if time_buckets_sec is not None:
-        if time_buckets_sec <= 0:
-            raise ValueError("merge_intervals: time_buckets_sec must be "
-                             "positive")
-        if hot_key_rows is not None:
-            run = partial(merge_intervals, key_cols=keys,
-                          start_col=start_col, end_col=end_col)
-            return _route_hot_keys(
-                [d], keys, hot_key_rows,
-                partial(run, time_buckets_sec=time_buckets_sec,
-                        hot_key_rows=None),
-                partial(run, time_buckets_sec=None))
-        return _merge_intervals_bucketed(d, keys, s, e,
-                                         float(time_buckets_sec))
-    # order keys materialized as columns (r15, see sessionize): ordering
-    # by the canonicalized-double EXPRESSIONS denied Sort sharing and
-    # Window collapse — the prev-max, running-sum and hot-key-counter
-    # windows each paid their own Sort pass. The aggregates read the
-    # same materialized values, so results are identical.
-    s0, e0 = F.col("__s0__"), F.col("__e0__")
-    w = Window.partitionBy(*map(qcol, keys)).orderBy(s0, e0)
-    prev_max_end = F.max(e0).over(
-        w.rowsBetween(Window.unboundedPreceding, -1))
-    brk = (F.when(prev_max_end.isNull() | (s0 > prev_max_end), 1)
-           .otherwise(0))
-    tagged = (d.withColumn("__s0__", s).withColumn("__e0__", e)
-              .withColumn("__brk__", brk)
-              .withColumn("__island__",
-                          F.sum("__brk__").over(
-                              w.rowsBetween(Window.unboundedPreceding,
-                                            Window.currentRow)))
-              .drop("__brk__"))
-    tagged = _watch_hot_keys(tagged, w, "merge_intervals", hot_key_rows)
-    return OmigoDF(
-        tagged.groupBy(*map(qcol, keys), "__island__")
-        .agg(F.min(s0).alias("island_start"),
-             F.max(e0).alias("island_end"),
-             F.count(F.lit(1)).alias("n_intervals"))
-        .withColumnRenamed("__island__", "island_id"))
+
+    def plain(d, hot_key_rows):
+        # order keys materialized as columns (see sessionize): ordering
+        # by the canonicalized-double EXPRESSIONS denies Sort sharing
+        # and Window collapse — the prev-max, running-sum and
+        # hot-key-counter windows would each pay their own Sort pass.
+        # The aggregates read the same materialized values, so results
+        # are identical.
+        s0, e0 = F.col("__s0__"), F.col("__e0__")
+        w = Window.partitionBy(*map(qcol, keys)).orderBy(s0, e0)
+        prev_max_end = F.max(e0).over(
+            w.rowsBetween(Window.unboundedPreceding, -1))
+        brk = (F.when(prev_max_end.isNull() | (s0 > prev_max_end), 1)
+               .otherwise(0))
+        tagged = (d.withColumn("__s0__", s).withColumn("__e0__", e)
+                  .withColumn("__brk__", brk)
+                  .withColumn("__island__",
+                              F.sum("__brk__").over(
+                                  w.rowsBetween(Window.unboundedPreceding,
+                                                Window.currentRow)))
+                  .drop("__brk__"))
+        tagged = _watch_hot_keys(tagged, w, "merge_intervals", hot_key_rows)
+        return OmigoDF(
+            tagged.groupBy(*map(qcol, keys), "__island__")
+            .agg(F.min(s0).alias("island_start"),
+                 F.max(e0).alias("island_end"),
+                 F.count(F.lit(1)).alias("n_intervals"))
+            .withColumnRenamed("__island__", "island_id"))
+
+    return _ordered_carry(
+        "merge_intervals", [d], keys, time_buckets_sec, hot_key_rows, plain,
+        lambda d, span: _merge_intervals_bucketed(d, keys, s, e, span))
 
 
 def _merge_intervals_bucketed(d, keys, s, e, span: float) -> OmigoDF:
@@ -1010,14 +975,12 @@ def _merge_intervals_bucketed(d, keys, s, e, span: float) -> OmigoDF:
     # max of ends, the LOCAL break flag (break ignoring cross-bucket
     # carry) and the local running break count, all over the same
     # Exchange+Sort on (key, bucket). Every window touching data rows
-    # lives HERE, before the carry-in join — r14: previously __pme__ was
-    # evaluated pre-join and the __lid__ running sum post-join, so for
+    # lives HERE, before the carry-in join, and the global island id is
+    # pure per-row arithmetic after the joins (see below): for
     # duplicate (s, e) rows the pairing of a break flag with its
-    # running-sum position relied on the join incidentally preserving
-    # tie order; now the global island id is pure per-row arithmetic
-    # after the joins (see below), so tie pairing is structural.
-    d2 = (d.withColumn("__s__", s).withColumn("__e__", e)
-          .withColumn("__b__", _time_bucket(F.col("__s__"), span)))
+    # running-sum position never relies on a join preserving tie order.
+    d2, ws = _bucket_frame(d.withColumn("__s__", s).withColumn("__e__", e),
+                           keys, "__s__", span)
     wl = Window.partitionBy(*map(qcol, keys), "__b__").orderBy(
         "__s__", "__e__")
     pme = F.max("__e__").over(wl.rowsBetween(Window.unboundedPreceding, -1))
@@ -1032,13 +995,11 @@ def _merge_intervals_bucketed(d, keys, s, e, span: float) -> OmigoDF:
     # The summary groups the WINDOWED frame so its aggregation needs no
     # exchange of its own (the plan still re-runs phase 1 for this
     # branch: no ReusedExchange, see sessionize); the per-bucket
-    # break count nlb rides the SAME aggregate (r15 — it only needs
-    # phase-1 columns, so it no longer waits for the carry-in join).
+    # break count nlb rides the SAME aggregate, as it only needs
+    # phase-1 columns.
     summ = local.groupBy(*map(qcol, keys), "__b__").agg(
         F.max("__e__").alias("__me__"),
         F.sum("__lbrk__").alias("__nlb__"))
-    ws = Window.partitionBy(*map(qcol, keys)).orderBy(
-        F.col("__b__").asc_nulls_first())
     summ = summ.withColumn(
         "__cin__", F.max("__me__").over(
             ws.rowsBetween(Window.unboundedPreceding, -1)))
@@ -1050,12 +1011,12 @@ def _merge_intervals_bucketed(d, keys, s, e, span: float) -> OmigoDF:
     # K = |suppressed|, the global running break count at a row is
     # L - least(L, K) — per-row arithmetic, no post-join window.
     #
-    # K itself needs only the BREAK rows (r15 — r13 #7): the last
-    # suppressed break is the K-th break, so K = max(L | lbrk=1,
-    # s <= cin), 0 when none. Joining cin onto the breaks-only
-    # projection (another phase-1 run, not reused) and re-aggregating
-    # is break-count-sized work, so the data-level carry-in join of the
-    # old shape disappears: ONE row-level summary join remains (below).
+    # K itself needs only the BREAK rows: the last suppressed break is
+    # the K-th break, so K = max(L | lbrk=1, s <= cin), 0 when none.
+    # Joining cin onto the breaks-only projection (another phase-1 run,
+    # not reused) and re-aggregating is break-count-sized work, so no
+    # data-level carry-in join is needed: ONE row-level summary join
+    # touches the data (below).
     breaks = (local.where(F.col("__lbrk__") == 1)
               .select(*map(qcol, keys), "__b__", "__s__", "__L__"))
     cinr = summ.select(*map(qcol, keys), "__b__", "__cin__", "__nlb__")

@@ -30,11 +30,12 @@ union of values; jaccard matches the reference's computeJacSim (:845).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..core.colutils import qcol
-
+from ..core.colutils import aliased, qcol
 from ..core.dataframe import OmigoDF
 
 
@@ -104,25 +105,26 @@ def distribution_drift(odf: OmigoDF, key_cols, bucket_col: str,
     lead_cols = ["sq", "nvals", "tot", "hterm"]
     pairs = (norms
              .select(*[qcol(k) for k in keys], qcol(bucket_col), *lead_cols,
-                     F.lead(bucket_col).over(w).alias("__bnext__"),
+                     F.lead(qcol(bucket_col)).over(w).alias("__bnext__"),
                      *[F.lead(c).over(w).alias(f"{c}2") for c in lead_cols])
              .where(F.col("__bnext__").isNotNull()))
-    a = counts.alias("a")
-    b = counts.alias("b")
-    pr = pairs.alias("p")
-    pa = F.col("a.cnt") / F.col("p.tot")
-    pb = F.col("b.cnt") / F.col("p.tot2")
+    # alias-qualified QUOTED refs throughout: F.col(f"a.{k}") and the
+    # bracket accessor PARSE the name, so a dot or backtick in a user
+    # column would resolve as a struct access or fail to parse
+    a, b, p = (partial(aliased, side) for side in ("a", "b", "p"))
+    pa = a("cnt") / p("tot")
+    pb = b("cnt") / p("tot2")
     m = (pa + pb) / 2
-    dots = (pr
-            .join(a, [F.col(f"a.{k}") == F.col(f"p.{k}") for k in keys]
-                  + [F.col(f"a.{bucket_col}") == F.col(f"p.{bucket_col}")])
-            .join(b, [F.col(f"b.{k}") == F.col(f"p.{k}") for k in keys]
-                  + [F.col(f"b.{bucket_col}") == F.col("p.__bnext__"),
-                     F.col(f"b.{value_col}") == F.col(f"a.{value_col}")])
-            .groupBy(*[F.col(f"p.{k}").alias(k) for k in keys],
-                     F.col(f"p.{bucket_col}").alias(bucket_col),
-                     F.col("p.__bnext__").alias("bucket_next"))
-            .agg(F.sum(F.col("a.cnt") * F.col("b.cnt")).alias("dot"),
+    dots = (pairs.alias("p")
+            .join(counts.alias("a"), [a(k) == p(k) for k in keys]
+                  + [a(bucket_col) == p(bucket_col)])
+            .join(counts.alias("b"), [b(k) == p(k) for k in keys]
+                  + [b(bucket_col) == p("__bnext__"),
+                     b(value_col) == a(value_col)])
+            .groupBy(*[p(k).alias(k) for k in keys],
+                     p(bucket_col).alias(bucket_col),
+                     p("__bnext__").alias("bucket_next"))
+            .agg(F.sum(a("cnt") * b("cnt")).alias("dot"),
                  F.count(F.lit(1)).alias("matched"),
                  F.sum(m * F.log2(m)).alias("mterm"),
                  F.sum((pa / 2) * F.log2(pa / 2)).alias("fa_m"),
@@ -134,26 +136,26 @@ def distribution_drift(odf: OmigoDF, key_cols, bucket_col: str,
                        qcol(bucket_col).alias("__d_b__"),
                        F.col("bucket_next").alias("__d_bn__"),
                        "dot", "matched", "mterm", "fa_m", "fb_m")
-    cond = [pairs[k] == dsel[f"__d_{k}__"] for k in keys]
-    cond += [pairs[bucket_col] == dsel["__d_b__"],
-             pairs["__bnext__"] == dsel["__d_bn__"]]
-    z = lambda c: F.coalesce(dsel[c], F.lit(0.0))  # noqa: E731
-    tot, tot2 = pairs["tot"], pairs["tot2"]
-    ha = F.log2(tot) - pairs["hterm"] / tot
-    hb = F.log2(tot2) - pairs["hterm2"] / tot2
-    fa_all = pairs["hterm"] / (2 * tot) - (1 + F.log2(tot)) / 2
-    fb_all = pairs["hterm2"] / (2 * tot2) - (1 + F.log2(tot2)) / 2
+    ds = partial(aliased, "d")
+    cond = [p(k) == ds(f"__d_{k}__") for k in keys]
+    cond += [p(bucket_col) == ds("__d_b__"), p("__bnext__") == ds("__d_bn__")]
+    z = lambda c: F.coalesce(ds(c), F.lit(0.0))  # noqa: E731
+    tot, tot2 = p("tot"), p("tot2")
+    ha = F.log2(tot) - p("hterm") / tot
+    hb = F.log2(tot2) - p("hterm2") / tot2
+    fa_all = p("hterm") / (2 * tot) - (1 + F.log2(tot)) / 2
+    fb_all = p("hterm2") / (2 * tot2) - (1 + F.log2(tot2)) / 2
     hm = -(z("mterm") + (fa_all - z("fa_m")) + (fb_all - z("fb_m")))
-    full = (pairs.join(dsel, cond, "left")
-            .select(*[pairs[k] for k in keys],
-                    pairs[bucket_col],
-                    pairs["__bnext__"].alias("bucket_next"),
-                    F.round(F.coalesce(dsel["dot"], F.lit(0))
-                            / F.sqrt(pairs["sq"] * pairs["sq2"]), 6)
+    full = (pairs.alias("p").join(dsel.alias("d"), cond, "left")
+            .select(*[p(k) for k in keys],
+                    p(bucket_col),
+                    p("__bnext__").alias("bucket_next"),
+                    F.round(F.coalesce(ds("dot"), F.lit(0))
+                            / F.sqrt(p("sq") * p("sq2")), 6)
                     .alias("cosine_sim"),
-                    F.round(F.coalesce(dsel["matched"], F.lit(0)).cast("double")
-                            / (pairs["nvals"] + pairs["nvals2"]
-                               - F.coalesce(dsel["matched"], F.lit(0))), 6)
+                    F.round(F.coalesce(ds("matched"), F.lit(0)).cast("double")
+                            / (p("nvals") + p("nvals2")
+                               - F.coalesce(ds("matched"), F.lit(0))), 6)
                     .alias("jaccard_sim"),
                     F.round(F.greatest(hm - (ha + hb) / 2, F.lit(0.0)), 6)
                     .alias("jsd")))

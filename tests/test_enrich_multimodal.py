@@ -158,3 +158,21 @@ def test_sample_frames_zero_duration_yields_no_frames(spark):
     out = MM.sample_frames(withmeta, "payload", every_ms=2, fake=True).df
     ids = [r["id"] for r in out.collect()]
     assert 2 not in ids and ids.count(1) == 3
+
+
+def test_enrich_join_back_hostile_output_names(spark):
+    """A dot in out_col or in the response-column prefix survives the
+    dedup join back of both enrichers (NULL keys included)."""
+    df = OmigoDF(spark.createDataFrame(
+        [(1, "a"), (2, None), (3, "a")], "id int, txt string"))
+    out = EN.enrich_with_model(
+        df, ["txt"], lambda recs: [f"m:{r['txt']}" for r in recs],
+        out_col="o.ut")
+    assert out.df.columns == ["id", "txt", "o.ut"]
+    assert sorted(map(tuple, out.df.collect()), key=repr) == [
+        (1, "a", "m:a"), (2, None, "m:None"), (3, "a", "m:a")]
+    ws = EN.call_web_service(df, "http://x/{txt}", prefix="p.q",
+                             call_fn=_mk_fake_call())
+    got = {r["id"]: r["p.q:response"] for r in ws.df.collect()}
+    assert got == {1: "echo:http://x/a", 2: "echo:http://x/",
+                   3: "echo:http://x/a"}

@@ -1,8 +1,8 @@
 """r13 review fixes: de-skewed analytic aggregate/group_count (groupBy +
 null-safe join-back instead of Window.partitionBy(group) — the hot-key
-window partition is the one shuffle-skew shape AQE cannot split), the
-broadcast-hint guard on the hot-key census, and the analytic forms that
-the window path rejected (quantiles, Python callables) now working."""
+window partition is the one shuffle-skew shape AQE cannot split), and
+the analytic forms that the window path rejected (quantiles, Python
+callables) now working."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -87,91 +87,6 @@ def test_aggregate_analytic_empty_grouping_is_broadcast_total(spark):
     assert sorted(r["v:sumfloat"] for r in out.df.collect()) == [6.0] * 3
     p = out.df._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in p
-
-
-def test_hot_key_census_broadcast_hint_guarded(spark):
-    """threshold below BROADCAST_HINT_MIN_THRESHOLD → census may be every
-    distinct key, so the explicit broadcast hint (which bypasses AQE's
-    size check) is withheld; above it the hint applies (r12 advice)."""
-    from omigo_data_analytics_spark.operators.timeseries import _hot_key_split
-
-    df = spark.createDataFrame([("k%d" % i, i) for i in range(10)], ["k", "v"])
-    hot_lo, _ = _hot_key_split(df, ["k"], 1)
-    assert "ResolvedHint" not in hot_lo._jdf.queryExecution().analyzed().toString()
-    hot_hi, _ = _hot_key_split(df, ["k"], 4096)
-    assert "ResolvedHint" in hot_hi._jdf.queryExecution().analyzed().toString()
-    # routing still exact under the low threshold
-    assert hot_lo.count() == 10
-
-
-def test_hot_key_census_runs_once_localcheckpointed(spark):
-    """the census is localCheckpointed: its aggregation does not re-run
-    per semi/anti join (r12 advice: lineage re-evaluation)."""
-    from omigo_data_analytics_spark.operators.timeseries import _hot_keys_census
-
-    df = spark.createDataFrame([("a", 1)] * 5 + [("b", 2)], ["k", "v"])
-    hk, counts = _hot_keys_census(df, ["k"], 3)
-    assert counts == {"keys": 2, "hot": 1}
-    # a checkpointed frame's plan is a scan of materialized blocks
-    assert "Scan ExistingRDD" in hk._jdf.queryExecution().executedPlan().toString()
-    assert [r["k"] for r in hk.collect()] == ["a"]
-
-
-def test_merge_intervals_bucketed_bit_identical(spark):
-    """r13: the bucketed two-phase gaps-and-islands plan is exact vs the
-    plain single-window plan — NULL starts/ends, zero-length intervals,
-    bucket-spanning intervals, NULL keys, across spans."""
-    import random
-
-    from omigo_data_analytics_spark.operators.timeseries import merge_intervals
-
-    random.seed(13)
-    rows = []
-    for k in ["a", "b", None]:
-        for _ in range(random.randint(10, 40)):
-            s0 = random.choice([None] + list(range(0, 500, 7)))
-            ln = random.choice([0, 1, 3, 50, 400])
-            e0 = None if (s0 is None and random.random() < .5) else \
-                ((s0 or 0) + ln if random.random() > .1 else None)
-            rows.append((k, float(s0) if s0 is not None else None,
-                         float(e0) if e0 is not None else None))
-    df = spark.createDataFrame(rows, "k string, s double, e double")
-    plain = merge_intervals(OmigoDF(df), "k", "s", "e").df
-
-    def canon(frame):
-        return sorted((tuple((v is None, v) for v in r) for r in
-                       map(tuple, frame.collect())))
-
-    pa = canon(plain)
-    for span in (10.0, 63.0, 1000.0):
-        b = merge_intervals(OmigoDF(df), "k", "s", "e",
-                            time_buckets_sec=span, hot_key_rows=1).df
-        assert canon(b) == pa, f"span={span} diverged"
-
-
-def test_merge_intervals_bucketed_no_raw_key_window(spark):
-    """the bucketed plan's windows only partition by (key, bucket) or
-    run over the tiny summary frame — never by the bare key over raw
-    rows (the straggler shape the path exists to remove)."""
-    from omigo_data_analytics_spark.operators.timeseries import merge_intervals
-
-    df = spark.createDataFrame([("a", 1.0, 2.0)], "k string, s double, e double")
-    out = merge_intervals(OmigoDF(df), "k", "s", "e",
-                          time_buckets_sec=60.0, hot_key_rows=None).df
-    import re
-
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
-        spec = m.group(1)
-        assert "__b__" in spec or "__me__" in spec or "__nb__" in spec, spec
-
-
-def test_merge_intervals_bucketed_rejects_bad_span(spark):
-    from omigo_data_analytics_spark.operators.timeseries import merge_intervals
-
-    df = spark.createDataFrame([("a", 1.0, 2.0)], "k string, s double, e double")
-    with pytest.raises(ValueError, match="time_buckets_sec"):
-        merge_intervals(OmigoDF(df), "k", "s", "e", time_buckets_sec=0.0)
 
 
 def test_group_by_key_hot_group_census_warns(spark):

@@ -399,3 +399,151 @@ def test_asof_router_counts_both_inputs(spark):
         assert ("LeftSemi" in _shape(out)) == mixed
         if not mixed:
             assert _shape(out) == _shape(bucketed)
+
+
+def test_router_cold_side_watches_at_callers_threshold(spark, monkeypatch):
+    """A mixed census runs the cold keys' plain plan with the caller's
+    hot_key_rows, not the "auto" default. A cold group is below that
+    threshold by definition, so a caller who already passed
+    time_buckets_sec is never told to pass it."""
+    import time
+    import warnings
+
+    from omigo_data_analytics_spark.core import jobs
+
+    monkeypatch.setattr(TS, "AUTO_HOT_KEY_ROWS", 4)
+    rows = [("h", float(i)) for i in range(12)]
+    rows += [("c", float(i)) for i in range(6)]
+    d = spark.createDataFrame(rows, "k string, t double")
+    before = list(jobs._watches)
+    out = TS.sessionize(d, "k", "t", time_buckets_sec=100.0,
+                        hot_key_rows=10).df
+    new = [w for w in jobs._watches if not any(w is b for b in before)]
+    assert "LeftSemi" in _shape(out) and len(new) == 1
+
+    def pending():
+        return any(w is x for w in new for x in list(jobs._watches))
+
+    with warnings.catch_warnings(record=True) as rec:
+        warnings.simplefilter("always")
+        assert len(out.collect()) == 18
+        deadline = time.time() + 15.0
+        while time.time() < deadline and pending():
+            time.sleep(0.1)
+        assert not pending()  # the watch's callback has run
+        assert not [w for w in rec if "key group" in str(w.message)]
+
+
+def test_asof_checks_arguments_before_census(spark):
+    """With time_buckets_sec set, asof_join rejects bad tiebreak_cols
+    and returns left for a payload-free right side without submitting
+    a job: both are decided before the census. A bad span still
+    raises on a payload-free right side."""
+    sc = spark.sparkContext
+
+    def n_jobs():
+        return len(sc.statusTracker().getJobIdsForGroup(None) or [])
+
+    left = spark.createDataFrame([("x", 1.0), ("y", 2.0)],
+                                 "k string, t double")
+    right = spark.createDataFrame([("x", 0.5, 1)], "k string, t double, v int")
+    keys_only = right.select("k")
+    j0 = n_jobs()
+    with pytest.raises(ValueError, match="tiebreak_cols"):
+        TS.asof_join(left, right, "k", "t", tiebreak_cols=["nope"],
+                     time_buckets_sec=3.0, hot_key_rows=1)
+    out = TS.asof_join(left, keys_only, "k", "t", time_buckets_sec=3.0,
+                       hot_key_rows=1).df
+    assert out.columns == ["k", "t"]
+    assert n_jobs() - j0 == 0
+    with pytest.raises(ValueError, match="time_buckets_sec must be positive"):
+        TS.asof_join(left, keys_only, "k", "t", time_buckets_sec=0.0)
+    assert _rows(out) == _rows(left)
+
+
+def test_hot_key_census_broadcast_hint_guarded(spark):
+    """threshold below BROADCAST_HINT_MIN_THRESHOLD → census may be every
+    distinct key, so the explicit broadcast hint (which bypasses AQE's
+    size check) is withheld; above it the hint applies (r12 advice)."""
+    from omigo_data_analytics_spark.operators.timeseries import (
+        _hot_key_split, _hot_keys_census)
+
+    df = spark.createDataFrame([("k%d" % i, i) for i in range(10)], ["k", "v"])
+    hot_lo, _ = _hot_key_split(df, ["k"], 1,
+                               _hot_keys_census(df, ["k"], 1)[0])
+    assert "ResolvedHint" not in hot_lo._jdf.queryExecution().analyzed().toString()
+    hot_hi, _ = _hot_key_split(df, ["k"], 4096,
+                               _hot_keys_census(df, ["k"], 4096)[0])
+    assert "ResolvedHint" in hot_hi._jdf.queryExecution().analyzed().toString()
+    # routing still exact under the low threshold
+    assert hot_lo.count() == 10
+
+
+def test_hot_key_census_runs_once_localcheckpointed(spark):
+    """the census is localCheckpointed: its aggregation does not re-run
+    per semi/anti join (r12 advice: lineage re-evaluation)."""
+    from omigo_data_analytics_spark.operators.timeseries import _hot_keys_census
+
+    df = spark.createDataFrame([("a", 1)] * 5 + [("b", 2)], ["k", "v"])
+    hk, counts = _hot_keys_census(df, ["k"], 3)
+    assert counts == {"keys": 2, "hot": 1}
+    # a checkpointed frame's plan is a scan of materialized blocks
+    assert "Scan ExistingRDD" in hk._jdf.queryExecution().executedPlan().toString()
+    assert [r["k"] for r in hk.collect()] == ["a"]
+
+
+def test_merge_intervals_bucketed_bit_identical(spark):
+    """r13: the bucketed two-phase gaps-and-islands plan is exact vs the
+    plain single-window plan — NULL starts/ends, zero-length intervals,
+    bucket-spanning intervals, NULL keys, across spans."""
+    import random
+
+    from omigo_data_analytics_spark.operators.timeseries import merge_intervals
+
+    random.seed(13)
+    rows = []
+    for k in ["a", "b", None]:
+        for _ in range(random.randint(10, 40)):
+            s0 = random.choice([None] + list(range(0, 500, 7)))
+            ln = random.choice([0, 1, 3, 50, 400])
+            e0 = None if (s0 is None and random.random() < .5) else \
+                ((s0 or 0) + ln if random.random() > .1 else None)
+            rows.append((k, float(s0) if s0 is not None else None,
+                         float(e0) if e0 is not None else None))
+    df = spark.createDataFrame(rows, "k string, s double, e double")
+    plain = merge_intervals(OmigoDF(df), "k", "s", "e").df
+
+    def canon(frame):
+        return sorted((tuple((v is None, v) for v in r) for r in
+                       map(tuple, frame.collect())))
+
+    pa = canon(plain)
+    for span in (10.0, 63.0, 1000.0):
+        b = merge_intervals(OmigoDF(df), "k", "s", "e",
+                            time_buckets_sec=span, hot_key_rows=1).df
+        assert canon(b) == pa, f"span={span} diverged"
+
+
+def test_merge_intervals_bucketed_no_raw_key_window(spark):
+    """the bucketed plan's windows only partition by (key, bucket) or
+    run over the tiny summary frame — never by the bare key over raw
+    rows (the straggler shape the path exists to remove)."""
+    from omigo_data_analytics_spark.operators.timeseries import merge_intervals
+
+    df = spark.createDataFrame([("a", 1.0, 2.0)], "k string, s double, e double")
+    out = merge_intervals(OmigoDF(df), "k", "s", "e",
+                          time_buckets_sec=60.0, hot_key_rows=None).df
+    import re
+
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
+        spec = m.group(1)
+        assert "__b__" in spec or "__me__" in spec or "__nb__" in spec, spec
+
+
+def test_merge_intervals_bucketed_rejects_bad_span(spark):
+    from omigo_data_analytics_spark.operators.timeseries import merge_intervals
+
+    df = spark.createDataFrame([("a", 1.0, 2.0)], "k string, s double, e double")
+    with pytest.raises(ValueError, match="time_buckets_sec"):
+        merge_intervals(OmigoDF(df), "k", "s", "e", time_buckets_sec=0.0)

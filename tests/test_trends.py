@@ -280,3 +280,18 @@ def test_null_bucket_excluded_engine_and_oracle_agree(spark):
         + ") ORDER BY 1, 2").df()
     pd.testing.assert_frame_equal(sp_tr, du_tr, check_dtype=False)
     assert not sp_tr["wk"].isna().any()
+
+
+def test_distribution_drift_hostile_column_names(spark):
+    """Dots and backticks in the key, bucket and value names are names,
+    not struct accesses: the result equals the plain-named run."""
+    rows = [("a", 1, "x"), ("a", 1, "y"), ("a", 2, "x"), ("a", 3, "z"),
+            (None, 1, "x"), (None, 2, "x"), ("b", 1, None), ("b", 2, None)]
+    plain = spark.createDataFrame(rows, "k string, b int, v string")
+    hostile = plain.toDF("k.x", "b.y", "v`z")
+    want = TR.distribution_drift(OmigoDF(plain), ["k"], "b", "v").df
+    got = TR.distribution_drift(OmigoDF(hostile), ["k.x"], "b.y", "v`z").df
+    assert got.columns == ["k.x", "b.y", "bucket_next", "cosine_sim",
+                           "jaccard_sim", "jsd"]
+    assert (sorted(map(tuple, got.collect()), key=repr)
+            == sorted(map(tuple, want.collect()), key=repr))

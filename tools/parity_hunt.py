@@ -5,7 +5,11 @@ and hostile column names (dots, backticks, colons, commas):
 
 - ops 0-3 (r13): the bucketed two-phase plans (sessionize /
   merge_intervals / asof x3 directions x tolerances / rolling) vs
-  their plain single-window twins;
+  their plain single-window twins, each twice: every key hot
+  (``hot_key_rows=1``) and a mixed census whose threshold is the
+  trial's largest per-key row count, so the router splits the input
+  and unions the hot (bucketed) and cold (plain) results whenever the
+  keys' counts differ;
 - ops 4-6 (r15, the r13-verdict de-skewed join-back shapes):
   aggregate(collapse=False)'s groupBy+join-back vs a window reference,
   inverted_index's doc_freq join-back + WindowGroupLimit postings vs a
@@ -13,15 +17,17 @@ and hostile column names (dots, backticks, colons, commas):
   vs a window-min reference.
 
 Asserts bit-identical canonical outputs. Complements the fixed-seed
-pytest properties with breadth. Expected "fails": the rolling
-decimal-overflow guard raising loudly on +-1e308 (its documented
-contract, shared by both plans).
+pytest properties with breadth. The rolling op sums ``v`` only when
+every value fits the window sum's DECIMAL(28,8) (a NaN, +-Inf or
++-1e308 makes its overflow guard raise in both plans, the documented
+contract) and otherwise compares the rolling count.
 
 Usage: python tools/parity_hunt.py [n_trials] [seed]
 """
 import os
 import random
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import Window, functions as F
@@ -62,6 +68,19 @@ def _q(name):
     return F.col(colutils.quote(name))
 
 
+def compare(trial, op, span, label, a, b):
+    """1 when ``b`` diverges from the reference ``a``, else 0."""
+    ca, cb = canon(a), canon(b)
+    if ca != cb:
+        only_a = [r for r in ca if r not in cb][:3]
+        only_b = [r for r in cb if r not in ca][:3]
+        print(f"trial {trial} op={op} span={span}{label} DIVERGED "
+              f"({len(ca)} vs {len(cb)} rows)\n  a-only={only_a}\n  b-only={only_b}")
+        return 1
+    print(f"trial {trial} op={op} span={span}{label} ok ({len(ca)} rows)")
+    return 0
+
+
 fails = 0
 for trial in range(N_TRIALS):
     rows = rand_rows()
@@ -71,18 +90,25 @@ for trial in range(N_TRIALS):
     df = spark.createDataFrame(rows, "k string, t double, v double")
     odf = OmigoDF(df)
     op = trial % N_OPS
+    # mixed-census threshold: the largest per-key row count (asof counts
+    # each key's left and right rows together), so the keys holding it
+    # are hot and the rest cold whenever the counts differ
+    key_rows = Counter(r[0] for r in rows)
+    mixed_thr = max(key_rows.values()) * (2 if op == 2 else 1)
+    mixed_label = (" mixed" if len(set(key_rows.values())) > 1
+                   else " mixed(all-hot)")
     try:
         if op == 0:
             gap = random.choice([5.0, 50.0])
-            a = TS.sessionize(odf, "k", "t", gap_sec=gap).df
-            b = TS.sessionize(odf, "k", "t", gap_sec=gap,
-                              time_buckets_sec=span, hot_key_rows=1).df
+
+            def carry(**kw):
+                return TS.sessionize(odf, "k", "t", gap_sec=gap, **kw).df
         elif op == 1:
             iv = OmigoDF(df.select("k", F.col("t").alias("s"),
                                    random.choice([F.col("v"), F.col("t") + 5.0]).alias("e")))
-            a = TS.merge_intervals(iv, "k", "s", "e").df
-            b = TS.merge_intervals(iv, "k", "s", "e",
-                                   time_buckets_sec=span, hot_key_rows=1).df
+
+            def carry(**kw):
+                return TS.merge_intervals(iv, "k", "s", "e", **kw).df
         elif op == 2:
             direction = random.choice(["backward", "forward", "nearest"])
             tol = random.choice([None, 10.0, 200.0])
@@ -90,14 +116,39 @@ for trial in range(N_TRIALS):
                                      F.col("v").alias("lv")))
             right = OmigoDF(df.select("k", F.col("t").alias("rt"),
                                       F.col("v").alias("rv")))
-            a = TS.asof_join(left, right, "k", "lt", "rt", suffix="q",
-                             direction=direction, tolerance_sec=tol,
-                             tiebreak_cols=["rv"]).df
-            b = TS.asof_join(left, right, "k", "lt", "rt", suffix="q",
-                             direction=direction, tolerance_sec=tol,
-                             tiebreak_cols=["rv"],
-                             time_buckets_sec=span, hot_key_rows=1).df
-        elif op == 4:
+
+            def carry(**kw):
+                return TS.asof_join(left, right, "k", "lt", "rt", suffix="q",
+                                    direction=direction, tolerance_sec=tol,
+                                    tiebreak_cols=["rv"], **kw).df
+        elif op == 3:
+            w = random.choice([2, 4])
+            # a NaN, +-Inf or +-1e308 in v trips the window sum's
+            # decimal-overflow guard in both plans (its documented
+            # contract), so such trials compare the rolling count
+            fn = ("sum" if all(r[2] is None or abs(r[2]) < 1e20 for r in rows)
+                  else "count")
+
+            def carry(**kw):
+                return TS.rolling_aggregate(odf, "k", "t", ["v"], [fn],
+                                            window_rows=w,
+                                            tiebreak_cols=["v"], **kw).df
+        if op <= 3:
+            a = carry()
+            for label, thr in (("", 1), (mixed_label, mixed_thr)):
+                b = carry(time_buckets_sec=span, hot_key_rows=thr)
+                try:
+                    fails += compare(trial, op, span, label, a, b)
+                except Exception as e:
+                    # the rolling span guard rides in the plan: it
+                    # fires when canon() executes the bucketed plan
+                    if op == 3 and "time_buckets_sec too small" in str(e):
+                        print(f"trial {trial}{label}: rolling guard "
+                              "raised (ok)")
+                        continue
+                    raise
+            continue
+        if op == 4:
             # aggregate(collapse=False): de-skewed groupBy+join-back vs
             # a window reference, hostile names, NULL keys. min/max only
             # (order-insensitive — float sum would false-diverge), and
@@ -164,36 +215,8 @@ for trial in range(N_TRIALS):
                                                 _q("d`st")))
                  .drop("__leaf__", "__rep__")
                  .select(*[_q(c) for c in edges.columns]).distinct())
-        else:
-            w = random.choice([2, 4])
-            a = TS.rolling_aggregate(odf, "k", "t", ["v"], ["sum"],
-                                     window_rows=w, tiebreak_cols=["v"]).df
-            try:
-                b = TS.rolling_aggregate(odf, "k", "t", ["v"], ["sum"],
-                                         window_rows=w, tiebreak_cols=["v"],
-                                         time_buckets_sec=span,
-                                         hot_key_rows=1).df
-            except Exception as e:
-                # in-plan since r14: fires at execution as a Spark error
-                if "time_buckets_sec too small" in str(e):
-                    print(f"trial {trial}: rolling guard raised (ok)")
-                    continue
-                raise
-        ca, cb = canon(a), canon(b)
-        if ca != cb:
-            fails += 1
-            only_a = [r for r in ca if r not in cb][:3]
-            only_b = [r for r in cb if r not in ca][:3]
-            print(f"trial {trial} op={op} span={span} DIVERGED "
-                  f"({len(ca)} vs {len(cb)} rows)\n  a-only={only_a}\n  b-only={only_b}")
-        else:
-            print(f"trial {trial} op={op} span={span} ok ({len(ca)} rows)")
+        fails += compare(trial, op, span, "", a, b)
     except Exception as ex:
-        if op == 3 and "time_buckets_sec too small" in str(ex):
-            # in-plan since r14: the guard fires when canon() executes
-            # the bucketed plan, not at construct time
-            print(f"trial {trial}: rolling guard raised (ok)")
-            continue
         if op == 3 and "decimal overflow" in str(ex):
             # documented contract on +-1e308 window sums, shared by
             # both plans (the docstring's expected-raise class); since
