@@ -565,21 +565,22 @@ class OmigoDF(CompatMixin):
         elif cast == "str":
             c = c.cast("string")
             value = str(value)
+        # lambdas: each comparison is a py4j round trip, so build only one
         cond = {
-            "eq": c == value,
+            "eq": lambda: c == value,
             # missing KEEPS the row under 'ne': the module's "'' and NULL
             # are both missing" contract ('' != 'x' is True in the
             # reference's string-first model) — matching every sibling
             # negative filter (values_not_in, not_startswith,
             # not_regex_match), where a bare c != value would silently
             # drop NULL/unparseable rows
-            "ne": ~F.coalesce(c == value, F.lit(False)),
+            "ne": lambda: ~F.coalesce(c == value, F.lit(False)),
             # 'ne_strict' drops missing: for is_nonzero*, where a missing
             # value is not a nonzero number
-            "ne_strict": c.isNotNull() & (c != value),
-            "gt": c > value, "ge": c >= value,
-            "lt": c < value, "le": c <= value,
-        }[op]
+            "ne_strict": lambda: c.isNotNull() & (c != value),
+            "gt": lambda: c > value, "ge": lambda: c >= value,
+            "lt": lambda: c < value, "le": lambda: c <= value,
+        }[op]()
         return self._wrap(self._df.filter(cond))
 
     def eq_int(self, col, value, ignore_if_missing=False):

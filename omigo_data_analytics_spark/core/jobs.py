@@ -73,10 +73,11 @@ def checkpoint_with_metrics(
 # daemon poller deliver them to a callback when the action completes.
 # Zero extra jobs, zero extra scans; a plan that is never executed simply
 # ages out of the bounded registry. The poller reads the JVM Observation
-# non-blockingly (getRowOrEmpty) so nothing ever parks on an unexecuted
+# with getRowOrEmpty, a bounded wait (up to 100 ms per pending watch per
+# sweep, on the poller thread) so nothing ever parks on an unexecuted
 # plan. That read is not public PySpark API, so each watch first probes
-# it; a PySpark without it gets no watch (the frame goes back
-# unobserved) rather than a poller that could fail or block.
+# that the handle has it; a PySpark without it gets no watch (the frame
+# goes back unobserved) rather than a poller that could fail or block.
 
 _WATCH_MAX = 256
 _POLL_SEC = 0.5
@@ -97,15 +98,15 @@ def _log_once(key: str, msg: str, *args, exc_info=False) -> None:
     _log.warning(msg, *args, exc_info=exc_info)
 
 
-def _nonblocking_read(obs: Observation):
-    """The observation's non-blocking row read (a callable returning a
-    JVM Option), or None when this PySpark's Observation lacks the
-    private ``_jo.getRowOrEmpty`` the poller relies on. Probed once per
-    watch: before any action the Option is simply empty."""
+def _bounded_read(obs: Observation):
+    """The observation's bounded row read (a callable returning a JVM
+    Option), or None when this PySpark's Observation lacks the private
+    ``_jo.getRowOrEmpty`` the poller relies on. Probed by name (one
+    round trip listing the handle's methods), never by calling it: on an
+    unexecuted plan the read waits its full 100 ms."""
     try:
-        read = obs._jo.getRowOrEmpty
-        read().isDefined()
-        return read
+        jo = obs._jo
+        return jo.getRowOrEmpty if "getRowOrEmpty" in dir(jo) else None
     except (AttributeError, Py4JError):
         return None
 
@@ -116,16 +117,16 @@ def observe_async(df: DataFrame, metrics: dict[str, Column],
     ``callback(metrics_dict)`` runs on a shared daemon thread after the
     returned frame's first action completes. A callback error never
     reaches the caller's query; it is logged once per callback. When
-    the non-blocking read is unavailable, ``df`` comes back unobserved
+    the bounded read is unavailable, ``df`` comes back unobserved
     and the callback never runs."""
     global _poller_alive
     obs = Observation()
     out = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
-    read = _nonblocking_read(obs)
+    read = _bounded_read(obs)
     if read is None:
         _log_once("observe_async:no-read",
                   "observe_async: this PySpark's Observation has no "
-                  "non-blocking read (_jo.getRowOrEmpty); asynchronous "
+                  "bounded read (_jo.getRowOrEmpty); asynchronous "
                   "diagnostics are disabled")
         return df
     with _watch_lock:

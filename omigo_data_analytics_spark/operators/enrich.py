@@ -53,16 +53,49 @@ def _find_placeholders(*templates) -> list[str]:
     return cols
 
 
+def _pos(i: int) -> str:
+    return f"__in{i}__"
+
+
+def _positional(df, cols: list[str]):
+    """``cols`` of ``df`` renamed ``_pos(0)``, ``_pos(1)``, ...:
+    mapInPandas reads each input column through PySpark's bracket
+    accessor, which parses a dot or backtick in the name, so the inputs
+    cross it under these aliases (``_map_named`` restores the names)."""
+    return df.select(*[qcol(c).alias(_pos(i)) for i, c in enumerate(cols)])
+
+
+def _map_named(src, names: list[str], run, out_fields: list):
+    """``src.mapInPandas(run)`` for a ``_positional`` frame whose columns
+    stand for ``names``: ``run`` sees every batch under ``names`` and adds
+    the ``out_fields`` columns; the result keeps the positional inputs."""
+    pos = src.columns
+    out_names = pos + [f.name for f in out_fields]
+
+    def _batches(pdf_iter: Iterator) -> Iterator:
+        def named():
+            for pdf in pdf_iter:
+                pdf.columns = names
+                yield pdf
+        for pdf in run(named()):
+            pdf.columns = out_names
+            yield pdf
+
+    return src.mapInPandas(_batches,
+                           schema=StructType(src.schema.fields + out_fields))
+
+
 def _join_back(df, enriched, keys: list[str], out_cols: list[str]) -> OmigoDF:
     """The dedup rewrite's join back: every row of ``df`` gets the
-    ``out_cols`` of the ``enriched`` distinct-``keys`` frame. NULL-SAFE:
-    dropDuplicates keeps a NULL key row and a call is issued for it, but
-    a plain equi-join would never match it back (NULL != NULL) — those
-    rows would get NULL outputs instead of the non-dedup path's values.
-    Sides are aliased and names quoted, so a dot or backtick in a
-    column name cannot parse as a struct access."""
-    cond = [aliased("__src__", c).eqNullSafe(aliased("__enr__", c))
-            for c in keys]
+    ``out_cols`` of the ``enriched`` distinct-``keys`` frame (keys under
+    their ``_positional`` aliases). NULL-SAFE: dropDuplicates keeps a
+    NULL key row and a call is issued for it, but a plain equi-join
+    would never match it back (NULL != NULL) — those rows would get NULL
+    outputs instead of the non-dedup path's values. Sides are aliased and
+    names quoted, so a dot or backtick in a column name cannot parse as
+    a struct access."""
+    cond = [aliased("__src__", c).eqNullSafe(aliased("__enr__", _pos(i)))
+            for i, c in enumerate(keys)]
     joined = df.alias("__src__").join(enriched.alias("__enr__"), cond, "left")
     return OmigoDF(joined.select(
         *[aliased("__src__", c) for c in df.columns],
@@ -162,18 +195,17 @@ def call_web_service(odf: OmigoDF, url: str, prefix: str,
                 pdf[f] = results[f]
             yield pdf
 
+    out_schema = [StructField(f, StringType()) for f in out_fields]
     if enable_opt_exec and ph_cols:
         # dedup rewrite: call once per distinct placeholder combination
-        distinct = odf.df.select(*map(qcol, ph_cols)).dropDuplicates()
-        schema = StructType(
-            [distinct.schema[c] for c in ph_cols]
-            + [StructField(f, StringType()) for f in out_fields])
-        enriched = distinct.mapInPandas(_run, schema=schema)
+        distinct = _positional(odf.df, ph_cols).dropDuplicates()
+        enriched = _map_named(distinct, ph_cols, _run, out_schema)
         return _join_back(odf.df, enriched, ph_cols, out_fields)
-    schema = StructType(
-        list(odf.df.schema.fields)
-        + [StructField(f, StringType()) for f in out_fields])
-    return OmigoDF(odf.df.mapInPandas(_run, schema=schema))
+    cols = odf.df.columns
+    out = _map_named(_positional(odf.df, cols), cols, _run, out_schema)
+    return OmigoDF(out.select(
+        *[F.col(_pos(i)).alias(c) for i, c in enumerate(cols)],
+        *map(qcol, out_fields)))
 
 
 # ------------------------------------------------------------- LLM template
@@ -185,9 +217,8 @@ def enrich_with_model(odf: OmigoDF, input_cols, model_fn: Callable,
     inside mapInPandas. Deduped on input_cols then joined back, same
     rewrite as call_web_service."""
     in_cols = list(input_cols)
-    distinct = odf.df.select(*map(qcol, in_cols)).dropDuplicates()
+    distinct = _positional(odf.df, in_cols).dropDuplicates()
     out_field = StructType.fromDDL(f"{quote(out_col)} {out_type}").fields[0]
-    schema = StructType([distinct.schema[c] for c in in_cols] + [out_field])
 
     def _run(pdf_iter: Iterator) -> Iterator:
         for pdf in pdf_iter:
@@ -198,5 +229,5 @@ def enrich_with_model(odf: OmigoDF, input_cols, model_fn: Callable,
             pdf[out_col] = vals
             yield pdf
 
-    return _join_back(odf.df, distinct.mapInPandas(_run, schema=schema),
+    return _join_back(odf.df, _map_named(distinct, in_cols, _run, [out_field]),
                       in_cols, [out_col])

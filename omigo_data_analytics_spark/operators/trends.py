@@ -90,21 +90,30 @@ def distribution_drift(odf: OmigoDF, key_cols, bucket_col: str,
     NULL buckets are excluded (both dialects): a NULL time window has
     no adjacency position — and Spark orders NULLS FIRST where DuckDB
     orders NULLS LAST, so keeping them would silently pair different
-    neighbors in the engine and the oracle (r10 review)."""
+    neighbors in the engine and the oracle (r10 review). A NULL key or
+    value is a real group, as in every grouped operator: the joins are
+    null-safe (both dialects), so it pairs with itself."""
     keys = odf._resolve(key_cols)
     odf._resolve([bucket_col, value_col])
+    # the keys and the value travel as one struct each: a struct is never
+    # NULL and structs with equal fields are equal, NULL fields included,
+    # so the joins below are null-safe while staying plain equi-joins on
+    # grouping columns (a <=> join key hides the grouping columns from
+    # the size estimate, which then stops broadcasting the small sides)
+    kk, vv = "__k__", "__v__"
     counts = (odf.df.where(qcol(bucket_col).isNotNull())
-              .groupBy(*[qcol(k) for k in keys], qcol(bucket_col), qcol(value_col))
+              .groupBy(F.struct(*map(qcol, keys)).alias(kk), qcol(bucket_col),
+                       F.struct(qcol(value_col)).alias(vv))
               .agg(F.count(F.lit(1)).alias("cnt")))
-    norms = (counts.groupBy(*[qcol(k) for k in keys], qcol(bucket_col))
+    norms = (counts.groupBy(kk, qcol(bucket_col))
              .agg(F.sum(F.col("cnt") * F.col("cnt")).alias("sq"),
                   F.count(F.lit(1)).alias("nvals"),
                   F.sum("cnt").alias("tot"),
                   F.sum(F.col("cnt") * F.log2("cnt")).alias("hterm")))
-    w = Window.partitionBy(*[qcol(k) for k in keys]).orderBy(qcol(bucket_col))
+    w = Window.partitionBy(kk).orderBy(qcol(bucket_col))
     lead_cols = ["sq", "nvals", "tot", "hterm"]
     pairs = (norms
-             .select(*[qcol(k) for k in keys], qcol(bucket_col), *lead_cols,
+             .select(kk, qcol(bucket_col), *lead_cols,
                      F.lead(qcol(bucket_col)).over(w).alias("__bnext__"),
                      *[F.lead(c).over(w).alias(f"{c}2") for c in lead_cols])
              .where(F.col("__bnext__").isNotNull()))
@@ -116,12 +125,12 @@ def distribution_drift(odf: OmigoDF, key_cols, bucket_col: str,
     pb = b("cnt") / p("tot2")
     m = (pa + pb) / 2
     dots = (pairs.alias("p")
-            .join(counts.alias("a"), [a(k) == p(k) for k in keys]
-                  + [a(bucket_col) == p(bucket_col)])
-            .join(counts.alias("b"), [b(k) == p(k) for k in keys]
-                  + [b(bucket_col) == p("__bnext__"),
-                     b(value_col) == a(value_col)])
-            .groupBy(*[p(k).alias(k) for k in keys],
+            .join(counts.alias("a"), [a(kk) == p(kk),
+                                      a(bucket_col) == p(bucket_col)])
+            .join(counts.alias("b"), [b(kk) == p(kk),
+                                      b(bucket_col) == p("__bnext__"),
+                                      b(vv) == a(vv)])
+            .groupBy(p(kk).alias(kk),
                      p(bucket_col).alias(bucket_col),
                      p("__bnext__").alias("bucket_next"))
             .agg(F.sum(a("cnt") * b("cnt")).alias("dot"),
@@ -132,13 +141,13 @@ def distribution_drift(odf: OmigoDF, key_cols, bucket_col: str,
     # pairs with zero shared values drop out of the join; re-attach them
     # with dot=0, matched=0 (and empty matched entropy terms) via a left
     # join from the pair list
-    dsel = dots.select(*[qcol(k).alias(f"__d_{k}__") for k in keys],
+    dsel = dots.select(F.col(kk).alias("__d_k__"),
                        qcol(bucket_col).alias("__d_b__"),
                        F.col("bucket_next").alias("__d_bn__"),
                        "dot", "matched", "mterm", "fa_m", "fb_m")
     ds = partial(aliased, "d")
-    cond = [p(k) == ds(f"__d_{k}__") for k in keys]
-    cond += [p(bucket_col) == ds("__d_b__"), p("__bnext__") == ds("__d_bn__")]
+    cond = [p(kk) == ds("__d_k__"), p(bucket_col) == ds("__d_b__"),
+            p("__bnext__") == ds("__d_bn__")]
     z = lambda c: F.coalesce(ds(c), F.lit(0.0))  # noqa: E731
     tot, tot2 = p("tot"), p("tot2")
     ha = F.log2(tot) - p("hterm") / tot
@@ -147,7 +156,7 @@ def distribution_drift(odf: OmigoDF, key_cols, bucket_col: str,
     fb_all = p("hterm2") / (2 * tot2) - (1 + F.log2(tot2)) / 2
     hm = -(z("mterm") + (fa_all - z("fa_m")) + (fb_all - z("fb_m")))
     full = (pairs.alias("p").join(dsel.alias("d"), cond, "left")
-            .select(*[p(k) for k in keys],
+            .select(*[p(kk).getField(k).alias(k) for k in keys],
                     p(bucket_col),
                     p("__bnext__").alias("bucket_next"),
                     F.round(F.coalesce(ds("dot"), F.lit(0))
@@ -165,8 +174,9 @@ def distribution_drift(odf: OmigoDF, key_cols, bucket_col: str,
 def distribution_drift_sql_duck(table: str, key_cols, bucket_col: str,
                                 value_col: str) -> str:
     keys = ", ".join(key_cols)
-    on_keys = " AND ".join(f"a.{k} = p.{k}" for k in key_cols)
-    on_keys_b = " AND ".join(f"b.{k} = p.{k}" for k in key_cols)
+    on_keys = " AND ".join(f"a.{k} IS NOT DISTINCT FROM p.{k}" for k in key_cols)
+    on_keys_b = " AND ".join(f"b.{k} IS NOT DISTINCT FROM p.{k}"
+                             for k in key_cols)
     p_keys = ", ".join(f"p.{k}" for k in key_cols)
     return f"""
 WITH c AS (SELECT {keys}, {bucket_col} AS bkt, {value_col} AS v,
@@ -190,7 +200,8 @@ d AS (SELECT {p_keys}, p.bkt, p.bnext,
              SUM((a.cnt / p.tot / 2) * log2(a.cnt / p.tot / 2)) AS fa_m,
              SUM((b.cnt / p.tot2 / 2) * log2(b.cnt / p.tot2 / 2)) AS fb_m
       FROM p JOIN c a ON {on_keys} AND a.bkt = p.bkt
-             JOIN c b ON {on_keys_b} AND b.bkt = p.bnext AND b.v = a.v
+             JOIN c b ON {on_keys_b} AND b.bkt = p.bnext
+                        AND b.v IS NOT DISTINCT FROM a.v
       GROUP BY {p_keys}, p.bkt, p.bnext)
 SELECT {p_keys}, p.bkt AS {bucket_col}, p.bnext AS bucket_next,
        round(COALESCE(d.dot, 0) / sqrt(p.sq * p.sq2), 6) AS cosine_sim,
@@ -206,7 +217,8 @@ SELECT {p_keys}, p.bkt AS {bucket_col}, p.bnext AS bucket_next,
            - ((log2(p.tot) - p.hterm / p.tot)
               + (log2(p.tot2) - p.hterm2 / p.tot2)) / 2,
            0), 6) AS jsd
-FROM p LEFT JOIN d ON {" AND ".join(f"d.{k} = p.{k}" for k in key_cols)}
+FROM p LEFT JOIN d ON {" AND ".join(f"d.{k} IS NOT DISTINCT FROM p.{k}"
+                                     for k in key_cols)}
                    AND d.bkt = p.bkt
 """
 

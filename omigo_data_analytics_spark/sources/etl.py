@@ -22,6 +22,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..core.dataframe import OmigoDF
+from .io import _as_paths, _read_parquet
 
 _GRAN_STEP = {"daily": timedelta(days=1), "hourly": timedelta(hours=1)}
 
@@ -60,6 +61,14 @@ def paths_for_range(base_path: str, start, end, granularity: str = "daily",
     return [f"{base_path}/{prefix}={v}" for v in dt_values(start, end, granularity)]
 
 
+def _load(spark: SparkSession, fmt: str, path_or_paths, reader_opts: dict):
+    """A parquet scan reuses its inferred schema (``io._read_parquet``);
+    any other format is a plain ``load``."""
+    if fmt == "parquet":
+        return _read_parquet(spark, _as_paths(path_or_paths), reader_opts)
+    return spark.read.format(fmt).options(**reader_opts).load(path_or_paths)
+
+
 def scan_by_datetime_range(spark: SparkSession, base_path: str, start, end,
                            granularity: str = "daily", fmt: str = "parquet",
                            partition_col: str = "dt", **reader_opts) -> OmigoDF:
@@ -67,10 +76,7 @@ def scan_by_datetime_range(spark: SparkSession, base_path: str, start, end,
     pruning (replaces reference etl.scan_by_datetime_range's manual path
     fan-out; the filter below reaches the scan as a PartitionFilter, so
     out-of-range dates are never listed or read)."""
-    reader = spark.read.format(fmt)
-    for k, v in reader_opts.items():
-        reader = reader.option(k, v)
-    df = reader.load(base_path)
+    df = _load(spark, fmt, base_path, reader_opts)
     vals = dt_values(start, end, granularity)
     return OmigoDF(df.where(F.col(partition_col).isin(vals)))
 
@@ -82,12 +88,7 @@ def read_with_filter_transform(spark: SparkSession, path_or_paths,
     per-file read loop by hand. Declaratively, `.select`/`.filter` after
     the scan compiles to scan-level pushdown (PushedFilters/ReadSchema in
     the plan) — same I/O savings, no custom read loop."""
-    from .io import _as_paths
-
-    reader = spark.read.format(fmt)
-    for k, v in reader_opts.items():
-        reader = reader.option(k, v)
-    df = reader.load(_as_paths(path_or_paths))
+    df = _load(spark, fmt, _as_paths(path_or_paths), reader_opts)
     odf = OmigoDF(df)
     if cols is not None:
         odf = odf.select(cols)

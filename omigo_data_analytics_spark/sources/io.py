@@ -6,12 +6,19 @@ and schema-merges the parts. On Spark all of that is the scan layer:
 multi-path reads are parallel tasks, .gz is transparent, schema merge is
 unionByName, and s3 is a filesystem URI. URL-decoding stays opt-in because
 the convention (SURVEY §1.1) only encodes cells in ``*:url_encoded`` columns.
+
+Parquet reads keep the schema they inferred (``_read_parquet``): Spark
+infers a parquet schema with a one-task job that reads a footer, so
+loading the same table twice would pay that job twice. A local table
+whose files, reader options and session confs are unchanged is loaded
+again with the kept schema supplied, which submits no job.
 """
 
 from __future__ import annotations
 
 import os
 from collections.abc import Iterable
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -98,9 +105,76 @@ def read_csv(spark: SparkSession, path_or_paths, header: bool = True) -> OmigoDF
     return read(spark, path_or_paths, sep=",", header=header, url_decode_cols=False)
 
 
+# abs paths -> (fingerprint, schema): one entry per path set, replaced
+# when the fingerprint changes; the oldest entry goes past the cap
+_SCHEMAS: dict = {}
+_SCHEMAS_MAX = 256
+
+
+def _local_path(p: str) -> str | None:
+    """The absolute local path of ``p``, or None when the files cannot be
+    listed here: another filesystem's URI, or a glob pattern."""
+    if "://" in p or p.startswith("file:"):
+        u = urlparse(p)
+        if u.scheme != "file" or u.netloc not in ("", "localhost"):
+            return None
+        p = u.path
+    if any(ch in p for ch in "*?[{"):
+        return None
+    return os.path.abspath(p)
+
+
+def _listing(root: str) -> tuple | None:
+    """(relative path, size, mtime ns) of every file under ``root``,
+    sorted; None when ``root`` does not exist."""
+    if os.path.isfile(root):
+        st = os.stat(root)
+        return (("", st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(root):
+        return None
+    out = []
+    for d, _, files in os.walk(root, followlinks=True):
+        for f in files:
+            full = os.path.join(d, f)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, root), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def _read_parquet(spark: SparkSession, paths: list[str],
+                  options: dict | None = None) -> DataFrame:
+    """``spark.read`` with ``options`` of parquet ``paths``, reusing the
+    schema inferred by an earlier read of the same local files.
+
+    The key is the absolute paths; the fingerprint is every file's
+    relative path, size and mtime under each path, the reader options and
+    the session's SQL confs (one round trip), so a rewrite or a conf that
+    changes inference (``spark.sql.legacy.parquet.nanosAsLong``) infers
+    afresh. Another filesystem's URI, a glob or a missing path reads
+    exactly as without the cache."""
+    options = options or {}
+    reader = spark.read.options(**options)
+    local = [_local_path(p) for p in paths]
+    listings = None if None in local else [_listing(p) for p in local]
+    if not paths or listings is None or None in listings:
+        return reader.parquet(*paths)
+    key = tuple(local)
+    fingerprint = (tuple(listings),
+                   tuple(sorted((k, repr(v)) for k, v in options.items())),
+                   spark._jsparkSession.conf().getAll().toString())
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == fingerprint:
+        return reader.schema(hit[1]).parquet(*paths)
+    df = reader.parquet(*paths)
+    _SCHEMAS.pop(key, None)
+    if len(_SCHEMAS) >= _SCHEMAS_MAX:
+        del _SCHEMAS[next(iter(_SCHEMAS))]
+    _SCHEMAS[key] = (fingerprint, df.schema)
+    return df
+
+
 def read_parquet(spark: SparkSession, path_or_paths) -> OmigoDF:
-    paths = _as_paths(path_or_paths)
-    return OmigoDF(spark.read.parquet(*paths))
+    return OmigoDF(_read_parquet(spark, _as_paths(path_or_paths)))
 
 
 def read_json(spark: SparkSession, path_or_paths, schema=None) -> OmigoDF:
@@ -652,7 +726,7 @@ def load_testdata(spark: SparkSession, sf_dir: str, table: str) -> OmigoDF:
     from ..session import prepare_session
 
     prepare_session(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
+    df = _read_parquet(spark, [os.path.join(sf_dir, f"{table}.parquet")])
     if table == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros((F.col("ts") / 1000).cast("long")))
     return OmigoDF(df)

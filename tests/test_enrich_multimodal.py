@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from omigo_data_analytics_spark import OmigoDF
+from omigo_data_analytics_spark.core.colutils import quote
 from omigo_data_analytics_spark.operators import enrich as EN
 from omigo_data_analytics_spark.operators import multimodal as MM
 
@@ -176,3 +177,26 @@ def test_enrich_join_back_hostile_output_names(spark):
     got = {r["id"]: r["p.q:response"] for r in ws.df.collect()}
     assert got == {1: "echo:http://x/a", 2: "echo:http://x/",
                    3: "echo:http://x/a"}
+
+
+def test_enrich_hostile_input_names(spark):
+    """Input columns named with a dot or a backtick reach mapInPandas
+    under positional aliases, while model_fn and the placeholders still
+    see the original names; every output keeps the input's columns."""
+    for name in ("t.x", "t`x"):
+        df = OmigoDF(spark.createDataFrame(
+            [(1, "a"), (2, None), (3, "a")], f"id int, {quote(name)} string"))
+        out = EN.enrich_with_model(
+            df, [name], lambda recs: [f"m:{r[name]}" for r in recs],
+            out_col="m")
+        assert out.df.columns == ["id", name, "m"]
+        assert sorted(map(tuple, out.df.collect()), key=repr) == [
+            (1, "a", "m:a"), (2, None, "m:None"), (3, "a", "m:a")]
+        for dedup in (True, False):
+            ws = EN.call_web_service(df, f"http://x/{{{name}}}", prefix="p",
+                                     call_fn=_mk_fake_call(),
+                                     enable_opt_exec=dedup)
+            assert ws.df.columns[:2] == ["id", name]
+            got = {r["id"]: r["p:response"] for r in ws.df.collect()}
+            assert got == {1: "echo:http://x/a", 2: "echo:http://x/",
+                           3: "echo:http://x/a"}, (name, dedup)

@@ -1,8 +1,9 @@
 """core/jobs.py: the observe-on-checkpoint census and the asynchronous
 observe() watch, including its fallback when PySpark lacks the private
-non-blocking read."""
+bounded read."""
 
 import logging
+import threading
 import time
 
 from pyspark.sql import functions as F
@@ -55,6 +56,40 @@ def test_observe_async_without_nonblocking_read_falls_back(
     assert calls == []
     msgs = [r.getMessage() for r in caplog.records if r.name == jobs.__name__]
     assert len(msgs) == 1 and "getRowOrEmpty" in msgs[0]
+
+
+def test_observe_async_probe_never_calls_the_read(spark, monkeypatch):
+    """The capability probe finds the read by name and never calls it on
+    the caller's thread: on an unexecuted plan the JVM read waits its full
+    100 ms, which every plain ordered carry would pay at construction."""
+    callers = []
+
+    class Empty:
+        def isDefined(self):
+            return False
+
+    class RecordingHandle:
+        def getRowOrEmpty(self):
+            callers.append(threading.current_thread())
+            return Empty()
+
+    class Recording(jobs.Observation):
+        def _on(self, df, *exprs):
+            out = super()._on(df, *exprs)
+            self._jo = RecordingHandle()
+            return out
+
+    monkeypatch.setattr(jobs, "Observation", Recording)
+    df = spark.range(5)
+    out = jobs.observe_async(df, {"n": F.count(F.lit(1))}, lambda m: None)
+    try:
+        assert out is not df  # the watch was armed
+        assert threading.current_thread() not in callers
+    finally:
+        with jobs._watch_lock:
+            for item in [w for w in jobs._watches
+                         if isinstance(w[0], Recording)]:
+                jobs._watches.remove(item)
 
 
 def test_observe_async_callback_error_logged_once(spark, monkeypatch, caplog):

@@ -631,3 +631,100 @@ def test_zorder_key_quotes_hostile_column_names(spark):
     out = df.withColumn("zk", zorder_key(df, ["m:x", "dotted.name"], bits=4))
     vals = [r["zk"] for r in out.collect()]
     assert len(vals) == 50 and len(set(vals)) > 1
+
+
+# ------------------------------------------------- parquet schema reuse
+def _jobs_in(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "parquet schema reuse")
+    try:
+        out = fn()
+    finally:
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setJobGroup(None, None)
+    return out, n_jobs
+
+
+def test_reload_of_unchanged_table_submits_no_job(spark, sf_dir):
+    """Loading an unchanged table again reuses its inferred schema: the
+    load submits no Spark job, and the frame is the same."""
+    first = IO.load_testdata(spark, sf_dir, "events")
+    again, n_jobs = _jobs_in(spark, "schema_reuse",
+                             lambda: IO.load_testdata(spark, sf_dir, "events"))
+    assert n_jobs == 0, f"a reload of an unchanged table ran {n_jobs} job(s)"
+    assert again.df.schema == first.df.schema
+    assert again.df.count() == first.df.count()
+
+
+def test_parquet_rewrite_infers_afresh(spark, tmpdir):
+    p = f"{tmpdir}/t"
+    spark.createDataFrame([(1,)], "a int").write.parquet(p)
+    assert IO.read_parquet(spark, p).df.dtypes == [("a", "int")]
+    spark.createDataFrame([("x", 2)], "a string, b int") \
+        .write.mode("overwrite").parquet(p)
+    out, n_jobs = _jobs_in(spark, "schema_rewrite",
+                           lambda: IO.read_parquet(spark, p))
+    assert n_jobs == 1
+    assert out.df.dtypes == [("a", "string"), ("b", "int")]
+    assert out.df.collect()[0] == ("x", 2)
+
+
+def test_parquet_conf_flip_infers_afresh(spark, tmpdir):
+    """Session confs are part of the key. A TIMESTAMP(NANOS) column reads
+    as a long under nanosAsLong; with the conf off the read infers afresh
+    and fails as a plain read does, instead of reusing the long. A
+    microsecond column reads as timestamp_ntz, and as timestamp once
+    NTZ inference is off."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    nanos, micros = f"{tmpdir}/nanos.parquet", f"{tmpdir}/micros.parquet"
+    for path, unit in ((nanos, "ns"), (micros, "us")):
+        pq.write_table(pa.table({"ts": pa.array([1_700_000_000_000_000_000],
+                                                pa.timestamp("ns")).cast(
+                                                    pa.timestamp(unit))}),
+                       path, version="2.6")
+
+    def ts_type(path):
+        return dict(IO.read_parquet(spark, path).df.dtypes)["ts"]
+
+    for key, path, on, off in (
+            ("spark.sql.legacy.parquet.nanosAsLong", nanos, "bigint", None),
+            ("spark.sql.parquet.inferTimestampNTZ.enabled", micros,
+             "timestamp_ntz", "timestamp")):
+        before = spark.conf.get(key)
+        spark.conf.set(key, "true")
+        try:
+            assert ts_type(path) == on
+            assert _jobs_in(spark, "schema_conf", lambda: ts_type(path))[1] == 0
+            spark.conf.set(key, "false")
+            if off is None:
+                with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+                    ts_type(path)
+            else:
+                assert ts_type(path) == off
+            spark.conf.set(key, "true")
+            assert ts_type(path) == on
+        finally:
+            spark.conf.set(key, before)
+
+
+def test_partitioned_scan_same_with_and_without_schema_reuse(spark, tmpdir):
+    base = f"{tmpdir}/events"
+    spark.createDataFrame([(i, f"2024010{1 + i % 4}") for i in range(20)],
+                          "v long, dt string").write.partitionBy("dt").parquet(base)
+    plain = spark.read.parquet(base).where(F.col("dt").isin(["20240102", "20240103"]))
+    for _ in range(2):   # the second scan reuses the first one's schema
+        out = ETL.scan_by_datetime_range(spark, base, "2024-01-02", "2024-01-03").df
+        assert out.schema == plain.schema
+        assert sorted(out.collect()) == sorted(plain.collect())
+
+
+def test_non_file_uri_is_never_listed(spark, monkeypatch):
+    """Another filesystem's URI reads exactly as without the cache: no
+    local listing, and Spark's own error."""
+    listed = []
+    monkeypatch.setattr(IO, "_listing", lambda p: listed.append(p))
+    with pytest.raises(Exception, match="nofs"):
+        IO.read_parquet(spark, "nofs://host/t.parquet")
+    assert listed == []

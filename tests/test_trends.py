@@ -77,6 +77,26 @@ def test_distribution_drift_matches_duckdb(spark):
     pd.testing.assert_frame_equal(sp, du, check_dtype=False)
 
 
+def test_distribution_drift_null_key_and_value_pair_up(spark):
+    """A NULL key (or value) is a group like 'a': two identical buckets
+    read cosine 1, jaccard 1, jsd 0 in the engine and in the oracle."""
+    rows = [(None, 1, "x"), (None, 2, "x"), ("a", 1, "x"), ("a", 2, "x"),
+            ("v", 1, None), ("v", 2, None)]
+    d = spark.createDataFrame(rows, "k string, b int, v string")
+    sp = (TR.distribution_drift(OmigoDF(d), ["k"], "b", "v").df.toPandas()
+          .sort_values("k", na_position="first").reset_index(drop=True))
+    assert sp["k"].tolist() == [None, "a", "v"]
+    assert sp["cosine_sim"].tolist() == [1.0] * 3
+    assert sp["jaccard_sim"].tolist() == [1.0] * 3
+    assert sp["jsd"].tolist() == [0.0] * 3
+    con = duckdb.connect()
+    con.register("t", d.toPandas())
+    du = con.execute("SELECT * FROM ("
+                     + TR.distribution_drift_sql_duck("t", ["k"], "b", "v")
+                     + ") ORDER BY k NULLS FIRST").df()
+    pd.testing.assert_frame_equal(sp, du, check_dtype=False)
+
+
 def test_distribution_drift_plan_partial_aggregation(spark):
     """The count aggregation must be partial+final (map-side combine) —
     the shuffle carries (key,bucket,value) partial counts, not rows."""
