@@ -796,11 +796,21 @@ def q_cosine_topk(spark, sf_dir):
     return SIM.cosine_topk(c, q, k=5).df
 
 
+def _duck_vec_ok(v: str) -> str:
+    """DuckDB twin of the engine's cosine-side screen
+    (``similarity._vec_side``): norm > 0 and finite. A NULL vector or
+    component makes the norm NULL and fails it too."""
+    n = SIM.norm_sql_duck(f"CAST({v} AS DOUBLE[])")
+    return f"({n}) > 0 AND (({n}) - ({n})) = 0"
+
+
 def _sql_cosine_topk() -> str:
     cos = SIM.cosine_sql_duck("c.embedding", "q.embedding")
+    ok = _duck_vec_ok("embedding")
     return f"""
-WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id < 3),
-c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 3),
+WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings
+           WHERE vec_id < 3 AND {ok}),
+c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 3 AND {ok}),
 s AS (SELECT q.query_id, c.vec_id, ROUND({cos}, 6) AS cosine FROM c, q),
 r AS (SELECT *, row_number() OVER (PARTITION BY query_id
                                    ORDER BY cosine DESC, vec_id) AS rank FROM s)
@@ -828,9 +838,7 @@ def _sql_similarity_lsh() -> str:
     cos = SIM.cosine_sql_duck("ce.embedding", "qe.embedding")
     return f"""
 WITH vb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            WHERE embedding IS NOT NULL
-              AND len(list_filter(CAST(embedding AS DOUBLE[]),
-                                  x -> (x - x) != 0 OR x IS NULL)) = 0),
+            WHERE {_duck_vec_ok("embedding")}),
 bk AS (SELECT vec_id, {buckets} AS bs FROM vb),
 cb AS (SELECT vec_id, unnest(bs) AS b FROM bk WHERE vec_id >= 3),
 qb AS (SELECT vec_id AS query_id, unnest(bs) AS b0 FROM bk WHERE vec_id < 3),
@@ -859,10 +867,15 @@ def _sql_similarity_ivf() -> str:
     cos_ec = SIM.cosine_sql_duck("e.embedding", "c.c_vec")
     cos_aq = SIM.cosine_sql_duck("a.embedding", "p.embedding")
     C, NP = SIM.IVF_CENTROIDS, SIM.IVF_NPROBE
+    ok = _duck_vec_ok("embedding")
+    # seeds come from the unscreened corpus (ivf_centroids drops only
+    # NULL and non-finite vectors); the lists and probes are screened
     return f"""
-WITH corp AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 3),
-q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id < 3),
-cent AS (SELECT vec_id AS c_id, embedding AS c_vec FROM corp
+WITH corp0 AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 3),
+corp AS (SELECT vec_id, embedding FROM corp0 WHERE {ok}),
+q AS (SELECT vec_id AS query_id, embedding FROM embeddings
+      WHERE vec_id < 3 AND {ok}),
+cent AS (SELECT vec_id AS c_id, embedding AS c_vec FROM corp0
          WHERE embedding IS NOT NULL
            AND len(list_filter(CAST(embedding AS DOUBLE[]),
                                x -> (x - x) != 0 OR x IS NULL)) = 0
@@ -1570,19 +1583,24 @@ FROM se
 """
 
 
+def _file_stream(spark, sf_dir: str, table: str) -> DataFrame:
+    """``{table}.parquet`` as a file-source stream. The schema comes
+    through ``io.read_parquet``, whose cached inference submits no job on
+    a table already loaded. The events stream carries ``ts`` as
+    TIMESTAMP, which a watermark requires (``io.events_ts``)."""
+    from omigo_data_analytics_spark.sources import io as IO
+    schema = IO.read_parquet(spark, f"{sf_dir}/{table}.parquet").df.schema
+    sdf = ST.file_source(spark, sf_dir, schema,
+                         glob_filter=f"{table}.parquet")
+    if table == "events":
+        sdf = IO.events_ts(sdf).withColumn("ts", F.col("ts").cast("timestamp"))
+    return sdf
+
+
 def q_stream_window(spark, sf_dir):
     """Structured Streaming: file source over events -> watermarked 1-hour
     tumbling windows -> memory sink; oracle = the equivalent batch SQL."""
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    sdf = ST.file_source(spark, sf_dir, schema, glob_filter="events.parquet")
-    # event-time must be TIMESTAMP for the watermark; the driver's testdata
-    # has shipped ts both as integer nanos and as timestamp[us] (NTZ) across
-    # rounds, so adapt to whichever shape this copy has
-    if isinstance(schema["ts"].dataType, (T.LongType, T.IntegerType)):
-        sdf = sdf.withColumn("ts", F.timestamp_micros(
-            (F.col("ts") / 1000).cast("long")))
-    else:
-        sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
+    sdf = _file_stream(spark, sf_dir, "events")
     agg = ST.windowed_aggregate(sdf, "ts", "1 hour", ["value"], ["sumdec"],
                                 grouping_cols=["event_type"])
     name = "omigo_stream_window"
@@ -1767,13 +1785,7 @@ def q_stream_sessions(spark, sf_dir):
     """Structured Streaming session windows (inactivity gap 30 min) over
     the events stream; oracle = batch gap-sessionization SQL (a gap
     session window is exactly: start = min ts, end = max ts + gap)."""
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    sdf = ST.file_source(spark, sf_dir, schema, glob_filter="events.parquet")
-    if isinstance(schema["ts"].dataType, (T.LongType, T.IntegerType)):
-        sdf = sdf.withColumn("ts", F.timestamp_micros(
-            (F.col("ts") / 1000).cast("long")))
-    else:
-        sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
+    sdf = _file_stream(spark, sf_dir, "events")
     agg = ST.sessionize(sdf, "user_id", "ts", gap="30 minutes")
     name = "omigo_stream_sessions"
     q = (agg.writeStream.format("memory").queryName(name)
@@ -2158,8 +2170,7 @@ def q_stream_running_counts(spark, sf_dir):
     """Custom stateful streaming operator (applyInPandasWithState):
     per-key running event counts; with availableNow the single batch's
     final state equals the batch group count, so the oracle is exact."""
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    sdf = ST.file_source(spark, sf_dir, schema, glob_filter="events.parquet")
+    sdf = _file_stream(spark, sf_dir, "events")
     agg = ST.running_counts(sdf, "event_type")
     name = "omigo_stream_rc"
     q = (agg.writeStream.format("memory").queryName(name)
@@ -2181,14 +2192,8 @@ def q_stream_dedup(spark, sf_dir):
     means dedup state never expires mid-run, so the landed set is
     exactly the batch DISTINCT — the oracle is exact (same pattern that
     made stream_running_counts exactly checkable)."""
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    sdf = ST.file_source(spark, sf_dir, schema, glob_filter="events.parquet")
-    if isinstance(schema["ts"].dataType, (T.LongType, T.IntegerType)):
-        sdf = sdf.withColumn("ts", F.timestamp_micros(
-            (F.col("ts") / 1000).cast("long")))
-    else:
-        sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
-    sdf = sdf.select("user_id", "event_type", "ts")
+    sdf = _file_stream(spark, sf_dir, "events").select(
+        "user_id", "event_type", "ts")
     out = ST.stream_dedup(sdf, ["user_id", "event_type"], ts_col="ts",
                           watermark="3650 days")
     name = "omigo_stream_dedup"
@@ -2210,10 +2215,8 @@ def q_stream_lsh_candidates(spark, sf_dir):
     applyInPandasWithState. availableNow lands the corpus in one batch
     with in-batch arrivals ordered by doc_id, so the run is exactly a
     batch min-over-bucket window query — the oracle replays it."""
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    sdf = ST.file_source(spark, sf_dir, schema,
-                         glob_filter="documents.parquet")
-    out = ST.stream_near_dup_candidates(sdf)
+    out = ST.stream_near_dup_candidates(
+        _file_stream(spark, sf_dir, "documents"))
     name = "omigo_stream_lsh"
     q = (out.writeStream.format("memory").queryName(name)
          .outputMode("append").trigger(availableNow=True).start())

@@ -22,7 +22,9 @@ from pyspark.sql import types as T
 
 from . import colutils
 
-logger = logging.getLogger("omigo_data_analytics_spark")
+logger = logging.getLogger(__name__)
+# the debug toggles set the level of the whole package tree
+_PKG_LOGGER = logging.getLogger(__name__.partition(".")[0])
 
 _WARNED: set[str] = set()
 _COLLECT_WARN_ROWS = 1_000_000
@@ -650,12 +652,12 @@ class CompatMixin:
     # ----------------------------------------------------- verbosity toggles
     def enable_debug_mode(self):
         _MODES["debug"] = True
-        logger.setLevel(logging.DEBUG)
+        _PKG_LOGGER.setLevel(logging.DEBUG)
         return self
 
     def disable_debug_mode(self):
         _MODES["debug"] = False
-        logger.setLevel(logging.INFO)
+        _PKG_LOGGER.setLevel(logging.INFO)
         return self
 
     def enable_info_mode(self):

@@ -35,7 +35,7 @@ from .compat import CompatMixin
 from ..functions import aggs as aggs_mod
 from ..functions.aggs import agg_expr, func_name
 
-log = logging.getLogger("omigo_spark")
+log = logging.getLogger(__name__)
 
 
 def from_spark(df: DataFrame) -> "OmigoDF":

@@ -242,37 +242,37 @@ def decontaminate_semantic(train: OmigoDF, eval_odf: OmigoDF, id_col: str,
     num_clusters ≈ sqrt(|eval|) and nprobe 2-4: contaminated pairs
     land in different clusters only when the pair straddles a cluster
     boundary, exactly the case a 2-4 probe recovers."""
-    from .similarity import _dot_expr, _norm_expr, hash_embeddings
+    from .similarity import (_pair_cos, _probe_lists, _vec_side,
+                             hash_embeddings)
     train._resolve([id_col, col])
     ecol = eval_col or col
     eval_odf._resolve(ecol)
-    # normalize=False: cosine divides by the hoisted true norms below —
-    # normalizing AND dividing would pay the per-row L2 pass twice for
-    # norms that are ~1 by construction (r8 review)
-    tr = (hash_embeddings(train, col=col, dim=dim, out_col="__te__",
-                          normalize=False)
-          .df.select(qcol(id_col), F.col("__te__"),
-                     F.expr(_norm_expr("__te__")).alias("__tn__")))
-    cos = F.round(F.expr(_dot_expr("__te__", "__ee__"))
-                  / (F.col("__tn__") * F.col("__en__")), precision)
+
+    def embed(odf, c, keep, v, n, checkpoint):
+        # normalize=False: cosine divides by the hoisted true norms —
+        # normalizing AND dividing would pay the per-row L2 pass twice
+        # for norms that are ~1 by construction (r8 review)
+        emb = hash_embeddings(odf, col=c, dim=dim, out_col=v,
+                              normalize=False).df
+        return _vec_side(emb, keep, v, v, n, checkpoint=checkpoint)
+
+    # The train side is CHECKPOINTED on both paths: the hoisted norm and
+    # every cosine reference the computed __te__, and without the cut
+    # CollapseProject and the screen's pushdown re-inline the md5-token
+    # embed fold into them (measured 22.6 s vs ~3 s at sf0.1, the
+    # re-inlining trap hash_embeddings documents).
+    tr = embed(train, col, [qcol(id_col)], "__te__", "__tn__", True)
+    cos = _pair_cos("__te__", "__ee__", "__tn__", "__en__", precision)
     if num_clusters:
         from .similarity import kmeans_assign, kmeans_centroids
         eid = eval_id_col or id_col
         eval_odf._resolve(eid)
-        # Both embed sides are CHECKPOINTED before assignment: __te__ /
-        # __ee__ are computed projections, and the nearest-centroid
-        # expression references them once per centroid candidate —
-        # CollapseProject would re-inline the whole md5-token fold into
-        # every cosine (measured 22.6 s vs ~3 s at sf0.1, the exact
-        # re-inlining trap hash_embeddings documents). The checkpoint
-        # also stops the k-means training jobs (seeds + one per Lloyd
-        # round) from re-deriving the eval embeddings per job.
-        ev = (hash_embeddings(eval_odf, col=ecol, dim=dim, out_col="__ee__",
-                              normalize=False)
-              .df.select(qcol(eid).alias("__eid__"), F.col("__ee__"),
-                         F.expr(_norm_expr("__ee__")).alias("__en__"))
-              .where(F.col("__en__") > 0)
-              .localCheckpoint(eager=False))
+        # the eval side is checkpointed too: the nearest-centroid
+        # expression references __ee__ once per centroid candidate, and
+        # the k-means training jobs (seeds + one per Lloyd round) would
+        # re-derive the eval embeddings per job
+        ev = embed(eval_odf, ecol, [qcol(eid).alias("__eid__")], "__ee__",
+                   "__en__", True)
         if num_clusters == "auto":
             # sqrt(|eval|) per the cost model above; the count reads the
             # checkpointed embeddings, so it is one cheap job that the
@@ -284,23 +284,15 @@ def decontaminate_semantic(train: OmigoDF, eval_odf: OmigoDF, id_col: str,
         ev_asg = (kmeans_assign(OmigoDF(ev), cents, vec_col="__ee__",
                                 cluster_col="__c__", cos_col="__xc__")
                   .df.select("__c__", "__ee__", "__en__"))
-        tr_pos = tr.where(F.col("__tn__") > 0).localCheckpoint(eager=False)
         if int(nprobe) > 1:
             # multi-probe: explode the nprobe nearest centroids per
             # train row (slice of the same sorted candidate array the
             # single-assignment uses, so nprobe=1 would be identical);
             # the screen join below then checks every eval doc resident
             # in ANY probed cluster — the IVF recall dial.
-            from .similarity import _IVF_SORT, _ivf_cands_expr
-            tr_asg = (tr_pos
-                      .withColumn("__cand__", F.explode(F.expr(
-                          f"slice(array_sort("
-                          f"{_ivf_cands_expr('__te__', cents)}, "
-                          f"{_IVF_SORT}), 1, {int(nprobe)})")))
-                      .select(qcol(id_col), "__te__", "__tn__",
-                              F.col("__cand__.id").alias("__c__")))
+            tr_asg = _probe_lists(tr, "__te__", cents, nprobe, out="__c__")
         else:
-            tr_asg = (kmeans_assign(OmigoDF(tr_pos),
+            tr_asg = (kmeans_assign(OmigoDF(tr),
                                     cents, vec_col="__te__",
                                     cluster_col="__c__", cos_col="__xc__")
                       .df.select(qcol(id_col), "__te__", "__tn__", "__c__"))
@@ -308,20 +300,8 @@ def decontaminate_semantic(train: OmigoDF, eval_odf: OmigoDF, id_col: str,
                         .where(cos >= threshold)
                         .select(qcol(id_col)).distinct())
         return OmigoDF(train.df.join(contaminated, id_col, "left_anti"))
-    # Dense path: checkpoint the corpus embed side too (r9 verdict #3,
-    # the builder's own residual (b)) — `cos` references __te__ (dot)
-    # AND __tn__ (itself a fold over __te__); without the cut
-    # CollapseProject re-inlines the md5-token embed fold into the
-    # hoisted norm, computing it ~2x per corpus row — the exact
-    # re-inlining trap the clustered branch above already checkpoints
-    # against (measured there: 22.6 -> 9.0 s at sf0.1).
-    tr = tr.localCheckpoint(eager=False)
-    ev = (hash_embeddings(eval_odf, col=ecol, dim=dim, out_col="__ee__",
-                          normalize=False)
-          .df.select(F.col("__ee__"),
-                     F.expr(_norm_expr("__ee__")).alias("__en__")))
+    ev = embed(eval_odf, ecol, [], "__ee__", "__en__", False)
     contaminated = (tr.crossJoin(F.broadcast(ev))
-                    .where(F.col("__tn__") > 0).where(F.col("__en__") > 0)
                     .where(cos >= threshold)
                     .select(qcol(id_col)).distinct())
     return OmigoDF(train.df.join(contaminated, id_col, "left_anti"))

@@ -45,7 +45,6 @@ def _tokens(dialect: str, col: str) -> str:
     # names; dots/backticks would parse — r13 hostile-name sweep). The
     # duck side serves the fixed-name oracle views.
     if dialect == "spark":
-        from ..core.colutils import quote
         return f"filter(split({quote(col)}, ' +'), x -> x != '')"
     return f"list_filter(string_split_regex({col}, ' +'), x -> x != '')"
 
@@ -646,29 +645,12 @@ def embedding_dup_pairs(odf: OmigoDF, threshold: float = 0.9,
     for oracle checks and small corpora only (cosine is a pure codegen
     expression; Spark picks broadcast-nested-loop when one side is
     small). Do not use at scale."""
-    from .similarity import _buckets_col, _dot_expr, _norm_expr
-    # hoist the per-row norm out of the pair loop: O(n) norms instead of
-    # O(n^2); hoisting is value-identical so the DuckDB oracle (which
-    # computes dot/(norm_a*norm_b) inline) still hash-matches.
-    # (dim is unused by the dot/norm expressions since the r7 detect_dim
-    # removal; None skips the wasted full-plan driver job it used to pay)
-    dim = None
-    base = (ensure_min_parallelism(odf.df)
-            .select(qcol(id_col), qcol(vec_col).alias("__v__"),
-                    F.expr(_norm_expr(quote(vec_col), dim)).alias("__n__"))
-            # zero-norm vectors have no defined cosine and can never
-            # pass a positive threshold — and under Spark 4's default
-            # ANSI mode the unguarded division below THROWS
-            # DIVIDE_BY_ZERO on the first all-zeros embedding
-            # (r10 review; same screen decontaminate_semantic applies).
-            # The (n - n = 0) finiteness term (r11 extreme-values sweep)
-            # additionally drops NaN/Inf-corrupted vectors from PAIR
-            # GENERATION: NaN compares greater-than in both Spark and
-            # DuckDB, so an unscreened NaN cosine passes >= threshold
-            # and one corrupt embedding would "near-dup" every vector
-            # it meets. Corrupt rows still ride through the OUTPUT.
-            .where((F.col("__n__") > 0)
-                   & (F.col("__n__") - F.col("__n__") == 0)))
+    from .similarity import _buckets_col, _pair_cos, _vec_side
+    # norms hoisted out of the pair loop (O(n) folds, not O(n^2)); the
+    # screen keeps zero-norm and NaN/Inf-corrupted vectors out of PAIR
+    # GENERATION only (see _vec_side)
+    base = _vec_side(ensure_min_parallelism(odf.df), [qcol(id_col)], vec_col,
+                     "__v__", "__n__")
     if method == "exact":
         a = base.select(qcol(id_col).alias("id_a"), F.col("__v__").alias("__va__"),
                         F.col("__n__").alias("__na__"))
@@ -691,8 +673,7 @@ def embedding_dup_pairs(odf: OmigoDF, threshold: float = 0.9,
                  .dropDuplicates(["id_a", "id_b"]))
     else:
         raise ValueError(f"embedding_dup_pairs: unknown method: {method}")
-    cos = F.round(F.expr(_dot_expr("__va__", "__vb__", dim))
-                  / (F.col("__na__") * F.col("__nb__")), precision)
+    cos = _pair_cos("__va__", "__vb__", "__na__", "__nb__", precision)
     return OmigoDF(pairs.select("id_a", "id_b", cos.alias("cosine"))
                    .where(F.col("cosine") >= threshold))
 
@@ -993,7 +974,8 @@ def semdedup(odf: OmigoDF, threshold: float = 0.9,
     k=8 default was a measured scale-killer (804 s vs 62 s at the 40×
     rig, SCALE.md). Pass an explicit k (or ``centroids``) to pin the
     clustering exactly — the oracle-checked registry query does."""
-    from .similarity import _dot_expr, _norm_expr, kmeans_assign, kmeans_centroids
+    from .similarity import (_pair_cos, _vec_side, kmeans_assign,
+                             kmeans_centroids)
     if centroids is None and num_clusters is None:
         num_clusters = _auto_num_clusters(odf.df.count())
     cents = centroids if centroids is not None else kmeans_centroids(
@@ -1001,27 +983,16 @@ def semdedup(odf: OmigoDF, threshold: float = 0.9,
     # kmeans_assign applies ensure_min_parallelism itself — no outer wrap
     assigned = kmeans_assign(odf, cents, vec_col=vec_col,
                              cluster_col=cluster_col)
-    # norms hoisted out of the pair loop (same trick as embedding_dup_pairs)
-    base = (assigned.df
-            .select(qcol(id_col), qcol(cluster_col),
-                    F.expr(f"CAST({quote(vec_col)} AS ARRAY<DOUBLE>)").alias("__v__"),
-                    F.expr(_norm_expr(quote(vec_col))).alias("__n__"))
-            # zero-norm rows can't cosine-match (and ANSI division would
-            # throw); they stay in the OUTPUT via assigned — they are
-            # only excluded from pair generation, never dropped. The
-            # finiteness term keeps NaN/Inf-corrupted vectors out of the
-            # pair join too (NaN cosine passes >= threshold in BOTH
-            # engines — one corrupt embedding would mark its whole
-            # cluster duplicate; r11 extreme-values sweep)
-            .where((F.col("__n__") > 0)
-                   & (F.col("__n__") - F.col("__n__") == 0))
-            .localCheckpoint(eager=False))
+    # norms hoisted out of the pair loop; screened rows (zero-norm,
+    # NaN/Inf) are excluded from pair generation only and stay in the
+    # OUTPUT via assigned
+    base = _vec_side(assigned.df, [qcol(id_col), qcol(cluster_col)], vec_col,
+                     "__v__", "__n__", checkpoint=True)
     a = base.select(qcol(cluster_col), qcol(id_col),
                     F.col("__v__").alias("__va__"), F.col("__n__").alias("__na__"))
     b = base.select(qcol(cluster_col), qcol(id_col).alias("__idb__"),
                     F.col("__v__").alias("__vb__"), F.col("__n__").alias("__nb__"))
-    cos = F.round(F.expr(_dot_expr("__va__", "__vb__"))
-                  / (F.col("__na__") * F.col("__nb__")), precision)
+    cos = _pair_cos("__va__", "__vb__", "__na__", "__nb__", precision)
     dropped = (a.join(b, on=cluster_col)
                .where(F.col("__idb__") < qcol(id_col))
                .where(cos >= threshold)

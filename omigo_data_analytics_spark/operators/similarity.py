@@ -35,20 +35,19 @@ HYPERPLANES = [[_rng.uniform(-1.0, 1.0) for _ in range(MAX_DIM)]
                for _ in range(NUM_TABLES * NUM_PLANES)]
 
 
-def _dot_expr(a: str, b: str, dim: int | None = None) -> str:
+def _dot_expr(a: str, b: str) -> str:
     """Dot product with strict left-to-right double accumulation (matches
-    the DuckDB oracle's list_reduce order). `dim` is accepted for API
-    stability but unused: an unrolled fixed-dim sum (64 try_element_at
-    terms) was measured 5-7x SLOWER than this higher-order form on 2M
-    pairs — the interpreted aggregate runs one tight pass over the
-    primitive array while unrolled element access pays per-term null
+    the DuckDB oracle's list_reduce order). An unrolled fixed-dim sum (64
+    try_element_at terms) was measured 5-7x SLOWER than this higher-order
+    form on 2M pairs — the interpreted aggregate runs one tight pass over
+    the primitive array while unrolled element access pays per-term null
     checks and falls out of JIT inlining."""
     return (f"aggregate(zip_with(CAST({a} AS ARRAY<DOUBLE>), CAST({b} AS ARRAY<DOUBLE>), "
             f"(x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
 
 
-def _norm_expr(a: str, dim: int | None = None) -> str:
-    return f"sqrt({_dot_expr(a, a, dim)})"
+def _norm_expr(a: str) -> str:
+    return f"sqrt({_dot_expr(a, a)})"
 
 
 def cosine_expr(a: str, b: str, dim: int | None = None) -> str:
@@ -57,15 +56,16 @@ def cosine_expr(a: str, b: str, dim: int | None = None) -> str:
     all-zeros embedding, killing the job — a NULL cosine instead falls
     out of every >= threshold screen, and the nearest-centroid
     comparator falls through to the id tie-break (deterministic
-    min-id assignment). The DuckDB twin applies the same nullif.
+    min-id assignment). The DuckDB twin applies the same nullif. `dim`
+    is accepted for API stability but unused.
 
-    Pair-join call sites should prefer ``_cos_with_norms`` with each
-    side's norm hoisted to a per-row column (r15): the higher-order
-    norm folds are CodegenFallback (interpreted per evaluation), so
-    recomputing them per PAIR instead of per ROW multiplies the
-    dominant cost of every similarity pass."""
-    return (f"({_dot_expr(a, b, dim)}) / "
-            f"nullif(({_norm_expr(a, dim)}) * ({_norm_expr(b, dim)}), "
+    The operators never inline this per pair: they score through
+    ``_pair_cos`` with each side's norm hoisted by ``_vec_side``. The
+    higher-order norm folds are CodegenFallback (interpreted per
+    evaluation), so recomputing them per PAIR instead of per ROW
+    multiplies the dominant cost of every similarity pass."""
+    return (f"({_dot_expr(a, b)}) / "
+            f"nullif(({_norm_expr(a)}) * ({_norm_expr(b)}), "
             f"CAST(0 AS DOUBLE))")
 
 
@@ -91,6 +91,92 @@ def _fold_dot_py(u, v) -> float:
     return acc
 
 
+# ---------------------------------------------------- the cosine skeleton
+# Every cosine operator (the top-k family, embedding_dup_pairs, semdedup,
+# decontaminate_semantic, k-means and the IVF quantizer) is built from
+# these helpers: one way to hoist and screen a side (_vec_side), one pair
+# score (_pair_cos), one nearest-centroid ranking (_nearest_lists) and
+# one per-query top-k (_topk).
+
+def _vec_side(df, keep: list, vec_col: str, v: str, n: str,
+              checkpoint: bool = False):
+    """One side of a cosine pair: the ``keep`` columns, the vector as
+    ARRAY<DOUBLE> under the safe alias ``v`` and its norm as ``n`` — one
+    ``_norm_expr`` fold per row, reused by every pair the row meets —
+    and only the rows that can score.
+
+    The one screen is ``n > 0 AND n - n = 0``: it drops NULL, zero-norm
+    and non-finite vectors. A zero norm has no cosine (and an unguarded
+    ANSI division would throw). A NaN cosine sorts above every double in
+    Spark and DuckDB, so a corrupt vector would pass every ``>=
+    threshold`` and top every ranking.
+
+    Spark pushes the screen below the projection, so it re-evaluates the
+    norm there: the screen let-binds it (the bare form would run the
+    interpreted fold three times). ``checkpoint`` materializes the side
+    (``localCheckpoint``) BEFORE the screen, which then reads the stored
+    norm; a side whose vector is itself an expensive expression (a
+    hash embedding) needs it, or the pushed screen re-runs that
+    expression per row. The norm expression names the alias only, never
+    the raw user column (hostile-name rule)."""
+    from .text import let_spark
+    side = (df.select(*keep, F.expr(f"CAST({quote(vec_col)} AS ARRAY<DOUBLE>)")
+                      .alias(v))
+            .withColumn(n, F.expr(_norm_expr(quote(v)))))
+    if checkpoint:
+        side = side.localCheckpoint(eager=False)
+    return side.where(F.expr(let_spark(quote(n), "__s__",
+                                       "__s__ > 0 AND __s__ - __s__ = 0")))
+
+
+def _pair_cos(a: str, b: str, na: str, nb: str, precision: int):
+    """The one pair score: ``_cos_with_norms`` over two ``_vec_side``
+    columns and their norms, rounded to ``precision`` BEFORE any
+    threshold or ranking (ties are decided on the published value)."""
+    return F.round(F.expr(_cos_with_norms(a, b, na, nb)), precision)
+
+
+def _nearest_lists(vec: str, cents: list, n: int) -> str:
+    """SQL array of ``vec``'s ``n`` nearest centroids as (id, cos)
+    structs: rounded cosine descending, ties on the lower centroid id.
+    ``[0]`` of the n=1 slice is the k-means / IVF list assignment."""
+    return (f"slice(array_sort({_ivf_cands_expr(vec, cents)}, {_IVF_SORT}), "
+            f"1, {int(n)})")
+
+
+def _probe_lists(df, vec: str, cents: list, nprobe: int,
+                 out: str = "__list__"):
+    """One row per (row of ``df``, probed list): the ids of ``vec``'s
+    ``nprobe`` nearest centroids, exploded into ``out``."""
+    return df.withColumn(out, F.explode(F.expr(
+        f"transform({_nearest_lists(vec, cents, nprobe)}, s -> s.id)")))
+
+
+def _topk(joined, k: int, id_col: str, precision: int,
+          distinct: bool = False) -> OmigoDF:
+    """Score the candidate pairs of ``joined`` (a corpus side ``__cv__``
+    / ``__cn__`` joined to a query side ``query_id`` / ``__qv__`` /
+    ``__qn__``) and keep each query's ``k`` best: cosine descending,
+    ties on the corpus id. ``distinct`` drops repeated candidates (a
+    pair that met in several LSH buckets)."""
+    scored = joined.select("query_id", qcol(id_col),
+                           _pair_cos("__cv__", "__qv__", "__cn__", "__qn__",
+                                     precision).alias("cosine"))
+    if distinct:
+        scored = scored.dropDuplicates(["query_id", id_col])
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
+                                               qcol(id_col).asc())
+    return OmigoDF(
+        scored.withColumn("rank", F.row_number().over(w))
+              .where(F.col("rank") <= k)
+              .select("query_id", qcol(id_col), "rank", "cosine"))
+
+
+def _query_side(queries: OmigoDF, qid: str, vec_col: str):
+    return _vec_side(queries.df, [qcol(qid).alias("query_id")], vec_col,
+                     "__qv__", "__qn__")
+
+
 def detect_dim(df, vec_col: str) -> int | None:
     """Embedding dimension from one row — a DRIVER JOB over the input
     plan, so the operator paths no longer call it (the dot/norm
@@ -109,28 +195,14 @@ def cosine_topk(corpus: OmigoDF, queries: OmigoDF, k: int,
 
     Output: (query_id, vec_id, rank, cosine). Deterministic: cosine is
     rounded to `precision` BEFORE ranking and ties break on corpus id.
+    NULL, zero-norm and non-finite vectors are screened on both sides
+    (``_vec_side``): they never rank.
     """
     from .text import ensure_min_parallelism
-    qid = query_id_col or id_col
-    # norms hoisted to one evaluation per ROW (r15): inline cosine_expr
-    # re-ran both interpreted norm folds per (corpus x query) PAIR.
-    # Norm exprs reference the ALIASED safe names only — the raw user
-    # column never enters a parsed expression (hostile-name rule).
-    q = (queries.df.select(qcol(qid).alias("query_id"),
-                           qcol(vec_col).alias("__qv__"))
-         .withColumn("__qn__", F.expr(_norm_expr("__qv__"))))
-    c = (ensure_min_parallelism(corpus.df)
-         .select(qcol(id_col), qcol(vec_col).alias("__cv__"))
-         .withColumn("__cn__", F.expr(_norm_expr("__cv__"))))
-    joined = c.crossJoin(F.broadcast(q))
-    cos = F.round(F.expr(_cos_with_norms("__cv__", "__qv__", "__cn__", "__qn__")),
-                  precision)
-    scored = joined.select("query_id", qcol(id_col), cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), qcol(id_col).asc())
-    return OmigoDF(
-        scored.withColumn("rank", F.row_number().over(w))
-              .where(F.col("rank") <= k)
-              .select("query_id", qcol(id_col), "rank", "cosine"))
+    q = _query_side(queries, query_id_col or id_col, vec_col)
+    c = _vec_side(ensure_min_parallelism(corpus.df), [qcol(id_col)], vec_col,
+                  "__cv__", "__cn__")
+    return _topk(c.crossJoin(F.broadcast(q)), k, id_col, precision)
 
 
 def _buckets_col(vec_col: str, num_planes: int = NUM_PLANES,
@@ -208,36 +280,21 @@ def cosine_topk_lsh(corpus: OmigoDF, queries: OmigoDF, k: int,
     (bucket, id, vec) rows per vector; queries are broadcast, so the only
     shuffle is the final per-query top-k."""
     from .text import ensure_min_parallelism
-    qid = query_id_col or id_col
     # probe buckets: per table, own bucket + each 1-bit flip (table offset
-    # bits sit above the plane bits, so flips stay within the table)
-    # norms hoisted to one evaluation per VECTOR (r15): the inline form
-    # re-ran both interpreted norm folds per candidate pair, and the
-    # corpus norm additionally per (table, bucket) explosion row. Norm
-    # exprs reference the ALIASED safe names only (hostile-name rule).
-    q = (queries.df
-         .select(qcol(qid).alias("query_id"), qcol(vec_col).alias("__qv__"))
-         .withColumn("__qn__", F.expr(_norm_expr("__qv__")))
+    # bits sit above the plane bits, so flips stay within the table).
+    # Norms are hoisted per VECTOR, before the (table, bucket) explosion.
+    q = (_query_side(queries, query_id_col or id_col, vec_col)
          .withColumn("__bs__", _buckets_col("__qv__", num_planes, num_tables))
          .withColumn("bucket", F.explode(F.expr(
              f"flatten(transform(__bs__, b -> array(b, "
              + ", ".join(f"b ^ {1 << p}" for p in range(num_planes)) + ")))")))
          .drop("__bs__"))
-    c = (ensure_min_parallelism(corpus.df)
-         .select(qcol(id_col), qcol(vec_col).alias("__cv__"))
-         .withColumn("__cn__", F.expr(_norm_expr("__cv__")))
+    c = (_vec_side(ensure_min_parallelism(corpus.df), [qcol(id_col)], vec_col,
+                   "__cv__", "__cn__")
          .withColumn("__bs__", _buckets_col("__cv__", num_planes, num_tables))
          .withColumn("bucket", F.explode("__bs__")).drop("__bs__"))
-    joined = c.join(F.broadcast(q), "bucket")
-    cos = F.round(F.expr(_cos_with_norms("__cv__", "__qv__", "__cn__", "__qn__")),
-                  precision)
-    scored = joined.select("query_id", qcol(id_col), cos.alias("cosine")).dropDuplicates(
-        ["query_id", id_col])
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), qcol(id_col).asc())
-    return OmigoDF(
-        scored.withColumn("rank", F.row_number().over(w))
-              .where(F.col("rank") <= k)
-              .select("query_id", qcol(id_col), "rank", "cosine"))
+    return _topk(c.join(F.broadcast(q), "bucket"), k, id_col, precision,
+                 distinct=True)
 
 
 # ------------------------------------------------------------------- IVF
@@ -245,7 +302,7 @@ IVF_CENTROIDS = 16   # coarse-quantizer size (C lists)
 IVF_NPROBE = 4       # lists probed per query
 
 
-def _ivf_cands_expr(vec_col: str, centroids: list, dim: int | None = None) -> str:
+def _ivf_cands_expr(vec_col: str, centroids: list) -> str:
     """Array of (centroid id, rounded cosine(row vec, centroid)) structs as
     ONE inlined expression: the coarse quantizer is driver-resident (like
     any real IVF index) and ships to executors as literals inside the plan,
@@ -289,7 +346,7 @@ def _ivf_cands_expr(vec_col: str, centroids: list, dim: int | None = None) -> st
     # bind the row norm once per row: transform over a 1-element array is
     # the SQL let-binding — `__rn__` is evaluated once and captured by the
     # inner lambda, not re-evaluated per centroid
-    return (f"transform(array({_norm_expr(quote(vec_col), dim)}), "
+    return (f"transform(array({_norm_expr(quote(vec_col))}), "
             f"__rn__ -> transform({cents}, c -> named_struct("
             f"'id', c.id, 'cos', round({cos}, 6))))[0]")
 
@@ -366,33 +423,15 @@ def cosine_topk_ivf(corpus: OmigoDF, queries: OmigoDF, k: int,
     final per-query top-k. Expected work per query ~ nprobe/C of the
     corpus vs 1.0 for brute force."""
     from .text import ensure_min_parallelism
-    qid = query_id_col or id_col
     cents = centroids if centroids is not None else ivf_centroids(
         corpus, num_centroids, id_col, vec_col)
-
-    # norms hoisted to one evaluation per row (r15, see cosine_topk);
-    # norm exprs reference the ALIASED safe names only (hostile-name rule)
-    c = (ensure_min_parallelism(corpus.df)
-         .select(qcol(id_col), qcol(vec_col).alias("__cv__"))
-         .withColumn("__cn__", F.expr(_norm_expr("__cv__")))
+    c = (_vec_side(ensure_min_parallelism(corpus.df), [qcol(id_col)], vec_col,
+                   "__cv__", "__cn__")
          .withColumn("__list__", F.expr(
-             f"array_sort({_ivf_cands_expr('__cv__', cents)}, {_IVF_SORT})[0].id")))
-    q = (queries.df
-         .select(qcol(qid).alias("query_id"), qcol(vec_col).alias("__qv__"))
-         .withColumn("__qn__", F.expr(_norm_expr("__qv__")))
-         .withColumn("__list__", F.explode(F.expr(
-             f"transform(slice(array_sort({_ivf_cands_expr('__qv__', cents)}, "
-             f"{_IVF_SORT}), 1, {int(nprobe)}), s -> s.id)"))))
-
-    joined = c.join(F.broadcast(q), "__list__")
-    cos = F.round(F.expr(_cos_with_norms("__cv__", "__qv__", "__cn__", "__qn__")),
-                  precision)
-    scored = joined.select("query_id", qcol(id_col), cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), qcol(id_col).asc())
-    return OmigoDF(
-        scored.withColumn("rank", F.row_number().over(w))
-              .where(F.col("rank") <= k)
-              .select("query_id", qcol(id_col), "rank", "cosine"))
+             f"{_nearest_lists('__cv__', cents, 1)}[0].id")))
+    q = _probe_lists(_query_side(queries, query_id_col or id_col, vec_col),
+                     "__qv__", cents, nprobe)
+    return _topk(c.join(F.broadcast(q), "__list__"), k, id_col, precision)
 
 
 # ------------------------------------------------------ persisted IVF index
@@ -417,7 +456,7 @@ def build_ivf_index(corpus: OmigoDF, path: str,
                            "centroid_id long, vec array<double>")
      .coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids"))
     assigned = corpus.df.withColumn("__list__", F.expr(
-        f"array_sort({_ivf_cands_expr(vec_col, cents)}, {_IVF_SORT})[0].id"))
+        f"{_nearest_lists(vec_col, cents, 1)}[0].id"))
     (assigned.write.mode("overwrite").partitionBy("__list__")
      .parquet(f"{path}/assignments"))
     return cents
@@ -438,35 +477,17 @@ def cosine_topk_ivf_indexed(spark, path: str, queries: OmigoDF, k: int,
     assignments table — the `__list__ IN (...)` filter becomes a
     PartitionFilter, so unprobed lists cost zero IO. Exact cosine
     re-ranks the probed lists' members."""
-    qid = query_id_col or id_col
     cents = load_ivf_centroids(spark, path)
     corpus = spark.read.parquet(f"{path}/assignments")
-
-    q = (queries.df
-         .select(qcol(qid).alias("query_id"), qcol(vec_col).alias("__qv__"))
-         .withColumn("__qn__", F.expr(_norm_expr("__qv__")))
-         .withColumn("__list__", F.explode(F.expr(
-             f"transform(slice(array_sort({_ivf_cands_expr('__qv__', cents)}, "
-             f"{_IVF_SORT}), 1, {int(nprobe)}), s -> s.id)"))))
+    q = _probe_lists(_query_side(queries, query_id_col or id_col, vec_col),
+                     "__qv__", cents, nprobe)
     # collect the probed list ids (tiny: <= nprobe x |queries|) so the scan
     # prunes partitions at planning time
     probed = sorted({int(r["__list__"]) for r in
                      q.select("__list__").distinct().collect()})
-    # norms hoisted to one evaluation per row (r15, see cosine_topk);
-    # norm expr references the ALIASED safe name only (hostile-name rule)
-    c = (corpus.where(F.col("__list__").isin(probed))
-         .select("__list__", qcol(id_col), qcol(vec_col).alias("__cv__"))
-         .withColumn("__cn__", F.expr(_norm_expr("__cv__"))))
-    joined = c.join(F.broadcast(q), "__list__")
-    cos = F.round(F.expr(_cos_with_norms("__cv__", "__qv__", "__cn__", "__qn__")),
-                  precision)
-    scored = joined.select("query_id", qcol(id_col), cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
-                                               qcol(id_col).asc())
-    return OmigoDF(
-        scored.withColumn("rank", F.row_number().over(w))
-              .where(F.col("rank") <= k)
-              .select("query_id", qcol(id_col), "rank", "cosine"))
+    c = _vec_side(corpus.where(F.col("__list__").isin(probed)),
+                  ["__list__", qcol(id_col)], vec_col, "__cv__", "__cn__")
+    return _topk(c.join(F.broadcast(q), "__list__"), k, id_col, precision)
 
 
 # ------------------------------------------------- feature-hash embeddings
@@ -618,7 +639,7 @@ def kmeans_centroids(corpus: OmigoDF, k: int = 8, iters: int = 2,
     q = KMEANS_QUANT
     for _ in range(iters):
         assigned = base.withColumn("__c__", F.expr(
-            f"array_sort({_ivf_cands_expr('__cv__', cents)}, {_IVF_SORT})[0].id"))
+            f"{_nearest_lists('__cv__', cents, 1)}[0].id"))
         cells = (assigned
                  .select("__c__", F.posexplode("__cv__").alias("pos", "x"))
                  .groupBy("__c__", "pos")
@@ -647,7 +668,7 @@ def kmeans_assign(odf: OmigoDF, centroids: list,
     the 6-decimal rounded cosine break by centroid id — the same rule
     as the IVF quantizer, so assignments are deterministic."""
     from .text import ensure_min_parallelism
-    a = F.expr(f"array_sort({_ivf_cands_expr(vec_col, centroids)}, {_IVF_SORT})[0]")
+    a = F.expr(f"{_nearest_lists(vec_col, centroids, 1)}[0]")
     return OmigoDF(ensure_min_parallelism(odf.df).withColumn("__a__", a)
                    .withColumn(cluster_col, F.col("__a__.id"))
                    .withColumn(cos_col, F.col("__a__.cos"))

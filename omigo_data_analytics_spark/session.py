@@ -15,9 +15,11 @@ from pyspark.sql import SparkSession
 
 # Runtime-settable confs the engine relies on.
 _RUNTIME_CONFS = {
-    # The synthetic events table stores TIMESTAMP(NANOS); Spark can only read
-    # it as a long (nanoseconds since epoch). Operators that need a timestamp
-    # convert explicitly via timestamp_micros(ns div 1000).
+    # Spark can only read a TIMESTAMP(NANOS) parquet column as a long
+    # (nanoseconds since epoch); io.events_ts converts it via
+    # timestamp_micros(ns div 1000). The shipped events files store
+    # timestamp[us] (read as timestamp_ntz), so this serves only
+    # nanosecond files.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Oracle comparability: DuckDB timestamps are UTC-naive; pin the session
     # so date_format/year/etc. agree.

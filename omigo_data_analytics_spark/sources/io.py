@@ -719,17 +719,26 @@ def read_url_json(spark: SparkSession, url: str, **kwargs) -> OmigoDF:
     return OmigoDF(spark.createDataFrame(rows, schema))
 
 
+def events_ts(df: DataFrame) -> DataFrame:
+    """The events table's ``ts`` as a timestamp column. The shipped events
+    files store ``timestamp[us]``, which Spark reads as timestamp_ntz and
+    which passes through unchanged. A file that stores TIMESTAMP(NANOS)
+    reads as a bigint of nanoseconds under the nanosAsLong conf (set by
+    prepare_session) and converts via timestamp_micros(ns div 1000)."""
+    if dict(df.dtypes).get("ts") == "bigint":
+        return df.withColumn(
+            "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long")))
+    return df
+
+
 def load_testdata(spark: SparkSession, sf_dir: str, table: str) -> OmigoDF:
-    """Load one driver-synthesized table. The events table stores
-    TIMESTAMP(NANOS) which Spark reads as long ns (nanosAsLong conf, set by
-    prepare_session); expose it as a proper timestamp column."""
+    """Load one synthetic testdata table; the events table's ``ts`` comes
+    back as a timestamp (``events_ts``)."""
     from ..session import prepare_session
 
     prepare_session(spark)
     df = _read_parquet(spark, [os.path.join(sf_dir, f"{table}.parquet")])
-    if table == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros((F.col("ts") / 1000).cast("long")))
-    return OmigoDF(df)
+    return OmigoDF(events_ts(df) if table == "events" else df)
 
 
 # ---------------------------------------------------------- constructors

@@ -1,5 +1,7 @@
 """Core operator tests: projections, filters, transforms, sort, slicing."""
 
+import logging
+
 import pytest
 
 from omigo_data_analytics_spark import OmigoDF
@@ -16,6 +18,20 @@ def test_select_missing_raises_eagerly(iris):
         iris.select("nope")
     # ignore_if_missing downgrades to no-op
     assert iris.select("nope", ignore_if_missing=True).columns == iris.columns
+
+
+def test_ignore_if_missing_warning_on_package_logger(iris, caplog):
+    """The ignore_if_missing warning logs inside the package logger tree,
+    so a level set on ``omigo_data_analytics_spark`` governs it."""
+    pkg = logging.getLogger("omigo_data_analytics_spark")
+    with caplog.at_level(logging.WARNING, logger=pkg.name):
+        iris.select("nope", ignore_if_missing=True)
+    recs = [r for r in caplog.records if r.name.startswith(pkg.name + ".")]
+    assert any("ignore_if_missing" in r.getMessage() for r in recs)
+    caplog.clear()
+    with caplog.at_level(logging.ERROR, logger=pkg.name):
+        iris.select("nope", ignore_if_missing=True)
+    assert not [r for r in caplog.records if "ignore_if_missing" in r.getMessage()]
 
 
 def test_drop_and_namespace_ops(iris):

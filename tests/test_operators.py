@@ -768,3 +768,181 @@ def test_token_estimates_is_map_side(documents):
     p = (token_estimates(documents).df
          ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange hashpartitioning" not in p
+
+
+def test_cosine_topk_family_screens_corrupt_vectors(spark, tmp_path):
+    """NaN/Inf and zero-norm vectors never rank, on either side: a NaN
+    cosine sorts above every double in Spark, so unscreened corrupt
+    corpus rows took ranks 1-2 for every query."""
+    nan, inf = float("nan"), float("inf")
+    corpus = OmigoDF(spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [nan, 1.0]), (3, [0.9, 0.1]),
+         (4, [inf, 0.0]), (5, [0.0, 0.0])],
+        "vec_id long, embedding array<double>"))
+    queries = OmigoDF(spark.createDataFrame(
+        [(10, [1.0, 0.0]), (11, [0.0, 1.0])],
+        "vec_id long, embedding array<double>"))
+    want = [(10, 1, 1, 1.0), (10, 3, 2, 0.993884),
+            (11, 1, 2, 0.0), (11, 3, 1, 0.110432)]
+    path = str(tmp_path / "ivf_index")
+    SIM.build_ivf_index(corpus, path, num_centroids=2, iters=1)
+    for out in (SIM.cosine_topk(corpus, queries, k=2),
+                SIM.cosine_topk_ivf(corpus, queries, k=2, num_centroids=2,
+                                    nprobe=2),
+                SIM.cosine_topk_ivf_indexed(spark, path, queries, k=2,
+                                            nprobe=2)):
+        assert sorted(map(tuple, out.df.collect())) == want
+
+
+# --------------------------------------------------------------------------
+# r15 similarity expression hygiene: centroid-norm literals + per-row norm
+# binding must be BIT-IDENTICAL to the all-inline r14 cosine form,
+# including on hostile vectors (NaN / ±Inf / -0.0 / zero-norm / NULL).
+
+def _r14_inline_cands_expr(vec_col, centroids):
+    """The pre-r15 _ivf_cands_expr, kept verbatim as the parity reference:
+    every centroid's cosine recomputed BOTH norms inline per row."""
+    dot = ("aggregate(zip_with(CAST({a} AS ARRAY<DOUBLE>), "
+           "CAST({b} AS ARRAY<DOUBLE>), (x, y) -> x * y), "
+           "CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
+    elems = []
+    for cid, vec in centroids:
+        arr = ("CAST(array(" + ", ".join(repr(float(x)) for x in vec)
+               + ") AS ARRAY<DOUBLE>)")
+        elems.append(f"named_struct('id', CAST({int(cid)} AS BIGINT), 'v', {arr})")
+    cents = "array(" + ", ".join(elems) + ")"
+    d = dot.format(a=f"`{vec_col}`", b="c.v")
+    na = f"sqrt({dot.format(a=f'`{vec_col}`', b=f'`{vec_col}`')})"
+    nb = f"sqrt({dot.format(a='c.v', b='c.v')})"
+    cos = f"({d}) / nullif(({na}) * ({nb}), CAST(0 AS DOUBLE))"
+    return (f"transform({cents}, c -> named_struct("
+            f"'id', c.id, 'cos', round({cos}, 6)))")
+
+
+_HOSTILE_VECS = [
+    (1, [0.3, -0.7, 1.2]),
+    (2, [0.0, 0.0, 0.0]),                       # zero norm -> NULL cosine
+    (3, [-0.0, 0.0, -0.0]),                     # signed zeros
+    (4, [float("nan"), 1.0, 2.0]),              # NaN poisons dot and norm
+    (5, [float("inf"), 1.0, 2.0]),
+    (6, [-1e308, 1e308, 1.0]),                  # overflow-prone products
+    (7, None),                                  # NULL vector
+    (8, [1e-308, -1e-308, 5e-324]),             # subnormals
+    (9, [0.1, 0.2, 0.30000000000000004]),
+]
+
+
+def test_ivf_cands_expr_bit_identical_to_r14_inline(spark):
+    from omigo_data_analytics_spark.operators.similarity import (
+        _ivf_cands_expr)
+    cents = [(10, [0.5, -0.25, 0.125]), (11, [1.0, 1.0, 1.0]),
+             (12, [-0.0, 0.0, 0.0]), (13, [1e154, -1e154, 1.0])]
+    df = spark.createDataFrame(_HOSTILE_VECS, "vec_id INT, v ARRAY<DOUBLE>")
+    new = df.select("vec_id", F.expr(_ivf_cands_expr("v", cents)).alias("a"))
+    old = df.select("vec_id",
+                    F.expr(_r14_inline_cands_expr("v", cents)).alias("a"))
+    # exact value comparison incl. NaN/NULL: to JSON then compare strings
+    n = new.select("vec_id", F.to_json(F.col("a")).alias("j")).collect()
+    o = old.select("vec_id", F.to_json(F.col("a")).alias("j")).collect()
+    assert sorted((r["vec_id"], r["j"]) for r in n) == \
+           sorted((r["vec_id"], r["j"]) for r in o)
+
+
+def test_cos_with_norms_bit_identical_to_inline_cosine(spark):
+    from omigo_data_analytics_spark.operators.similarity import (
+        _cos_with_norms, _norm_expr, cosine_expr)
+    df = spark.createDataFrame(
+        [(a, b) for _, a in _HOSTILE_VECS for _, b in _HOSTILE_VECS],
+        "va ARRAY<DOUBLE>, vb ARRAY<DOUBLE>")
+    hoisted = (df.withColumn("__na__", F.expr(_norm_expr("`va`")))
+                 .withColumn("__nb__", F.expr(_norm_expr("`vb`")))
+                 .select(F.round(F.expr(_cos_with_norms(
+                     "va", "vb", "__na__", "__nb__")), 6).alias("c")))
+    inline = df.select(F.round(F.expr(cosine_expr("va", "vb")), 6).alias("c"))
+    h = [r["c"] for r in hoisted.collect()]
+    i = [r["c"] for r in inline.collect()]
+    assert len(h) == len(i)
+    for x, y in zip(h, i):
+        if x is None or y is None:
+            assert x is None and y is None
+        elif x != x:  # NaN
+            assert y != y
+        else:
+            assert x == y, (x, y)
+
+
+def test_fold_dot_py_matches_sql_fold(spark):
+    from omigo_data_analytics_spark.operators.similarity import (
+        _dot_expr, _fold_dot_py)
+    vecs = [v for _, v in _HOSTILE_VECS if v is not None]
+    df = spark.createDataFrame([(a, b) for a in vecs for b in vecs],
+                               "va ARRAY<DOUBLE>, vb ARRAY<DOUBLE>")
+    rows = df.select("va", "vb",
+                     F.expr(_dot_expr("va", "vb")).alias("d")).collect()
+    import math
+    for r in rows:
+        py = _fold_dot_py(r["va"], r["vb"])
+        sq = r["d"]
+        if math.isnan(py):
+            assert sq != sq
+        else:
+            assert py == sq, (r["va"], r["vb"], py, sq)
+
+
+def test_cosine_family_hostile_vec_and_id_names(spark):
+    """r15: the norm hoists must never put a raw user column name into a
+    parsed expression — drive backtick+dot+colon names through every
+    cosine-family entry point and pin value-equality to the clean run."""
+    from omigo_data_analytics_spark.operators import dedup as DD
+    from omigo_data_analytics_spark.operators import similarity as SIM
+    rows = [(i, [float((i * 7 + j * 3) % 11) - 5.0 for j in range(8)])
+            for i in range(40)]
+    clean = OmigoDF(spark.createDataFrame(rows, "vid BIGINT, v ARRAY<DOUBLE>"))
+    hid, hv = "id.we`ird:x", "vec.o`dd:y"
+    host = OmigoDF(clean.df.withColumnRenamed("vid", hid)
+                           .withColumnRenamed("v", hv))
+    qc = OmigoDF(clean.df.where("vid < 3"))
+    qh = OmigoDF(host.df.where("`id.we``ird:x` < 3"))
+    c = sorted((r["query_id"], r["vid"], r["rank"], r["cosine"]) for r in
+               SIM.cosine_topk(clean, qc, k=3, id_col="vid",
+                               vec_col="v").df.collect())
+    h = sorted((r["query_id"], r[hid], r["rank"], r["cosine"]) for r in
+               SIM.cosine_topk(host, qh, k=3, id_col=hid,
+                               vec_col=hv).df.collect())
+    assert c == h and len(c) == 9
+    cents_c = SIM.ivf_centroids(clean, 4, id_col="vid", vec_col="v")
+    cents_h = SIM.ivf_centroids(host, 4, id_col=hid, vec_col=hv)
+    assert cents_c == cents_h
+    asg_c = sorted((r["vid"], r["cluster_id"]) for r in
+                   SIM.kmeans_assign(clean, cents_c, vec_col="v")
+                   .df.collect())
+    asg_h = sorted((r[hid], r["cluster_id"]) for r in
+                   SIM.kmeans_assign(host, cents_h, vec_col=hv)
+                   .df.collect())
+    assert asg_c == asg_h
+    de_c = sorted(r["vid"] for r in DD.dedup_embedding(
+        clean, 0.9, id_col="vid", vec_col="v", method="exact").df.collect())
+    de_h = sorted(r[hid] for r in DD.dedup_embedding(
+        host, 0.9, id_col=hid, vec_col=hv, method="exact").df.collect())
+    assert de_c == de_h
+
+
+def _mk(spark, rows, schema):
+    return OmigoDF(spark.createDataFrame(rows, schema))
+
+
+def test_lsh_buckets_empty_vectors_dropped(spark):
+    """An empty array embedding must be screened like NULL — the r11
+    mask let it through (isfinite of an empty array is vacuously True)
+    and np.stack then raised ValueError on the mixed dims, killing
+    every row in the batch."""
+    e = _mk(spark, [(1, [1.0] * 8), (2, []), (3, [0.9] * 8)],
+            "vec_id long, embedding array<double>")
+    q = _mk(spark, [(10, [1.0] * 8), (11, [])],
+            "vec_id long, embedding array<double>")
+    out = SIM.cosine_topk_lsh(e, q, k=2).df.collect()
+    assert {r["query_id"] for r in out} == {10}     # empty query: none
+    assert {r["vec_id"] for r in out} <= {1, 3}     # empty corpus row out
+    # all-empty batch corner: no rows, no crash
+    allempty = _mk(spark, [(9, [])], "vec_id long, embedding array<double>")
+    assert SIM.cosine_topk_lsh(allempty, q, k=2).df.count() == 0

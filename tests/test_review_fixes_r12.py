@@ -2,7 +2,8 @@
 
 1. similarity._buckets: zero-length embeddings pass a vacuous
    isfinite().all() and then kill the whole Arrow batch in np.stack —
-   mask them out like NULL/non-finite vectors.
+   mask them out like NULL/non-finite vectors (its test lives with the
+   cosine family in tests/test_operators.py).
 2. dedup._should_collapse: enforce the True/False/'auto' tri-state
    (unknown values used to fall through to the census silently) and
    warn when an explicit True is overridden by the threshold>1.0 guard.
@@ -23,31 +24,11 @@ from pyspark.sql import functions as F
 
 from omigo_data_analytics_spark import OmigoDF
 from omigo_data_analytics_spark.operators import dedup as DD
-from omigo_data_analytics_spark.operators import similarity as SM
 from omigo_data_analytics_spark.operators import timeseries as TS
 
 
 def _mk(spark, rows, schema):
     return OmigoDF(spark.createDataFrame(rows, schema))
-
-
-# 1. zero-length embedding screen -------------------------------------
-
-def test_lsh_buckets_empty_vectors_dropped(spark):
-    """An empty array embedding must be screened like NULL — the r11
-    mask let it through (isfinite of an empty array is vacuously True)
-    and np.stack then raised ValueError on the mixed dims, killing
-    every row in the batch."""
-    e = _mk(spark, [(1, [1.0] * 8), (2, []), (3, [0.9] * 8)],
-            "vec_id long, embedding array<double>")
-    q = _mk(spark, [(10, [1.0] * 8), (11, [])],
-            "vec_id long, embedding array<double>")
-    out = SM.cosine_topk_lsh(e, q, k=2).df.collect()
-    assert {r["query_id"] for r in out} == {10}     # empty query: none
-    assert {r["vec_id"] for r in out} <= {1, 3}     # empty corpus row out
-    # all-empty batch corner: no rows, no crash
-    allempty = _mk(spark, [(9, [])], "vec_id long, embedding array<double>")
-    assert SM.cosine_topk_lsh(allempty, q, k=2).df.count() == 0
 
 
 # 2. collapse_exact tri-state enforcement ------------------------------

@@ -14,7 +14,16 @@ and hostile column names (dots, backticks, colons, commas):
   aggregate(collapse=False)'s groupBy+join-back vs a window reference,
   inverted_index's doc_freq join-back + WindowGroupLimit postings vs a
   collect_list reference, merge_similar_nodes' groupBy(psig)+join-back
-  vs a window-min reference.
+  vs a window-min reference;
+- op 7, the cosine family: ``cosine_topk``, ``cosine_topk_ivf`` with
+  every list probed (``nprobe = num_centroids``) and
+  ``embedding_dup_pairs(method="exact")`` vs a cross join scored with
+  the inline public ``cosine_expr``, the same screen (norm > 0 and
+  finite) and a row_number window or the threshold. The vector soup
+  holds NULL vectors, NULL / NaN / +-Inf / -0.0 / +-1e154 components
+  and all-zero vectors under hostile id and vector column names; a
+  corpus with no finite vector must raise IVF's documented
+  ``ValueError``.
 
 Asserts bit-identical canonical outputs. Complements the fixed-seed
 pytest properties with breadth. The rolling op sums ``v`` only when
@@ -33,11 +42,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import Window, functions as F
 from omigo_data_analytics_spark import OmigoDF, get_spark
 from omigo_data_analytics_spark.core import colutils
+from omigo_data_analytics_spark.operators import dedup as DD
 from omigo_data_analytics_spark.operators import graph as GR
+from omigo_data_analytics_spark.operators import similarity as SIM
 from omigo_data_analytics_spark.operators import text as TX
 from omigo_data_analytics_spark.operators import timeseries as TS
 
-N_OPS = 7
+N_OPS = 8
 
 spark = get_spark("hunt", cpus=8)
 N_TRIALS = int(sys.argv[1]) if len(sys.argv) > 1 else 24
@@ -57,6 +68,42 @@ def canon(df):
     return sorted(tuple(str(x) for x in r) for r in map(tuple, df.collect()))
 
 _NODES = [None, "a", "b", "c", "a,b", "d.1", "d`2", "", "x y", "-0.0"]
+
+
+_COMPS = [None, float("nan"), float("inf"), float("-inf"), -0.0, 0.0,
+          1e154, -1e154] + [float(x) for x in range(-3, 4)]
+
+
+def rand_vecs(n, dim, corrupt_only=False):
+    """(id, vector) rows: mostly small finite vectors, plus NULL vectors,
+    all-zero vectors and vectors carrying hostile components."""
+    rows = []
+    for i in range(n):
+        kind = random.random()
+        if corrupt_only or kind < 0.25:
+            v = None if random.random() < 0.3 else [
+                random.choice(_COMPS) for _ in range(dim)]
+            if v is not None and all(x is not None and x - x == 0 for x in v):
+                v[random.randrange(dim)] = random.choice(_COMPS[:4])
+        elif kind < 0.35:
+            v = [random.choice([0.0, -0.0]) for _ in range(dim)]
+        else:
+            v = [float(random.randint(-3, 3)) for _ in range(dim)]
+        rows.append((i, v))
+    return rows
+
+
+def _norm(c):
+    # the screen's norm, spelled independently of similarity._norm_expr
+    # (same strict left-to-right IEEE fold)
+    return F.sqrt(F.aggregate(F.zip_with(c, c, lambda x, y: x * y),
+                              F.lit(0.0), lambda a, b: a + b))
+
+
+def _screened(df, id_name, v_name, id_out, v_out):
+    n = _norm(_q(v_name))
+    return (df.where((n > 0) & (n - n == 0))
+            .select(_q(id_name).alias(id_out), _q(v_name).alias(v_out)))
 
 
 def rand_edges(nmax=40):
@@ -79,6 +126,61 @@ def compare(trial, op, span, label, a, b):
         return 1
     print(f"trial {trial} op={op} span={span}{label} ok ({len(ca)} rows)")
     return 0
+
+
+def cosine_family(trial):
+    """op 7: the cosine operators vs a cosine_expr cross-join reference;
+    returns the number of divergences."""
+    hid, hv = "i`d.x:1", "v.e`c,2"
+    dim = random.choice([2, 3, 5])
+    k = random.choice([1, 2, 4])
+    thr = random.choice([0.0, 0.5, 0.9])
+    nc = random.choice([1, 2, 3])
+    schema = f"{colutils.quote(hid)} bigint, {colutils.quote(hv)} array<double>"
+    rows = rand_vecs(random.randint(4, 24), dim)
+    corpus = spark.createDataFrame(rows, schema)
+    queries = corpus.where(_q(hid) < 4)
+    c = _screened(corpus, hid, hv, "cid", "cv")
+    q = _screened(queries, hid, hv, "qid", "qv")
+    cos = F.round(F.expr(SIM.cosine_expr("cv", "qv")), 6)
+    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(),
+                                          F.col("cid").asc())
+    ref_topk = (c.crossJoin(q).select("qid", "cid", cos.alias("cos"))
+                .withColumn("rank", F.row_number().over(w))
+                .where(F.col("rank") <= k)
+                .select("qid", "cid", "rank", "cos"))
+    a2 = c.select(F.col("cid").alias("ida"), F.col("cv").alias("va"))
+    b2 = c.select(F.col("cid").alias("idb"), F.col("cv").alias("vb"))
+    pcos = F.round(F.expr(SIM.cosine_expr("va", "vb")), 6)
+    ref_pairs = (a2.join(b2, F.col("ida") < F.col("idb"))
+                 .select("ida", "idb", pcos.alias("cos"))
+                 .where(F.col("cos") >= thr))
+    cdf, qdf = OmigoDF(corpus), OmigoDF(queries)
+    label = f" dim={dim} k={k} nc={nc} thr={thr}"
+    n = compare(trial, 7, "-", " topk" + label, ref_topk,
+                SIM.cosine_topk(cdf, qdf, k, id_col=hid, vec_col=hv).df)
+    try:
+        ivf = SIM.cosine_topk_ivf(cdf, qdf, k, id_col=hid, vec_col=hv,
+                                  num_centroids=nc, nprobe=nc).df
+        n += compare(trial, 7, "-", " ivf" + label, ref_topk, ivf)
+    except ValueError:
+        if c.count():
+            raise
+        print(f"trial {trial} op=7 ivf: no finite vector, ValueError (ok)")
+    n += compare(trial, 7, "-", " dup_pairs" + label, ref_pairs,
+                 DD.embedding_dup_pairs(cdf, thr, id_col=hid, vec_col=hv,
+                                        method="exact").df)
+    # a corpus with no finite vector cannot seed IVF: the documented error
+    bad = OmigoDF(spark.createDataFrame(rand_vecs(5, dim, corrupt_only=True),
+                                        schema))
+    try:
+        SIM.cosine_topk_ivf(bad, bad, k, id_col=hid, vec_col=hv,
+                            num_centroids=nc, nprobe=nc).df.collect()
+        print(f"trial {trial} op=7 ivf on a corrupt-only corpus did not raise")
+        n += 1
+    except ValueError:
+        print(f"trial {trial} op=7 ivf corrupt-only corpus: ValueError (ok)")
+    return n
 
 
 fails = 0
@@ -215,6 +317,9 @@ for trial in range(N_TRIALS):
                                                 _q("d`st")))
                  .drop("__leaf__", "__rep__")
                  .select(*[_q(c) for c in edges.columns]).distinct())
+        elif op == 7:
+            fails += cosine_family(trial)
+            continue
         fails += compare(trial, op, span, "", a, b)
     except Exception as ex:
         if op == 3 and "decimal overflow" in str(ex):
