@@ -798,10 +798,8 @@ def q_cosine_topk(spark, sf_dir):
 
 def _duck_vec_ok(v: str) -> str:
     """DuckDB twin of the engine's cosine-side screen
-    (``similarity._vec_side``): norm > 0 and finite. A NULL vector or
-    component makes the norm NULL and fails it too."""
-    n = SIM.norm_sql_duck(f"CAST({v} AS DOUBLE[])")
-    return f"({n}) > 0 AND (({n}) - ({n})) = 0"
+    (``similarity._vec_side``)."""
+    return SIM.screen_sql_duck(v)
 
 
 def _sql_cosine_topk() -> str:
@@ -868,17 +866,14 @@ def _sql_similarity_ivf() -> str:
     cos_aq = SIM.cosine_sql_duck("a.embedding", "p.embedding")
     C, NP = SIM.IVF_CENTROIDS, SIM.IVF_NPROBE
     ok = _duck_vec_ok("embedding")
-    # seeds come from the unscreened corpus (ivf_centroids drops only
-    # NULL and non-finite vectors); the lists and probes are screened
+    # seeds, lists and probes all pass the one screen (ivf_centroids
+    # seeds through _vec_side)
     return f"""
-WITH corp0 AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 3),
-corp AS (SELECT vec_id, embedding FROM corp0 WHERE {ok}),
+WITH corp AS (SELECT vec_id, embedding FROM embeddings
+              WHERE vec_id >= 3 AND {ok}),
 q AS (SELECT vec_id AS query_id, embedding FROM embeddings
       WHERE vec_id < 3 AND {ok}),
-cent AS (SELECT vec_id AS c_id, embedding AS c_vec FROM corp0
-         WHERE embedding IS NOT NULL
-           AND len(list_filter(CAST(embedding AS DOUBLE[]),
-                               x -> (x - x) != 0 OR x IS NULL)) = 0
+cent AS (SELECT vec_id AS c_id, embedding AS c_vec FROM corp
          ORDER BY vec_id LIMIT {C}),
 ca AS (SELECT e.vec_id, e.embedding, c.c_id,
               row_number() OVER (PARTITION BY e.vec_id

@@ -9,11 +9,23 @@ orchestrates the loop and checks an empty-frontier terminator. Frontiers
 are localCheckpoint()ed per iteration so the lineage (and task binary)
 does not grow with depth — the standard iterative-algorithm pattern on
 Spark. No driver-side materialization of vertices or edges.
+
+The three traversals (``bfs_levels``, ``ancestors``,
+``time_ordered_ancestors``) share one skeleton, each decision made by
+one private helper below: the vertex codec (``_encode`` / ``_decode``),
+the dead-end flag (``_flag_dead_ends``), the observed round
+(``_observed_round``), the lazy delta union (``_union_all``), the
+null-safe visited test (``_unseen``), the vertex list builder
+(``_vertex_frame``) and the two-loop overlap of the compositions
+(``_overlap``). NULL is one vertex: it can be reached (once) but never
+expands, since no equi-join matches a NULL key.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from functools import reduce
+
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..core.colutils import qcol
 
@@ -54,8 +66,7 @@ def _vertex_dict(*node_dfs: DataFrame) -> tuple[DataFrame, bool]:
     """(``__node__``, ``__vid__`` BIGINT) dictionary over the union of the
     given single-column vertex frames, checkpointed (encode and decode
     must see the SAME id assignment) — plus whether it is small enough to
-    broadcast. The count is one cheap job over the just-materialized
-    blocks."""
+    broadcast."""
     u = node_dfs[0].toDF("__node__")
     for d in node_dfs[1:]:
         u = u.unionByName(d.toDF("__node__"))
@@ -65,10 +76,7 @@ def _vertex_dict(*node_dfs: DataFrame) -> tuple[DataFrame, bool]:
     # an encoded NULL would become a real id that DOES match itself —
     # and an inner-join encode would instead silently DROP those rows.
     # Refuse loudly. The NULL probe and the broadcast-size count ride
-    # the (eager, per the r14 adjudication) checkpoint's materialization
-    # job via observe() (r15) — ONE job total, where r14's fused
-    # aggregate was a second job over the blocks and r13's probe + count
-    # pair was three.
+    # the eager checkpoint's materialization job via observe(): one job.
     vdict, row = checkpoint_with_metrics(
         u.distinct().withColumn("__vid__", F.monotonically_increasing_id()),
         {"__n__": F.count(F.lit(1)),
@@ -102,10 +110,141 @@ def _decode_vcol(df: DataFrame, vdict: DataFrame, col: str,
                         for c in cols]))
 
 
+def _encode(on: bool, e: DataFrame, cols: tuple, seeds=None):
+    """``(e, seeds, codec)`` with the vertex columns ``cols`` of the edge
+    frame and the seeds' ``node_id`` dictionary-encoded when ``on``; the
+    inputs unchanged and a ``None`` codec otherwise. The seeds join the
+    dictionary, so a seed absent from the edge table still decodes.
+
+    The encoded projection is a cheap broadcast-join plan over the raw
+    blocks, consumed only by the traversal's first checkpoint job — it
+    is folded into that job rather than materialized as a second edge
+    copy (r15)."""
+    if not on:
+        return e, seeds, None
+    extra = [] if seeds is None else [seeds.select("node_id")]
+    vdict, small = _vertex_dict(*[e.select(c) for c in cols], *extra)
+    for c in cols:
+        e = _encode_vcol(e, vdict, c, small)
+    if seeds is not None:
+        seeds = _encode_vcol(seeds, vdict, "node_id", small)
+    return e, seeds, (vdict, small)
+
+
+def _decode(df: DataFrame, codec, *cols: str) -> DataFrame:
+    """The vertex columns ``cols`` of a traversal's output decoded back to
+    the original ids, in order; the identity for a ``None`` codec."""
+    if codec is None:
+        return df
+    vdict, small = codec
+    for c in cols:
+        df = _decode_vcol(df, vdict, c, small)
+    return df
+
+
+# ------------------------------------------------------ traversal skeleton
+def _vertex_frame(like: DataFrame, vertices, dtype) -> DataFrame:
+    """A vertex set as a one-column ``node_id`` frame. A DataFrame or
+    OmigoDF passes through (its ``node_id`` column). A list means exactly
+    that frame: one row per value, cast to the edge column's ``dtype``
+    (``[1]`` on string edges is ``"1"``); ``[]`` is an empty frame and
+    ``None`` a NULL vertex."""
+    if not isinstance(vertices, (list, tuple)):
+        return _df(vertices).select("node_id")
+    rows = [(v,) for v in vertices]
+    if any(v is not None for v in vertices):
+        out = like.sparkSession.createDataFrame(rows, ["node_id"])
+    else:
+        # nothing to infer a type from: build it in the edge type
+        out = like.sparkSession.createDataFrame(
+            rows, T.StructType([T.StructField("node_id", dtype)]))
+    return out.withColumn("node_id", F.col("node_id").cast(dtype))
+
+
+def _flag_dead_ends(df: DataFrame, frm: str, to: str,
+                    keep: list) -> DataFrame:
+    """``keep`` plus ``__has_out__``: whether the row's ``to`` vertex is
+    some row's ``frm`` vertex, i.e. whether a traversal state at ``to``
+    can expand.
+
+    The flag joins in ONCE at entry (r15) and rides every round's join
+    output, replacing a per-round ``frontier ⋈ srcs`` semi-join (a
+    vertex-set-sized build EVERY round); because each round then knows
+    how many of its new rows are expandable, an all-dead frontier exits
+    WITHOUT paying the convergence round's join. A NULL ``to`` never
+    matches, so NULL never expands."""
+    srcs = df.select(F.col(frm).alias("__sn__")).distinct()
+    return (df.join(srcs, df[to] == F.col("__sn__"), "left")
+            .select(*keep, F.col("__sn__").isNotNull().alias("__has_out__")))
+
+
+def _observed_round(frame: DataFrame, live, new=None):
+    """One round: eagerly checkpoint ``frame`` and return ``(checkpointed
+    frame, any new row?, any live row?)``. ``new`` and ``live`` are
+    boolean Columns over ``frame`` (``new`` defaults to every row). Both
+    terminators ride the checkpoint's materialization job via observe()
+    (r15): one job per round, where checkpoint + isEmpty was two. The
+    checkpoint stays eager (r14 adjudication): the next round's plan
+    reads its blocks."""
+    ck, m = checkpoint_with_metrics(
+        frame, {"n": F.count(F.lit(1)) if new is None
+                else F.count(F.when(new, 1)),
+                "live": F.count(F.when(live, 1))})
+    return ck, m["n"] > 0, m["live"] > 0
+
+
+def _union_all(frames: list) -> DataFrame:
+    """The lazy union of a loop's checkpointed deltas: readers re-scan
+    materialized blocks instead of re-writing the whole accumulated set
+    every round (one fewer job per round)."""
+    return reduce(DataFrame.unionByName, frames)
+
+
+def _unseen(df: DataFrame, seen: DataFrame, keys: list) -> DataFrame:
+    """Rows of ``df`` whose ``keys`` are not in ``seen``, NULL matching
+    NULL: a reached NULL vertex counts as visited, so it is emitted once,
+    not once per round."""
+    s = seen.select(*[F.col(k).alias(f"__seen{i}__")
+                      for i, k in enumerate(keys)])
+    return df.join(s, reduce(lambda a, b: a & b, [
+        F.col(k).eqNullSafe(F.col(f"__seen{i}__"))
+        for i, k in enumerate(keys)]), "left_anti")
+
+
+def _overlap(spark, build_a, build_b) -> tuple:
+    """Run two independent traversal builders from a 2-thread pool and
+    return both frames.
+
+    Each loop's jobs are tiny at any scale — the win is scheduling
+    overlap, not parallelism of data work: one loop's convergence-tail
+    tasks back-fill the executors the other frees (Spark's scheduler
+    runs jobs from several driver threads FIFO).
+    inheritable_thread_target (r14): jobs
+    submitted from the pool threads inherit the caller's Spark local
+    properties (job group/description, scheduler pool) and tags, so
+    caller-side cancellation and job accounting see the loops' jobs."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    inherit = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        fa, fb = pool.submit(inherit(build_a)), pool.submit(inherit(build_b))
+        return fa.result(), fb.result()
+
+
+def _edge_barrier(edges, *cols) -> DataFrame:
+    """The caller's edges projected to ``(column, alias)`` pairs and
+    eagerly checkpointed, so their construction runs exactly once under
+    the traversal's several readers (flag join, dictionary, rounds)."""
+    return _df(edges).select(*[qcol(c).alias(a) for c, a in cols]
+                             ).localCheckpoint()
+
+
+# ---------------------------------------------------------------- traversals
 def bfs_levels(edges, seed_vertices, src_col: str = "src", dst_col: str = "dst",
                max_iter: int = 30, out_col: str = "level",
-               encode_vertices: bool = False,
-               _entry_barrier: bool = True) -> OmigoDF:
+               encode_vertices: bool = False) -> OmigoDF:
     """Minimum BFS level of every reachable vertex from the seed set
     (seeds = level 0). Cycle-tolerant: a vertex keeps its first (minimum)
     level (reference graph_traversal.py:7-78, forward direction).
@@ -117,93 +256,37 @@ def bfs_levels(edges, seed_vertices, src_col: str = "src", dst_col: str = "dst",
     BIGINT vertex ids (see _vertex_dict) — same output, 2-3x less
     per-round shuffle on string-keyed graphs.
     """
-    # checkpoint the edge projection once: every BFS level joins against it,
-    # and without the barrier the upstream plan (unions/distinct of the
-    # caller's edge construction) would re-execute per iteration
-    e = _df(edges).select(qcol(src_col).alias("src"),
-                          qcol(dst_col).alias("dst"))
-    spark = e.sparkSession
-    if isinstance(seed_vertices, (list, tuple)):
-        seeds = spark.createDataFrame([(v,) for v in seed_vertices], ["node_id"])
-        seeds = seeds.withColumn("node_id", F.col("node_id").cast(
-            e.schema["src"].dataType))
-    else:
-        seeds = _df(seed_vertices).select("node_id")
-    vdict = None
-    if encode_vertices:
-        # checkpoint the RAW projection first: the dict build + two encode
-        # joins would otherwise re-execute the caller's edge construction
-        # three more times (measured 3x scan inflation at sf0.1)
-        if _entry_barrier:
-            e = e.localCheckpoint()
-        # seeds participate in the dictionary: a seed absent from the edge
-        # table still appears in the output at level 0
-        vdict, vsmall = _vertex_dict(e.select("src"), e.select("dst"),
-                                     seeds.select("node_id"))
-        # the encoded projection is a cheap broadcast-join plan over the
-        # raw blocks consumed only by the flag checkpoint's job below —
-        # fold it in rather than materializing a second edge copy (r15)
-        e = _encode_vcol(_encode_vcol(e, vdict, "src", vsmall),
-                         vdict, "dst", vsmall)
-        seeds = _encode_vcol(seeds, vdict, "node_id", vsmall)
-    elif _entry_barrier:
-        # barrier so the caller's edge construction runs exactly once
-        # under the flag join's two readers (e side + src-set side).
-        # Callers that hand in an ALREADY-materialized edge frame
-        # (analysis_job / get_bfs_levels checkpoint it themselves) pass
-        # _entry_barrier=False to skip this redundant edge copy (r15).
-        e = e.localCheckpoint()
-    # dead-end flag ON the edge blocks (r15): an expansion row's
-    # destination can itself expand iff it appears as some edge's source.
-    # Computing that flag ONCE at entry and letting it ride every round's
-    # join output replaces the old per-round `frontier ⋈ srcs` semi-join
-    # (a vertex-set-sized broadcast build EVERY round) with one entry
-    # join, and — because each round now knows how many of its new nodes
-    # are expandable — an all-dead frontier exits WITHOUT paying the
-    # convergence round's |E| join at all.
-    srcs = e.select(F.col("src").alias("__sn__")).distinct()
-    e = (e.join(srcs, e["dst"] == F.col("__sn__"), "left")
-         .select("src", "dst",
-                 F.col("__sn__").isNotNull().alias("__has_out__"))
-         .localCheckpoint())
-    # visited is kept as a LAZY union of per-level checkpointed deltas:
-    # each iteration re-reads materialized blocks (cheap) instead of also
-    # re-writing the whole accumulated set (one fewer job per level)
+    e = _edge_barrier(edges, (src_col, "src"), (dst_col, "dst"))
+    return OmigoDF(_bfs(e, seed_vertices, max_iter, encode_vertices)
+                   .withColumnRenamed("level", out_col))
+
+
+def _bfs(e: DataFrame, seed_vertices, max_iter: int,
+         encode: bool) -> DataFrame:
+    """bfs_levels over a projected, materialized (src, dst) edge frame:
+    (node_id, level)."""
+    seeds = _vertex_frame(e, seed_vertices, e.schema["src"].dataType)
+    e, seeds, codec = _encode(encode, e, ("src", "dst"), seeds)
+    e = _flag_dead_ends(e, "src", "dst", ["src", "dst"]).localCheckpoint()
     deltas = [seeds.distinct().withColumn("level", F.lit(0)).localCheckpoint()]
     frontier = deltas[0].select("node_id")
-
-    def _visited():
-        out = deltas[0].select("node_id")
-        for d in deltas[1:]:
-            out = out.unionByName(d.select("node_id"))
-        return out
-
     for depth in range(1, max_iter + 1):
-        # both terminators (any new node? any EXPANDABLE new node?) ride
-        # the eager checkpoint's materialization job via observe() (r15)
-        # — one job per level, where checkpoint + isEmpty was two, and
-        # the final all-dead round is skipped outright. __has_out__ is
-        # constant per node, so distinct() over (node_id, flag) yields
-        # exactly the node-distinct the plain projection had.
-        nxt, m = checkpoint_with_metrics(
-            e.join(frontier.withColumnRenamed("node_id", "src"), "src")
-             .select(F.col("dst").alias("node_id"), F.col("__has_out__"))
-             .distinct()
-             .join(_visited(), "node_id", "left_anti"),
-            {"n": F.count(F.lit(1)),
-             "live": F.count(F.when(F.col("__has_out__"), 1))})
-        if m["n"] == 0:
+        # __has_out__ is constant per node, so distinct() over (node_id,
+        # flag) yields exactly the node-distinct
+        nxt, any_new, any_live = _observed_round(
+            _unseen(e.join(frontier.withColumnRenamed("node_id", "src"), "src")
+                     .select(F.col("dst").alias("node_id"), "__has_out__")
+                     .distinct(),
+                    _union_all([d.select("node_id") for d in deltas]),
+                    ["node_id"]),
+            F.col("__has_out__"))
+        if not any_new:
             break
         deltas.append(nxt.select("node_id").withColumn("level", F.lit(depth)))
-        if m["live"] == 0:
+        if not any_live:
             break
         frontier = nxt.where(F.col("__has_out__")).select("node_id")
-    visited = deltas[0]
-    for d in deltas[1:]:
-        visited = visited.unionByName(d)
-    if vdict is not None:
-        visited = _decode_vcol(visited, vdict, "node_id", vsmall)
-    return OmigoDF(visited.withColumnRenamed("level", out_col))
+    return _decode(_union_all(deltas), codec, "node_id")
 
 
 def degrees(edges, src_col: str = "src", dst_col: str = "dst") -> OmigoDF:
@@ -226,8 +309,7 @@ def degrees(edges, src_col: str = "src", dst_col: str = "dst") -> OmigoDF:
 
 
 def ancestors(edges, src_col: str = "src", dst_col: str = "dst",
-              max_iter: int = 30, encode_vertices: bool = False,
-              _entry_barrier: bool = True) -> OmigoDF:
+              max_iter: int = 30, encode_vertices: bool = False) -> OmigoDF:
     """Full ancestor set of every vertex in a DAG: (node_id, ancestor)
     pairs — the relational core of the reference's
     get_forward_edges_only path/ancestor columns
@@ -238,82 +320,48 @@ def ancestors(edges, src_col: str = "src", dst_col: str = "dst",
     wide ids, since |R| grows toward V x avg-ancestry pairs, every one
     carrying BOTH ids through every round's shuffle.
     """
-    e = _df(edges).select(qcol(src_col).alias("anc"),
-                          qcol(dst_col).alias("node_id"))
-    vdict = None
-    if encode_vertices:
-        if _entry_barrier:
-            e = e.localCheckpoint()
-        vdict, vsmall = _vertex_dict(e.select("anc"), e.select("node_id"))
-        # the encoded projection is a cheap broadcast-join plan over the
-        # raw blocks consumed only by the base delta's checkpoint job
-        # below — fold it in rather than materializing a second edge
-        # copy (r15)
-        e = _encode_vcol(_encode_vcol(e, vdict, "anc", vsmall),
-                         vdict, "node_id", vsmall)
-    elif _entry_barrier:
-        # barrier so the caller's edge construction runs exactly once
-        # under the base delta's two readers (pair side + src-set side).
-        # Callers handing in an already-materialized frame pass
-        # _entry_barrier=False (see bfs_levels).
-        e = e.localCheckpoint()
-    # semi-naive recursive doubling ("smart" transitive closure):
-    # Δ_k = Δ_{k-1} ∘ R_{k-1}, still O(log depth) rounds — a pair whose
-    # MINIMAL path length lies in (2^(k-1), 2^k] splits at 2^(k-1) into a
-    # prefix that is minimal-length-new at step k-1 (∈ Δ) and a suffix
-    # already in R; composing the full closure with itself (R∘R) each
-    # round instead re-derives every previously-known pair before the
-    # anti-join throws them away — on a depth-d graph the last (empty)
-    # round alone costs a full |R|×|R| self-join. With Δ on the build
-    # side the convergence round joins only the newest (often tiny or
-    # dead-ended) delta against R. R is a LAZY union of checkpointed
-    # deltas: per-round readers re-scan materialized blocks instead of
-    # also re-writing the whole closure every round.
-    # dead-end flag ON the delta pairs (r15): a pair (anc, n) can compose
-    # further iff n has an outgoing edge (n ∈ src set — exactly the set
-    # of anc values reach can ever hold). The flag joins in ONCE inside
-    # the base delta's checkpoint job and then rides every composition's
-    # reach side for free, replacing the old per-round `delta ⋈ srcs`
-    # semi-join AND the separate srcs checkpoint; a fully-dead delta now
-    # exits WITHOUT paying the convergence round's closure join.
-    # __has_out__ is constant per node_id, so distinct() over
-    # (anc, node_id, flag) is exactly the pair-distinct.
-    srcs = e.select(F.col("anc").alias("__sn__")).distinct()
-    deltas = [(e.join(srcs, e["node_id"] == F.col("__sn__"), "left")
-               .select("anc", "node_id",
-                       F.col("__sn__").isNotNull().alias("__has_out__"))
-               .distinct().localCheckpoint())]   # direct parents
+    e = _edge_barrier(edges, (src_col, "anc"), (dst_col, "node_id"))
+    return OmigoDF(_closure(e, max_iter, encode_vertices))
 
-    def _reach():
-        out = deltas[0]
-        for d in deltas[1:]:
-            out = out.unionByName(d)
-        return out
 
+def _closure(e: DataFrame, max_iter: int, encode: bool) -> DataFrame:
+    """ancestors over a projected, materialized (anc, node_id) edge frame:
+    (node_id, ancestor).
+
+    Semi-naive recursive doubling ("smart" transitive closure):
+    Δ_k = Δ_{k-1} ∘ R_{k-1}, still O(log depth) rounds — a pair whose
+    MINIMAL path length lies in (2^(k-1), 2^k] splits at 2^(k-1) into a
+    prefix that is minimal-length-new at step k-1 (∈ Δ) and a suffix
+    already in R; composing the full closure with itself (R∘R) each
+    round instead re-derives every previously-known pair before the
+    anti-join throws them away — on a depth-d graph the last (empty)
+    round alone costs a full |R|×|R| self-join. With Δ on the build
+    side the convergence round joins only the newest (often tiny or
+    dead-ended) delta against R. The dead-end flag rides the delta
+    pairs: (anc, n) composes further iff n has an outgoing edge.
+    __has_out__ is constant per node_id, so distinct() over (anc,
+    node_id, flag) is exactly the pair-distinct."""
+    e, _, codec = _encode(encode, e, ("anc", "node_id"))
+    deltas = [_flag_dead_ends(e, "anc", "node_id", ["anc", "node_id"])
+              .distinct().localCheckpoint()]   # direct parents
     for _ in range(max_iter):
-        # both terminators (any new pair? any COMPOSABLE new pair?) ride
-        # the eager checkpoint's materialization job via observe() (r15)
-        live = deltas[-1].where(F.col("__has_out__"))
-        reach = _reach()
-        comp, m = checkpoint_with_metrics(
-            live.select("anc", F.col("node_id").alias("mid"))
-                .join(reach.select(F.col("anc").alias("mid"), "node_id",
-                                   "__has_out__"), "mid")
-                .select("anc", "node_id", "__has_out__").distinct()
-                .join(reach.select("anc", "node_id"),
-                      ["anc", "node_id"], "left_anti"),
-            {"n": F.count(F.lit(1)),
-             "live": F.count(F.when(F.col("__has_out__"), 1))})
-        if m["n"] == 0:
+        reach = _union_all(deltas)
+        comp, any_new, any_live = _observed_round(
+            _unseen(deltas[-1].where(F.col("__has_out__"))
+                    .select("anc", F.col("node_id").alias("mid"))
+                    .join(reach.select(F.col("anc").alias("mid"), "node_id",
+                                       "__has_out__"), "mid")
+                    .select("anc", "node_id", "__has_out__").distinct(),
+                    reach, ["anc", "node_id"]),
+            F.col("__has_out__"))
+        if not any_new:
             break
         deltas.append(comp)
-        if m["live"] == 0:
+        if not any_live:
             break
-    out = _reach().select("node_id", F.col("anc").alias("ancestor"))
-    if vdict is not None:
-        out = _decode_vcol(_decode_vcol(out, vdict, "node_id", vsmall),
-                           vdict, "ancestor", vsmall)
-    return OmigoDF(out)
+    return _decode(_union_all(deltas)
+                   .select("node_id", F.col("anc").alias("ancestor")),
+                   codec, "node_id", "ancestor")
 
 
 def remove_dangling_edges(edges, keep_vertices=None, src_col: str = "src",
@@ -325,17 +373,8 @@ def remove_dangling_edges(edges, keep_vertices=None, src_col: str = "src",
     # the checkpoints' own materialization jobs via observe() (r15) —
     # one job per round, where checkpoint + count() was two
     e, m0 = checkpoint_with_metrics(_df(edges), {"n": F.count(F.lit(1))})
-    spark = e.sparkSession
-    dst_type = e.schema[dst_col].dataType
-    if keep_vertices is None or (isinstance(keep_vertices, (list, tuple))
-                                 and len(keep_vertices) == 0):
-        keep = (e.select(qcol(dst_col).alias("node_id")).limit(0)
-                 .select(F.col("node_id").cast(dst_type).alias("node_id")))
-    elif isinstance(keep_vertices, (list, tuple)):
-        keep = spark.createDataFrame([(v,) for v in keep_vertices], ["node_id"])
-        keep = keep.withColumn("node_id", F.col("node_id").cast(dst_type))
-    else:
-        keep = _df(keep_vertices).select("node_id")
+    keep = _vertex_frame(e, [] if keep_vertices is None else keep_vertices,
+                         e.schema[dst_col].dataType)
     cur = e
     prev_n = m0["n"]
     for _ in range(max_iter):
@@ -378,29 +417,16 @@ def time_ordered_ancestors(edges, ts_col: str, src_col: str = "src",
     over dictionary-encoded BIGINT ids — see _vertex_dict."""
     e = _df(edges).select(qcol(src_col).alias("src"), qcol(dst_col).alias("dst"),
                           qcol(ts_col).alias("ts"))
-    vdict = None
     if encode_vertices:
-        # encode BEFORE the pre-grouping so even that first corpus-sized
-        # (src, dst) shuffle runs over BIGINT keys — the accumulator
-        # (node, ancestor, ts) then never carries a string id at all
+        # barrier before the dictionary build, which reads the edges
+        # twice more; encoding BEFORE the pre-grouping makes even that
+        # first corpus-sized (src, dst) shuffle run over BIGINT keys
         e = e.localCheckpoint()
-        vdict, vsmall = _vertex_dict(e.select("src"), e.select("dst"))
-        e = _encode_vcol(_encode_vcol(e, vdict, "src", vsmall),
-                         vdict, "dst", vsmall)
+    e, _, codec = _encode(encode_vertices, e, ("src", "dst"))
     eg = (e.groupBy("src", "dst")
           .agg(F.sort_array(F.collect_set("ts")).alias("tss"))
           ).localCheckpoint()
-    # dead-end flag ON the pair summary (r15): a state at node n can
-    # extend iff n has an outgoing edge. The flag joins in once (reading
-    # the just-landed summary blocks) and rides every extension's eg
-    # side, replacing the old per-round `frontier ⋈ srcs` semi-join and
-    # the separate srcs checkpoint; an all-dead delta exits WITHOUT
-    # paying the convergence round's extension join.
-    srcs = eg.select(F.col("src").alias("__sn__")).distinct()
-    eg = (eg.join(srcs, eg["dst"] == F.col("__sn__"), "left")
-          .select("src", "dst", "tss",
-                  F.col("__sn__").isNotNull().alias("__has_out__"))
-          .localCheckpoint())
+    eg = _flag_dead_ends(eg, "src", "dst", ["src", "dst", "tss"]).localCheckpoint()
 
     # incremental accumulator: `best` is the checkpointed running minimum
     # arrival per (node, ancestor); each iteration touches O(|best| + |ext|)
@@ -416,8 +442,7 @@ def time_ordered_ancestors(edges, ts_col: str, src_col: str = "src",
     # with unknown time) but never enter the frontier: ts >= NULL can't
     # extend them, and a NULL state's __old_ts__ is NULL every round, so
     # keeping them in the delta would defeat convergence detection and
-    # force all max_iter rounds. States at dead-end nodes (no outgoing
-    # edge — the __has_out__ flag attached to eg above) are likewise
+    # force all max_iter rounds. States at dead-end nodes are likewise
     # excluded from the frontier: they can never extend.
     frontier = (best.where(F.col("arr_ts").isNotNull()
                            & F.col("__has_out__"))
@@ -428,10 +453,10 @@ def time_ordered_ancestors(edges, ts_col: str, src_col: str = "src",
         # That single shuffle replaces three (the extension pre-agg, the
         # strictly-better left join against `best`, and the union
         # re-aggregate) — the combined groupBy's map-side partial agg does
-        # the extension combine, and a row is a delta exactly when its
-        # overall min beats (or lacks) a prior-state min. The first
-        # eligible timestamp per successor pair comes from the sorted
-        # array via get() — null (no eligible edge, or an all-null-ts pair) drops pre-shuffle; ANSI subscripting would throw on the empty filter result.
+        # the extension combine. The first eligible timestamp per
+        # successor pair comes from the sorted array via get() — null (no
+        # eligible edge, or an all-null-ts pair) drops pre-shuffle; ANSI
+        # subscripting would throw on the empty filter result.
         ext_raw = (frontier.join(eg, frontier["node_id"] == eg["src"])
                    .select(F.col("dst").alias("node_id"), F.col("anc"),
                            F.expr("get(filter(tss, t -> t >= arr_ts), 0)")
@@ -440,34 +465,27 @@ def time_ordered_ancestors(edges, ts_col: str, src_col: str = "src",
                            F.col("__has_out__"))
                    .where(F.col("arr_ts").isNotNull()))
         # a row is a DELTA when its overall min beats (or lacks) a
-        # prior-state min; the delta count AND the extendable-delta count
-        # — the loop terminators — ride the checkpoint's materialization
-        # job via observe() (r15), replacing the separate
-        # frontier.isEmpty() job per round; an all-dead delta exits
-        # without paying the convergence round's extension join.
-        # __has_out__ is constant per node_id, so max() is exact.
+        # prior-state min. __has_out__ is constant per node_id, so max()
+        # is exact.
         delta_cond = (F.col("arr_ts").isNotNull()
                       & (F.col("__old_ts__").isNull()
                          | (F.col("arr_ts") < F.col("__old_ts__"))))
-        agg, m = checkpoint_with_metrics(
+        agg, any_new, any_live = _observed_round(
             best.withColumn("__old__", F.lit(True)).unionByName(ext_raw)
                 .groupBy("node_id", "anc")
                 .agg(F.min("arr_ts").alias("arr_ts"),
                      F.min(F.when(F.col("__old__"), F.col("arr_ts")))
                      .alias("__old_ts__"),
                      F.max("__has_out__").alias("__has_out__")),
-            {"d": F.count(F.when(delta_cond, 1)),
-             "live": F.count(F.when(delta_cond & F.col("__has_out__"), 1))})
+            delta_cond & F.col("__has_out__"), new=delta_cond)
         best = agg.select("node_id", "anc", "arr_ts", "__has_out__")
-        if m["d"] == 0 or m["live"] == 0:
+        if not (any_new and any_live):
             break
         frontier = (agg.where(delta_cond & F.col("__has_out__"))
                     .select("node_id", "anc", "arr_ts"))
-    out = best.select("node_id", F.col("anc").alias("ancestor"), "arr_ts")
-    if vdict is not None:
-        out = _decode_vcol(_decode_vcol(out, vdict, "node_id", vsmall),
-                           vdict, "ancestor", vsmall)
-    return OmigoDF(out)
+    return OmigoDF(_decode(best.select("node_id", F.col("anc").alias("ancestor"),
+                                       "arr_ts"),
+                           codec, "node_id", "ancestor"))
 
 
 def merge_similar_nodes(edges, src_col: str = "src", dst_col: str = "dst") -> OmigoDF:
@@ -549,51 +567,31 @@ def get_bfs_levels(edf, vertex_ids, reverse_first: bool = False,
     we keep the minimum level per node, matching its first-win rule)."""
     # EAGER checkpoint on the shared projection: both traversal threads
     # below read it, so its one materialization must finish before they
-    # start (the analysis_job pattern) — and it also halves the caller-
-    # lineage scans (each bfs_levels used to re-execute the caller's
-    # edge construction for its own entry checkpoint).
-    e = (_df(edf).select(qcol(src_col).alias(src_col),
-                         qcol(dst_col).alias(dst_col))
-         .localCheckpoint())
-    # qcol, not F.col: the checkpointed frame's columns are literally
-    # NAMED src_col/dst_col, so dotted hostile names (src_col='src.x')
-    # must be quoted here too (r14 ADVICE — bare F.col regressed the
-    # r13 hostile-name guarantee with an AnalysisException)
-    er = e.select(qcol(dst_col).alias(src_col),
-                  qcol(src_col).alias(dst_col))
+    # start (the analysis_job pattern) — and the cores read it as it is,
+    # with no per-direction edge copy.
+    e = _edge_barrier(edf, (src_col, "src"), (dst_col, "dst"))
+    er = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     first, second = (er, e) if reverse_first else (e, er)
-    # r14 (guide §2.6 concurrent jobs): the two directions' iterative
-    # driver loops are independent given the checkpointed edge set, and
-    # min-union makes the result order-insensitive — overlap them from a
-    # 2-thread pool so one loop's convergence-tail tasks back-fill the
-    # executors the other frees (sf0.1 edge DAG A/B alternation,
+    # r14: the two directions' loops are independent given the
+    # checkpointed edge set, and min-union makes the result order-
+    # insensitive — overlap them (sf0.1 edge DAG A/B alternation,
     # 3-pass-min per session: 4.0/4.4/5.8 s threaded vs 5.4/6.3 s
-    # sequential — −25 % best-of-passes; same pattern and safety
-    # argument as analysis_job).
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-
-    # inheritable_thread_target (r14 ADVICE): jobs submitted from the
-    # pool threads inherit the caller's Spark local properties (job
-    # group/description, scheduler pool) and tags, so caller-side
-    # cancellation and job accounting see the loop's jobs
-    _inherit = inheritable_thread_target(e.sparkSession)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        # _entry_barrier=False: e/er are projections of the shared entry
-        # checkpoint above — no redundant per-direction edge copy (r15)
-        f1 = pool.submit(_inherit(
-            lambda: bfs_levels(first, vertex_ids, src_col,
-                               dst_col, max_iter,
-                               _entry_barrier=False).df))
-        f2 = pool.submit(_inherit(
-            lambda: bfs_levels(second, vertex_ids, src_col,
-                               dst_col, max_iter,
-                               _entry_barrier=False).df))
-        l1, l2 = f1.result(), f2.result()
+    # sequential — −25 % best-of-passes)
+    l1, l2 = _overlap(e.sparkSession,
+                      lambda: _bfs(first, vertex_ids, max_iter, False),
+                      lambda: _bfs(second, vertex_ids, max_iter, False))
     out = (l1.unionByName(l2).groupBy("node_id")
            .agg(F.min("level").alias("level")))
     return OmigoDF(out)
+
+
+def _ancestor_summary(anc: DataFrame, prefix: str) -> OmigoDF:
+    """(node_id, <prefix>:ancestors): each vertex's ancestors as the
+    sorted uniq ','-merge of their string forms."""
+    return OmigoDF(anc.groupBy("node_id")
+                   .agg(F.concat_ws(",", F.array_sort(
+                       F.collect_set(F.col("ancestor").cast("string"))))
+                       .alias(f"{prefix}:ancestors")))
 
 
 def get_forward_edges_only(edf, prefix: str = "fwd", src_col: str = "src",
@@ -603,12 +601,8 @@ def get_forward_edges_only(edf, prefix: str = "fwd", src_col: str = "src",
     the transitive ancestor closure (reference graph_traversal.py:80-171
     emits src_paths/all_paths/ancestors columns; the ancestor set is the
     load-bearing one — paths are its expansions)."""
-    anc = ancestors(edf, src_col, dst_col, max_iter).df
-    out = (anc.groupBy("node_id")
-           .agg(F.concat_ws(",", F.array_sort(
-               F.collect_set(F.col("ancestor").cast("string"))))
-               .alias(f"{prefix}:ancestors")))
-    return OmigoDF(out)
+    return _ancestor_summary(ancestors(edf, src_col, dst_col, max_iter).df,
+                             prefix)
 
 
 def get_time_based_forward_edges_only(edf, ts_col: str = "ts",
@@ -618,12 +612,9 @@ def get_time_based_forward_edges_only(edf, ts_col: str = "ts",
     """Time-ordered variant of get_forward_edges_only (reference
     graph_traversal.py:173-212): only ancestors reachable along
     non-decreasing-timestamp paths count."""
-    anc = time_ordered_ancestors(edf, ts_col, src_col, dst_col, max_iter).df
-    out = (anc.groupBy("node_id")
-           .agg(F.concat_ws(",", F.array_sort(
-               F.collect_set(F.col("ancestor").cast("string"))))
-               .alias(f"{prefix}:ancestors")))
-    return OmigoDF(out)
+    return _ancestor_summary(
+        time_ordered_ancestors(edf, ts_col, src_col, dst_col, max_iter).df,
+        prefix)
 
 
 def merge_similar_nodes_reference(edges, src_col: str = "src",
@@ -740,45 +731,24 @@ def analysis_job(edges, ts_col: str, keep_vertices, seed_vertices,
                                    max_iter=prune_max_iter)
     dag = remove_cycles(pruned, ts_col, src_col, dst_col)
     # EAGER checkpoint on purpose: both traversal threads below read it,
-    # so it must be materialized before they race (one job either way)
-    ed = OmigoDF(dag.df.select(qcol(src_col), qcol(dst_col)).distinct().localCheckpoint())
+    # so it must be materialized before they race (one job either way);
+    # the cores read it as it is, with no per-traversal edge copy
+    ed = (dag.df.select(qcol(src_col).alias("src"), qcol(dst_col).alias("dst"))
+          .distinct().localCheckpoint())
     # The two traversals are independent (both read only the checkpointed
-    # `ed`): overlap their per-round driver loops from a 2-thread pool so
-    # one traversal's convergence-tail tasks back-fill executors the other
-    # frees (guide-standard concurrent-jobs pattern; Spark's scheduler
-    # runs jobs from several driver threads FIFO). Each loop's jobs are
-    # tiny at any scale — the win is scheduling overlap, not parallelism
-    # of data work, and results are unchanged (both plans are
-    # deterministic functions of the materialized `ed`).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _lv():
-        # _entry_barrier=False: `ed` is already a materialized checkpoint,
-        # so the operators skip their redundant entry edge copy (r15)
-        return bfs_levels(ed, seed_vertices, src_col, dst_col, max_iter,
-                          encode_vertices=encode_vertices,
-                          _entry_barrier=False).df
-
-    def _anc():
-        return (ancestors(ed, src_col, dst_col, max_iter,
-                          encode_vertices=encode_vertices,
-                          _entry_barrier=False).df
-                .groupBy("node_id")
-                .agg(F.count(F.lit(1)).cast("long").alias("n_ancestors"),
-                     F.concat_ws(",", F.array_sort(F.collect_set("ancestor")))
-                     .alias("ancestors")))
-
-    from pyspark.util import inheritable_thread_target
-
-    _inherit = inheritable_thread_target(ed.df.sparkSession)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        # inheritable_thread_target (r14 ADVICE): the loops' jobs keep
-        # the caller's job group/description for cancellation/accounting
-        lv_f = pool.submit(_inherit(_lv))
-        anc_f = pool.submit(_inherit(_anc))
-        lv, anc_agg = lv_f.result(), anc_f.result()
-    nodes = (ed.df.select(qcol(src_col).alias("node_id"))
-             .unionByName(ed.df.select(qcol(dst_col).alias("node_id")))
+    # `ed`), and both plans are deterministic functions of it
+    lv, anc = _overlap(
+        ed.sparkSession,
+        lambda: _bfs(ed, seed_vertices, max_iter, encode_vertices),
+        lambda: _closure(ed.select(F.col("src").alias("anc"),
+                                   F.col("dst").alias("node_id")),
+                         max_iter, encode_vertices))
+    anc_agg = (anc.groupBy("node_id")
+               .agg(F.count(F.lit(1)).cast("long").alias("n_ancestors"),
+                    F.concat_ws(",", F.array_sort(F.collect_set("ancestor")))
+                    .alias("ancestors")))
+    nodes = (ed.select(F.col("src").alias("node_id"))
+             .unionByName(ed.select(F.col("dst").alias("node_id")))
              .distinct())
     out = (nodes.join(lv, "node_id", "left")
            .join(anc_agg, "node_id", "left")

@@ -361,13 +361,12 @@ def ivf_centroids(corpus: OmigoDF, num_centroids: int = IVF_CENTROIDS,
     vectors (ORDER BY id LIMIT C — reproducible and oracle-expressible).
     A k-means-refined list plugs in here unchanged; only this list is
     driver-resident, never the corpus."""
-    rows = (corpus.df.select(qcol(id_col), qcol(vec_col))
-            .where(qcol(vec_col).isNotNull())
-            # finite components only (x - x = 0 fails for NaN and ±Inf):
-            # a NaN seed renders as the bare token `nan` in the centroid
-            # literal (unparseable SQL) and would poison every cosine
-            # (r11 extreme-values sweep)
-            .where(F.expr(f"forall({quote(vec_col)}, x -> x - x = 0.0D)"))
+    # seeds pass the cosine sides' one screen (_vec_side): a NULL or
+    # non-finite seed renders as unparseable SQL (the bare token `nan`)
+    # and poisons every cosine (r11 extreme-values sweep); a zero seed
+    # has no cosine at all, so the id tie-break would hand it every row
+    rows = (_vec_side(corpus.df, [qcol(id_col), qcol(vec_col)], vec_col,
+                      "__sv__", "__sn__")
             .orderBy(qcol(id_col)).limit(num_centroids).collect())
     if not rows:
         # without this, downstream centroid-literal expressions build an
@@ -692,17 +691,15 @@ def kmeans_cents_cte_duck(k: int = 8, iters: int = 2,
     parts = [
         f"km_pts AS (SELECT {id_col} AS vid, CAST({vec_col} AS DOUBLE[]) AS v "
         f"FROM {table})",
-        # seeds skip NULL vectors (engine parity: ivf_centroids screens
-        # them since r11 — a NULL embedding cannot seed a centroid);
-        # the Lloyd update needs no screen, unnest(NULL) emits nothing
         # finite screen mirrors the engine (r11): NULL or NaN/Inf-
-        # bearing vectors neither seed nor train; x - x <> 0 (or NULL
-        # component) marks non-finite in duckdb exactly as the engine's
+        # bearing vectors do not train; x - x <> 0 (or NULL component)
+        # marks non-finite in duckdb exactly as the engine's
         # forall(x - x = 0) does in spark
         f"km_fin AS (SELECT vid, v FROM km_pts WHERE v IS NOT NULL AND "
         f"len(list_filter(v, x -> (x - x) != 0 OR x IS NULL)) = 0)",
+        # seeds pass the cosine sides' one screen, as ivf_centroids does
         f"cent0 AS (SELECT vid AS c_id, v AS c_vec FROM km_fin "
-        f"ORDER BY vid LIMIT {k})",
+        f"WHERE {screen_sql_duck('v')} ORDER BY vid LIMIT {k})",
     ]
     prev = "cent0"
     for i in range(1, iters + 1):
@@ -729,6 +726,13 @@ def kmeans_cents_cte_duck(k: int = 8, iters: int = 2,
 
 
 # --------------------------------------------------------------- oracle sql
+def screen_sql_duck(v: str) -> str:
+    """DuckDB twin of ``_vec_side``'s one screen: norm > 0 and finite. A
+    NULL vector or component makes the norm NULL and fails it too."""
+    n = norm_sql_duck(f"CAST({v} AS DOUBLE[])")
+    return f"({n}) > 0 AND (({n}) - ({n})) = 0"
+
+
 def cosine_sql_duck(a: str, b: str) -> str:
     """DuckDB-side cosine with the same left-to-right double accumulation
     (index-based zip; DuckDB lists are 1-indexed)."""

@@ -1,5 +1,7 @@
 """Graph operator tests on small hand-built graphs."""
 
+import pytest
+
 from omigo_data_analytics_spark import OmigoDF
 from omigo_data_analytics_spark.operators import graph as G
 
@@ -332,3 +334,215 @@ def test_encode_vertices_rejects_null_ids(spark):
         [("a", None), ("a", "b")], "src string, dst string"))
     with _pt.raises(ValueError, match="NULL vertex ids"):
         G.ancestors(e, encode_vertices=True)
+
+
+# ---------------------------------------------------- job-count pins
+# The graph family's deterministic cost layer: Spark jobs submitted while
+# each traversal is constructed, and by one collect() of its result, on a
+# micro-graph with a cycle (b->c->d->b), a branch (b->e) and a separate
+# component (x->y). The counts are the same at local[2] and local[4]. A
+# refactor of graph.py must leave every pin as it is; a change that adds
+# or removes a job must say so and update the table.
+_PIN_EDGES = [("a", "b", 1), ("b", "c", 2), ("c", "d", 3), ("b", "e", 4),
+              ("d", "b", 5), ("x", "y", 1)]
+
+_PIN_CALLS = {
+    "bfs_levels": lambda e, enc: G.bfs_levels(e, ["a"], encode_vertices=enc),
+    "ancestors": lambda e, enc: G.ancestors(e, encode_vertices=enc),
+    "time_ordered_ancestors": lambda e, enc: G.time_ordered_ancestors(
+        e, "ts", encode_vertices=enc),
+    "get_bfs_levels": lambda e, enc: G.get_bfs_levels(e, ["a"]),
+    "analysis_job": lambda e, enc: G.analysis_job(
+        e, "ts", ["e"], ["a"], encode_vertices=enc),
+    "remove_dangling_edges": lambda e, enc: G.remove_dangling_edges(
+        e, ["e"]),
+}
+
+# (call, encode_vertices) -> (construct jobs, collect jobs)
+_PIN_JOBS = {
+    ("bfs_levels", False): (35, 1),
+    ("bfs_levels", True): (40, 2),
+    ("ancestors", False): (26, 1),
+    ("ancestors", True): (30, 2),
+    ("time_ordered_ancestors", False): (22, 1),
+    ("time_ordered_ancestors", True): (26, 2),
+    ("get_bfs_levels", False): (47, 2),
+    ("analysis_job", False): (74, 6),
+    ("analysis_job", True): (83, 9),
+    ("remove_dangling_edges", False): (11, 1),
+}
+
+
+def _jobs_in_group(spark, fn):
+    """(fn(), number of Spark jobs fn submitted), counted through a job
+    group of its own. Status-tracker updates arrive from the listener
+    bus, so the count is read until two reads agree."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "graph job-count pin")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    n, prev = -1, None
+    while n != prev:
+        prev = n
+        time.sleep(0.2)
+        n = len(sc.statusTracker().getJobIdsForGroup(group) or [])
+    return out, n
+
+
+@pytest.mark.parametrize("call,enc", sorted(_PIN_JOBS),
+                         ids=[f"{c}-{'enc' if e else 'plain'}"
+                              for c, e in sorted(_PIN_JOBS)])
+def test_graph_job_count_pins(spark, call, enc):
+    e = OmigoDF(spark.createDataFrame(_PIN_EDGES, "src string, dst string, "
+                                                  "ts int"))
+    out, construct = _jobs_in_group(spark, lambda: _PIN_CALLS[call](e, enc))
+    _, collect = _jobs_in_group(spark, out.df.collect)
+    assert (construct, collect) == _PIN_JOBS[(call, enc)]
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_list_seeds_equal_their_dataframe_twin(spark):
+    """A vertex list means exactly the one-column node_id frame of the edge
+    column's type: [] is an empty frame, [None] a NULL vertex, and an
+    inferred value is cast like before ([1] on string edges is "1")."""
+    e = _edges(spark, [("a", "b"), ("b", "c"), ("1", "a")])
+
+    def twin(vals):
+        return spark.createDataFrame([(v,) for v in vals], "node_id string")
+
+    for vals in ([], [None], ["a", None]):
+        assert (_rows(G.bfs_levels(e, vals).df)
+                == _rows(G.bfs_levels(e, twin(vals)).df)), vals
+    assert _rows(G.bfs_levels(e, [None]).df) == [(None, 0)]
+    assert _rows(G.bfs_levels(e, [1]).df) == _rows(
+        G.bfs_levels(e, twin(["1"])).df)
+    assert (_rows(G.get_bfs_levels(e, []).df)
+            == _rows(G.get_bfs_levels(e, twin([])).df) == [])
+    for keep in ([None], ["c", None]):
+        assert (_rows(G.remove_dangling_edges(e, keep).df)
+                == _rows(G.remove_dangling_edges(e, twin(keep)).df)), keep
+    te = OmigoDF(spark.createDataFrame(
+        [("a", "b", 1), ("b", "c", 2), ("b", "w", 3)],
+        "src string, dst string, ts int"))
+    assert (_rows(G.analysis_job(te, "ts", ["c"], []).df)
+            == _rows(G.analysis_job(te, "ts", ["c"], twin([])).df))
+
+
+def test_null_vertex_reached_once(spark):
+    """NULL is one vertex: reached once at its minimum level (BFS) and one
+    closure pair per ancestor, never once per round."""
+    e = _edges(spark, [("a", None), ("a", "b"), ("b", None), ("b", "c"),
+                       ("c", None)])
+    assert _rows(G.bfs_levels(e, ["a"]).df) == sorted(
+        [("a", 0), ("b", 1), ("c", 2), (None, 1)], key=repr)
+    assert _rows(G.ancestors(e).df) == sorted(
+        [("b", "a"), ("c", "a"), ("c", "b"), (None, "a"), (None, "b"),
+         (None, "c")], key=repr)
+
+
+def _plan(spark, sf_dir, name):
+    import __spark_entry__ as entry
+
+    df = entry.queries()[name](spark, sf_dir)
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_merge_similar_nodes_has_no_window(spark, sf_dir):
+    """r13: the per-signature representative is a partial-aggregated
+    groupBy min + join-back, not a window over psig (a hot signature's
+    window partition cannot be split)."""
+    p = _plan(spark, sf_dir, "graph_merge_nodes")
+    assert "Window" not in p
+
+
+def test_get_bfs_levels_threaded_order_insensitive(spark):
+    """r14: the two directions' loops run overlapped from a thread
+    pool — safe because min-union is order-insensitive. Pin that:
+    reverse_first (which swaps which loop is 'first') changes nothing,
+    a node reachable both ways keeps the MIN level, and custom column
+    names survive the shared checkpointed projection."""
+    from omigo_data_analytics_spark.operators import graph as G
+
+    # a->b->c->d plus d->a: from seed {a}, d is level 3 forward but
+    # level 1 reverse — min must win; z->a gives reverse-only reach
+    e = OmigoDF(spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("z", "a")],
+        "u string, v string"))
+    want = {"a": 0, "b": 1, "c": 2, "d": 1, "z": 1}
+    for rf in (False, True):
+        out = {r["node_id"]: r["level"]
+               for r in G.get_bfs_levels(e, ["a"], reverse_first=rf,
+                                         src_col="u", dst_col="v"
+                                         ).df.collect()}
+        assert out == want, f"reverse_first={rf}: {out}"
+
+
+def test_bfs_levels_dead_end_early_exit_correct(spark):
+    # last level is all dead-ends: the early exit (live == 0) must still
+    # emit those nodes at their level
+    e = OmigoDF(spark.createDataFrame(
+        [("a", "b"), ("a", "c"), ("b", "d"), ("c", "d")], ["src", "dst"]))
+    out = {r["node_id"]: r["level"]
+           for r in G.bfs_levels(e, ["a"]).df.collect()}
+    assert out == {"a": 0, "b": 1, "c": 1, "d": 2}
+
+
+def test_bfs_levels_dead_end_seeds_and_cycles(spark):
+    # seeds with no outgoing edges appear at level 0; cycles keep min level
+    e = OmigoDF(spark.createDataFrame(
+        [("a", "b"), ("b", "a"), ("b", "c")], ["src", "dst"]))
+    out = {r["node_id"]: r["level"]
+           for r in G.bfs_levels(e, ["a", "zzz"]).df.collect()}
+    assert out == {"a": 0, "zzz": 0, "b": 1, "c": 2}
+
+
+def test_ancestors_flag_carries_through_composition(spark):
+    # depth-4 chain: the closure needs 2 composition rounds; pairs ending
+    # at the chain tail (dead end) must still compose INTO others' results
+    e = OmigoDF(spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")], ["src", "dst"]))
+    out = sorted((r["node_id"], r["ancestor"])
+                 for r in G.ancestors(e).df.collect())
+    want = sorted([("b", "a"), ("c", "a"), ("c", "b"), ("d", "a"),
+                   ("d", "b"), ("d", "c"), ("e", "a"), ("e", "b"),
+                   ("e", "c"), ("e", "d")])
+    assert out == want
+
+
+def test_time_ordered_ancestors_dead_end_states_kept(spark):
+    # states at dead-end nodes never extend but MUST stay in the output
+    rows = [("a", "b", 1), ("b", "c", 2), ("x", "c", 5)]
+    e = OmigoDF(spark.createDataFrame(rows, ["src", "dst", "ts"]))
+    out = sorted((r["node_id"], r["ancestor"], r["arr_ts"])
+                 for r in G.time_ordered_ancestors(e, "ts").df.collect())
+    assert out == [("b", "a", 1), ("c", "a", 2), ("c", "b", 2),
+                   ("c", "x", 5)]
+
+
+def test_graph_ops_hostile_backtick_dot_names(spark):
+    # r15 parity-hunt find: merge_similar_nodes / remove_cycles /
+    # remove_dangling_edges used e[col] getitem and raw-string selects,
+    # which PARSE the name — a lone backtick or dot broke them
+    edges = spark.createDataFrame([("a", "b"), ("a", "c")],
+                                  "`sr.c` string, `d``st` string")
+    out = {tuple(r) for r in G.merge_similar_nodes(
+        OmigoDF(edges), src_col="sr.c", dst_col="d`st").df.collect()}
+    assert out == {("a", "b")}  # b,c same-parent leaves merge to min
+    e2 = spark.createDataFrame([("a", "b", 1), ("b", "a", 0)],
+                               "`sr.c` string, `d``st` string, `t.s` long")
+    out2 = {tuple(r) for r in G.remove_cycles(
+        OmigoDF(e2), "t.s", src_col="sr.c", dst_col="d`st").df.collect()}
+    assert out2 == {("a", "b", 1)}
+    out3 = {tuple(r) for r in G.remove_dangling_edges(
+        OmigoDF(edges), ["b", "c"], src_col="sr.c",
+        dst_col="d`st").df.collect()}
+    assert out3 == {("a", "b"), ("a", "c")}

@@ -45,6 +45,31 @@ def test_kmeans_empty_cluster_keeps_previous_centroid(spark):
     assert {cid for cid, _ in cents} == {1, 2, 3}
 
 
+def test_ivf_centroids_skip_zero_vectors(spark):
+    # a zero seed has no cosine with anything, so the id tie-break would
+    # hand it every row (all four rows in cluster 1, cluster_cos NULL);
+    # seeds pass the cosine sides' one screen in both engines
+    rows = [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [0.0, 1.0]),
+            (4, [0.9, 0.1])]
+    df = OmigoDF(spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"))
+    cents = SIM.ivf_centroids(df, 2)
+    assert [cid for cid, _ in cents] == [2, 3]
+    got = {r["vec_id"]: (r["cluster_id"], r["cluster_cos"])
+           for r in SIM.kmeans_assign(df, cents).df.collect()}
+    assert (got[2], got[3], got[4]) == ((2, 1.0), (3, 1.0), (2, 0.993884))
+
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings AS SELECT * FROM (VALUES "
+                + ", ".join(f"({i}, {v})" for i, v in rows)
+                + ") t(vec_id, embedding)")
+    cte, fin = SIM.kmeans_cents_cte_duck(k=2, iters=0)
+    assert [r[0] for r in con.execute(
+        f"WITH {cte} SELECT c_id FROM {fin} ORDER BY c_id").fetchall()] == [2, 3]
+
+
 def test_kmeans_assign_is_map_side_and_python_free(embeddings):
     cents = SIM.kmeans_centroids(embeddings, k=4, iters=1)
     out = SIM.kmeans_assign(embeddings, cents)

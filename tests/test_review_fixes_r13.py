@@ -134,14 +134,6 @@ def test_inverted_index_windowgrouplimit_engages(spark):
     assert "WindowGroupLimit" in p
 
 
-def test_merge_similar_nodes_has_no_window(spark):
-    """r13: the per-signature representative is a partial-aggregated
-    groupBy min + join-back, not a window over psig (a hot signature's
-    window partition cannot be split)."""
-    p = _plan(spark, "graph_merge_nodes")
-    assert "Window" not in p
-
-
 def test_bucketed_ops_nan_time_parity(spark):
     """r13 extreme-values sweep: Spark's floor(NaN/span) is 0, but NaN
     sorts GREATER than every double in the plain windows — bucket 0

@@ -80,28 +80,6 @@ def test_merge_intervals_negative_zero_canonical(spark):
                 f"kw={kw} island_end={eb!r} not canonical +0.0"
 
 
-def test_get_bfs_levels_threaded_order_insensitive(spark):
-    """r14: the two directions' loops run overlapped from a thread
-    pool — safe because min-union is order-insensitive. Pin that:
-    reverse_first (which swaps which loop is 'first') changes nothing,
-    a node reachable both ways keeps the MIN level, and custom column
-    names survive the shared checkpointed projection."""
-    from omigo_data_analytics_spark.operators import graph as G
-
-    # a->b->c->d plus d->a: from seed {a}, d is level 3 forward but
-    # level 1 reverse — min must win; z->a gives reverse-only reach
-    e = OmigoDF(spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("z", "a")],
-        "u string, v string"))
-    want = {"a": 0, "b": 1, "c": 2, "d": 1, "z": 1}
-    for rf in (False, True):
-        out = {r["node_id"]: r["level"]
-               for r in G.get_bfs_levels(e, ["a"], reverse_first=rf,
-                                         src_col="u", dst_col="v"
-                                         ).df.collect()}
-        assert out == want, f"reverse_first={rf}: {out}"
-
-
 def test_merge_intervals_negative_zero_only_island(spark):
     """A bound that is ONLY -0.0 is canonicalized to +0.0 too (the
     contract: one representative for the IEEE-equal class), while

@@ -1,12 +1,10 @@
-"""Round-15 focused pins: observe-fused checkpoint terminators and the
-dead-end-flag loop restructure."""
+"""Round-15 focused pins: observe-fused checkpoint terminators (the
+graph family's dead-end-flag pins live in tests/test_graph.py)."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from omigo_data_analytics_spark.core.dataframe import OmigoDF
 from omigo_data_analytics_spark.core.jobs import checkpoint_with_metrics
-from omigo_data_analytics_spark.operators import graph as G
 
 
 def test_checkpoint_with_metrics_matches_separate_aggregate(spark):
@@ -52,48 +50,6 @@ def test_checkpoint_with_metrics_single_job(spark):
     # no exchange in this plan -> exactly one job for ckpt + metrics
     assert _n_jobs() - j0 == 1
     assert m["n"] == 5000
-
-
-def test_bfs_levels_dead_end_early_exit_correct(spark):
-    # last level is all dead-ends: the early exit (live == 0) must still
-    # emit those nodes at their level
-    e = OmigoDF(spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("b", "d"), ("c", "d")], ["src", "dst"]))
-    out = {r["node_id"]: r["level"]
-           for r in G.bfs_levels(e, ["a"]).df.collect()}
-    assert out == {"a": 0, "b": 1, "c": 1, "d": 2}
-
-
-def test_bfs_levels_dead_end_seeds_and_cycles(spark):
-    # seeds with no outgoing edges appear at level 0; cycles keep min level
-    e = OmigoDF(spark.createDataFrame(
-        [("a", "b"), ("b", "a"), ("b", "c")], ["src", "dst"]))
-    out = {r["node_id"]: r["level"]
-           for r in G.bfs_levels(e, ["a", "zzz"]).df.collect()}
-    assert out == {"a": 0, "zzz": 0, "b": 1, "c": 2}
-
-
-def test_ancestors_flag_carries_through_composition(spark):
-    # depth-4 chain: the closure needs 2 composition rounds; pairs ending
-    # at the chain tail (dead end) must still compose INTO others' results
-    e = OmigoDF(spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")], ["src", "dst"]))
-    out = sorted((r["node_id"], r["ancestor"])
-                 for r in G.ancestors(e).df.collect())
-    want = sorted([("b", "a"), ("c", "a"), ("c", "b"), ("d", "a"),
-                   ("d", "b"), ("d", "c"), ("e", "a"), ("e", "b"),
-                   ("e", "c"), ("e", "d")])
-    assert out == want
-
-
-def test_time_ordered_ancestors_dead_end_states_kept(spark):
-    # states at dead-end nodes never extend but MUST stay in the output
-    rows = [("a", "b", 1), ("b", "c", 2), ("x", "c", 5)]
-    e = OmigoDF(spark.createDataFrame(rows, ["src", "dst", "ts"]))
-    out = sorted((r["node_id"], r["ancestor"], r["arr_ts"])
-                 for r in G.time_ordered_ancestors(e, "ts").df.collect())
-    assert out == [("b", "a", 1), ("c", "a", 2), ("c", "b", 2),
-                   ("c", "x", 5)]
 
 
 def _wait_for_warning(record, needle, timeout=15.0):
@@ -166,26 +122,6 @@ def test_plain_hot_key_watch_asof_and_results_unchanged(spark):
         # backward as-of: t=5.0 matches right t=4.5 -> v=4
         assert rows[5.0] == 4 and rows[0.0] is None
         assert _wait_for_warning(rec, "asof_join: a key group holds 60")
-
-
-def test_graph_ops_hostile_backtick_dot_names(spark):
-    # r15 parity-hunt find: merge_similar_nodes / remove_cycles /
-    # remove_dangling_edges used e[col] getitem and raw-string selects,
-    # which PARSE the name — a lone backtick or dot broke them
-    edges = spark.createDataFrame([("a", "b"), ("a", "c")],
-                                  "`sr.c` string, `d``st` string")
-    out = {tuple(r) for r in G.merge_similar_nodes(
-        OmigoDF(edges), src_col="sr.c", dst_col="d`st").df.collect()}
-    assert out == {("a", "b")}  # b,c same-parent leaves merge to min
-    e2 = spark.createDataFrame([("a", "b", 1), ("b", "a", 0)],
-                               "`sr.c` string, `d``st` string, `t.s` long")
-    out2 = {tuple(r) for r in G.remove_cycles(
-        OmigoDF(e2), "t.s", src_col="sr.c", dst_col="d`st").df.collect()}
-    assert out2 == {("a", "b", 1)}
-    out3 = {tuple(r) for r in G.remove_dangling_edges(
-        OmigoDF(edges), ["b", "c"], src_col="sr.c",
-        dst_col="d`st").df.collect()}
-    assert out3 == {("a", "b"), ("a", "c")}
 
 
 def test_connected_components_signature_rides_checkpoint(spark):

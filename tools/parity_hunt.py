@@ -25,7 +25,19 @@ and hostile column names (dots, backticks, colons, commas):
   corpus with no finite vector must raise IVF's documented
   ``ValueError``.
 
-Asserts bit-identical canonical outputs. Complements the fixed-seed
+- op 8, the graph traversals: ``bfs_levels``, ``ancestors`` and
+  ``time_ordered_ancestors`` over ``rand_edges()`` under hostile edge
+  and timestamp names (``sr.c``, ``d`st``, ``t.s``) with a timestamp
+  soup that includes NULL, vs a pure-Python driver-side reference in
+  which NULL is one vertex that never expands (it may be an endpoint,
+  never an intermediate). BFS seeds come as lists (``[]`` and
+  ``[None]`` included) and as their one-column ``node_id`` DataFrames.
+  ``encode_vertices=True`` runs on the trial's NULL-free edges must
+  equal the plain runs, and NULL-bearing edges with encoding must raise
+  the documented ``ValueError``.
+
+Asserts bit-identical canonical outputs (rows are compared as a
+multiset, so a repeated row diverges). Complements the fixed-seed
 pytest properties with breadth. The rolling op sums ``v`` only when
 every value fits the window sum's DECIMAL(28,8) (a NaN, +-Inf or
 +-1e308 makes its overflow guard raise in both plans, the documented
@@ -48,7 +60,7 @@ from omigo_data_analytics_spark.operators import similarity as SIM
 from omigo_data_analytics_spark.operators import text as TX
 from omigo_data_analytics_spark.operators import timeseries as TS
 
-N_OPS = 8
+N_OPS = 9
 
 spark = get_spark("hunt", cpus=8)
 N_TRIALS = int(sys.argv[1]) if len(sys.argv) > 1 else 24
@@ -180,6 +192,123 @@ def cosine_family(trial):
         n += 1
     except ValueError:
         print(f"trial {trial} op=7 ivf corrupt-only corpus: ValueError (ok)")
+    return n
+
+
+_TS = [None, 0, 1, 2, 3, 5, 8]
+
+
+def ref_bfs(edges, seeds):
+    """(node, level) rows: minimum BFS level from the seeds; NULL is
+    reached like any vertex but never expands."""
+    adj = {}
+    for s, d in edges:
+        adj.setdefault(s, set()).add(d)
+    level = {v: 0 for v in seeds}
+    frontier = {v for v in seeds if v is not None}
+    depth = 0
+    while frontier:
+        depth += 1
+        new = {d for u in frontier for d in adj.get(u, ())} - set(level)
+        level.update((v, depth) for v in new)
+        frontier = {v for v in new if v is not None}
+    return sorted(level.items(), key=repr)
+
+
+def ref_ancestors(edges):
+    """(node, ancestor) rows: every vertex reachable from each edge source
+    by a path whose intermediate vertices are not NULL."""
+    adj = {}
+    for s, d in edges:
+        adj.setdefault(s, set()).add(d)
+    out = []
+    for a in adj:
+        seen, stack = set(), list(adj[a])
+        while stack:
+            v = stack.pop()
+            if v not in seen:
+                seen.add(v)
+                if v is not None:
+                    stack.extend(adj.get(v, ()))
+        out += [(v, a) for v in seen]
+    return out
+
+
+def ref_time_ancestors(rows):
+    """(node, ancestor, arr_ts) rows: the minimum arrival over paths with
+    non-decreasing timestamps; a pair whose every timestamp is NULL is
+    reachable with a NULL arrival and extends nowhere."""
+    tss = {}
+    for s, d, t in rows:
+        tss.setdefault((s, d), set())
+        if t is not None:
+            tss[(s, d)].add(t)
+    best = {(d, s): min(ts, default=None) for (s, d), ts in tss.items()}
+    changed = True
+    while changed:
+        changed = False
+        for (n, a), arr in list(best.items()):
+            if n is None or arr is None:
+                continue
+            for (s, d), ts in tss.items():
+                t = min((x for x in ts if x >= arr), default=None) \
+                    if s == n else None
+                old = best.get((d, a))
+                if t is not None and (old is None or t < old):
+                    best[(d, a)] = t
+                    changed = True
+    return [(n, a, t) for (n, a), t in best.items()]
+
+
+def graph_family(trial):
+    """op 8: the graph traversals vs the driver-side references; returns
+    the number of divergences."""
+    hs, hd, ht = "sr.c", "d`st", "t.s"
+    rows = [(s, d, random.choice(_TS)) for s, d in rand_edges(12)]
+    schema = (f"{colutils.quote(hs)} string, {colutils.quote(hd)} string, "
+              f"{colutils.quote(ht)} bigint")
+    seeds = random.choice([[], [None], random.sample(_NODES, 2),
+                           random.sample(_NODES[1:], 2)])
+    label = f" edges={len(rows)} seeds={seeds}"
+
+    def run(rs, seeds, enc=False):
+        e = OmigoDF(spark.createDataFrame(rs, schema))
+        kw = dict(src_col=hs, dst_col=hd, encode_vertices=enc)
+        seed_df = spark.createDataFrame([(v,) for v in seeds],
+                                        "node_id string")
+        return [GR.bfs_levels(e, seeds, **kw).df,
+                GR.bfs_levels(e, seed_df, **kw).df,
+                GR.ancestors(e, **kw).df,
+                GR.time_ordered_ancestors(e, ht, **kw).df]
+
+    def ref(rs, seeds):
+        pairs = [(s, d) for s, d, _ in rs]
+        b = ref_bfs(pairs, seeds)
+        return [b, b, ref_ancestors(pairs), ref_time_ancestors(rs)]
+
+    names = ("bfs(list)", "bfs(frame)", "ancestors", "time_ancestors")
+    n = 0
+    for name, want, got in zip(names, ref(rows, seeds), run(rows, seeds)):
+        n += compare(trial, 8, "-", f" {name}{label}",
+                     spark.createDataFrame(want, got.schema), got)
+    # encoding: NULL-free edges and seeds equal the plain runs
+    nf = [r for r in rows if r[0] is not None and r[1] is not None]
+    nf_seeds = [v for v in seeds if v is not None]
+    if nf:
+        for name, plain, enc in zip(names, run(nf, nf_seeds),
+                                    run(nf, nf_seeds, enc=True)):
+            n += compare(trial, 8, "-", f" {name} encoded{label}", plain,
+                         enc)
+    if len(nf) < len(rows):
+        try:
+            GR.ancestors(OmigoDF(spark.createDataFrame(rows, schema)),
+                         src_col=hs, dst_col=hd, encode_vertices=True)
+            print(f"trial {trial} op=8 encoded NULL ids did not raise")
+            n += 1
+        except ValueError as ex:
+            if "NULL vertex ids" not in str(ex):
+                raise
+            print(f"trial {trial} op=8 encoded NULL ids: ValueError (ok)")
     return n
 
 
@@ -319,6 +448,9 @@ for trial in range(N_TRIALS):
                  .select(*[_q(c) for c in edges.columns]).distinct())
         elif op == 7:
             fails += cosine_family(trial)
+            continue
+        elif op == 8:
+            fails += graph_family(trial)
             continue
         fails += compare(trial, op, span, "", a, b)
     except Exception as ex:
