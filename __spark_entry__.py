@@ -796,15 +796,9 @@ def q_cosine_topk(spark, sf_dir):
     return SIM.cosine_topk(c, q, k=5).df
 
 
-def _duck_vec_ok(v: str) -> str:
-    """DuckDB twin of the engine's cosine-side screen
-    (``similarity._vec_side``)."""
-    return SIM.screen_sql_duck(v)
-
-
 def _sql_cosine_topk() -> str:
     cos = SIM.cosine_sql_duck("c.embedding", "q.embedding")
-    ok = _duck_vec_ok("embedding")
+    ok = SIM.screen_sql_duck("embedding")
     return f"""
 WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings
            WHERE vec_id < 3 AND {ok}),
@@ -836,7 +830,7 @@ def _sql_similarity_lsh() -> str:
     cos = SIM.cosine_sql_duck("ce.embedding", "qe.embedding")
     return f"""
 WITH vb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            WHERE {_duck_vec_ok("embedding")}),
+            WHERE {SIM.screen_sql_duck("embedding")}),
 bk AS (SELECT vec_id, {buckets} AS bs FROM vb),
 cb AS (SELECT vec_id, unnest(bs) AS b FROM bk WHERE vec_id >= 3),
 qb AS (SELECT vec_id AS query_id, unnest(bs) AS b0 FROM bk WHERE vec_id < 3),
@@ -865,7 +859,7 @@ def _sql_similarity_ivf() -> str:
     cos_ec = SIM.cosine_sql_duck("e.embedding", "c.c_vec")
     cos_aq = SIM.cosine_sql_duck("a.embedding", "p.embedding")
     C, NP = SIM.IVF_CENTROIDS, SIM.IVF_NPROBE
-    ok = _duck_vec_ok("embedding")
+    ok = SIM.screen_sql_duck("embedding")
     # seeds, lists and probes all pass the one screen (ivf_centroids
     # seeds through _vec_side)
     return f"""
