@@ -85,22 +85,6 @@ def resolve_cols(
     return out
 
 
-def split_prefix(name: str) -> tuple[str, str]:
-    """('a', 'b:c') for 'a:b:c'; ('', name) when there is no prefix."""
-    if COL_SEP in name:
-        head, rest = name.split(COL_SEP, 1)
-        return head, rest
-    return "", name
-
-
-def split_suffix(name: str) -> tuple[str, str]:
-    """('a:b', 'c') for 'a:b:c'; (name, '') when there is no suffix."""
-    if COL_SEP in name:
-        rest, tail = name.rsplit(COL_SEP, 1)
-        return rest, tail
-    return name, ""
-
-
 def qcol(name: str):
     """F.col with the name QUOTED. Every bare-string entry point in Spark
     (F.col, select, groupBy, partitionBy, orderBy, the bracket accessor)

@@ -722,6 +722,10 @@ def analysis_job(edges, ts_col: str, keep_vertices, seed_vertices,
          summary: (node_id, level, n_ancestors, ancestors) with the
          sorted ','-merged ancestor column get_forward_edges_only uses.
 
+    NULL is one vertex, as in the traversals: its row carries its own
+    level and ancestor count, and ``n_ancestors`` counts a NULL ancestor,
+    which the ','-merged list cannot render (it skips it).
+
     Scale: each stage is the individually-audited operator; the
     composition itself adds one distinct and two node-sized joins.
     ``encode_vertices`` forwards to both traversals (see _vertex_dict —
@@ -743,16 +747,22 @@ def analysis_job(edges, ts_col: str, keep_vertices, seed_vertices,
         lambda: _closure(ed.select(F.col("src").alias("anc"),
                                    F.col("dst").alias("node_id")),
                          max_iter, encode_vertices))
-    anc_agg = (anc.groupBy("node_id")
+    # node_id travels as a one-field struct: a struct is never NULL and
+    # structs with equal fields are equal, NULL fields included, so the
+    # NULL vertex meets its own level and ancestor rows while both joins
+    # stay plain equi-joins
+    k = F.struct("node_id").alias("__k__")
+    anc_agg = (anc.groupBy(k)
                .agg(F.count(F.lit(1)).cast("long").alias("n_ancestors"),
                     F.concat_ws(",", F.array_sort(F.collect_set("ancestor")))
                     .alias("ancestors")))
+    # the distinct runs on the key, so its exchange also serves the joins
     nodes = (ed.select(F.col("src").alias("node_id"))
              .unionByName(ed.select(F.col("dst").alias("node_id")))
-             .distinct())
-    out = (nodes.join(lv, "node_id", "left")
-           .join(anc_agg, "node_id", "left")
-           .selectExpr("node_id", "CAST(level AS INT) AS level",
+             .select(k).distinct())
+    out = (nodes.join(lv.select(k, "level"), "__k__", "left")
+           .join(anc_agg, "__k__", "left")
+           .selectExpr("__k__.node_id AS node_id", "CAST(level AS INT) AS level",
                        "COALESCE(n_ancestors, 0L) AS n_ancestors",
                        "COALESCE(ancestors, '') AS ancestors"))
     return OmigoDF(out)

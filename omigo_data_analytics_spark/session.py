@@ -13,6 +13,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding this package: the workers import the daemon, and
+# any UDF that references a package function, from here
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Runtime-settable confs the engine relies on.
 _RUNTIME_CONFS = {
     # Spark can only read a TIMESTAMP(NANOS) parquet column as a long
@@ -32,7 +36,12 @@ _RUNTIME_CONFS = {
 
 
 def prepare_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs this engine needs to an existing session."""
+    """Apply runtime confs this engine needs to an existing session.
+
+    Only runtime confs: the worker daemon is a static conf, so an external
+    session keeps PySpark's own daemon (each Python-UDF task re-reads the
+    zip archives on the workers' path), and its workers import this
+    package only if the session's Python path already reaches it."""
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -48,6 +57,11 @@ def get_spark(app_name: str = "omigo_spark", cpus: int | None = None) -> SparkSe
     what we would set there: AQE on (runtime re-plan, skew-join handling),
     shuffle partitions ~ cores (not the 200 default), Arrow for any
     pandas-interop, UTC timestamps for oracle comparability.
+
+    Python-UDF workers start from ``omigo_data_analytics_spark.pydaemon``
+    and find the package root on their ``PYTHONPATH``, put in front of any
+    value the session already carries (``spark.executorEnv.PYTHONPATH``),
+    so UDFs run whatever the driver's working directory.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -61,7 +75,16 @@ def get_spark(app_name: str = "omigo_spark", cpus: int | None = None) -> SparkSe
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "omigo_data_analytics_spark.pydaemon")
     )
     spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    sc.setLogLevel("WARN")
+    # the environment every Python function ships to its workers, read
+    # from the spark.executorEnv.* confs at start-up; workers are pooled
+    # per environment, so a second call must leave it as it is
+    env = sc.environment
+    path = env.get("PYTHONPATH", "")
+    if _PKG_ROOT not in path.split(os.pathsep):
+        env["PYTHONPATH"] = os.pathsep.join(p for p in (_PKG_ROOT, path) if p)
     return prepare_session(spark)

@@ -368,7 +368,7 @@ _PIN_JOBS = {
     ("time_ordered_ancestors", True): (26, 2),
     ("get_bfs_levels", False): (47, 2),
     ("analysis_job", False): (74, 6),
-    ("analysis_job", True): (83, 9),
+    ("analysis_job", True): (83, 8),
     ("remove_dangling_edges", False): (11, 1),
 }
 
@@ -447,6 +447,18 @@ def test_null_vertex_reached_once(spark):
     assert _rows(G.ancestors(e).df) == sorted(
         [("b", "a"), ("c", "a"), ("c", "b"), (None, "a"), (None, "b"),
          (None, "c")], key=repr)
+
+
+def test_analysis_job_null_vertex_summary(spark):
+    """The summary joins are null-safe: the NULL vertex reads the level BFS
+    gives it, and a NULL ancestor counts as one vertex though the
+    ','-merged list cannot show it."""
+    rows = [(None, "b", 1), ("b", "c", 2)]
+    e = OmigoDF(spark.createDataFrame(rows, "src string, dst string, ts int"))
+    # a NULL vertex never expands, so the seed alone is reached
+    assert _rows(G.bfs_levels(e, [None]).df) == [(None, 0)]
+    assert _rows(G.analysis_job(e, "ts", ["c"], [None]).df) == sorted(
+        [(None, 0, 0, ""), ("b", None, 1, ""), ("c", None, 2, "b")], key=repr)
 
 
 def _plan(spark, sf_dir, name):

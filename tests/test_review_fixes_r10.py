@@ -170,34 +170,6 @@ def test_explode_json_all_null_clear_error(spark):
 
 
 # ---------------------------------------------------------------- dedup.py
-def test_embedding_dedup_zero_norm_no_ansi_crash(spark):
-    """An all-zeros embedding must not crash the cosine screen (ANSI
-    DIVIDE_BY_ZERO) — and must never be dropped as a 'dup'."""
-    from omigo_data_analytics_spark.operators import dedup as DD
-
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [1.0, 0.0]), (3, [0.0, 0.0])],
-        "vec_id long, embedding array<double>")
-    pairs = DD.embedding_dup_pairs(OmigoDF(df), threshold=0.9,
-                                   method="exact").df.collect()
-    assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 2)}
-    kept = DD.dedup_embedding(OmigoDF(df), threshold=0.9, method="exact")
-    assert sorted(r["vec_id"] for r in kept.df.collect()) == [1, 3]
-
-
-def test_semdedup_zero_norm_kept(spark):
-    from omigo_data_analytics_spark.operators import dedup as DD
-
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [1.0, 0.0]), (3, [0.0, 0.0]),
-         (4, [0.0, 1.0])],
-        "vec_id long, embedding array<double>")
-    out = DD.semdedup(OmigoDF(df), num_clusters=2, threshold=0.99)
-    ids = sorted(r["vec_id"] for r in out.df.collect())
-    assert 3 in ids          # zero vector survives
-    assert 2 not in ids      # true dup dropped
-
-
 def test_remove_duplicate_spans_check_unique_raises(spark):
     from omigo_data_analytics_spark.operators import dedup as DD
 
