@@ -151,9 +151,8 @@ def minhash_struct_expr(col: str = "text", k: int = NUM_HASHES,
 def minhash_signatures(odf: OmigoDF, col: str = "text", k: int = NUM_HASHES,
                        n: int = SHINGLE_N) -> OmigoDF:
     """Append mh_0..mh_{k-1} minhash columns. Pure map-side expressions."""
-    gen = minhash_struct_expr(col, k, n)
-    out = ensure_min_parallelism(odf.df).select("*", F.expr(f"inline(array({gen}))"))
-    return OmigoDF(out)
+    gen = F.expr(minhash_struct_expr(col, k, n))
+    return OmigoDF(ensure_min_parallelism(odf.df).select("*", F.inline(F.array(gen))))
 
 
 def simhash(odf: OmigoDF, col: str = "text", new_col: str = "simhash",
@@ -163,6 +162,66 @@ def simhash(odf: OmigoDF, col: str = "text", new_col: str = "simhash",
     token-hash array, r10 review)."""
     expr = simhash_expr("spark", col, bits)
     return OmigoDF(ensure_min_parallelism(odf.df).withColumn(new_col, F.expr(expr)))
+
+
+# ------------------------------------------------ sparse-key self-join kit
+# MinHash-LSH, exact n-gram Jaccard and duplicate spans are one shape: a
+# stream of (id, key) rows, a per-key aggregate, and a self-join on the
+# key. Each decision of that shape is made here, once, with the id quoted.
+def _key_stream(df, id_col: str, keys, gen=F.explode, **carry):
+    """The (id, key) stream: ``df`` widened, projected to the quoted id
+    and the ``keys`` array, then one row per element as ``key``
+    (``gen=F.posexplode`` adds its index as ``pos``; ``gen=None`` keeps
+    the whole array as ``key``). ``carry`` maps a column name to a
+    function of the array, computed per document before the explode.
+    Lazily checkpointed: the per-key aggregate, both self-join sides and
+    any semi-join probe read materialized rows, so the key expression
+    runs once, not once per consumer."""
+    arr = F.col("__keys__")
+    base = ensure_min_parallelism(df).select(qcol(id_col), keys.alias("__keys__"))
+    if carry:
+        base = base.withColumns({c: f(arr) for c, f in carry.items()})
+    names = ("pos", "key") if gen is F.posexplode else ("key",)
+    out = (arr if gen is None else gen(arr)).alias(*names)
+    return base.select(qcol(id_col), *carry, out).localCheckpoint(eager=False)
+
+
+def _per_key(ks, id_col: str | None = None):
+    """The per-key aggregate of a key stream. Without ``id_col``: every
+    key's row count ``__df__`` (the document frequency the DF and band
+    caps test). With it: the keys held by two or more distinct ids, with
+    the smallest as ``__own__`` — a min/max partial aggregate, so a key
+    shared by millions of documents is still four values of state."""
+    grp = ks.groupBy("key")
+    if id_col is None:
+        return grp.agg(F.count(F.lit(1)).alias("__df__"))
+    return (grp.agg(F.min(qcol(id_col)).alias("__own__"),
+                    F.max(qcol(id_col)).alias("__mx__"))
+            .where(F.col("__own__") != F.col("__mx__")))
+
+
+def _key_self_join(ks, id_col: str, *carry):
+    """The key self-join: one row per key shared by ids ``id_a < id_b``,
+    with each ``carry`` column c of both sides as ``c_a`` and ``c_b``."""
+    a, b = partial(aliased, "a"), partial(aliased, "b")
+    sides = [x for c in carry for x in (a(c).alias(c + "_a"), b(c).alias(c + "_b"))]
+    return (ks.alias("a").join(ks.alias("b"),
+                               on=[a("key") == b("key"), a(id_col) < b(id_col)])
+            .select(a(id_col).alias("id_a"), b(id_col).alias("id_b"), *sides))
+
+
+def _nonunique_ids(df, id_col: str) -> str | None:
+    """None when ``id_col`` identifies the rows of ``df``, else
+    ``"(n rows, d distinct ids)"``. A NULL id is not a distinct id (the
+    ``count_distinct`` rule). Both counts are observed on the eager
+    checkpoint of the per-id counts, which keeps only repeated ids, so
+    no result rows are read back through a socket."""
+    c = F.col("__c__")
+    _, m = checkpoint_with_metrics(
+        df.groupBy(qcol(id_col)).agg(F.count(F.lit(1)).alias("__c__")),
+        {"n": F.sum(c), "d": F.count(qcol(id_col))}, keep=c > 1)
+    n, d = m["n"] or 0, m["d"]
+    return None if n == d else f"({n} rows, {d} distinct ids)"
 
 
 def lsh_candidate_pairs(odf: OmigoDF, id_col: str = "doc_id", col: str = "text",
@@ -193,45 +252,27 @@ def lsh_candidate_pairs(odf: OmigoDF, id_col: str = "doc_id", col: str = "text",
             f"lsh_candidate_pairs: k={k} not divisible by "
             f"rows_per_band={rows_per_band} — the trailing "
             f"{k % rows_per_band} minhashes would be silently unbanded")
-    sigs = minhash_signatures(odf, col, k).df.select(
-        id_col, *[f"mh_{j}" for j in range(k)])
-    # one banded projection via a single explode — NOT a union of
-    # per-band selects, which would re-evaluate the md5-heavy signature
-    # expression once per band per join side (8x the map work for
-    # 4 bands). The result is localCheckpointed so the self-join reads
-    # materialized (band, key, id) triples instead of recomputing
-    # signatures on each side; that projection is the same tiny footprint
-    # the join would shuffle anyway.
-    structs = []
-    for b in range(k // rows_per_band):
-        key = F.concat_ws("_", *[F.col(f"mh_{b * rows_per_band + r}").cast("string")
-                                 for r in range(rows_per_band)])
-        structs.append(F.struct(F.lit(b).alias("band"), key.alias("band_key")))
-    all_bands = (sigs.select(qcol(id_col),
-                             F.explode(F.array(*structs)).alias("__bb__"))
-                 .select(F.col("__bb__.band").alias("band"),
-                         F.col("__bb__.band_key").alias("band_key"),
-                         qcol(id_col))
-                 # '' key <=> every minhash in the band was NULL (the
-                 # NULL-text case; real keys are '_'-joined bigints) —
-                 # see the docstring's quadratic-bucket rationale
-                 .where(F.col("band_key") != "")
-                 .localCheckpoint(eager=False))
+    # one key per band, a (band, band_key) struct, through a single
+    # explode — NOT a union of per-band selects, which would re-evaluate
+    # the md5-heavy signature expression once per band per join side
+    mh = [qcol(f"mh_{j}") for j in range(k)]
+    bands = F.array(*[
+        F.struct(F.lit(b).alias("band"),
+                 F.concat_ws("_", *[m.cast("string") for m in
+                                    mh[b * rows_per_band:(b + 1) * rows_per_band]])
+                 .alias("band_key"))
+        for b in range(k // rows_per_band)])
+    # '' key <=> every minhash in the band was NULL (the NULL-text case;
+    # real keys are '_'-joined bigints) — see the docstring's
+    # quadratic-bucket rationale
+    ks = _key_stream(minhash_signatures(odf, col, k).df, id_col,
+                     F.filter(bands, lambda s: s["band_key"] != ""))
     if max_band_df is not None:
-        over = (all_bands.groupBy("band", "band_key")
-                .agg(F.count(F.lit(1)).alias("__df__"))
-                .where(F.col("__df__") > int(max_band_df))
-                .select("band", "band_key"))
-        all_bands = all_bands.join(F.broadcast(over), on=["band", "band_key"],
-                                   how="left_anti")
-    a = all_bands.alias("a")
-    b = all_bands.alias("b")
-    pairs = (a.join(b, on=[F.col("a.band") == F.col("b.band"),
-                           F.col("a.band_key") == F.col("b.band_key"),
-                           F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
-             .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-             .distinct())
-    return OmigoDF(pairs)
+        over = (_per_key(ks).where(F.col("__df__") > int(max_band_df))
+                .select(F.col("key").alias("__over__")))
+        ks = ks.join(F.broadcast(over), F.col("key") == F.col("__over__"),
+                     "left_anti")
+    return OmigoDF(_key_self_join(ks, id_col).distinct())
 
 
 SPAN_N = 8
@@ -336,36 +377,21 @@ def duplicate_span_stats(odf: OmigoDF, id_col: str = "doc_id",
     # positions in the coverage window (lead(pos)-pos collapses to 0 on
     # ties, undercounting dup_tokens) and 'cross_doc' treats the copies
     # as ONE document, reporting their mutual duplication as 0. Opt-in
-    # verification (a full-input aggregate — the pack_sequences /
-    # sample_n_per_group guard pattern).
-    if check_unique:
-        stats = df.agg(F.count(F.lit(1)).alias("n"),
-                       F.count_distinct(qcol(id_col)).alias("d")).first()
-        if stats["n"] != stats["d"]:
-            import warnings
-            warnings.warn(
-                f"duplicate_span_stats: {id_col!r} does not uniquely "
-                f"identify rows ({stats['n']} rows, {stats['d']} distinct "
-                "ids) — coverage undercounts on interleaved positions and "
-                "same-id copies are treated as one document",
-                UserWarning, stacklevel=2)
-    base = df.selectExpr(
-        id_col,
-        f"CAST(size({_tokens('spark', col)}) AS BIGINT) AS n_tokens",
-        f"{span_grams_expr('spark', col, n)} AS __grams__")
-    # the exploded (id, pos, key) stream feeds BOTH the dup-key aggregate
-    # and the semi-join probe side — checkpoint it so the md5 window pass
-    # runs once, not twice (same pattern as ngram_jaccard_pairs)
-    pos = (base.selectExpr(id_col, "posexplode(__grams__) AS (pos, key)")
-           .localCheckpoint(eager=False))
-    grp = pos.groupBy("key")
-    if scope == "cross_doc":
-        dup = (grp.agg(F.min(id_col).alias("__mn__"), F.max(id_col).alias("__mx__"))
-               .where(F.col("__mn__") != F.col("__mx__")).select("key"))
-    else:
-        dup = (grp.agg(F.count(F.lit(1)).alias("__c__"))
-               .where(F.col("__c__") >= 2).select("key"))
-    hits = pos.join(dup, on="key", how="leftsemi")
+    # verification: one per-id counting job (_nonunique_ids).
+    if check_unique and (counts := _nonunique_ids(df, id_col)):
+        import warnings
+        warnings.warn(
+            f"duplicate_span_stats: {id_col!r} does not uniquely "
+            f"identify rows {counts} — coverage undercounts on interleaved "
+            "positions and same-id copies are treated as one document",
+            UserWarning, stacklevel=2)
+    # the (id, pos, key) stream feeds BOTH the dup-key aggregate and the
+    # semi-join probe side, so the md5 window pass runs once
+    pos = _key_stream(df, id_col, F.expr(span_grams_expr("spark", col, n)),
+                      F.posexplode)
+    dup = (_per_key(pos, id_col) if scope == "cross_doc"
+           else _per_key(pos).where(F.col("__df__") >= 2))
+    hits = pos.join(dup.select("key"), on="key", how="leftsemi")
     w = Window.partitionBy(qcol(id_col)).orderBy("pos")
     cov = (hits
            .withColumn("__cover__",
@@ -375,13 +401,14 @@ def duplicate_span_stats(odf: OmigoDF, id_col: str = "doc_id",
            .groupBy(qcol(id_col))
            .agg(F.count(F.lit(1)).alias("dup_spans"),
                 F.sum("__cover__").cast("bigint").alias("dup_tokens")))
-    out = (base.select(qcol(id_col), "n_tokens")
+    n_tokens = F.size(F.expr(_tokens("spark", col))).cast("bigint")
+    out = (df.select(qcol(id_col), n_tokens.alias("n_tokens"))
            .join(cov, on=id_col, how="left")
-           .selectExpr(id_col, "n_tokens",
-                       "COALESCE(dup_spans, 0L) AS dup_spans",
-                       "COALESCE(dup_tokens, 0L) AS dup_tokens",
-                       "ROUND(CAST(COALESCE(dup_tokens, 0) AS DOUBLE)"
-                       " / GREATEST(n_tokens, 1L), 6) AS dup_ratio"))
+           .select(qcol(id_col), "n_tokens",
+                   F.expr("COALESCE(dup_spans, 0L) AS dup_spans"),
+                   F.expr("COALESCE(dup_tokens, 0L) AS dup_tokens"),
+                   F.expr("ROUND(CAST(COALESCE(dup_tokens, 0) AS DOUBLE)"
+                          " / GREATEST(n_tokens, 1L), 6) AS dup_ratio")))
     return OmigoDF(out)
 
 
@@ -418,23 +445,15 @@ def remove_duplicate_spans(odf: OmigoDF, id_col: str = "doc_id",
     ``check_unique=True`` to spend one counting job verifying it; a
     ``ValueError`` names the real cause instead of the map error."""
     df = ensure_min_parallelism(odf.df)
-    if check_unique:
-        stats = df.agg(F.count(F.lit(1)).alias("n"),
-                       F.count_distinct(qcol(id_col)).alias("d")).first()
-        if stats["n"] != stats["d"]:
-            raise ValueError(
-                f"remove_duplicate_spans: id_col '{id_col}' does not "
-                f"uniquely identify rows ({stats['n']} rows, "
-                f"{stats['d']} distinct ids) — a shared id merges removal "
-                "lists across documents; dedupe ids first")
-    grams = df.selectExpr(
-        "*", f"{span_grams_expr('spark', col, n, key_bits)} AS __grams__")
-    pos = (grams.selectExpr(id_col, "posexplode(__grams__) AS (pos, key)")
-           .localCheckpoint(eager=False))
-    own = (pos.groupBy("key")
-           .agg(F.min(id_col).alias("__own__"), F.max(id_col).alias("__mx__"))
-           .where(F.col("__own__") != F.col("__mx__"))
-           .select("key", "__own__"))
+    if check_unique and (counts := _nonunique_ids(df, id_col)):
+        raise ValueError(
+            f"remove_duplicate_spans: id_col '{id_col}' does not uniquely "
+            f"identify rows {counts} — a shared id merges removal lists "
+            "across documents; dedupe ids first")
+    pos = _key_stream(df, id_col,
+                      F.expr(span_grams_expr("spark", col, n, key_bits)),
+                      F.posexplode)
+    own = _per_key(pos, id_col).select("key", "__own__")
     rm = (pos.join(own, on="key")
           .where(qcol(id_col) != F.col("__own__"))
           .groupBy(qcol(id_col))
@@ -575,21 +594,17 @@ def ngram_jaccard_pairs(odf: OmigoDF, id_col: str = "doc_id", col: str = "text",
     self-join sides anti-join the checkpointed set instead of
     re-aggregating. With the warning off, the cap stays a lazy
     anti-join and construction submits no job."""
-    base = ensure_min_parallelism(odf.df).select(
-        qcol(id_col), F.expr(_shingles_spark(col, n)).alias("sh"))
-    base = base.withColumn("sh_n", F.size("sh"))
-    # the exploded (id, shingle) projection feeds the DF census and
-    # BOTH self-join sides — checkpoint it so tokenization+explode run
-    # once, not three times
-    ex = (base.select(qcol(id_col), "sh_n", F.explode("sh").alias("s"))
-          .localCheckpoint(eager=False))
-    dfs = ex.groupBy("s").agg(F.count(F.lit(1)).alias("__df__"))
+    # the (id, sh_n, shingle) stream feeds the DF census and BOTH
+    # self-join sides, so tokenization and explode run once
+    ex = _key_stream(odf.df, id_col, F.expr(_shingles_spark(col, n)),
+                     sh_n=F.size)
+    dfs = _per_key(ex)
     df_n = F.col("__df__")
     # only a non-NULL shingle can be removed: the anti-join's equality
     # never matches the NULL-text group, which therefore stays in the
     # estimate whatever its df
     over_cap = (F.lit(False) if max_shingle_df is None
-                else (df_n > max_shingle_df) & F.col("s").isNotNull())
+                else (df_n > max_shingle_df) & F.col("key").isNotNull())
     hot = None
     if warn_candidate_pairs is not None:
         pairs = F.sum(F.when(~over_cap, df_n * (df_n - 1) / 2))
@@ -614,16 +629,14 @@ def ngram_jaccard_pairs(odf: OmigoDF, id_col: str = "doc_id", col: str = "text",
     elif max_shingle_df is not None:
         hot = dfs.where(over_cap)
     if hot is not None:
-        ex = ex.join(hot.select("s"), on="s", how="left_anti")
-    a, b = partial(aliased, "a"), partial(aliased, "b")
-    shared = (ex.alias("a").join(ex.alias("b"),
-                                 on=[a("s") == b("s"), a(id_col) < b(id_col)])
-              .groupBy(a(id_col).alias("id_a"), b(id_col).alias("id_b"),
-                       a("sh_n").alias("na"), b("sh_n").alias("nb"))
+        ex = ex.join(hot.select("key"), on="key", how="left_anti")
+    shared = (_key_self_join(ex, id_col, "sh_n")
+              .groupBy("id_a", "id_b", "sh_n_a", "sh_n_b")
               .agg(F.count(F.lit(1)).alias("shared")))
     out = (shared
            .withColumn("jaccard", F.round(F.col("shared").cast("double")
-                                          / (F.col("na") + F.col("nb") - F.col("shared")), 6))
+                                          / (F.col("sh_n_a") + F.col("sh_n_b")
+                                             - F.col("shared")), 6))
            .where(f"shared >= {min_shared} AND jaccard >= {threshold}")
            .select("id_a", "id_b", "shared", "jaccard"))
     return OmigoDF(out)
@@ -1010,12 +1023,12 @@ def _verified_dup_pairs(odf: OmigoDF, id_col: str, col: str,
     is >= 1 by construction: a candidate pair shares >= 1 band, hence
     >= 1 shingle."""
     cands = lsh_candidate_pairs(odf, id_col, col).df
-    sh = (ensure_min_parallelism(odf.df)
-          .select(qcol(id_col), F.expr(_shingles_spark(col)).alias("sh"))
-          .localCheckpoint(eager=False))
-    j = (cands
-         .join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-         .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), "id_b"))
+    sh = _key_stream(odf.df, id_col, F.expr(_shingles_spark(col)), gen=None)
+
+    def side(s):
+        return sh.select(qcol(id_col).alias("id_" + s), F.col("key").alias("sh_" + s))
+
+    j = cands.join(side("a"), "id_a").join(side("b"), "id_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     jac = inter.cast("double") / (F.size("sh_a") + F.size("sh_b") - inter)
     return j.where(jac >= threshold).select("id_a", "id_b")
@@ -1044,7 +1057,7 @@ def _exact_rep_mapping(df, id_col: str, col: str):
     w = Window.partitionBy("__fp__")
     return (df.select(qcol(id_col), fp.alias("__fp__"))
             .where(F.col("__fp__").isNotNull())
-            .withColumn("__rep__", F.min(id_col).over(w))
+            .withColumn("__rep__", F.min(qcol(id_col)).over(w))
             .select(qcol(id_col), "__rep__"))
 
 

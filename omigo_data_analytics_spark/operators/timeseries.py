@@ -45,7 +45,9 @@ the plan. No hot key (empty input included): the plain plan alone.
 Every key hot: the bucketed plan alone. Only a mixed census splits
 every input by the hot set with a null-safe semi/anti join, runs hot
 rows bucketed and cold rows plain, and unions the results
-hot-then-cold. ``hot_key_rows`` is the threshold (``"auto"`` = 262,144
+hot-then-cold. At ``hot_key_rows`` of 1 or less every present key is
+hot, so an emptiness probe (one job; each task stops at its first row)
+stands in for the census. ``hot_key_rows`` is the threshold (``"auto"`` = 262,144
 rows, an int pins it) for the census and for the plain plan's watch
 alike, cold side included.
 """
@@ -514,13 +516,17 @@ def _route_hot_keys(inputs, keys, hot_key_rows, run_hot, run_cold) -> OmigoDF:
     the inputs as they are. Every key hot: ``run_hot`` on them. Only a
     mixed census splits every input by the one hot-key set, runs
     ``run_hot`` on the hot parts and ``run_cold`` on the cold parts (one
-    frame per input, in order), and unions the results hot-then-cold."""
+    frame per input, in order), and unions the results hot-then-cold.
+    At a threshold of 1 or less every present key is hot, so a one-job
+    emptiness probe takes the census's place."""
     thr = _hot_threshold(hot_key_rows)
     counted = inputs[0]
     if len(inputs) > 1:
         counted = counted.select(*map(qcol, keys))
         for d in inputs[1:]:
             counted = counted.unionByName(d.select(*map(qcol, keys)))
+    if thr <= 1:
+        return run_cold(*inputs) if counted.isEmpty() else run_hot(*inputs)
     hot_keys, n = _hot_keys_census(counted, keys, thr)
     if n["hot"] == 0:
         return run_cold(*inputs)

@@ -1,6 +1,9 @@
 """Training-data operator tests: text metrics, dedup family, similarity
 search, explode_json."""
 
+import warnings
+
+import pytest
 from pyspark.sql import functions as F
 
 from omigo_data_analytics_spark import OmigoDF
@@ -158,17 +161,52 @@ def test_ngram_jaccard_no_census_job_when_warning_off(spark):
     assert out.df.count() == 66
 
 
-def test_ngram_jaccard_hostile_id_col(spark):
+_NEAR = "the quick brown fox jumps over the lazy dog again and again today"
+_HOSTILE_DOCS = [(1, _NEAR), (2, _NEAR + " tomorrow"), (3, _NEAR),
+                 (4, "completely different words appear in this text")]
+_FAMILY = {
+    "minhash_signatures": lambda d, i: DD.minhash_signatures(d),
+    "lsh_candidate_pairs": lambda d, i: DD.lsh_candidate_pairs(d, id_col=i),
+    "ngram_jaccard_pairs": lambda d, i: DD.ngram_jaccard_pairs(d, id_col=i),
+    "duplicate_span_stats": lambda d, i: DD.duplicate_span_stats(
+        d, id_col=i, check_unique=True),
+    "remove_duplicate_spans": lambda d, i: DD.remove_duplicate_spans(
+        d, id_col=i, check_unique=True),
+    "dedup_near": lambda d, i: DD.dedup_near(d, id_col=i,
+                                             collapse_exact=False),
+    "cluster_near_dups": lambda d, i: DD.cluster_near_dups(
+        d, id_col=i, collapse_exact=True),
+}
+
+
+@pytest.mark.parametrize("name", ["doc.id", "doc`id"])
+def test_ngram_jaccard_hostile_id_col(spark, name):
     """A dot or backtick in id_col is a plain column name, not a struct
-    access or a syntax error."""
-    rows = [(1, "w1 w2 w3 w4 w5"), (2, "w1 w2 w3 w4 zz"), (3, "q1 q2 q3")]
-    want = _pairs(DD.ngram_jaccard_pairs(OmigoDF(spark.createDataFrame(
-        rows, "doc_id int, text string"))))
-    assert want
-    for name in ("doc.id", "doc`id"):
-        df = spark.createDataFrame(rows, "doc_id int, text string") \
-            .withColumnRenamed("doc_id", name)
-        assert _pairs(DD.ngram_jaccard_pairs(OmigoDF(df), id_col=name)) == want
+    access or a syntax error, in every operator of the text near-dup
+    family: each returns the rows of the same call on a doc_id frame."""
+    plain = spark.createDataFrame(_HOSTILE_DOCS, "doc_id int, text string")
+    hostile = OmigoDF(plain.withColumnRenamed("doc_id", name))
+    for op, call in _FAMILY.items():
+        want = _pairs(call(OmigoDF(plain), "doc_id"))
+        assert want, op
+        assert _pairs(call(hostile, name)) == want, op
+
+
+def test_span_check_unique_null_id_is_not_distinct(spark):
+    """A NULL id is not a distinct id (count_distinct's rule): one NULL
+    and one real id read 2 rows and 1 distinct id, so both span guards
+    fire; two real ids pass silently."""
+    text = "a b c d e f g h i j"
+    odf = _mk(spark, [(None, text), (1, text)], "doc_id long, text string")
+    with pytest.raises(ValueError, match=r"\(2 rows, 1 distinct ids\)"):
+        DD.remove_duplicate_spans(odf, check_unique=True)
+    with pytest.warns(UserWarning, match=r"\(2 rows, 1 distinct ids\)"):
+        DD.duplicate_span_stats(odf, check_unique=True)
+    ok = _mk(spark, [(2, text), (1, text)], "doc_id long, text string")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        DD.duplicate_span_stats(ok, check_unique=True)
+        DD.remove_duplicate_spans(ok, check_unique=True)
 
 
 def test_simhash_near_dup_low_hamming(spark):
@@ -974,3 +1012,215 @@ def test_lsh_buckets_empty_vectors_dropped(spark):
     # all-empty batch corner: no rows, no crash
     allempty = _mk(spark, [(9, [])], "vec_id long, embedding array<double>")
     assert SIM.cosine_topk_lsh(allempty, q, k=2).df.count() == 0
+
+
+# --------------------------------------------------------------------------
+# text near-dup family: span-uniqueness guard, short-doc shingles, LSH
+# banding and caps, the ngram pair census, and the collapse_exact path.
+
+def test_remove_duplicate_spans_check_unique_raises(spark):
+    from omigo_data_analytics_spark.operators import dedup as DD
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e f g h i j"), (1, "k l m n o p q r s t")],
+        "doc_id long, text string")
+    import pytest as _pt
+    with _pt.raises(ValueError, match="uniquely identify"):
+        DD.remove_duplicate_spans(OmigoDF(df), check_unique=True)
+
+
+def test_short_doc_shingles_whitespace_normalized(spark):
+    """Token-identical short docs (< n tokens) must now match: the old
+    fallback shingled the RAW text, so 'alpha beta' vs 'alpha  beta'
+    never deduped. Engine and DuckDB oracles stay in lockstep."""
+    import duckdb
+
+    from omigo_data_analytics_spark.operators import dedup as DD
+
+    df = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "alpha  beta"), (3, "unrelated thing")],
+        "doc_id long, text string")
+    kept = DD.dedup_near(OmigoDF(df), threshold=0.99)
+    assert sorted(r["doc_id"] for r in kept.df.collect()) == [1, 3]
+    # dialect parity on the shingle expression itself, incl. edge shapes
+    rows = [(1, "alpha beta"), (2, "alpha  beta"), (3, "   "), (4, ""),
+            (5, None), (6, "one two three four")]
+    sdf = spark.createDataFrame(rows, "doc_id long, text string")
+    got_s = {r["doc_id"]: r["sh"] for r in
+             sdf.selectExpr("doc_id",
+                            f"{DD.shingles_expr('spark')} AS sh").collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    got_d = {r[0]: r[1] for r in con.execute(
+        f"SELECT doc_id, {DD.shingles_expr('duckdb')} FROM t").fetchall()}
+    for k in got_s:
+        if k == 5:
+            # NULL text: duck's list_distinct strips NULLs ([] vs
+            # spark's [NULL]) — benign, both minhash to NULL (pinned
+            # below); every non-NULL doc must agree exactly
+            continue
+        # set compare: duck's list_distinct reorders; minhash is
+        # order-independent so only the SET must agree
+        assert set(got_s[k]) == set(got_d[k]), (k, got_s[k], got_d[k])
+    assert got_s[1] == got_s[2] == ["alpha beta"]
+    assert got_s[3] == got_s[4] == [""]
+    assert got_s[5] == [None] and got_d[5] == []
+    mh_s = DD.minhash_exprs("spark", DD.shingles_expr("spark"))[0]
+    mh_d = DD.minhash_exprs("duckdb", DD.shingles_expr("duckdb"))[0]
+    s5 = sdf.where("doc_id = 5").selectExpr(f"{mh_s} AS m").collect()[0]["m"]
+    d5 = con.execute(f"SELECT {mh_d} FROM t WHERE doc_id = 5").fetchone()[0]
+    assert s5 is None and d5 is None
+
+
+def test_lsh_null_text_no_candidate_explosion(spark):
+    """NULL-text docs must produce NO candidate pairs (they can never
+    verify) instead of all landing in one quadratic '' bucket."""
+    from omigo_data_analytics_spark.operators import dedup as DD
+
+    rows = [(i, None) for i in range(50)] + [
+        (100, "the quick brown fox jumps"), (101, "the quick brown fox jumps")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    cands = DD.lsh_candidate_pairs(OmigoDF(df)).df.collect()
+    assert {(r["id_a"], r["id_b"]) for r in cands} == {(100, 101)}
+    # NULL docs survive dedup untouched
+    kept = DD.dedup_near(OmigoDF(df), threshold=0.9)
+    assert kept.df.count() == 51
+
+
+def test_lsh_param_validation(spark):
+    from omigo_data_analytics_spark.operators import dedup as DD
+
+    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    import pytest as _pt
+    with _pt.raises(ValueError, match="not divisible"):
+        DD.lsh_candidate_pairs(OmigoDF(df), k=8, rows_per_band=3)
+    with _pt.raises(ValueError, match="seed pairs"):
+        DD.minhash_exprs("spark", "sh", k=16)
+
+
+def test_lsh_max_band_df_cap(spark):
+    """Opt-in bucket cap drops over-cap buckets; default None keeps the
+    full candidate set."""
+    from omigo_data_analytics_spark.operators import dedup as DD
+
+    rows = [(i, "identical boilerplate text here") for i in range(10)] + [
+        (100, "the quick brown fox jumps"), (101, "the quick brown fox jumps")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    full = DD.lsh_candidate_pairs(OmigoDF(df)).df.count()
+    assert full == 45 + 1  # 10 choose 2 boilerplate + the fox pair
+    capped = DD.lsh_candidate_pairs(OmigoDF(df), max_band_df=5).df.collect()
+    assert {(r["id_a"], r["id_b"]) for r in capped} == {(100, 101)}
+
+
+def test_ngram_jaccard_candidate_pair_warning(spark):
+    """Opt-in census warns when the post-cap candidate-pair estimate
+    exceeds the threshold (self-similar corpora go quadratic even under
+    the DF cap — measured at the 40x scale-up); default None adds no
+    warning and no extra job."""
+    import warnings
+
+    from omigo_data_analytics_spark.operators import dedup as DD
+
+    d = OmigoDF(spark.createDataFrame(
+        [(i, "alpha beta gamma delta") for i in range(12)],
+        "doc_id long, text string"))
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        out1 = DD.ngram_jaccard_pairs(d, warn_candidate_pairs=10).df.count()
+        assert any("candidate pairs" in str(x.message) for x in w)
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        out2 = DD.ngram_jaccard_pairs(d).df.count()
+        assert not any("candidate pairs" in str(x.message) for x in w)
+    assert out1 == out2  # the census never changes results
+
+
+def test_ngram_jaccard_census_warns_by_default(spark):
+    """Default warn_candidate_pairs is now ON (~10M): a dense corpus
+    (every doc shares every shingle) must warn when the estimate
+    crosses the caller-set threshold; explicit None opts out."""
+    from omigo_data_analytics_spark.operators import dedup as DD
+    rows = [(i, "alpha beta gamma delta epsilon zeta eta theta")
+            for i in range(40)]
+    docs = OmigoDF(spark.createDataFrame(rows, "doc_id int, text string"))
+    # ~40 docs x identical shingles -> est pairs ~ s * 40*39/2 >> 100
+    with pytest.warns(UserWarning, match="candidate pairs"):
+        DD.ngram_jaccard_pairs(docs, warn_candidate_pairs=100).df.count()
+    # opt-out: no census job, no warning
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        DD.ngram_jaccard_pairs(docs, warn_candidate_pairs=None).df.count()
+
+
+def test_ngram_jaccard_default_threshold_silent_on_small(spark, documents):
+    """The 10M default must NOT warn on an ordinary small corpus."""
+    from omigo_data_analytics_spark.operators import dedup as DD
+    docs = OmigoDF(documents.df.limit(200))
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        DD.ngram_jaccard_pairs(docs).df.count()
+
+
+def test_collapse_exact_equivalence_and_null_survival(spark):
+    """dedup_near/cluster_near_dups can collapse byte-identical docs to
+    a representative before LSH (r11 duplicate-heavy probe: 5,000
+    identical docs = 12.5M candidate pairs = 40-70s; collapsed:
+    seconds). All three collapse_exact modes must agree bit-for-bit
+    ('auto' picks by a sampled duplicate census — this corpus is 75%
+    duplicated, so it collapses), and NULL-text docs (outside the
+    mapping) must survive untouched."""
+    from omigo_data_analytics_spark.operators import dedup as DD
+    rows = ([(i, "same same text for everyone here ok") for i in range(40)]
+            + [(100 + i, f"distinct doc {i} tokens {i * 3}") for i in range(10)]
+            + [(900, None), (901, None), (902, "")])
+    d = OmigoDF(spark.createDataFrame(rows, "doc_id long, text string"))
+    outs = [sorted(r[0] for r in DD.dedup_near(d, collapse_exact=m)
+                   .df.select("doc_id").collect())
+            for m in ("auto", True, False)]
+    assert outs[0] == outs[1] == outs[2]
+    assert 900 in outs[0] and 901 in outs[0]   # NULL texts always survive
+    cls = [sorted(tuple(r) for r in
+                  DD.cluster_near_dups(d, collapse_exact=m)
+                  .df.select("doc_id", "cluster_id").collect())
+           for m in ("auto", True, False)]
+    assert cls[0] == cls[1] == cls[2]
+    # the identical block collapsed to one cluster rooted at its min id
+    labels = dict(cls[0])
+    assert all(labels[i] == 0 for i in range(40))
+
+
+def test_collapse_exact_unknown_value_raises(spark):
+    d = _mk(spark, [(1, "aa"), (2, "aa")], "doc_id long, text string")
+    for bad in ("always", "yes", 1.5, None):
+        with pytest.raises(ValueError, match="collapse_exact"):
+            DD.dedup_near(d, collapse_exact=bad).df.count()
+
+
+def test_collapse_exact_true_overridden_warns(spark):
+    d = _mk(spark, [(1, "aa"), (2, "aa"), (3, "bb")],
+            "doc_id long, text string")
+    with pytest.warns(UserWarning, match="threshold > 1.0"):
+        out = DD.dedup_near(d, threshold=1.5, collapse_exact=True)
+    # nothing verifies above 1.0: every row survives
+    assert out.df.count() == 3
+    # and the guard stays silent when the caller didn't force True
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert DD.dedup_near(d, threshold=1.5,
+                             collapse_exact="auto").df.count() == 3
+
+
+def test_dedup_near_collapse_still_bit_identical(spark):
+    """Equivalence property survives the fingerprint change: all three
+    collapse modes agree on a mixed exact/near/unique corpus."""
+    rows = [(i, "the quick brown fox jumps over the lazy dog") for i in range(6)] \
+        + [(10, "the quick brown fox jumps over the lazy cat"),
+           (11, "completely different text about spark engines"),
+           (12, None)]
+    d = _mk(spark, rows, "doc_id long, text string")
+    outs = [sorted(r["doc_id"] for r in
+                   DD.dedup_near(d, collapse_exact=m).df.collect())
+            for m in (True, False, "auto")]
+    assert outs[0] == outs[1] == outs[2]
+    assert 12 in outs[0]                      # NULL text always survives

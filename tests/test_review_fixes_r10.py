@@ -170,17 +170,6 @@ def test_explode_json_all_null_clear_error(spark):
 
 
 # ---------------------------------------------------------------- dedup.py
-def test_remove_duplicate_spans_check_unique_raises(spark):
-    from omigo_data_analytics_spark.operators import dedup as DD
-
-    df = spark.createDataFrame(
-        [(1, "a b c d e f g h i j"), (1, "k l m n o p q r s t")],
-        "doc_id long, text string")
-    import pytest as _pt
-    with _pt.raises(ValueError, match="uniquely identify"):
-        DD.remove_duplicate_spans(OmigoDF(df), check_unique=True)
-
-
 def test_connected_components_star_nonconvergence_guard(spark):
     from omigo_data_analytics_spark.operators import dedup as DD
 
@@ -198,90 +187,6 @@ def test_connected_components_star_nonconvergence_guard(spark):
     # and a normal run still converges to one component
     out = DD.connected_components_star(pairs).df.collect()
     assert {r["cluster_id"] for r in out} == {1}
-
-
-def test_short_doc_shingles_whitespace_normalized(spark):
-    """Token-identical short docs (< n tokens) must now match: the old
-    fallback shingled the RAW text, so 'alpha beta' vs 'alpha  beta'
-    never deduped. Engine and DuckDB oracles stay in lockstep."""
-    import duckdb
-
-    from omigo_data_analytics_spark.operators import dedup as DD
-
-    df = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "alpha  beta"), (3, "unrelated thing")],
-        "doc_id long, text string")
-    kept = DD.dedup_near(OmigoDF(df), threshold=0.99)
-    assert sorted(r["doc_id"] for r in kept.df.collect()) == [1, 3]
-    # dialect parity on the shingle expression itself, incl. edge shapes
-    rows = [(1, "alpha beta"), (2, "alpha  beta"), (3, "   "), (4, ""),
-            (5, None), (6, "one two three four")]
-    sdf = spark.createDataFrame(rows, "doc_id long, text string")
-    got_s = {r["doc_id"]: r["sh"] for r in
-             sdf.selectExpr("doc_id",
-                            f"{DD.shingles_expr('spark')} AS sh").collect()}
-    con = duckdb.connect()
-    con.execute("CREATE TABLE t (doc_id BIGINT, text VARCHAR)")
-    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
-    got_d = {r[0]: r[1] for r in con.execute(
-        f"SELECT doc_id, {DD.shingles_expr('duckdb')} FROM t").fetchall()}
-    for k in got_s:
-        if k == 5:
-            # NULL text: duck's list_distinct strips NULLs ([] vs
-            # spark's [NULL]) — benign, both minhash to NULL (pinned
-            # below); every non-NULL doc must agree exactly
-            continue
-        # set compare: duck's list_distinct reorders; minhash is
-        # order-independent so only the SET must agree
-        assert set(got_s[k]) == set(got_d[k]), (k, got_s[k], got_d[k])
-    assert got_s[1] == got_s[2] == ["alpha beta"]
-    assert got_s[3] == got_s[4] == [""]
-    assert got_s[5] == [None] and got_d[5] == []
-    mh_s = DD.minhash_exprs("spark", DD.shingles_expr("spark"))[0]
-    mh_d = DD.minhash_exprs("duckdb", DD.shingles_expr("duckdb"))[0]
-    s5 = sdf.where("doc_id = 5").selectExpr(f"{mh_s} AS m").collect()[0]["m"]
-    d5 = con.execute(f"SELECT {mh_d} FROM t WHERE doc_id = 5").fetchone()[0]
-    assert s5 is None and d5 is None
-
-
-def test_lsh_null_text_no_candidate_explosion(spark):
-    """NULL-text docs must produce NO candidate pairs (they can never
-    verify) instead of all landing in one quadratic '' bucket."""
-    from omigo_data_analytics_spark.operators import dedup as DD
-
-    rows = [(i, None) for i in range(50)] + [
-        (100, "the quick brown fox jumps"), (101, "the quick brown fox jumps")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    cands = DD.lsh_candidate_pairs(OmigoDF(df)).df.collect()
-    assert {(r["id_a"], r["id_b"]) for r in cands} == {(100, 101)}
-    # NULL docs survive dedup untouched
-    kept = DD.dedup_near(OmigoDF(df), threshold=0.9)
-    assert kept.df.count() == 51
-
-
-def test_lsh_param_validation(spark):
-    from omigo_data_analytics_spark.operators import dedup as DD
-
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    import pytest as _pt
-    with _pt.raises(ValueError, match="not divisible"):
-        DD.lsh_candidate_pairs(OmigoDF(df), k=8, rows_per_band=3)
-    with _pt.raises(ValueError, match="seed pairs"):
-        DD.minhash_exprs("spark", "sh", k=16)
-
-
-def test_lsh_max_band_df_cap(spark):
-    """Opt-in bucket cap drops over-cap buckets; default None keeps the
-    full candidate set."""
-    from omigo_data_analytics_spark.operators import dedup as DD
-
-    rows = [(i, "identical boilerplate text here") for i in range(10)] + [
-        (100, "the quick brown fox jumps"), (101, "the quick brown fox jumps")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    full = DD.lsh_candidate_pairs(OmigoDF(df)).df.count()
-    assert full == 45 + 1  # 10 choose 2 boilerplate + the fox pair
-    capped = DD.lsh_candidate_pairs(OmigoDF(df), max_band_df=5).df.collect()
-    assert {(r["id_a"], r["id_b"]) for r in capped} == {(100, 101)}
 
 
 # ----------------------------------------------------------------- text.py
@@ -462,26 +367,3 @@ def test_asof_join_tiebreak_cols_deterministic(spark):
 
     with pytest.raises(ValueError, match="tiebreak_cols"):
         asof_join(left, OmigoDF(right), "k", "t", tiebreak_cols=["zz"])
-
-
-def test_ngram_jaccard_candidate_pair_warning(spark):
-    """Opt-in census warns when the post-cap candidate-pair estimate
-    exceeds the threshold (self-similar corpora go quadratic even under
-    the DF cap — measured at the 40x scale-up); default None adds no
-    warning and no extra job."""
-    import warnings
-
-    from omigo_data_analytics_spark.operators import dedup as DD
-
-    d = OmigoDF(spark.createDataFrame(
-        [(i, "alpha beta gamma delta") for i in range(12)],
-        "doc_id long, text string"))
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        out1 = DD.ngram_jaccard_pairs(d, warn_candidate_pairs=10).df.count()
-        assert any("candidate pairs" in str(x.message) for x in w)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        out2 = DD.ngram_jaccard_pairs(d).df.count()
-        assert not any("candidate pairs" in str(x.message) for x in w)
-    assert out1 == out2  # the census never changes results

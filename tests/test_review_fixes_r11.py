@@ -7,10 +7,9 @@
 2. semdedup auto-scaled num_clusters default (r10 verdict #2).
 3. decontaminate_semantic num_clusters="auto" (r10 verdict #3).
 4. ngram_jaccard_pairs candidate-pair census warning default-on
-   (r10 verdict #4).
+   (r10 verdict #4; its tests live with the text near-dup family in
+   tests/test_operators.py).
 """
-
-import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -139,32 +138,6 @@ def test_decontaminate_auto_k_value():
     assert _auto_eval_k(100) == 10
     assert _auto_eval_k(10_000) == 100
     assert _auto_eval_k(100_000_000) == 4096
-
-
-def test_ngram_jaccard_census_warns_by_default(spark):
-    """Default warn_candidate_pairs is now ON (~10M): a dense corpus
-    (every doc shares every shingle) must warn when the estimate
-    crosses the caller-set threshold; explicit None opts out."""
-    from omigo_data_analytics_spark.operators import dedup as DD
-    rows = [(i, "alpha beta gamma delta epsilon zeta eta theta")
-            for i in range(40)]
-    docs = OmigoDF(spark.createDataFrame(rows, "doc_id int, text string"))
-    # ~40 docs x identical shingles -> est pairs ~ s * 40*39/2 >> 100
-    with pytest.warns(UserWarning, match="candidate pairs"):
-        DD.ngram_jaccard_pairs(docs, warn_candidate_pairs=100).df.count()
-    # opt-out: no census job, no warning
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        DD.ngram_jaccard_pairs(docs, warn_candidate_pairs=None).df.count()
-
-
-def test_ngram_jaccard_default_threshold_silent_on_small(spark, documents):
-    """The 10M default must NOT warn on an ordinary small corpus."""
-    from omigo_data_analytics_spark.operators import dedup as DD
-    docs = OmigoDF(documents.df.limit(200))
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        DD.ngram_jaccard_pairs(docs).df.count()
 
 
 def test_train_ivf_centroids_auto_k(spark, embeddings):
@@ -434,31 +407,3 @@ def test_minmax_int_aggs_nonfinite_null_not_crash(spark):
                     ["minint", "maxint", "get_range_int"]).df.collect()[0]
     assert r["v:minint"] == 1 and r["v:maxint"] == 7
     assert r["v:get_range_int"] == 6
-
-
-def test_collapse_exact_equivalence_and_null_survival(spark):
-    """dedup_near/cluster_near_dups can collapse byte-identical docs to
-    a representative before LSH (r11 duplicate-heavy probe: 5,000
-    identical docs = 12.5M candidate pairs = 40-70s; collapsed:
-    seconds). All three collapse_exact modes must agree bit-for-bit
-    ('auto' picks by a sampled duplicate census — this corpus is 75%
-    duplicated, so it collapses), and NULL-text docs (outside the
-    mapping) must survive untouched."""
-    from omigo_data_analytics_spark.operators import dedup as DD
-    rows = ([(i, "same same text for everyone here ok") for i in range(40)]
-            + [(100 + i, f"distinct doc {i} tokens {i * 3}") for i in range(10)]
-            + [(900, None), (901, None), (902, "")])
-    d = OmigoDF(spark.createDataFrame(rows, "doc_id long, text string"))
-    outs = [sorted(r[0] for r in DD.dedup_near(d, collapse_exact=m)
-                   .df.select("doc_id").collect())
-            for m in ("auto", True, False)]
-    assert outs[0] == outs[1] == outs[2]
-    assert 900 in outs[0] and 901 in outs[0]   # NULL texts always survive
-    cls = [sorted(tuple(r) for r in
-                  DD.cluster_near_dups(d, collapse_exact=m)
-                  .df.select("doc_id", "cluster_id").collect())
-           for m in ("auto", True, False)]
-    assert cls[0] == cls[1] == cls[2]
-    # the identical block collapsed to one cluster rooted at its min id
-    labels = dict(cls[0])
-    assert all(labels[i] == 0 for i in range(40))

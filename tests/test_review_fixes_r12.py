@@ -6,7 +6,9 @@
    cosine family in tests/test_operators.py).
 2. dedup._should_collapse: enforce the True/False/'auto' tri-state
    (unknown values used to fall through to the census silently) and
-   warn when an explicit True is overridden by the threshold>1.0 guard.
+   warn when an explicit True is overridden by the threshold>1.0 guard
+   (its tests live with the text near-dup family in
+   tests/test_operators.py).
 3. dedup._exact_rep_mapping: fingerprint = md5 ++ xxhash64 ++ length,
    not md5 alone — the collapse contract is byte-identity and md5
    collisions are adversarially constructible.
@@ -16,8 +18,6 @@
    path rows / made approx-path aliases ambiguous) and short-circuit an
    empty list to the typed empty profile.
 """
-
-import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -29,29 +29,6 @@ from omigo_data_analytics_spark.operators import timeseries as TS
 
 def _mk(spark, rows, schema):
     return OmigoDF(spark.createDataFrame(rows, schema))
-
-
-# 2. collapse_exact tri-state enforcement ------------------------------
-
-def test_collapse_exact_unknown_value_raises(spark):
-    d = _mk(spark, [(1, "aa"), (2, "aa")], "doc_id long, text string")
-    for bad in ("always", "yes", 1.5, None):
-        with pytest.raises(ValueError, match="collapse_exact"):
-            DD.dedup_near(d, collapse_exact=bad).df.count()
-
-
-def test_collapse_exact_true_overridden_warns(spark):
-    d = _mk(spark, [(1, "aa"), (2, "aa"), (3, "bb")],
-            "doc_id long, text string")
-    with pytest.warns(UserWarning, match="threshold > 1.0"):
-        out = DD.dedup_near(d, threshold=1.5, collapse_exact=True)
-    # nothing verifies above 1.0: every row survives
-    assert out.df.count() == 3
-    # and the guard stays silent when the caller didn't force True
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        assert DD.dedup_near(d, threshold=1.5,
-                             collapse_exact="auto").df.count() == 3
 
 
 # 3. collision-resistant exact fingerprint -----------------------------
@@ -77,21 +54,6 @@ def test_exact_fingerprint_uses_more_than_md5(spark):
         ._jdf.queryExecution().analyzed().toString().lower()
     for prim in ("md5", "xxhash64", "length"):
         assert prim in plan, f"fingerprint lost {prim}"
-
-
-def test_dedup_near_collapse_still_bit_identical(spark):
-    """Equivalence property survives the fingerprint change: all three
-    collapse modes agree on a mixed exact/near/unique corpus."""
-    rows = [(i, "the quick brown fox jumps over the lazy dog") for i in range(6)] \
-        + [(10, "the quick brown fox jumps over the lazy cat"),
-           (11, "completely different text about spark engines"),
-           (12, None)]
-    d = _mk(spark, rows, "doc_id long, text string")
-    outs = [sorted(r["doc_id"] for r in
-                   DD.dedup_near(d, collapse_exact=m).df.collect())
-            for m in (True, False, "auto")]
-    assert outs[0] == outs[1] == outs[2]
-    assert 12 in outs[0]                      # NULL text always survives
 
 
 # 4. asof_nearest tiebreak validation ----------------------------------

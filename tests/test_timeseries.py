@@ -354,6 +354,32 @@ def test_router_empty_input_takes_plain_plan(spark):
     assert out.columns == ["k", "t", "session_id"]
 
 
+def test_router_threshold_one_probes_emptiness(spark, skewed):
+    """At hot_key_rows=1 every present key is hot, so construction runs
+    one emptiness probe instead of the two-job census, and the rows
+    equal the all-bucketed hot_key_rows=None plan."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "router construction")
+    try:
+        out = TS.sessionize(skewed, "k", "t", gap_sec=25.0,
+                            time_buckets_sec=60.0, hot_key_rows=1).df
+    finally:
+        sc.setJobGroup(None, None)
+    n, prev = -1, None
+    while n != prev:
+        prev = n
+        time.sleep(0.2)
+        n = len(sc.statusTracker().getJobIdsForGroup(group) or [])
+    assert n == 1, f"construction launched {n} jobs"
+    assert _rows(out) == _rows(TS.sessionize(
+        skewed, "k", "t", gap_sec=25.0, time_buckets_sec=60.0,
+        hot_key_rows=None).df)
+
+
 def test_router_hot_null_key_group(spark):
     """A NULL key is a real group and can be the hot one: the census
     counts it, the null-safe split routes its rows to the hot side, and
