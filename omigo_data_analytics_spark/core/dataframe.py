@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 from . import colutils
 from .colutils import COL_SEP, as_list, resolve_cols
 from .compat import CompatMixin
+from .jobs import nonunique_counts
 from ..functions import aggs as aggs_mod
 from ..functions.aggs import agg_expr, func_name
 
@@ -2018,24 +2019,19 @@ class OmigoDF(CompatMixin):
         key = "concat_ws('\\t', " + ", ".join(
             f"coalesce(CAST({colutils.quote(c)} AS STRING), '')"
             for c in kcols) + f", '{seed}')"
-        if check_unique and key_cols is not None:
-            stats = self._df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct(
-                    F.concat_ws("\t", *[
-                        F.coalesce(F.col(colutils.quote(c)).cast("string"), F.lit(""))
-                        for c in kcols])).alias("d")).first()
-            if stats["n"] != stats["d"]:
-                import warnings
-                warnings.warn(
-                    f"sample_n_per_group: key_cols {kcols} does not uniquely "
-                    f"identify rows ({stats['n']} rows, {stats['d']} distinct "
-                    "keys) — which duplicate-key row survives the cutoff is "
-                    "partition-order-dependent", UserWarning, stacklevel=2)
-        u = F.expr(hash_spark(key))
+        # the key identity; a NULL part reads as ''
         tie = F.concat_ws("\t", *[
-            F.coalesce(F.col(colutils.quote(c)).cast("string"), F.lit(""))
+            F.coalesce(colutils.qcol(c).cast("string"), F.lit(""))
             for c in kcols])
+        if check_unique and key_cols is not None and (
+                counts := nonunique_counts(self._df, tie)):
+            import warnings
+            warnings.warn(
+                f"sample_n_per_group: key_cols {kcols} does not uniquely "
+                f"identify rows ({counts[0]} rows, {counts[1]} distinct "
+                "keys) — which duplicate-key row survives the cutoff is "
+                "partition-order-dependent", UserWarning, stacklevel=2)
+        u = F.expr(hash_spark(key))
         w = Window.partitionBy(*gcols).orderBy(u.asc(), tie.asc())
         return self._wrap(self._df
                           .withColumn("__rn__", F.row_number().over(w))

@@ -37,6 +37,7 @@ from collections import deque
 
 from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
 
@@ -65,6 +66,20 @@ def checkpoint_with_metrics(
     if keep is not None:
         ck = ck.where(keep)
     return ck.localCheckpoint(), obs.get
+
+
+def nonunique_counts(df: DataFrame, key: Column) -> tuple[int, int] | None:
+    """None when no value of ``key`` repeats over the rows of ``df``, else
+    ``(rows, distinct keys)``. A NULL key is not a distinct key (the
+    ``count_distinct`` rule). Both counts are observed on the eager
+    checkpoint of the per-key counts, which keeps only repeated keys, so
+    no result rows are read back through a socket."""
+    c = F.col("__c__")
+    _, m = checkpoint_with_metrics(
+        df.groupBy(key.alias("__k__")).agg(F.count(F.lit(1)).alias("__c__")),
+        {"n": F.sum(c), "d": F.count("__k__")}, keep=c > 1)
+    n, d = m["n"] or 0, m["d"]
+    return None if n == d else (n, d)
 
 
 # --------------------------------------------------------------- async form

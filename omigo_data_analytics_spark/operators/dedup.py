@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..core.colutils import aliased, qcol, quote
 
 from ..core.dataframe import OmigoDF
-from ..core.jobs import checkpoint_with_metrics
+from ..core.jobs import checkpoint_with_metrics, nonunique_counts
 from .text import (HASH_MOD, ensure_min_parallelism, hash_duck, hash_spark,
                    let_duck, let_spark)
 
@@ -212,16 +212,10 @@ def _key_self_join(ks, id_col: str, *carry):
 
 def _nonunique_ids(df, id_col: str) -> str | None:
     """None when ``id_col`` identifies the rows of ``df``, else
-    ``"(n rows, d distinct ids)"``. A NULL id is not a distinct id (the
-    ``count_distinct`` rule). Both counts are observed on the eager
-    checkpoint of the per-id counts, which keeps only repeated ids, so
-    no result rows are read back through a socket."""
-    c = F.col("__c__")
-    _, m = checkpoint_with_metrics(
-        df.groupBy(qcol(id_col)).agg(F.count(F.lit(1)).alias("__c__")),
-        {"n": F.sum(c), "d": F.count(qcol(id_col))}, keep=c > 1)
-    n, d = m["n"] or 0, m["d"]
-    return None if n == d else f"({n} rows, {d} distinct ids)"
+    ``"(n rows, d distinct ids)"`` (``nonunique_counts``: a NULL id is
+    not a distinct id)."""
+    counts = nonunique_counts(df, qcol(id_col))
+    return None if counts is None else "(%d rows, %d distinct ids)" % counts
 
 
 def lsh_candidate_pairs(odf: OmigoDF, id_col: str = "doc_id", col: str = "text",

@@ -43,7 +43,7 @@ import warnings
 
 from pyspark.sql import functions as F
 
-from ..core.colutils import qcol
+from ..core.colutils import aliased, qcol
 
 from ..core.dataframe import OmigoDF
 from .text import ensure_min_parallelism
@@ -472,10 +472,10 @@ def fuzzy_join(left: OmigoDF, right: OmigoDF, left_col: str, right_col: str,
     # "dist" is reserved for the computed distance: an input column of
     # that name is suffixed unconditionally (else the output would
     # carry two ambiguous 'dist' columns — r8 review)
-    sel = ([F.col(f"L.{c}").alias(c + lsuffix if c in rcols or c == "dist"
+    sel = ([aliased("L", c).alias(c + lsuffix if c in rcols or c == "dist"
                                   else c)
             for c in left.df.columns]
-           + [F.col(f"R.{c}").alias(c + rsuffix if c in lcols or c == "dist"
+           + [aliased("R", c).alias(c + rsuffix if c in lcols or c == "dist"
                                     else c)
               for c in right.df.columns]
            + [F.col("__dist__").cast("long").alias("dist")])

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..core.colutils import qcol, quote
 from ..core.dataframe import OmigoDF
+from ..core.jobs import nonunique_counts
 
 # ------------------------------------------------------------------ shared
 # Tokens: whitespace split, empties dropped. Both dialects agree.
@@ -151,25 +152,52 @@ def _in_list(sql_items) -> str:
     return "(" + ", ".join(f"'{w}'" for w in sql_items) + ")"
 
 
-def _metric_exprs(dialect: str, col: str = "text",
-                  toks_override: str | None = None) -> dict[str, str]:
-    """One definition, two dialects. Keys are output column names.
-    `toks_override` lets the engine path substitute a materialized token
-    array column (the formulas reference the token list many times)."""
-    if dialect == "spark":
-        toks = toks_override or _TOKENS_SPARK.format(col=quote(col))
-        size, distinct = "size", "array_distinct"
-        sumlen = f"aggregate({toks}, 0L, (a, x) -> a + length(x))"
+# The marker sets counted per document: the stopwords, then one per
+# language. In the Spark dialect one fold over the tokens counts them all
+# (``_spark_counts``).
+_MARKER_SETS = {"stop": STOPWORDS, **LANG_MARKERS}
 
-        def count_in(words):
-            return f"size(filter({toks}, x -> x in {_in_list(words)}))"
+
+def _spark_counts(toks: str) -> str:
+    """One ``aggregate`` fold over ``toks``: a struct of the summed token
+    length (``len``) and the hits of each of ``_MARKER_SETS``. A fold per
+    count would walk the tokens once each, interpreted (higher-order
+    functions have no codegen)."""
+    zero = ", ".join([f"'{k}', 0" for k in _MARKER_SETS])
+    step = ", ".join(
+        [f"'{k}', a.{k} + IF(x IN {_in_list(words)}, 1, 0)"
+         for k, words in _MARKER_SETS.items()])
+    return (f"aggregate({toks}, named_struct('len', 0L, {zero}), "
+            f"(a, x) -> named_struct('len', a.len + length(x), {step}))")
+
+
+def _spark_bind(col: str, body: str) -> str:
+    """``body`` over the let-bound tokens ``t0`` of ``col`` and their
+    let-bound counts ``c0`` (``_spark_counts``), split and folded once per
+    row."""
+    return let_spark(_TOKENS_SPARK.format(col=quote(col)), "t0",
+                     let_spark(_spark_counts("t0"), "c0", body))
+
+
+def _metric_exprs(dialect: str, col: str = "text") -> dict[str, str]:
+    """One definition, two dialects. Keys are output column names. A Spark
+    expression reads the tokens as ``t0`` and their counts as ``c0``, so
+    it holds only inside ``_spark_bind``."""
+    if dialect == "spark":
+        toks = "t0"
+        size, distinct = "size", "array_distinct"
+        sumlen = "c0.len"
+
+        def count_in(name):
+            return f"c0.{name}"
     else:
         toks = _TOKENS_DUCK.format(col=col)
         size, distinct = "len", "list_distinct"
         sumlen = f"list_sum(list_transform({toks}, x -> length(x)))"
 
-        def count_in(words):
-            return f"len(list_filter({toks}, x -> x in {_in_list(words)}))"
+        def count_in(name):
+            return (f"len(list_filter({toks}, "
+                    f"x -> x in {_in_list(_MARKER_SETS[name])}))")
 
     n = f"{size}({toks})"
     # Ratio denominator: empty/whitespace-only documents have n = 0, and
@@ -181,7 +209,7 @@ def _metric_exprs(dialect: str, col: str = "text",
     # unchanged; applied in both dialects for one-definition symmetry.
     nz = f"nullif({n}, 0)"
     uniq = f"{size}({distinct}({toks}))"
-    stop = count_in(STOPWORDS)
+    stop = count_in("stop")
     exprs = {
         "token_count": f"CAST({n} AS BIGINT)",
         "uniq_token_count": f"CAST({uniq} AS BIGINT)",
@@ -199,7 +227,7 @@ def _metric_exprs(dialect: str, col: str = "text",
     # CASE always matches some language (every score ties at 0 and the
     # first in order wins), so 'und' was unreachable and out-of-set
     # documents were all labeled 'en'
-    scores = {lang: count_in(words) for lang, words in LANG_MARKERS.items()}
+    scores = {lang: count_in(lang) for lang in LANG_MARKERS}
     order = list(LANG_MARKERS)
     all_scores = ", ".join(scores[lang] for lang in order)
     case = f"CASE WHEN greatest({all_scores}) = 0 THEN 'und' "
@@ -220,12 +248,12 @@ METRICS = list(_metric_exprs("spark"))
 def text_metrics(odf: OmigoDF, col: str = "text", metrics=None) -> OmigoDF:
     """Append text metric columns. Pure expressions — map-side only."""
     names = list(metrics or METRICS)
-    exprs = _metric_exprs("spark", col, toks_override="t0")
+    exprs = _metric_exprs("spark", col)
     struct = "named_struct(" + ", ".join(f"'{m}', {exprs[m]}" for m in names) + ")"
     # inline() makes the metrics generator outputs real attributes: the
-    # token array is let-bound (split once per row) and project-collapse
-    # cannot duplicate the computation into each metric column.
-    gen = let_spark(_TOKENS_SPARK.format(col=quote(col)), "t0", struct)
+    # token array and its counts are let-bound (once per row) and
+    # project-collapse cannot duplicate the computation into each column.
+    gen = _spark_bind(col, struct)
     out = ensure_min_parallelism(odf.df).select("*", F.expr(f"inline(array({gen}))"))
     return OmigoDF(out)
 
@@ -451,7 +479,8 @@ def redact_pii_sql_duck(col: str = "text", kinds=None) -> str:
 
 # ------------------------------------------------------------------ oracle
 def metric_sql(dialect: str, metric: str, col: str = "text") -> str:
-    return _metric_exprs(dialect, col)[metric]
+    expr = _metric_exprs(dialect, col)[metric]
+    return _spark_bind(col, expr) if dialect == "spark" else expr
 
 
 def fingerprint_sql_duck(col: str = "text", case_fold: str = "full") -> str:
@@ -506,27 +535,21 @@ def pack_sequences(odf: OmigoDF, token_col: str, budget: int,
     key = "concat_ws('\\t', " + ", ".join(
         f"coalesce(CAST({colutils.quote(c)} AS STRING), '')"
         for c in gcols) + f", '{seed}')"
-    if check_unique:
-        stats = odf.df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(
-                F.concat_ws("\t", *[
-                    F.coalesce(odf.df[c].cast("string"), F.lit(""))
-                    for c in gcols])).alias("d")).first()
-        if stats["n"] != stats["d"]:
-            import warnings
-            warnings.warn(
-                f"pack_sequences: key_cols {gcols} does not uniquely "
-                f"identify rows ({stats['n']} rows, {stats['d']} distinct "
-                "keys) — duplicate-key rows' relative cumsum order (and so "
-                "bin assignment) is partition-order-dependent",
-                UserWarning, stacklevel=2)
+    # the key identity; a NULL part reads as ''
+    tie = F.concat_ws("\t", *[
+        F.coalesce(qcol(c).cast("string"), F.lit("")) for c in gcols])
+    if check_unique and (counts := nonunique_counts(odf.df, tie)):
+        import warnings
+        warnings.warn(
+            f"pack_sequences: key_cols {gcols} does not uniquely "
+            f"identify rows ({counts[0]} rows, {counts[1]} distinct "
+            "keys) — duplicate-key rows' relative cumsum order (and so "
+            "bin assignment) is partition-order-dependent",
+            UserWarning, stacklevel=2)
     h = F.expr(hash_spark(key))
     d = (odf.df
          .withColumn("__h__", h)
          .withColumn("__bkt__", F.pmod(F.col("__h__"), F.lit(n_buckets))))
-    tie = F.concat_ws("\t", *[
-        F.coalesce(d[c].cast("string"), F.lit("")) for c in gcols])
     per_bucket = (d.groupBy("__bkt__")
                   .agg(F.sum(qcol(tks).cast("long")).alias("__btot__")))
     woff = (Window.orderBy("__bkt__")

@@ -62,8 +62,8 @@ def paths_for_range(base_path: str, start, end, granularity: str = "daily",
 
 
 def _load(spark: SparkSession, fmt: str, path_or_paths, reader_opts: dict):
-    """A parquet scan reuses its inferred schema (``io._read_parquet``);
-    any other format is a plain ``load``."""
+    """A parquet scan reuses an earlier read of the same files
+    (``io._read_parquet``); any other format is a plain ``load``."""
     if fmt == "parquet":
         return _read_parquet(spark, _as_paths(path_or_paths), reader_opts)
     return spark.read.format(fmt).options(**reader_opts).load(path_or_paths)

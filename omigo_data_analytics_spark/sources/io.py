@@ -7,11 +7,12 @@ multi-path reads are parallel tasks, .gz is transparent, schema merge is
 unionByName, and s3 is a filesystem URI. URL-decoding stays opt-in because
 the convention (SURVEY §1.1) only encodes cells in ``*:url_encoded`` columns.
 
-Parquet reads keep the schema they inferred (``_read_parquet``): Spark
-infers a parquet schema with a one-task job that reads a footer, so
-loading the same table twice would pay that job twice. A local table
-whose files, reader options and session confs are unchanged is loaded
-again with the kept schema supplied, which submits no job.
+Parquet reads keep the frame they built (``_read_parquet``): Spark
+infers a parquet schema with a one-task job that reads a footer, and
+every ``spark.read`` resolves the relation in the JVM and lists the
+files. A local table whose files, reader options and session confs are
+unchanged is loaded again as the same DataFrame in the same session, and
+with the kept schema supplied in another, so neither submits a job.
 """
 
 from __future__ import annotations
@@ -105,10 +106,11 @@ def read_csv(spark: SparkSession, path_or_paths, header: bool = True) -> OmigoDF
     return read(spark, path_or_paths, sep=",", header=header, url_decode_cols=False)
 
 
-# abs paths -> (fingerprint, schema): one entry per path set, replaced
-# when the fingerprint changes; the oldest entry goes past the cap
-_SCHEMAS: dict = {}
-_SCHEMAS_MAX = 256
+# abs paths -> (fingerprint, frame): one entry per path set, replaced
+# when the fingerprint or the session changes; the oldest entry goes past
+# the cap
+_FRAMES: dict = {}
+_FRAMES_MAX = 256
 
 
 def _local_path(p: str) -> str | None:
@@ -143,33 +145,36 @@ def _listing(root: str) -> tuple | None:
 
 def _read_parquet(spark: SparkSession, paths: list[str],
                   options: dict | None = None) -> DataFrame:
-    """``spark.read`` with ``options`` of parquet ``paths``, reusing the
-    schema inferred by an earlier read of the same local files.
+    """``spark.read`` with ``options`` of parquet ``paths``, reusing an
+    earlier read of the same local files: in the same session its
+    DataFrame, in another its inferred schema.
 
     The key is the absolute paths; the fingerprint is every file's
     relative path, size and mtime under each path, the reader options and
     the session's SQL confs (one round trip), so a rewrite or a conf that
-    changes inference (``spark.sql.legacy.parquet.nanosAsLong``) infers
+    changes inference (``spark.sql.legacy.parquet.nanosAsLong``) reads
     afresh. Another filesystem's URI, a glob or a missing path reads
     exactly as without the cache."""
     options = options or {}
-    reader = spark.read.options(**options)
     local = [_local_path(p) for p in paths]
     listings = None if None in local else [_listing(p) for p in local]
     if not paths or listings is None or None in listings:
-        return reader.parquet(*paths)
+        return spark.read.options(**options).parquet(*paths)
     key = tuple(local)
     fingerprint = (tuple(listings),
                    tuple(sorted((k, repr(v)) for k, v in options.items())),
                    spark._jsparkSession.conf().getAll().toString())
-    hit = _SCHEMAS.get(key)
-    if hit is not None and hit[0] == fingerprint:
-        return reader.schema(hit[1]).parquet(*paths)
-    df = reader.parquet(*paths)
-    _SCHEMAS.pop(key, None)
-    if len(_SCHEMAS) >= _SCHEMAS_MAX:
-        del _SCHEMAS[next(iter(_SCHEMAS))]
-    _SCHEMAS[key] = (fingerprint, df.schema)
+    hit = _FRAMES.get(key)
+    kept = hit[1] if hit is not None and hit[0] == fingerprint else None
+    if kept is not None and kept.sparkSession is spark:
+        return kept
+    reader = spark.read.options(**options)
+    df = (reader if kept is None else reader.schema(kept.schema)).parquet(*paths)
+    df.schema   # fetched now: another session may read with it later
+    _FRAMES.pop(key, None)
+    if len(_FRAMES) >= _FRAMES_MAX:
+        del _FRAMES[next(iter(_FRAMES))]
+    _FRAMES[key] = (fingerprint, df)
     return df
 
 

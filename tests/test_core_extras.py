@@ -170,6 +170,14 @@ def test_sample_n_per_group_check_unique_warns(spark, documents):
                                      check_unique=True)
 
 
+def test_sample_n_per_group_check_unique_null_reads_as_empty(spark):
+    """The guard keys a NULL part as '': two rows whose keys differ only
+    as NULL vs '' are one key, so it warns."""
+    df = OmigoDF(spark.createDataFrame([(1, None), (1, "")], "g int, k string"))
+    with pytest.warns(UserWarning, match=r"\(2 rows, 1 distinct keys\)"):
+        df.sample_n_per_group(["g"], 1, key_cols=["k"], check_unique=True)
+
+
 def test_sample_n_per_group_mapside_limit(spark, documents):
     d = documents.sample_n_per_group(["lang"], 2, key_cols=["doc_id"])
     p = d.df._jdf.queryExecution().executedPlan().toString()

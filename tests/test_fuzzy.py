@@ -78,6 +78,28 @@ def test_fuzzy_join_two_tables(spark):
     assert "name_l" in out.columns and "name_r" in out.columns
 
 
+def test_fuzzy_join_hostile_column_names(spark):
+    """Columns named ``a.b`` and ``a`b`` on both sides come back, suffixed,
+    with the rows the same call gives on plain names."""
+    from omigo_data_analytics_spark.core.colutils import quote
+
+    lrows = [(1, "widget", "x"), (2, "gadget", "y")]
+    rrows = [(10, "widgets", "p"), (11, "midget", "q"), (12, "nothing", "r")]
+
+    def run(c1, c2):
+        ddl = f"{quote(c1)} long, name string, {quote(c2)} string"
+        out = FZ.fuzzy_join(OmigoDF(spark.createDataFrame(lrows, ddl)),
+                            OmigoDF(spark.createDataFrame(rrows, ddl)),
+                            "name", "name").df
+        return out.columns, sorted(tuple(r) for r in out.collect())
+
+    cols, rows = run("a.b", "a`b")
+    plain_cols, plain_rows = run("ab", "ac")
+    assert rows == plain_rows and len(rows) == 2
+    assert cols == [c.replace("ab", "a.b").replace("ac", "a`b")
+                    for c in plain_cols]
+
+
 def test_dedup_fuzzy_keeps_min_representative(spark):
     df = spark.createDataFrame(
         [(3, "bolt"), (1, "bolts"), (2, "unrelated words here")],

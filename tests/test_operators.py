@@ -24,6 +24,41 @@ def test_text_metrics(documents):
     assert row["lang_guess"] in list(TX.LANG_MARKERS) + ["und"]
 
 
+# NULL, empty, whitespace-only, 'la' (es, fr) and 'de' (es, zh) shared by
+# two sets, ties between languages, stopwords, and no marker at all
+_HOSTILE_TEXTS = [None, "", "   ", "la", "de", "la de la", "el le",
+                  "der le et", "shi de bu der", "the and of a to in",
+                  "The AND la", "x  y\tz", "de la le el der die"]
+
+
+def test_text_metrics_fold_equals_per_set_filters(spark):
+    """The one fold over the tokens gives the counts that a
+    ``size(filter(...))`` per marker set gives, and so every metric; its
+    optimized plan walks the tokens with one ``aggregate`` and no
+    ``size(filter(``."""
+    df = spark.createDataFrame(list(enumerate(_HOSTILE_TEXTS)),
+                               "doc_id int, text string")
+    m = TX.text_metrics(OmigoDF(df)).df
+    plan = m._jdf.queryExecution().optimizedPlan().toString()
+    assert "size(filter(" not in plan
+    assert plan.count("aggregate(") == 1
+
+    exprs = TX._metric_exprs("spark")
+    per_set = ("named_struct('len', aggregate(t0, 0L, (a, x) -> a + length(x)), "
+               + ", ".join(f"'{k}', size(filter(t0, x -> x IN {TX._in_list(w)}))"
+                           for k, w in TX._MARKER_SETS.items()) + ")")
+    body = "named_struct(" + ", ".join(f"'{k}', {e}" for k, e in exprs.items()) + ")"
+    ref = TX.let_spark(TX._TOKENS_SPARK.format(col="text"), "t0",
+                       TX.let_spark(per_set, "c0", body))
+    want = df.select("doc_id", F.expr(f"inline(array({ref}))"))
+    got = m.select("doc_id", *exprs)
+    assert sorted(got.collect()) == sorted(want.collect())
+    langs = dict(got.select("doc_id", "lang_guess").collect())
+    assert [langs[i] for i in range(len(_HOSTILE_TEXTS))] == [
+        "und", "und", "und", "es", "es", "es", "es", "fr", "zh", "en", "es",
+        "und", "es"]
+
+
 def test_fingerprint_identifies_exact_dups(spark):
     df = spark.createDataFrame(
         [(1, "a b  c"), (2, "A B C"), (3, "x y")], ["doc_id", "text"])
@@ -572,6 +607,18 @@ def test_pack_sequences_check_unique_guard(spark, documents):
     with _pt.warns(UserWarning, match="uniquely"):
         TX.pack_sequences(dup, "n_chars", budget=20000,
                           key_cols=["doc_id"], check_unique=True)
+
+
+def test_pack_sequences_check_unique_null_reads_as_empty(spark):
+    """The guard keys a NULL part as '': two rows whose keys differ only
+    as NULL vs '' are one key, so it warns. A dotted key column packs."""
+    import pytest as _pt
+
+    df = OmigoDF(spark.createDataFrame([(None, 3), ("", 4)], "`k.x` string, n int"))
+    with _pt.warns(UserWarning, match=r"\(2 rows, 1 distinct keys\)"):
+        out = TX.pack_sequences(df, "n", budget=5, key_cols=["k.x"],
+                                check_unique=True)
+    assert sorted(r["bin_id"] for r in out.df.collect()) == [0, 0]
 
 
 def test_span_dedup_key_bits(spark, documents):
@@ -1224,3 +1271,56 @@ def test_dedup_near_collapse_still_bit_identical(spark):
             for m in (True, False, "auto")]
     assert outs[0] == outs[1] == outs[2]
     assert 12 in outs[0]                      # NULL text always survives
+
+
+# -------------------------------------- NULL and non-finite vectors (cosine)
+# (moved from the round-11 review-fix file)
+
+def _mk_corrupt_embeddings(spark):
+    rows = [(1, [1.0, 0.0]), (2, [float("nan"), 1.0]),
+            (3, [0.9, 0.1]), (4, [float("inf"), 0.0]),
+            (5, [0.8, 0.2]), (6, None)]
+    return OmigoDF(spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"))
+
+
+def test_lsh_buckets_null_vectors_dropped(spark):
+    """NULL embeddings can't bucket: the vectorized bucket UDF used to
+    die on np.stack of a None-bearing Arrow batch; now those rows get
+    NULL bucket arrays and fall out of candidate generation."""
+    from omigo_data_analytics_spark.operators import similarity as SM
+    rows = [(1, [1.0] * 8), (2, None), (3, [0.9] * 8), (4, None)]
+    e = OmigoDF(spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"))
+    q = OmigoDF(spark.createDataFrame(
+        [(10, [1.0] * 8), (11, None)], "vec_id long, embedding array<double>"))
+    out = SM.cosine_topk_lsh(e, q, k=2).df.collect()
+    qids = {r["query_id"] for r in out}
+    cands = {r["vec_id"] for r in out}
+    assert 11 not in qids           # NULL query: no candidates
+    assert cands <= {1, 3}          # NULL corpus rows never bucket
+    # all-NULL batch corner
+    allnull = OmigoDF(spark.createDataFrame(
+        [(9, None)], "vec_id long, embedding array<double>"))
+    assert SM.cosine_topk_lsh(allnull, q, k=2).df.count() == 0
+
+
+def test_embedding_dup_pairs_screen_nonfinite(spark):
+    from omigo_data_analytics_spark.operators import dedup as DD
+    e = _mk_corrupt_embeddings(spark)
+    pairs = DD.embedding_dup_pairs(e, threshold=0.4, method="exact").df
+    bad = pairs.where("id_a IN (2,4,6) OR id_b IN (2,4,6)").count()
+    assert bad == 0
+    assert pairs.count() > 0           # clean near-dups still found
+
+
+def test_lsh_buckets_nonfinite_excluded(spark):
+    """numpy NaN>=0 is False but SQL NaN-is-greatest is True — a NaN
+    component would bucket DIFFERENTLY in engine and oracle. Non-finite
+    vectors now get NULL buckets like NULL vectors."""
+    from omigo_data_analytics_spark.operators import similarity as SM
+    e = _mk_corrupt_embeddings(spark)
+    q = OmigoDF(spark.createDataFrame(
+        [(10, [1.0, 0.0])], "vec_id long, embedding array<double>"))
+    out = SM.cosine_topk_lsh(e, q, k=5).df
+    assert {r["vec_id"] for r in out.collect()} <= {1, 3, 5}

@@ -113,7 +113,7 @@ def test_lazy_reread_installs_nothing(monkeypatch):
 
 
 _CHILD = textwrap.dedent("""
-    import json, sys
+    import json, os, sys
     sys.path.insert(0, sys.argv[1])
     from pyspark.sql import functions as F
     from omigo_data_analytics_spark import get_spark
@@ -132,8 +132,13 @@ _CHILD = textwrap.dedent("""
     try:   # a UDF whose worker must import the package
         out["quoted"] = (one.select(F.udf(lambda i: colutils.quote(f"a.{i}"))("id"))
                          .first()[0])
+        out["pandas"] = one.toPandas()["id"].tolist()
     except Exception as e:
         out["error"] = str(e)[:3000]
+    out["tmpdir"] = spark._jvm.java.lang.System.getProperty("java.io.tmpdir")
+    d = spark.sparkContext.getConf().get("spark.python.unix.domain.socket.dir")
+    out["sock_dir"] = d
+    out["sock_mode"] = oct(os.stat(d).st_mode & 0o777) if d else None
     spark.stop()
     print(json.dumps(out))
 """)
@@ -142,11 +147,17 @@ _CHILD = textwrap.dedent("""
 @pytest.fixture(scope="module")
 def child(tmp_path_factory):
     """One local[1] session started from a directory outside the repository,
-    with the repository root on the driver's ``sys.path`` only."""
+    with the repository root on the driver's ``sys.path`` only, and a temp
+    dir (the JVM's and Python's) too long for a Unix socket path."""
     cwd = tmp_path_factory.mktemp("elsewhere")
     script = cwd / "child.py"
     script.write_text(_CHILD)
-    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    tmp = cwd / ("t" * max(1, 120 - len(str(cwd))))
+    tmp.mkdir()
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g", TMPDIR=str(tmp))
+    env["JAVA_TOOL_OPTIONS"] = " ".join(
+        o for o in (env.get("JAVA_TOOL_OPTIONS", ""), f"-Djava.io.tmpdir={tmp}")
+        if o)
     env["PYTHONPATH"] = os.pathsep.join(
         p for p in env.get("PYTHONPATH", "").split(os.pathsep)
         if p and os.path.abspath(p) != ROOT)
@@ -167,3 +178,14 @@ def test_worker_keeps_the_archive_directory_across_tasks(child):
     (pid1, dir1), (pid2, dir2) = child["probes"]
     assert pid1 == pid2
     assert dir1 == dir2
+
+
+def test_worker_sockets_live_in_a_private_short_dir(child):
+    """With a temp dir too long for an AF_UNIX path the session still
+    starts and runs a UDF and a ``toPandas()``: the worker sockets live in
+    a short directory only the owner can open, removed at exit."""
+    assert len(child["tmpdir"]) >= 120
+    assert child.get("pandas") == [0], child.get("error")
+    assert child["sock_mode"] == "0o700"
+    assert len(child["sock_dir"]) + len("/.12345678-1234-1234-1234-123456789012.sock") <= 107
+    assert not os.path.exists(child["sock_dir"])

@@ -9,9 +9,12 @@
 4. ngram_jaccard_pairs candidate-pair census warning default-on
    (r10 verdict #4; its tests live with the text near-dup family in
    tests/test_operators.py).
+
+The tests of 2 and 3, and the cosine family's empty, NULL and
+non-finite vector fixes, live with that family in tests/test_kmeans.py
+and tests/test_operators.py.
 """
 
-import pytest
 from pyspark.sql import functions as F
 
 from omigo_data_analytics_spark import OmigoDF
@@ -74,128 +77,10 @@ def test_asof_empty_right_payload_returns_left(spark):
     assert out.count() == 2
 
 
-def test_semdedup_auto_k_valid_and_bounded(spark, embeddings):
-    """num_clusters=None derives k from a corpus count (clamped n/1000);
-    any k is a valid SemDeDup, so the auto default must still produce a
-    subset of the input with survivors unique by id."""
-    from omigo_data_analytics_spark.operators import dedup as DD
-    e = OmigoDF(embeddings.df.limit(500))
-    out = DD.semdedup(e, threshold=0.4).df   # default num_clusters=None
-    n_in = e.df.count()
-    n_out = out.count()
-    assert 0 < n_out <= n_in
-    assert out.select("vec_id").distinct().count() == n_out
-    # survivors are a subset of the input ids
-    extra = out.select("vec_id").join(e.df.select("vec_id"),
-                                      "vec_id", "left_anti").count()
-    assert extra == 0
-
-
-def test_semdedup_auto_k_clamp():
-    from omigo_data_analytics_spark.operators.dedup import _auto_num_clusters
-    assert _auto_num_clusters(0) == 8
-    assert _auto_num_clusters(500) == 8          # floor clamp
-    assert _auto_num_clusters(80_000) == 80      # n/1000
-    assert _auto_num_clusters(10_000_000) == 4096  # ceiling clamp
-
-
-def test_semdedup_pinned_k_unchanged(spark, embeddings):
-    """Explicit num_clusters still pins k exactly (the registry/oracle
-    contract): pinned-k result is reproducible."""
-    from omigo_data_analytics_spark.operators import dedup as DD
-    e = OmigoDF(embeddings.df.limit(300))
-    a = DD.semdedup(e, threshold=0.4, num_clusters=8, iters=2).df
-    b = DD.semdedup(e, threshold=0.4, num_clusters=8, iters=2).df
-    assert sorted(r["vec_id"] for r in a.select("vec_id").collect()) == \
-           sorted(r["vec_id"] for r in b.select("vec_id").collect())
-
-
-def test_decontaminate_semantic_auto_k(spark, documents):
-    """num_clusters='auto' derives k ~ sqrt(|eval|) per the docstring;
-    the screen still returns a subset of train and never drops rows the
-    dense screen keeps... (auto is a recall<=dense screen by design)."""
-    from omigo_data_analytics_spark.operators import curation as CU
-    docs = OmigoDF(documents.df.limit(400))
-    ev = OmigoDF(documents.df.orderBy("doc_id").limit(25))
-    out = CU.decontaminate_semantic(docs, ev, "doc_id",
-                                    threshold=0.6, dim=16,
-                                    num_clusters="auto").df
-    n_train = docs.df.count()
-    assert 0 < out.count() <= n_train
-    # clustered screen can only MISS contamination vs dense: every row
-    # dense keeps, auto keeps
-    dense = CU.decontaminate_semantic(docs, ev, "doc_id",
-                                      threshold=0.6, dim=16).df
-    missing = dense.select("doc_id").join(out.select("doc_id"),
-                                          "doc_id", "left_anti").count()
-    assert missing == 0
-
-
-def test_decontaminate_auto_k_value():
-    from omigo_data_analytics_spark.operators.curation import _auto_eval_k
-    assert _auto_eval_k(0) == 2
-    assert _auto_eval_k(4) == 2
-    assert _auto_eval_k(100) == 10
-    assert _auto_eval_k(10_000) == 100
-    assert _auto_eval_k(100_000_000) == 4096
-
-
-def test_train_ivf_centroids_auto_k(spark, embeddings):
-    """num_centroids=None derives k from a corpus count (sqrt rule,
-    clamped); explicit k still pins exactly."""
-    from omigo_data_analytics_spark.operators import similarity as SM
-    e = OmigoDF(embeddings.df.limit(400))
-    cents = SM.train_ivf_centroids(e, num_centroids=None)
-    assert 2 <= len(cents) <= 4096
-    pinned = SM.train_ivf_centroids(e, num_centroids=5)
-    assert len(pinned) == 5
-
-
-def test_semdedup_auto_equals_pinned_when_k_matches(spark, embeddings):
-    """For corpora under the floor clamp (n < 8000 -> auto k=8), the
-    None default must produce BIT-IDENTICAL survivors to an explicit
-    k=8 — auto-k changes parameter derivation, never semantics."""
-    from omigo_data_analytics_spark.operators import dedup as DD
-    e = OmigoDF(embeddings.df.limit(400))
-    auto = DD.semdedup(e, threshold=0.4).df
-    pinned = DD.semdedup(e, threshold=0.4, num_clusters=8).df
-    ids = lambda df: sorted(r["vec_id"] for r in df.select("vec_id").collect())
-    assert ids(auto) == ids(pinned)
-
-
-def test_decontaminate_auto_equals_pinned_when_k_matches(spark, documents):
-    """Same equivalence for the clustered decontamination: eval of 25
-    docs -> auto k = int(sqrt(25)) = 5 must equal explicit k=5."""
-    from omigo_data_analytics_spark.operators import curation as CU
-    docs = OmigoDF(documents.df.limit(300))
-    ev = OmigoDF(documents.df.orderBy("doc_id").limit(25))
-    auto = CU.decontaminate_semantic(docs, ev, "doc_id", threshold=0.6,
-                                     dim=16, num_clusters="auto").df
-    pinned = CU.decontaminate_semantic(docs, ev, "doc_id", threshold=0.6,
-                                       dim=16, num_clusters=5).df
-    ids = lambda df: sorted(r["doc_id"] for r in df.select("doc_id").collect())
-    assert ids(auto) == ids(pinned)
-
-
 # ---------------------------------------------------------------- r11
 # empty-input sweep fixes: the full registry was driven against 0-row
 # copies of every table (real schemas); these pin the fixes that came
 # out of the 22 findings (the rest are documented contract raises).
-
-def test_ivf_centroids_empty_corpus_clear_error(spark):
-    """Empty corpus -> plain ValueError, not the VOID-array
-    INVALID_EXTRACT_BASE_FIELD_TYPE AnalysisException four operators
-    (kmeans/semdedup/IVF/clustered-decon) used to die with."""
-    from omigo_data_analytics_spark.operators import similarity as SM
-    e = OmigoDF(spark.createDataFrame(
-        [], "vec_id long, embedding array<float>"))
-    with pytest.raises(ValueError, match="no rows"):
-        SM.ivf_centroids(e, 4)
-    with pytest.raises(ValueError, match="no rows"):
-        SM.kmeans_centroids(e, 4)
-    with pytest.raises(ValueError, match="empty"):
-        SM.kmeans_assign(OmigoDF(spark.createDataFrame(
-            [(1, [0.1, 0.2])], "vec_id long, embedding array<double>")), [])
 
 
 def test_profile_exact_total_on_empty(spark):
@@ -293,27 +178,6 @@ def test_normalize_null_values_score_null(spark):
     assert d.normalize(["v"], group_cols=["g"]).df.count() == 5
 
 
-def test_lsh_buckets_null_vectors_dropped(spark):
-    """NULL embeddings can't bucket: the vectorized bucket UDF used to
-    die on np.stack of a None-bearing Arrow batch; now those rows get
-    NULL bucket arrays and fall out of candidate generation."""
-    from omigo_data_analytics_spark.operators import similarity as SM
-    rows = [(1, [1.0] * 8), (2, None), (3, [0.9] * 8), (4, None)]
-    e = OmigoDF(spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"))
-    q = OmigoDF(spark.createDataFrame(
-        [(10, [1.0] * 8), (11, None)], "vec_id long, embedding array<double>"))
-    out = SM.cosine_topk_lsh(e, q, k=2).df.collect()
-    qids = {r["query_id"] for r in out}
-    cands = {r["vec_id"] for r in out}
-    assert 11 not in qids           # NULL query: no candidates
-    assert cands <= {1, 3}          # NULL corpus rows never bucket
-    # all-NULL batch corner
-    allnull = OmigoDF(spark.createDataFrame(
-        [(9, None)], "vec_id long, embedding array<double>"))
-    assert SM.cosine_topk_lsh(allnull, q, k=2).df.count() == 0
-
-
 def test_ws_placeholder_null_substitutes_empty(spark):
     """NULL cells substitute as '' in templates (reference TSV model) —
     literal 'None' must never leak into a request URL."""
@@ -322,79 +186,9 @@ def test_ws_placeholder_null_substitutes_empty(spark):
         "http://svc/?q=7"
 
 
-def test_ivf_seeds_skip_null_vectors(spark):
-    from omigo_data_analytics_spark.operators import similarity as SM
-    rows = [(1, None), (2, [1.0, 0.0]), (3, None), (4, [0.0, 1.0])]
-    e = OmigoDF(spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"))
-    cents = SM.ivf_centroids(e, 3)
-    assert [c for c, _ in cents] == [2, 4]   # NULLs skipped, order kept
-
-
 # ---------------------------------------------------------------- r11
 # extreme-values sweep fixes (NaN/±Inf/1e308/-0.0 planted in numeric
 # payloads and inside embedding vectors).
-
-def _mk_corrupt_embeddings(spark):
-    rows = [(1, [1.0, 0.0]), (2, [float("nan"), 1.0]),
-            (3, [0.9, 0.1]), (4, [float("inf"), 0.0]),
-            (5, [0.8, 0.2]), (6, None)]
-    return OmigoDF(spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"))
-
-
-def test_centroid_training_screens_nonfinite(spark):
-    """NaN seeds used to render as the bare token `nan` in the centroid
-    literal (unparseable SQL); NaN members used to blow up the BIGINT
-    micro-unit quantization under ANSI. Both screened now; training and
-    seeding use finite vectors only."""
-    from omigo_data_analytics_spark.operators import similarity as SM
-    e = _mk_corrupt_embeddings(spark)
-    cents = SM.ivf_centroids(e, 4)
-    assert [c for c, _ in cents] == [1, 3, 5]
-    trained = SM.kmeans_centroids(e, k=2, iters=2)
-    assert all(all(x == x and abs(x) != float("inf") for x in v)
-               for _, v in trained)
-    # assignment still covers EVERY row, corrupt ones included
-    assert SM.kmeans_assign(e, trained).df.count() == 6
-
-
-def test_semdedup_corrupt_vectors_never_pair(spark):
-    """NaN cosine compares >= threshold TRUE in both engines — without
-    the finite-norm screen one corrupt embedding marks its whole
-    cluster duplicate. Corrupt rows survive (never dropped), and no
-    clean row is dropped on their account."""
-    from omigo_data_analytics_spark.operators import dedup as DD
-    e = _mk_corrupt_embeddings(spark)
-    out = DD.semdedup(e, threshold=0.99, num_clusters=2).df
-    ids = {r["vec_id"] for r in out.collect()}
-    assert {2, 4, 6} <= ids            # corrupt/NULL rows all survive
-    # the only genuine near-dup pair is (3,5): cos = 0.991 >= 0.99 —
-    # the greedy keep-lowest-id drops 5, keeps 3; 1 is dissimilar.
-    # Crucially, NOT every clean row vanished (pre-fix, the NaN row
-    # "matched" everything in its cluster).
-    assert 1 in ids and 3 in ids and 5 not in ids
-
-
-def test_embedding_dup_pairs_screen_nonfinite(spark):
-    from omigo_data_analytics_spark.operators import dedup as DD
-    e = _mk_corrupt_embeddings(spark)
-    pairs = DD.embedding_dup_pairs(e, threshold=0.4, method="exact").df
-    bad = pairs.where("id_a IN (2,4,6) OR id_b IN (2,4,6)").count()
-    assert bad == 0
-    assert pairs.count() > 0           # clean near-dups still found
-
-
-def test_lsh_buckets_nonfinite_excluded(spark):
-    """numpy NaN>=0 is False but SQL NaN-is-greatest is True — a NaN
-    component would bucket DIFFERENTLY in engine and oracle. Non-finite
-    vectors now get NULL buckets like NULL vectors."""
-    from omigo_data_analytics_spark.operators import similarity as SM
-    e = _mk_corrupt_embeddings(spark)
-    q = OmigoDF(spark.createDataFrame(
-        [(10, [1.0, 0.0])], "vec_id long, embedding array<double>"))
-    out = SM.cosine_topk_lsh(e, q, k=5).df
-    assert {r["vec_id"] for r in out.collect()} <= {1, 3, 5}
 
 
 def test_minmax_int_aggs_nonfinite_null_not_crash(spark):

@@ -656,6 +656,42 @@ def test_reload_of_unchanged_table_submits_no_job(spark, sf_dir):
     assert again.df.count() == first.df.count()
 
 
+def test_unchanged_reload_in_one_session_is_the_same_frame(spark, sf_dir, tmpdir):
+    """A reload of unchanged files in the same session returns the frame
+    already built (no ``spark.read``, no JVM relation). A rewrite, a
+    ``nanosAsLong`` flip and another session each get a fresh read."""
+    nation = IO.load_testdata(spark, sf_dir, "nation").df
+    assert IO.load_testdata(spark, sf_dir, "nation").df is nation
+
+    p = f"{tmpdir}/t"
+    spark.createDataFrame([(1,)], "a int").write.parquet(p)
+    first = IO.read_parquet(spark, p).df
+    assert IO.read_parquet(spark, p).df is first
+
+    spark.createDataFrame([(2,)], "a int").write.mode("overwrite").parquet(p)
+    rewritten = IO.read_parquet(spark, p).df
+    assert rewritten is not first
+    assert rewritten.collect() == [(2,)]
+    assert IO.read_parquet(spark, p).df is rewritten
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false" if before == "true" else "true")
+    try:
+        flipped = IO.read_parquet(spark, p).df
+    finally:
+        spark.conf.set(key, before)
+    assert flipped is not rewritten
+    assert flipped.collect() == [(2,)]
+
+    restored = IO.read_parquet(spark, p).df
+    other = spark.newSession()
+    elsewhere = IO.read_parquet(other, p).df
+    assert elsewhere is not restored
+    assert elsewhere.sparkSession is other
+    assert elsewhere.collect() == [(2,)]
+
+
 def test_parquet_rewrite_infers_afresh(spark, tmpdir):
     p = f"{tmpdir}/t"
     spark.createDataFrame([(1,)], "a int").write.parquet(p)
