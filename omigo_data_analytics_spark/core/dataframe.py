@@ -32,7 +32,7 @@ from pyspark.sql import types as T
 from . import colutils
 from .colutils import COL_SEP, as_list, resolve_cols
 from .compat import CompatMixin
-from .jobs import nonunique_counts
+from .jobs import checkpoint_with_metrics, nonunique_counts
 from ..functions import aggs as aggs_mod
 from ..functions.aggs import agg_expr, func_name
 
@@ -1409,10 +1409,15 @@ class OmigoDF(CompatMixin):
         gcols = self._resolve(grouping_cols)
         acols = self._resolve(agg_cols)
         if warn_group_rows is not None:
-            top = (self._df
-                   .groupBy(*[F.col(colutils.quote(g)) for g in gcols])
-                   .agg(F.count(F.lit(1)).alias("__n__"))
-                   .agg(F.max("__n__").alias("m")).first()["m"]) or 0
+            # the hottest group's size is observed on the eager checkpoint
+            # of the per-group counts, which keeps only the groups over the
+            # threshold: no result rows come back through a socket
+            n = F.col("__n__")
+            _, m = checkpoint_with_metrics(
+                self._df.groupBy(*[colutils.qcol(g) for g in gcols])
+                .agg(F.count(F.lit(1)).alias("__n__")),
+                {"m": F.max(n)}, keep=n > warn_group_rows)
+            top = m["m"] or 0
             if top > warn_group_rows:
                 import warnings
                 warnings.warn(
@@ -2032,7 +2037,8 @@ class OmigoDF(CompatMixin):
                 "keys) — which duplicate-key row survives the cutoff is "
                 "partition-order-dependent", UserWarning, stacklevel=2)
         u = F.expr(hash_spark(key))
-        w = Window.partitionBy(*gcols).orderBy(u.asc(), tie.asc())
+        w = Window.partitionBy(*[colutils.qcol(g) for g in gcols]).orderBy(
+            u.asc(), tie.asc())
         return self._wrap(self._df
                           .withColumn("__rn__", F.row_number().over(w))
                           .filter(F.col("__rn__") <= n)

@@ -16,9 +16,14 @@ Scale shape: the q-gram path shuffles (gram, position) explosions
 predicate; the count filter then shrinks candidates before the
 levenshtein verify (a codegen JVM expression in Spark).
 
-Hot-gram skew guard (``fuzzy_pairs`` and ``fuzzy_join``, r9): a gram
-shared by a large fraction of the corpus (common prefixes like "Customer#0000...") would
-inflate its join bucket quadratically. The guard makes the mitigation
+One skeleton, ``_candidates``, makes every candidate decision for the
+family: the self-join (``fuzzy_pairs``, and ``dedup_fuzzy`` through it)
+passes one side, ``fuzzy_join`` passes two, and each caller keeps only
+its own verify and output projection.
+
+Hot-gram skew guard: a gram shared by a large fraction of the corpus
+(common prefixes like "Customer#0000...") would inflate its join bucket
+quadratically. The guard makes the mitigation
 mechanical and EXACT: gram frequencies are counted in-plan (one
 vocabulary-sized partial agg), grams above a cap are "hot", and the
 gram join runs on RARE grams only. Completeness argument: at most q*d
@@ -40,35 +45,32 @@ necessary condition over rare-only matches.
 from __future__ import annotations
 
 import warnings
+from functools import reduce
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.colutils import aliased, qcol
-
 from ..core.dataframe import OmigoDF
+from ..core.jobs import checkpoint_with_metrics
 from .text import ensure_min_parallelism
 
 
-def _skew_counts(stats, floor: int) -> tuple[int, int]:
-    """(n_unsafe, n_total) in ONE job over the checkpointed per-string
-    stats (one narrow row per gram-path string) — never a rescan of
-    the input; the materialized checkpoint is reused by the main
-    action."""
-    row = stats.agg(
-        F.count(F.when(F.col("__r__") < floor, 1)).alias("__u__"),
-        F.count(F.lit(1)).alias("__n__")).collect()[0]
-    return int(row["__u__"]), int(row["__n__"])
-
-
-def _warn_if_skewed(n_unsafe: int, n_total: int, frac: float,
-                    source: str, stacklevel: int = 3) -> None:
-    """Opt-in skew telemetry (r9 advice): on vocabulary-dense corpora
-    the census routes most strings through the quadratic direct-verify
-    fallback — exact but expensive, and previously visible only in the
-    docstring. Callers pass ``warn_unsafe_frac`` to get an explicit
-    warning with the remedy (an absolute ``hot_gram_cap`` sized to the
-    per-gram bucket budget, or ``hot_gram_cap=0`` to disable the guard
-    on corpora known to be unskewed)."""
+def _checkpoint_warn_if_skewed(stats, floor: int, frac: float, source: str,
+                               stacklevel: int):
+    """Opt-in skew telemetry: on vocabulary-dense corpora the census
+    routes most strings through the quadratic direct-verify fallback —
+    exact but expensive. Eagerly checkpoints the per-string stats (one
+    narrow row per gram-path string, reused by the main action) with the
+    unsafe and total counts observed on that one job, so no result rows
+    come back through a socket, and warns with the remedy (an absolute
+    ``hot_gram_cap`` sized to the per-gram bucket budget, or
+    ``hot_gram_cap=0`` to disable the guard on corpora known to be
+    unskewed). Returns the checkpointed stats."""
+    stats, m = checkpoint_with_metrics(stats, {
+        "u": F.count(F.when(F.col("__r__") < floor, 1)),
+        "n": F.count(F.lit(1))})
+    n_unsafe, n_total = m["u"], m["n"]
     if n_total and n_unsafe / n_total > frac:
         warnings.warn(
             f"{source}: {n_unsafe}/{n_total} strings "
@@ -80,21 +82,191 @@ def _warn_if_skewed(n_unsafe: int, n_total: int, frac: float,
             "or hot_gram_cap=0 to disable the skew guard entirely if "
             "the corpus is known to be unskewed.",
             stacklevel=stacklevel)
+    return stats
 
 
-def _grams_expr(col: str, q: int) -> str:
-    """Positional q-grams: array of (gram, pos) structs, pos 1-based."""
-    from ..core.colutils import quote
-    qc = quote(col)
-    return (f"transform(sequence(1, greatest(length({qc}) - {q - 1}, 0)), "
-            f"i -> named_struct('g', substring({qc}, i, {q}), 'p', i))")
+def _grams(df, q: int):
+    """``df`` with one row per positional q-gram of ``__s__``: the gram
+    ``__g__`` and its 1-based position ``__p__``."""
+    s = F.col("__s__")
+    gp = F.explode(F.transform(
+        F.sequence(F.lit(1), F.greatest(F.length(s) - (q - 1), F.lit(0))),
+        lambda i: F.struct(F.substring(s, i, q).alias("g"), i.alias("p"))))
+    return (df.select("*", gp.alias("__gp__"))
+            .select("*", F.col("__gp__.g").alias("__g__"),
+                    F.col("__gp__.p").alias("__p__")))
+
+
+def _end(df, t: str, *names):
+    """``df``'s internal columns ``names`` (``__x__``), renamed ``__xa__``
+    or ``__xb__`` for join end ``t``."""
+    return df.select(*[F.col(n).alias(n[:-2] + t + "__") for n in names])
+
+
+def _pair_on(frames, on):
+    """``on`` plus, for the self-join (one frame joined to itself), the
+    ``__ka__ < __kb__`` order that keeps each unordered pair once."""
+    return on + [F.col("__ka__") < F.col("__kb__")] if len(frames) == 1 else on
+
+
+def _census(eligible, q: int, hot_gram_cap: int | None):
+    """The hot-gram census over every gram-path string once: the
+    self-join counts its one side, the two-table join both sides
+    combined (a bucket's join volume is freq_l x freq_r, and any global
+    classification keeps rarity a property of the gram — the
+    completeness argument needs exactly that). Returns the broadcast hot
+    set (``__g__``, ``__hot__``) and the plan of the per-string
+    rare-occurrence stats (``__r__``, keyed by ``__k__`` and, with two
+    sides, ``__side__``)."""
+    streams, keys = [_grams(e, q) for e in eligible], ["__k__"]
+    if len(streams) > 1:
+        streams = [s.withColumn("__side__", F.lit(i))
+                   for i, s in enumerate(streams)]
+        keys = ["__side__", "__k__"]
+    gp = reduce(DataFrame.union, streams)
+    gfreq = gp.groupBy("__g__").agg(F.count(F.lit(1)).alias("__gc__"))
+    if hot_gram_cap is not None:
+        hot = gfreq.where(F.col("__gc__") > int(hot_gram_cap))
+    else:
+        # every eligible string yields a gram and keys are unique per
+        # side, so this counts the strings the gram stream covers
+        n_ = reduce(DataFrame.union, eligible).agg(
+            F.count(F.lit(1)).alias("__nstr__"))
+        hot = (gfreq.crossJoin(F.broadcast(n_))
+               .where(F.col("__gc__") > F.greatest(
+                   F.lit(64).cast("long"),
+                   F.expr("CAST(ceil(__nstr__ * 0.01) AS BIGINT)"))))
+    # hot and stats both feed MULTIPLE branches (stats build + rare
+    # filter; safe + unsafe routing) — they are checkpointed so the
+    # census agg runs ONCE instead of once per consumer subtree. Both
+    # are small: hot is the over-cap gram set, stats one narrow row per
+    # string.
+    hot = F.broadcast(hot.select("__g__").withColumn("__hot__", F.lit(1))
+                      .localCheckpoint(eager=False))
+    # per-string rare-occurrence count: the gram stream reduces to one
+    # row per string via map-side combine (the shuffle moves per-key
+    # partials, never gram rows); hot count = (l-(q-1)) - r.
+    return hot, (gp.join(hot, on="__g__", how="left")
+                 .groupBy(*keys)
+                 .agg(F.sum(F.when(F.col("__hot__").isNull(), 1)
+                            .otherwise(0)).alias("__r__")))
+
+
+def _rare_join(streams, d: int, q: int):
+    """Key pairs sharing enough position-aligned grams of ``streams``
+    (``__k__``, ``__l__``, ``__r__``, ``__g__``, ``__p__``). The count
+    filter is the Gravano bound minus the most hot grams could have
+    contributed to the 1-1 matching, least(hot_a, hot_b) where hot =
+    (l - (q-1)) - r; it folds to the plain bound when r counts every
+    occurrence. Pruning-only — exactness never depends on it."""
+    a, b = (_end(s, t, "__k__", "__l__", "__r__", "__g__", "__p__")
+            for s, t in ((streams[0], "a"), (streams[-1], "b")))
+    la, lb, ra, rb = (F.col(c) for c in ("__la__", "__lb__", "__ra__",
+                                         "__rb__"))
+    return (a.join(b, on=_pair_on(streams, [
+                F.col("__ga__") == F.col("__gb__"),
+                F.abs(F.col("__pa__") - F.col("__pb__")) <= d,
+                F.abs(la - lb) <= d]))
+            .groupBy("__ka__", "__kb__")
+            .agg(F.count(F.lit(1)).alias("__n__"),
+                 *[F.first(c).alias(c) for c in ("__la__", "__lb__",
+                                                  "__ra__", "__rb__")])
+            .where(F.col("__n__") >=
+                   F.greatest(la, lb) - (q - 1) - q * d
+                   - F.least(la - (q - 1) - ra, lb - (q - 1) - rb))
+            .select("__ka__", "__kb__"))
+
+
+def _length_join(frames, d: int, lo: int):
+    """Key pairs of ``frames`` (``__k__``, ``__l__``) whose lengths differ
+    by at most ``d``: each string explodes its target lengths
+    ``max(l - d, lo) .. l + d`` and the probe is an equi-join on length —
+    a hash join, never a nested loop over the frames squared."""
+    la = F.col("__la__")
+    return (_end(frames[0], "a", "__k__", "__l__")
+            .withColumn("__t__", F.explode(F.sequence(
+                F.greatest(la - d, F.lit(lo)), la + d)))
+            .join(_end(frames[-1], "b", "__k__", "__l__"),
+                  on=_pair_on(frames, [F.col("__t__") == F.col("__lb__")]))
+            .select("__ka__", "__kb__"))
+
+
+def _candidates(sides, d: int, q: int, hot_gram_cap: int | None,
+                warn_unsafe_frac: float | None, source: str,
+                stacklevel: int):
+    """The ed-join's candidate key pairs (``__ka__``, ``__kb__``),
+    distinct, a superset of the pairs within edit distance ``d``.
+
+    ``sides`` holds one frame for the self-join (pairs ``__ka__ <
+    __kb__``) or the left and right frames of the two-table join, each
+    with a unique key ``__k__``, a non-NULL string ``__s__`` and its
+    length ``__l__``. The candidates are the union of three equi-joins:
+    the rare-gram join over strings of length >= q, the unsafe x unsafe
+    length buckets (guard on only), and the short-string length buckets
+    (longer side < q*(d+1), where the gram bound can be vacuous).
+    ``stacklevel`` attributes the skew warning as ``warnings.warn`` in
+    the calling operator's body would (2 = that operator's caller)."""
+    # the self-join reads its one side on both ends of every join; a
+    # lazy checkpoint runs each derived side's plan once
+    once = ((lambda df: df.localCheckpoint(eager=False))
+            if len(sides) == 1 else (lambda df: df))
+    # Strings shorter than q are excluded from the gram path up front:
+    # Spark's sequence(1, 0) auto-steps BACKWARD to [1, 0], so without
+    # the filter every sub-q string would emit two junk positional
+    # grams — building a redundant O(n²) hot-gram bucket on exactly
+    # the short-string skew path the length buckets already cover.
+    eligible = [s.where(F.col("__l__") >= q) for s in sides]
+    if hot_gram_cap is not None and int(hot_gram_cap) == 0:
+        # Guard OFF: hot set statically empty, so __r__ = the total
+        # occurrence count l - (q-1) and the count filter is the plain
+        # Gravano bound. Complete without a fallback: any pair whose
+        # longer side is >= q*(d+1) has bound >= 1 (must share a gram),
+        # and both-short pairs go through the short-string buckets.
+        streams = [_grams(e.withColumn("__r__", F.col("__l__") - (q - 1)), q)
+                   for e in eligible]
+        pairs = [_rare_join(streams, d, q)]
+    else:
+        hot, stats = _census(eligible, q, hot_gram_cap)
+        floor = q * d + 1  # rare occurrences that survive any d-edit script
+        if warn_unsafe_frac is None:
+            stats = stats.localCheckpoint(eager=False)
+        else:
+            stats = _checkpoint_warn_if_skewed(
+                stats, floor, float(warn_unsafe_frac), source, stacklevel + 2)
+        per_side = ([stats] if len(sides) == 1 else
+                    [stats.where(F.col("__side__") == i)
+                     .select("__k__", "__r__") for i in range(len(sides))])
+        # The rare-gram join over ALL eligible strings is complete
+        # except for the unsafe x unsafe corner: if x has >= floor rare
+        # occurrences, some rare gram of x survives any d-edit script
+        # into y, and y's occurrence of that gram is present too (rarity
+        # is a property of the gram, not the string). The grams
+        # re-explode map-side from the stats-enriched strings —
+        # re-running the cheap explode beats shuffling the gram stream
+        # by key to attach __r__.
+        streams = [_grams(once(e.join(st, on="__k__")), q)
+                   .join(hot, on="__g__", how="left")
+                   .where(F.col("__hot__").isNull())
+                   for e, st in zip(eligible, per_side)]
+        # the UNSAFE x UNSAFE corner (both sides < floor rare
+        # occurrences: hot-dominated or barely longer than q); empty on
+        # unskewed corpora but for q <= l < q*(d+1) strings
+        unsafe = [once(e.join(st.where(F.col("__r__") < floor)
+                              .select("__k__"), on="__k__")
+                       .select("__k__", "__l__"))
+                  for e, st in zip(eligible, per_side)]
+        pairs = [_rare_join(streams, d, q),
+                 _length_join(unsafe, d, q)]
+    short = [once(s.where(F.col("__l__") < q * (d + 1))) for s in sides]
+    pairs.append(_length_join(short, d, 0))
+    return reduce(DataFrame.union, pairs).distinct()
 
 
 def fuzzy_pairs(odf: OmigoDF, id_col: str, col: str,
                 max_dist: int = 1, q: int = 3,
                 hot_gram_cap: int | None = None,
                 warn_unsafe_frac: float | None = None,
-                _stacklevel: int = 3) -> OmigoDF:
+                _stacklevel: int = 2) -> OmigoDF:
     """All pairs (id_a < id_b) with levenshtein(col_a, col_b) <= max_dist
     — exact, via q-gram-count candidate filtering + levenshtein verify.
     Returns (id_a, id_b, dist). NULL values never match (SQL semantics:
@@ -135,180 +307,22 @@ def fuzzy_pairs(odf: OmigoDF, id_col: str, col: str,
     size an absolute cap. None (default) = zero extra jobs. Ignored
     when the guard is off."""
     odf._resolve([id_col, col])
-    d, qq = int(max_dist), int(q)
-    guard_off = hot_gram_cap is not None and int(hot_gram_cap) == 0
+    d = int(max_dist)
     base = (ensure_min_parallelism(odf.df)
-            .select(qcol(id_col).alias("__id__"),
+            .select(qcol(id_col).alias("__k__"),
                     qcol(col).cast("string").alias("__s__"),
                     F.length(qcol(col).cast("string")).alias("__l__"))
             .where(F.col("__s__").isNotNull())
             .localCheckpoint(eager=False))
-
-    # Strings shorter than q are excluded from the gram path up front:
-    # Spark's sequence(1, 0) auto-steps BACKWARD to [1, 0], so without
-    # the filter every sub-q string would emit two junk positional
-    # grams — building a redundant O(n²) hot-gram bucket on exactly
-    # the short-string skew path B already covers (r8 review).
-    eligible = base.where(F.col("__l__") >= qq)
-
-    floor = qq * d + 1  # rare occurrences that survive any d-edit script
-    if guard_off:
-        # Guard OFF (hot_gram_cap=0): hot set statically empty, so
-        # __r__ = the total occurrence count l - (q-1) — the least()
-        # term in the count filter folds to 0 and the filter reduces
-        # to the plain Gravano bound. Complete without a fallback:
-        # any pair whose longer side is >= q*(d+1) has bound >= 1
-        # (must share a gram), and both-short pairs go through path B.
-        enriched = eligible.withColumn(
-            "__r__", F.col("__l__") - F.lit(qq - 1))
-        sex = (enriched
-               .select("__id__", "__l__", "__r__",
-                       F.explode(F.expr(_grams_expr("__s__", qq)))
-                       .alias("__gp__"))
-               .select("__id__", "__l__", "__r__",
-                       F.col("__gp__.g").alias("__g__"),
-                       F.col("__gp__.p").alias("__p__")))
-    else:
-        # --- hot-gram census (r9 skew guard): one vocabulary-sized
-        # partial agg; the hot set (grams above the cap) is tiny and
-        # broadcast.
-        gp = (eligible
-              .select("__id__", "__l__",
-                      F.explode(F.expr(_grams_expr("__s__", qq)))
-                      .alias("__gp__"))
-              .select("__id__", "__l__",
-                      F.col("__gp__.g").alias("__g__")))
-        gfreq = gp.groupBy("__g__").agg(F.count(F.lit(1)).alias("__gc__"))
-        if hot_gram_cap is not None:
-            hot = gfreq.where(F.col("__gc__") > int(hot_gram_cap))
-        else:
-            n_ = eligible.agg(F.count(F.lit(1)).alias("__nstr__"))
-            hot = (gfreq.crossJoin(F.broadcast(n_))
-                   .where(F.col("__gc__") > F.greatest(
-                       F.lit(64).cast("long"),
-                       F.expr("CAST(ceil(__nstr__ * 0.01) AS BIGINT)"))))
-        # hot and stats both feed MULTIPLE branches (stats build + rare
-        # filter; safe + unsafe routing) — lazily checkpoint them so the
-        # census agg runs ONCE instead of once per consumer subtree
-        # (measured: 3 gfreq aggregations / 7 explodes in the un-
-        # checkpointed plan — the bm25 self-reference trap). Both are
-        # small: hot is the over-cap gram set, stats one narrow row per
-        # string.
-        hot = F.broadcast(hot.select("__g__")
-                          .withColumn("__hot__", F.lit(1))
-                          .localCheckpoint(eager=False))
-
-        # per-string rare-occurrence count: the gram stream reduces to
-        # one row per string via map-side combine (the shuffle moves
-        # per-id partials, never gram rows); hot count = (l-(q-1)) - r.
-        stats = (gp.join(hot, on="__g__", how="left")
-                 .groupBy("__id__")
-                 .agg(F.sum(F.when(F.col("__hot__").isNull(), 1)
-                            .otherwise(0)).alias("__r__"))
-                 .localCheckpoint(eager=False))
-
-        # path A — rare-gram join over ALL eligible strings.
-        # Completeness needs only ONE safe endpoint: if x has >= floor
-        # rare occurrences, some rare gram of x survives any d-edit
-        # script into y, and y's occurrence of that gram is present
-        # here too (rarity is a property of the gram, not the string)
-        # — so every true pair except unsafe x unsafe appears in this
-        # join, and path U below only has to cover the unsafe x unsafe
-        # corner. The grams re-explode map-side from the stats-enriched
-        # strings — re-running the cheap explode beats shuffling the
-        # gram stream by id to attach __r__.
-        enriched = (eligible.join(stats, on="__id__")
-                    .localCheckpoint(eager=False))
-        sex = (enriched
-               .select("__id__", "__l__", "__r__",
-                       F.explode(F.expr(_grams_expr("__s__", qq)))
-                       .alias("__gp__"))
-               .select("__id__", "__l__", "__r__",
-                       F.col("__gp__.g").alias("__g__"),
-                       F.col("__gp__.p").alias("__p__"))
-               .join(hot, on="__g__", how="left")
-               .where(F.col("__hot__").isNull()))
-    a = sex.select(F.col("__id__").alias("id_a"), F.col("__l__").alias("la"),
-                   F.col("__r__").alias("ra"),
-                   F.col("__g__").alias("g"), F.col("__p__").alias("pa"))
-    b = sex.select(F.col("__id__").alias("id_b"), F.col("__l__").alias("lb"),
-                   F.col("__r__").alias("rb"),
-                   F.col("__g__").alias("g"), F.col("__p__").alias("pb"))
-    # count filter over rare-only matches: the Gravano bound minus the
-    # most hot grams could have contributed to the 1-1 matching,
-    # least(hot_a, hot_b) where hot = (l - (q-1)) - r. Pruning-only —
-    # exactness never depends on it.
-    grams = (a.join(b, on=[a["g"] == b["g"],
-                           F.col("id_a") < F.col("id_b"),
-                           F.abs(F.col("pa") - F.col("pb")) <= d,
-                           F.abs(F.col("la") - F.col("lb")) <= d])
-             .groupBy("id_a", "id_b")
-             .agg(F.count(F.lit(1)).alias("shared"),
-                  F.first("la").alias("la"), F.first("lb").alias("lb"),
-                  F.first("ra").alias("ra"), F.first("rb").alias("rb"))
-             .where(F.col("shared") >=
-                    F.greatest(F.col("la"), F.col("lb")) - (qq - 1) - qq * d
-                    - F.least(F.col("la") - (qq - 1) - F.col("ra"),
-                              F.col("lb") - (qq - 1) - F.col("rb")))
-             .select("id_a", "id_b"))
-
-    if guard_off:
-        upairs = None
-    else:
-        # path U — the UNSAFE x UNSAFE corner (both sides < floor rare
-        # occurrences: hot-dominated or barely longer than q; any pair
-        # with a safe endpoint is already complete in path A above).
-        # Equi-join on the exploded target length (d+1 buckets probed
-        # per string), so the probe is a hash join, never a nested
-        # loop; bounded by the unsafe set squared per length bucket,
-        # and empty on unskewed corpora (where only q <= l < q*(d+1)
-        # strings route, the regime path A's bound never covered).
-        unsafe = (eligible.join(stats.where(F.col("__r__") < floor)
-                                .select("__id__"), on="__id__")
-                  .select("__id__", "__l__")
-                  .localCheckpoint(eager=False))
-        if warn_unsafe_frac is not None:
-            _warn_if_skewed(*_skew_counts(stats, floor),
-                            float(warn_unsafe_frac), "fuzzy_pairs",
-                            stacklevel=_stacklevel)
-        probe = unsafe.select(F.col("__id__").alias("__ub__"),
-                              F.col("__l__").alias("__pl__"))
-        upairs = (unsafe
-                  .select(F.col("__id__").alias("__ua__"),
-                          F.col("__l__").alias("__ul__"))
-                  .withColumn("__lb__", F.explode(F.expr(
-                      f"sequence(greatest(__ul__ - {d}, {qq}), "
-                      f"__ul__ + {d})")))
-                  .join(probe, on=[F.col("__lb__") == F.col("__pl__"),
-                                   F.col("__ua__") != F.col("__ub__")])
-                  .select(F.least("__ua__", "__ub__").alias("id_a"),
-                          F.greatest("__ua__", "__ub__").alias("id_b")))
-
-    # path B — short strings (longer side < q*(d+1)): length buckets.
-    # Same explode-the-target-length equi join as path U (r9): a bare
-    # |la-lb| <= d condition has no equi key and planned as a nested
-    # loop over shorts² — fine when shorts are few, quadratic scan cost
-    # on short-string corpora where B is the MAIN path. With the equi
-    # key every candidate path in the operator is a hash join.
-    short = (base.where(F.col("__l__") < qq * (d + 1))
-             .localCheckpoint(eager=False))
-    sb = short.select(F.col("__id__").alias("id_b"), F.col("__l__").alias("lb"))
-    shorts = (short
-              .select(F.col("__id__").alias("id_a"), F.col("__l__").alias("la"))
-              .withColumn("__lb__", F.explode(F.expr(
-                  f"sequence(greatest(la - {d}, 0), la + {d})")))
-              .join(sb, on=[F.col("__lb__") == F.col("lb"),
-                            F.col("id_a") < F.col("id_b")])
-              .select("id_a", "id_b"))
-
-    cands = (grams.union(shorts) if upairs is None
-             else grams.union(upairs).union(shorts)).distinct()
-    sa2 = base.select(F.col("__id__").alias("id_a"), F.col("__s__").alias("sa"))
-    sb2 = base.select(F.col("__id__").alias("id_b"), F.col("__s__").alias("sb"))
-    verified = (cands.join(sa2, "id_a").join(sb2, "id_b")
-                .withColumn("dist", F.levenshtein("sa", "sb"))
+    cands = _candidates([base], d, int(q), hot_gram_cap, warn_unsafe_frac,
+                        "fuzzy_pairs", _stacklevel)
+    verified = (cands.join(_end(base, "a", "__k__", "__s__"), "__ka__")
+                .join(_end(base, "b", "__k__", "__s__"), "__kb__")
+                .withColumn("dist", F.levenshtein("__sa__", "__sb__"))
                 .where(F.col("dist") <= d)
-                .select("id_a", "id_b", F.col("dist").cast("long").alias("dist")))
+                .select(F.col("__ka__").alias("id_a"),
+                        F.col("__kb__").alias("id_b"),
+                        F.col("dist").cast("long").alias("dist")))
     return OmigoDF(verified)
 
 
@@ -321,152 +335,38 @@ def fuzzy_join(left: OmigoDF, right: OmigoDF, left_col: str, right_col: str,
     right row within max_dist). Same exact candidate scheme as
     fuzzy_pairs; all columns carried, name collisions suffixed.
 
-    Carries the same hot-gram skew guard as ``fuzzy_pairs`` (r9):
-    grams are classified hot by their COMBINED left+right occurrence
-    count (a bucket's join volume is freq_l x freq_r, and any global
-    classification keeps rarity a property of the gram — the
-    completeness argument needs exactly that); the gram join runs on
-    rare grams only, which is complete whenever EITHER endpoint has
-    >= q*d + 1 rare occurrences, and the unsafe_left x unsafe_right
-    corner routes through the length-bucket equi-join fallback.
-    ``hot_gram_cap`` None = max(64, 1% of the combined gram-path
-    string count); the result is identical for any cap.
+    Carries the same hot-gram skew guard as ``fuzzy_pairs``: grams are
+    classified hot by their COMBINED left+right occurrence count; the
+    gram join runs on rare grams only, which is complete whenever
+    EITHER endpoint has >= q*d + 1 rare occurrences, and the
+    unsafe_left x unsafe_right corner routes through the length-bucket
+    equi-join fallback. ``hot_gram_cap`` None = max(64, 1% of the
+    combined gram-path string count); the result is identical for any
+    cap.
     ``hot_gram_cap=0`` disables the guard, ``warn_unsafe_frac`` opts
     into the skew warning — both exactly as in ``fuzzy_pairs``."""
     left._resolve(left_col)
     right._resolve(right_col)
-    d, qq = int(max_dist), int(q)
-    floor = qq * d + 1
-    guard_off = hot_gram_cap is not None and int(hot_gram_cap) == 0
+    d = int(max_dist)
 
-    def prep(odf, colname, side):
+    def prep(odf, colname):
         return (ensure_min_parallelism(odf.df)
-                .withColumn(f"__s{side}__", qcol(colname).cast("string"))
-                .withColumn(f"__l{side}__", F.length(f"__s{side}__"))
-                .where(F.col(f"__s{side}__").isNotNull())
-                .withColumn(f"__k{side}__",
-                            F.monotonically_increasing_id())
+                .withColumn("__s__", qcol(colname).cast("string"))
+                .withColumn("__l__", F.length("__s__"))
+                .where(F.col("__s__").isNotNull())
+                .withColumn("__k__", F.monotonically_increasing_id())
                 .localCheckpoint(eager=False))
 
-    lf, rf = prep(left, left_col, "l"), prep(right, right_col, "r")
-    # len >= q filters: see fuzzy_pairs — sequence(1,0) emits junk grams
-    ell, elr = lf.where(F.col("__ll__") >= qq), rf.where(F.col("__lr__") >= qq)
-
-    if guard_off:
-        # Guard OFF (hot_gram_cap=0): see fuzzy_pairs — __r__ = total
-        # occurrences, least() term folds to 0 = plain Gravano filter;
-        # complete with the gram join + the shorts buckets alone.
-        def all_ex(side_df, k, l, s):
-            return (side_df
-                    .withColumn("__r__", qcol(l) - F.lit(qq - 1))
-                    .select(k, l, "__r__",
-                            F.explode(F.expr(_grams_expr(s, qq)))
-                            .alias("gp")))
-
-        exl = all_ex(ell, "__kl__", "__ll__", "__sl__")
-        exr = all_ex(elr, "__kr__", "__lr__", "__sr__")
-    else:
-        # combined-census hot set (see docstring); same checkpoint-once
-        # discipline as fuzzy_pairs — hot and the per-string stats feed
-        # multiple branches
-        gp = (ell.select(F.col("__kl__").alias("__k__"),
-                         F.explode(F.expr(_grams_expr("__sl__", qq)))
-                         .alias("__gp__"))
-              .select("__k__", F.col("__gp__.g").alias("__g__"),
-                      F.lit("l").alias("__side__"))
-              .unionByName(
-                  elr.select(F.col("__kr__").alias("__k__"),
-                             F.explode(F.expr(_grams_expr("__sr__", qq)))
-                             .alias("__gp__"))
-                  .select("__k__", F.col("__gp__.g").alias("__g__"),
-                          F.lit("r").alias("__side__"))))
-        gfreq = gp.groupBy("__g__").agg(F.count(F.lit(1)).alias("__gc__"))
-        if hot_gram_cap is not None:
-            hot = gfreq.where(F.col("__gc__") > int(hot_gram_cap))
-        else:
-            n_ = gp.select("__side__", "__k__").distinct().agg(
-                F.count(F.lit(1)).alias("__nstr__"))
-            hot = (gfreq.crossJoin(F.broadcast(n_))
-                   .where(F.col("__gc__") > F.greatest(
-                       F.lit(64).cast("long"),
-                       F.expr("CAST(ceil(__nstr__ * 0.01) AS BIGINT)"))))
-        hot = F.broadcast(hot.select("__g__").withColumn("__hot__", F.lit(1))
-                          .localCheckpoint(eager=False))
-        stats = (gp.join(hot, on="__g__", how="left")
-                 .groupBy("__side__", "__k__")
-                 .agg(F.sum(F.when(F.col("__hot__").isNull(), 1).otherwise(0))
-                      .alias("__r__"))
-                 .localCheckpoint(eager=False))
-        stats_l = (stats.where("__side__ = 'l'")
-                   .select(F.col("__k__").alias("__kl__"), "__r__"))
-        stats_r = (stats.where("__side__ = 'r'")
-                   .select(F.col("__k__").alias("__kr__"), "__r__"))
-
-        def rare_ex(side_df, k, l, s, st):
-            return (side_df.join(st, on=k)
-                    .select(k, l, F.col("__r__"),
-                            F.explode(F.expr(_grams_expr(s, qq))).alias("gp"))
-                    .join(hot, on=[F.col("gp.g") == F.col("__g__")],
-                          how="left")
-                    .where(F.col("__hot__").isNull())
-                    .drop("__g__", "__hot__"))
-
-        exl = rare_ex(ell, "__kl__", "__ll__", "__sl__", stats_l)
-        exr = rare_ex(elr, "__kr__", "__lr__", "__sr__", stats_r)
-    grams = (exl.alias("a").join(
-                 exr.alias("b"),
-                 on=[F.col("a.gp.g") == F.col("b.gp.g"),
-                     F.abs(F.col("a.gp.p") - F.col("b.gp.p")) <= d,
-                     F.abs(F.col("__ll__") - F.col("__lr__")) <= d])
-             .groupBy("__kl__", "__kr__")
-             .agg(F.count(F.lit(1)).alias("shared"),
-                  F.first("__ll__").alias("ll"), F.first("__lr__").alias("lr"),
-                  F.first("a.__r__").alias("rl"), F.first("b.__r__").alias("rr"))
-             .where(F.col("shared") >=
-                    F.greatest(F.col("ll"), F.col("lr")) - (qq - 1) - qq * d
-                    - F.least(F.col("ll") - (qq - 1) - F.col("rl"),
-                              F.col("lr") - (qq - 1) - F.col("rr")))
-             .select("__kl__", "__kr__"))
-    if guard_off:
-        upairs = None
-    else:
-        # unsafe_left x unsafe_right corner: length-bucket equi join
-        # (the one-safe-endpoint argument covers every other pair in
-        # the rare join above)
-        ul = (ell.join(stats_l.where(F.col("__r__") < floor)
-                       .select("__kl__"), on="__kl__")
-              .select("__kl__", "__ll__"))
-        ur = (elr.join(stats_r.where(F.col("__r__") < floor)
-                       .select("__kr__"), on="__kr__")
-              .select("__kr__", "__lr__"))
-        if warn_unsafe_frac is not None:
-            # one small job over the checkpointed combined stats (one
-            # narrow row per string, both sides) — no input rescan,
-            # and the materialized checkpoint is reused by the main
-            # action
-            _warn_if_skewed(*_skew_counts(stats, floor),
-                            float(warn_unsafe_frac), "fuzzy_join")
-        upairs = (ul.withColumn("__lb__", F.explode(F.expr(
-                      f"sequence(greatest(__ll__ - {d}, {qq}), "
-                      f"__ll__ + {d})")))
-                  .join(ur, on=[F.col("__lb__") == F.col("__lr__")])
-                  .select("__kl__", "__kr__"))
-    # same explode-the-target-length equi join as fuzzy_pairs' path B
-    shorts = (lf.where(F.col("__ll__") < qq * (d + 1))
-              .select("__kl__", "__ll__")
-              .withColumn("__lb2__", F.explode(F.expr(
-                  f"sequence(greatest(__ll__ - {d}, 0), __ll__ + {d})")))
-              .join(rf.where(F.col("__lr__") < qq * (d + 1))
-                    .select("__kr__", "__lr__"),
-                    on=[F.col("__lb2__") == F.col("__lr__")])
-              .select("__kl__", "__kr__"))
-    cands = (grams.union(shorts) if upairs is None
-             else grams.union(upairs).union(shorts)).distinct()
+    lf, rf = prep(left, left_col), prep(right, right_col)
+    sides = [f.select("__k__", "__s__", "__l__") for f in (lf, rf)]
+    cands = _candidates(sides, d, int(q), hot_gram_cap, warn_unsafe_frac,
+                        "fuzzy_join", 2)
     # computed under an internal name: withColumn("dist", ...) would be
     # ambiguous if an input table already carries a 'dist' column
-    out = (cands.join(lf.alias("L"), "__kl__").join(rf.alias("R"), "__kr__")
-           .withColumn("__dist__", F.levenshtein(F.col("L.__sl__"),
-                                                 F.col("R.__sr__")))
+    out = (cands.join(lf.alias("L"), F.col("__ka__") == F.col("L.__k__"))
+           .join(rf.alias("R"), F.col("__kb__") == F.col("R.__k__"))
+           .withColumn("__dist__", F.levenshtein(F.col("L.__s__"),
+                                                 F.col("R.__s__")))
            .where(F.col("__dist__") <= d))
     lcols, rcols = set(left.df.columns), set(right.df.columns)
     # "dist" is reserved for the computed distance: an input column of
@@ -491,6 +391,6 @@ def dedup_fuzzy(odf: OmigoDF, id_col: str, col: str,
     ``warn_unsafe_frac`` pass through to the skew guard (see
     fuzzy_pairs)."""
     dup = (fuzzy_pairs(odf, id_col, col, max_dist, q, hot_gram_cap,
-                       warn_unsafe_frac, _stacklevel=4)
+                       warn_unsafe_frac, _stacklevel=3)
            .df.select(F.col("id_b").alias(id_col)).distinct())
     return OmigoDF(odf.df.join(dup, on=id_col, how="left_anti"))

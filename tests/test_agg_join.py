@@ -116,6 +116,28 @@ def test_group_by_key_applyinpandas(iris):
     assert all(int(r["n:s"]) == 50 for r in out.df.collect())
 
 
+def test_group_by_key_census_reads_no_result_rows(spark):
+    """The hot-group census reads the hottest group's size as an observed
+    metric of an eager checkpoint, so building the operator leaves no
+    result socket for the garbage collector to close."""
+    import gc
+    import warnings
+
+    def size(rows):
+        return {"n": len(rows)}
+
+    df = OmigoDF(spark.createDataFrame([("a", str(i)) for i in range(50)],
+                                       ["k", "v"]))
+    gc.collect()
+    with warnings.catch_warnings(record=True) as rec:
+        warnings.simplefilter("always")
+        df.group_by_key(["k"], ["v"], size, warn_group_rows=10)
+        gc.collect()
+    assert [w for w in rec if issubclass(w.category, UserWarning)
+            and "hottest group holds 50 rows" in str(w.message)]
+    assert not [w for w in rec if issubclass(w.category, ResourceWarning)]
+
+
 def test_joins_basic(orders, customer):
     j = orders.inner_join(customer, lkeys="o_custkey", rkeys="c_custkey")
     assert j.num_rows() == orders.num_rows()  # every order has a customer

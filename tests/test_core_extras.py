@@ -178,6 +178,20 @@ def test_sample_n_per_group_check_unique_null_reads_as_empty(spark):
         df.sample_n_per_group(["g"], 1, key_cols=["k"], check_unique=True)
 
 
+def test_sample_n_per_group_dotted_group_col(spark):
+    """A group column named ``g.x`` partitions the window by that column,
+    with the rows the same call picks on a plain name."""
+    rows = [(1, "a"), (1, "b"), (2, "c")]
+
+    def picks(g):
+        df = OmigoDF(spark.createDataFrame(rows, f"`{g}` int, k string"))
+        return sorted(tuple(r) for r in
+                      df.sample_n_per_group([g], 1, key_cols=["k"]).df.collect())
+
+    got = picks("g.x")
+    assert got == picks("gx") and len(got) == 2
+
+
 def test_sample_n_per_group_mapside_limit(spark, documents):
     d = documents.sample_n_per_group(["lang"], 2, key_cols=["doc_id"])
     p = d.df._jdf.queryExecution().executedPlan().toString()

@@ -1,4 +1,5 @@
-"""Name-resolution lint over operators/dedup.py (static, no Spark session).
+"""Name-resolution lint over operators/dedup.py and operators/fuzzy.py
+(static, no Spark session).
 
 ``F.col(name)``, ``F.expr(text)``, ``select(name)``, ``selectExpr(name)``
 and ``F.min`` / ``F.max`` of a string all PARSE the name, so a dot or a
@@ -15,8 +16,10 @@ import os
 
 import pytest
 
-DEDUP = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
-    __file__))), "omigo_data_analytics_spark", "operators", "dedup.py")
+OPERATORS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
+    __file__))), "omigo_data_analytics_spark", "operators")
+DEDUP = os.path.join(OPERATORS, "dedup.py")
+FUZZY = os.path.join(OPERATORS, "fuzzy.py")
 
 _NAME_ARG_METHODS = {"select", "selectExpr"}
 _NAME_ARG_FUNCS = {"min", "max"}
@@ -61,6 +64,13 @@ def test_dedup_resolves_every_name_safely():
     with open(DEDUP) as fh:
         bad = violations(fh.read())
     assert not bad, "operators/dedup.py parses a column name:\n" + \
+        "\n".join(bad)
+
+
+def test_fuzzy_resolves_every_name_safely():
+    with open(FUZZY) as fh:
+        bad = violations(fh.read())
+    assert not bad, "operators/fuzzy.py parses a column name:\n" + \
         "\n".join(bad)
 
 

@@ -313,6 +313,8 @@ def test_fuzzy_warn_unsafe_frac(spark):
     msgs = [str(w.message) for w in rec if issubclass(w.category, UserWarning)]
     assert any("unsafe-fraction" in m and "hot_gram_cap" in m for m in msgs)
     assert {(r["id_a"], r["id_b"], r["dist"]) for r in got} == _brute(rows, 1)
+    assert {w.filename for w in rec
+            if "unsafe-fraction" in str(w.message)} == {__file__}
 
     # dedup_fuzzy passes the dial through (one extra stack frame)
     with W.catch_warnings(record=True) as rec_d:
@@ -321,6 +323,8 @@ def test_fuzzy_warn_unsafe_frac(spark):
                        warn_unsafe_frac=0.25).df.collect()
     assert any("unsafe-fraction" in str(w.message) for w in rec_d
                if issubclass(w.category, UserWarning))
+    assert {w.filename for w in rec_d
+            if "unsafe-fraction" in str(w.message)} == {__file__}
 
     # diverse corpus: every string has plenty of rare grams -> no warning
     import random
@@ -351,8 +355,28 @@ def test_fuzzy_join_warn_unsafe_frac(spark):
                             warn_unsafe_frac=0.25).df.collect()
     msgs = [str(w.message) for w in rec if issubclass(w.category, UserWarning)]
     assert any("fuzzy_join" in m and "unsafe-fraction" in m for m in msgs)
+    assert {w.filename for w in rec
+            if "unsafe-fraction" in str(w.message)} == {__file__}
     assert ({(r["lid"], r["rid"], r["dist"]) for r in got}
             == _brute_join(lrows, rrows, 1))
+
+
+def test_fuzzy_skew_warning_reads_no_result_rows(spark):
+    """The unsafe counts are observed on the stats checkpoint's own job,
+    so the opt-in warning leaves no result socket for the garbage
+    collector to close."""
+    import gc
+    import warnings as W
+
+    rows = [(i, f"Customer#{i:06d}") for i in range(100)]
+    df = OmigoDF(spark.createDataFrame(rows, "id long, name string"))
+    gc.collect()
+    with W.catch_warnings(record=True) as rec:
+        W.simplefilter("always")
+        FZ.fuzzy_pairs(df, "id", "name", max_dist=1, warn_unsafe_frac=0.25)
+        gc.collect()
+    assert any("unsafe-fraction" in str(w.message) for w in rec)
+    assert not [w for w in rec if issubclass(w.category, ResourceWarning)]
 
 
 def test_fuzzy_pairs_unicode_codepoints(spark):

@@ -9,6 +9,7 @@ import time
 from pyspark.sql import functions as F
 
 from omigo_data_analytics_spark.core import jobs
+from omigo_data_analytics_spark.core.jobs import checkpoint_with_metrics
 
 
 def test_checkpoint_with_metrics_keep_observes_below_filter(spark):
@@ -115,3 +116,48 @@ def test_observe_async_callback_error_logged_once(spark, monkeypatch, caplog):
     recs = [r for r in caplog.records if r.name == jobs.__name__]
     assert len(recs) == 1
     assert "boom" in recs[0].getMessage() and recs[0].exc_info
+
+
+def test_checkpoint_with_metrics_matches_separate_aggregate(spark):
+    df = spark.range(1000).select((F.col("id") % 13).alias("k"),
+                                  F.col("id").alias("v"))
+    ck, m = checkpoint_with_metrics(
+        df, {"n": F.count(F.lit(1)),
+             "h": F.expr("bit_xor(xxhash64(k, v))"),
+             "cond": F.count(F.when(F.col("k") == 0, 1))})
+    row = df.agg(F.count(F.lit(1)).alias("n"),
+                 F.expr("bit_xor(xxhash64(k, v))").alias("h"),
+                 F.count(F.when(F.col("k") == 0, 1)).alias("cond")).first()
+    assert m["n"] == row["n"] == 1000
+    assert m["h"] == row["h"]
+    assert m["cond"] == row["cond"]
+    # the returned frame is materialized and reusable
+    assert ck.count() == 1000
+
+
+def test_checkpoint_with_metrics_empty_frame(spark):
+    df = spark.range(10).where("id < 0")
+    ck, m = checkpoint_with_metrics(
+        df, {"n": F.count(F.lit(1)),
+             "h": F.expr("bit_xor(xxhash64(id))")})
+    assert m["n"] == 0
+    assert m["h"] is None
+    assert ck.count() == 0
+
+
+def test_checkpoint_with_metrics_single_job(spark):
+    # the whole point: checkpoint + terminator metrics in ONE driver job
+    sc = spark.sparkContext
+
+    def _n_jobs():
+        return len(sc.statusTracker().getJobIdsForGroup(None) or [])
+
+    df = spark.range(5000).select((F.col("id") % 7).alias("g")).distinct()
+    df.count()  # warm any lazy session state
+    j0 = _n_jobs()
+    _, m = checkpoint_with_metrics(
+        spark.range(5000).select((F.col("id") % 7).alias("g")),
+        {"n": F.count(F.lit(1))})
+    # no exchange in this plan -> exactly one job for ckpt + metrics
+    assert _n_jobs() - j0 == 1
+    assert m["n"] == 5000

@@ -363,3 +363,17 @@ def test_remove_duplicate_spans_keeps_other_columns(spark, documents):
     out = DD.remove_duplicate_spans(documents, n=8).df
     assert set(documents.df.columns) | {"removed_tokens"} == set(out.columns)
     assert out.count() == documents.df.count()
+
+
+def test_connected_components_signature_rides_checkpoint(spark):
+    # long chain forces several propagation rounds through the fused
+    # observe() signature path; labels must be the component min
+    n = 8
+    rows = [(f"n{i}", f"n{i+1}") for i in range(n)]
+    cc = {r["id"]: r["cluster_id"]
+          for r in __import__(
+              "omigo_data_analytics_spark.operators.dedup",
+              fromlist=["dedup"]).connected_components(
+              OmigoDF(spark.createDataFrame(rows, ["id_a", "id_b"])),
+              max_iter=20).df.collect()}
+    assert set(cc.values()) == {"n0"} and len(cc) == n + 1

@@ -2,6 +2,8 @@
 semantics checked against hand-computed expectations on synthetic frames
 and against brute-force joins on real testdata."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -573,3 +575,176 @@ def test_merge_intervals_bucketed_rejects_bad_span(spark):
     df = spark.createDataFrame([("a", 1.0, 2.0)], "k string, s double, e double")
     with pytest.raises(ValueError, match="time_buckets_sec"):
         merge_intervals(OmigoDF(df), "k", "s", "e", time_buckets_sec=0.0)
+
+
+def test_rolling_bucketed_guard_construction_is_lazy(spark):
+    """Constructing the bucketed rolling plan must submit ZERO Spark
+    jobs (hot_key_rows=None: no census): the old time_buckets_sec-too-
+    small probe was a construct-time limit(1).count() over the full
+    input — a separate job per call whose result nothing reused."""
+    d = OmigoDF(spark.createDataFrame(
+        [("a", float(i), 1.0) for i in range(40)],
+        "k string, t double, v double"))
+    sc = spark.sparkContext
+    sc.setJobGroup("rollbuild", "r14 guard laziness probe")
+    try:
+        out = TS.rolling_aggregate(d, "k", "t", ["v"], ["sum"],
+                                   window_rows=4, tiebreak_cols=["v"],
+                                   time_buckets_sec=1.0,
+                                   hot_key_rows=None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("rollbuild"))
+    finally:
+        sc.setJobGroup(None, None)
+    assert n_jobs == 0, f"plan construction launched {n_jobs} job(s)"
+    # ...and the guard still fires at execution. BOTH actions matter:
+    # under count() column pruning collapses the windows and the
+    # __halo__==0 filter constant-folds the halo branch away, which
+    # silently pruned a guard folded into the halo join's __nxt__ (the
+    # first r14 attempt); the kept fold point is the final halo-drop
+    # filter, which no action can prune.
+    with pytest.raises(Exception, match="time_buckets_sec too small"):
+        out.df.count()
+    with pytest.raises(Exception, match="time_buckets_sec too small"):
+        out.df.collect()
+
+
+def test_rolling_bucketed_guard_ok_span_matches_plain(spark):
+    """With a span wide enough, the in-plan guard is an identity: the
+    bucketed output still equals the plain single-window plan."""
+    rows = [("a", float(i % 13), float(i % 7)) for i in range(60)]
+    d = OmigoDF(spark.createDataFrame(rows, "k string, t double, v double"))
+    kw = dict(order_col="t", agg_cols=["v"], agg_funcs=["sum"],
+              window_rows=3, tiebreak_cols=["v"])
+    plain = sorted(map(tuple, TS.rolling_aggregate(d, "k", **kw).df.collect()))
+    buck = sorted(map(tuple, TS.rolling_aggregate(
+        d, "k", time_buckets_sec=1e6, hot_key_rows=None, **kw).df.collect()))
+    assert buck == plain
+
+
+def test_merge_intervals_negative_zero_canonical(spark):
+    """An island holding both -0.0 and 0.0 bounds reports +0.0
+    deterministically — in the plain plan, in the bucketed plan, and
+    regardless of row order (parity-hunt trial 21: min/{max} returned
+    whichever IEEE-equal representative arrived first)."""
+    rows = [("a", -0.0, 5.0), ("a", 0.0, 3.0),   # island: starts {-0.0, 0.0}
+            ("b", -9.0, -0.0), ("b", -7.0, 0.0)]  # island: ends {-0.0, 0.0}
+    for order in (rows, rows[::-1]):
+        df = spark.createDataFrame(order, "k string, s double, e double")
+        for kw in ({}, {"time_buckets_sec": 17.0, "hot_key_rows": None},
+                   {"time_buckets_sec": 17.0, "hot_key_rows": 1}):
+            out = {r["k"]: r for r in
+                   TS.merge_intervals(OmigoDF(df), "k", "s", "e",
+                                      **kw).df.collect()}
+            sa = out["a"]["island_start"]
+            eb = out["b"]["island_end"]
+            assert sa == 0.0 and math.copysign(1.0, sa) > 0, \
+                f"kw={kw} island_start={sa!r} not canonical +0.0"
+            assert eb == 0.0 and math.copysign(1.0, eb) > 0, \
+                f"kw={kw} island_end={eb!r} not canonical +0.0"
+
+
+def test_merge_intervals_negative_zero_only_island(spark):
+    """A bound that is ONLY -0.0 is canonicalized to +0.0 too (the
+    contract: one representative for the IEEE-equal class), while
+    NULL / NaN / ±Inf pass through untouched."""
+    df = spark.createDataFrame(
+        [("a", -0.0, -0.0), ("n", None, float("inf"))],
+        "k string, s double, e double")
+    out = {r["k"]: r for r in
+           TS.merge_intervals(OmigoDF(df), "k", "s", "e").df.collect()}
+    sa = out["a"]["island_start"]
+    assert sa == 0.0 and math.copysign(1.0, sa) > 0
+    assert out["n"]["island_start"] is None
+    assert out["n"]["island_end"] == float("inf")
+
+
+def _wait_for_warning(record, needle, timeout=15.0):
+    import time
+    t0 = time.time()
+    while time.time() - t0 < timeout:
+        if any(needle in str(w.message) for w in record):
+            return True
+        time.sleep(0.25)
+    return False
+
+
+def test_plain_hot_key_watch_warns_with_zero_extra_jobs(spark):
+    # r13 verdict #3 via r14 verdict #5: the PLAIN ordered-carry paths
+    # warn on hot keys by riding the main action (observe), with ZERO
+    # extra jobs at construct — no eager census scan.
+    import warnings
+
+    from omigo_data_analytics_spark.operators import timeseries as TS
+    sc = spark.sparkContext
+
+    def _n_jobs():
+        return len(sc.statusTracker().getJobIdsForGroup(None) or [])
+
+    rows = [("hot", float(i)) for i in range(50)] + [("cold", 1.0)]
+    d = OmigoDF(spark.createDataFrame(rows, ["k", "t"]))
+    j0 = _n_jobs()
+    out = TS.sessionize(d, "k", "t", gap_sec=5.0, hot_key_rows=10)
+    assert _n_jobs() - j0 == 0  # construction submits no jobs
+    with warnings.catch_warnings(record=True) as rec:
+        warnings.simplefilter("always")
+        assert out.df.count() == 51
+        assert _wait_for_warning(rec, "sessionize: a key group holds 50")
+        assert any("time_buckets_sec" in str(w.message) for w in rec)
+
+
+def test_plain_hot_key_watch_quiet_below_threshold(spark):
+    import time
+    import warnings
+
+    from omigo_data_analytics_spark.operators import timeseries as TS
+    rows = [("a", float(i)) for i in range(5)]
+    d = OmigoDF(spark.createDataFrame(rows, ["k", "t"]))
+    with warnings.catch_warnings(record=True) as rec:
+        warnings.simplefilter("always")
+        out = TS.merge_intervals(
+            OmigoDF(spark.createDataFrame(
+                [("a", 0.0, 1.0), ("a", 2.0, 3.0)], ["k", "s", "e"])),
+            "k", "s", "e", hot_key_rows=10)
+        assert out.df.count() == 2
+        r = TS.rolling_aggregate(d, "k", "t", ["t"], ["sum"],
+                                 hot_key_rows=10)
+        assert r.df.count() == 5
+        time.sleep(2.0)  # give the poller time to (not) fire
+        assert not [w for w in rec if "key group" in str(w.message)]
+
+
+def test_plain_hot_key_watch_asof_and_results_unchanged(spark):
+    import warnings
+
+    from omigo_data_analytics_spark.operators import timeseries as TS
+    left = OmigoDF(spark.createDataFrame(
+        [("k", float(i)) for i in range(30)], ["k", "t"]))
+    right = OmigoDF(spark.createDataFrame(
+        [("k", float(i) + 0.5, i) for i in range(30)], ["k", "t", "v"]))
+    with warnings.catch_warnings(record=True) as rec:
+        warnings.simplefilter("always")
+        out = TS.asof_join(left, right, "k", "t", hot_key_rows=20)
+        rows = {r["t"]: r["r:v"] for r in out.df.collect()}
+        # backward as-of: t=5.0 matches right t=4.5 -> v=4
+        assert rows[5.0] == 4 and rows[0.0] is None
+        assert _wait_for_warning(rec, "asof_join: a key group holds 60")
+
+
+def _phys_nodes(df, *names):
+    import re
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return {n: len(re.findall(rf"\b{n}\b", plan)) for n in names}
+
+
+def test_plain_carries_single_sort_fused_counter(spark):
+    from omigo_data_analytics_spark.operators import timeseries as TS
+    d = OmigoDF(spark.createDataFrame(
+        [(1, float(i % 50), float(i % 50) + 5.0) for i in range(200)],
+        "k INT, s DOUBLE, e DOUBLE"))
+    sess = TS.sessionize(d, "k", "s", gap_sec=2.0).df
+    n = _phys_nodes(sess, "Sort", "WindowExec|Window")
+    assert n["Sort"] == 1, n
+    mi = TS.merge_intervals(d, "k", "s", "e").df
+    assert _phys_nodes(mi, "Sort")["Sort"] == 1
+    ra = TS.rolling_aggregate(d, "k", "s", ["e"], ["sum"], window_rows=3).df
+    assert _phys_nodes(ra, "Sort")["Sort"] == 1
