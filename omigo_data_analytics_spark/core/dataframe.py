@@ -2098,14 +2098,14 @@ class OmigoDF(CompatMixin):
         from ..operators.text import hash_spark
         gcols = self._resolve(grouping_cols)
         self._resolve(col)
-        pairs = self._df.select(*[F.col(colutils.quote(g)) for g in gcols], F.col(colutils.quote(col))).distinct()
+        pairs = self._df.select(*map(colutils.qcol, gcols), colutils.qcol(col)).distinct()
         if portable:
             pairs = pairs.withColumn("__omigo_h__", F.expr(hash_spark(
                 f"concat_ws('\\t', CAST({colutils.quote(col)} AS STRING), '{seed}')")))
             order = F.col("__omigo_h__")
         else:
-            order = abs64(F.xxhash64(F.col(col).cast("string"), F.lit(seed)))
-        w = Window.partitionBy(*gcols).orderBy(order, F.col(col))
+            order = abs64(F.xxhash64(colutils.qcol(col).cast("string"), F.lit(seed)))
+        w = Window.partitionBy(*map(colutils.qcol, gcols)).orderBy(order, colutils.qcol(col))
         keep = (pairs.withColumn("__omigo_rk__", F.row_number().over(w))
                 .filter(F.col("__omigo_rk__") <= max_uniq_values)
                 .drop("__omigo_rk__", "__omigo_h__"))
@@ -2120,10 +2120,10 @@ class OmigoDF(CompatMixin):
         broadcastable join of per-group ratios, no per-value ranking."""
         gcols = self._resolve(grouping_cols)
         self._resolve(col)
-        ratios = (self._df.groupBy(*gcols)
-                  .agg(F.countDistinct(col).alias("__omigo_nu__")))
+        ratios = (self._df.groupBy(*map(colutils.qcol, gcols))
+                  .agg(F.countDistinct(colutils.qcol(col)).alias("__omigo_nu__")))
         joined = self._df.join(ratios, on=gcols, how="left")
-        bucket = F.pmod(abs64(F.xxhash64(F.col(colutils.quote(col)).cast("string"),
+        bucket = F.pmod(abs64(F.xxhash64(colutils.qcol(col).cast("string"),
                                          F.lit(seed))), F.lit(1000000))
         keep = bucket < (F.lit(max_uniq_values * 1000000) / F.col("__omigo_nu__"))
         return self._wrap(joined.filter(F.col("__omigo_nu__").isNull() | keep)

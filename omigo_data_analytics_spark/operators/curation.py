@@ -28,9 +28,9 @@ so the DuckDB oracles reproduce every decision bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
-from ..core.colutils import qcol
+from ..core.colutils import qcol, quote
 
 from ..core.dataframe import OmigoDF, colutils
 from .text import (HASH_MOD, ensure_min_parallelism, hash_duck, hash_spark,
@@ -336,6 +336,103 @@ def leakage_safe_split(odf: OmigoDF, id_col: str = "doc_id",
                          split_col=split_col)
 
 
+# ------------------------------------------------ count-model skeleton
+# lm_score, DSIR and the naive-Bayes filter are one shape: hashed
+# features exploded over a widened corpus, per-feature count tables, an
+# in-plan empty-corpus guard, per-feature log terms rounded to BIGINT
+# micro-nats and summed per document, then every score id reattached.
+# Each decision of that shape is made here, once, with every user
+# column name quoted.
+
+# lp micro-unit scale: per-feature log-ratios round to integer
+# micro-nats and SUM as BIGINT, which commutes — so a document's
+# logweight is bit-identical at any partition count, task order, or
+# engine (the kmeans_centroids micro-unit trick; a double SUM is
+# order-dependent and at billions of documents some doc's sum WILL land
+# on a 6dp rounding boundary and flip across partitionings).
+DSIR_LP_SCALE = 1000000
+_SCALE = f"CAST({DSIR_LP_SCALE} AS DOUBLE)"
+
+
+def _micro_consts(k: float, buckets: int) -> tuple[str, str, str]:
+    """The (kd, kb, scale) SQL fragments shared by every micro-nat
+    operator (DSIR, lm_score, nb_classify) in BOTH dialects. One
+    definition on purpose: every term is forced to DOUBLE because a
+    bare ``0.5`` literal is DECIMAL(1,1) in both engines and Spark's
+    decimal division truncates at a scale costing ~1e-5 relative error
+    per feature (measured; breaks 6dp oracle parity on 100-feature
+    docs), and k*B is pre-folded in Python so the literal is the exact
+    float64 both engines then use."""
+    return (f"CAST({k} AS DOUBLE)",
+            f"CAST({float(k * buckets)!r} AS DOUBLE)",
+            _SCALE)
+
+
+def _to_micro(term: str) -> str:
+    """SQL: the DOUBLE log ``term`` rounded to BIGINT micro-nats. A pure
+    per-row expression, so engine-safe; the BIGINT sums over it commute
+    (see DSIR_LP_SCALE)."""
+    return f"CAST(ROUND({term} * {_SCALE}) AS BIGINT)"
+
+
+def _from_micro(total: str, per: str | None = None) -> str:
+    """SQL: the BIGINT micro-nat ``total`` back in nats, divided by the
+    count ``per`` when given (a per-feature mean), rounded to 6dp."""
+    per = f"CAST({per} AS DOUBLE) / " if per else ""
+    return f"ROUND(CAST({total} AS DOUBLE) / {per}{_SCALE}, 6)"
+
+
+def _feature_stream(df, feats: str, *lead):
+    """``df`` widened (text.ensure_min_parallelism), then one row per
+    element of the SQL array ``feats`` as ``f``, after the ``lead``
+    columns. Not checkpointed here: each caller lazily checkpoints
+    exactly the stream two consumers read, so its tokenize and hash
+    work runs once and no other stream pays a checkpoint job."""
+    return (ensure_min_parallelism(df)
+            .select(*lead, F.explode(F.expr(feats)).alias("f")))
+
+
+def _counts(df, name: str, *keys):
+    """The count table: rows per ``keys`` as ``name``."""
+    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias(name))
+
+
+def _positive(df, agg, name: str, msg: str):
+    """The in-plan empty-corpus guard: the 1-row scalar ``agg`` over
+    ``df`` as ``name``, raising ``msg`` at execution unless it is
+    positive (a NULL sum over an empty table raises too). Broadcast
+    into the caller's plan, so it costs no driver collect, and raises
+    like the oracle's error()."""
+    x = F.col("__x__")
+    return (df.agg(agg.alias("__x__"))
+            .select(F.when(x > 0, x).otherwise(F.raise_error(F.lit(msg)))
+                    .alias(name)))
+
+
+def _per_doc(stream, id_col: str, term: str, n_col: str, out_col: str,
+             mean: bool = False):
+    """Per id of ``stream``: its row count as ``n_col``, and the per-row
+    log ``term`` summed as BIGINT micro-nats, back in 6dp nats (the
+    per-row mean when ``mean``) as ``out_col``. Only ids with >= 1 row
+    appear."""
+    return (stream.select(qcol(id_col), F.expr(_to_micro(term)).alias("__u__"))
+            .groupBy(qcol(id_col))
+            .agg(F.count(F.lit(1)).alias(n_col),
+                 F.expr(_from_micro("SUM(__u__)", "COUNT(*)" if mean else None))
+                 .alias(out_col)))
+
+
+def _reattach(score: OmigoDF, id_col: str, per_doc, *exprs, guard=None):
+    """Every score id left-joined to its per-document aggregate, then
+    the id and the SQL ``exprs`` (internal names only). ``guard``, a
+    1-row scalar, is broadcast onto the ids first."""
+    ids = score.df.select(qcol(id_col))
+    if guard is not None:
+        ids = ids.crossJoin(F.broadcast(guard))
+    return OmigoDF(ids.join(per_doc, on=id_col, how="left")
+                   .select(qcol(id_col), *map(F.expr, exprs)))
+
+
 LM_SMOOTH_K = 0.1
 
 
@@ -395,30 +492,21 @@ def lm_score(train: OmigoDF, score: OmigoDF, id_col: str = "doc_id",
     and note a plan that is never executed never raises.
     """
     pairs = _bigram_pairs("spark", col)
-    tr = (ensure_min_parallelism(train.df)
-          .selectExpr(f"explode({pairs}) AS p")
-          .selectExpr("p.bk AS bk", "p.uk AS uk")
+    tr = (_feature_stream(train.df, pairs).select("f.*")
           .localCheckpoint(eager=False))
-    cb = tr.groupBy("bk").agg(F.count(F.lit(1)).alias("cb"))
-    cu = tr.groupBy("uk").agg(F.count(F.lit(1)).alias("cu"))
+    cb = _counts(tr, "cb", "bk")
+    cu = _counts(tr, "cu", "uk")
     # V rides IN-PLAN as a broadcast 1-row scalar (r14): the previous
     # eager .collect() was a separate full train-corpus scan job at
     # plan-construction time — the dsir_weights/_tot pattern instead
     # lets the scan run inside the main action, overlapped with the
     # other stages. The V=0 guard raises at execution (raise-parity
     # with the dsir/mix_sources guards).
-    vagg = (ensure_min_parallelism(train.df)
-            .selectExpr(f"explode({_tokens('spark', col)}) AS w")
-            .agg(F.countDistinct("w").alias("__v__")))
-    vguard = vagg.select(
-        F.when(F.col("__v__") > 0, F.col("__v__"))
-        .otherwise(F.raise_error(F.lit(
-            "lm_score: train corpus has no tokens (V=0) — the smoothing "
-            "denominator would be zero for every unseen context")))
-        .alias("__v__"))
-    sc = (ensure_min_parallelism(score.df)
-          .selectExpr(id_col, f"posexplode({pairs}) AS (pos, p)")
-          .selectExpr(id_col, "p.bk AS bk", "p.uk AS uk"))
+    v = _positive(_feature_stream(train.df, _tokens("spark", col)),
+                  F.countDistinct("f"), "__v__",
+                  "lm_score: train corpus has no tokens (V=0) — the smoothing "
+                  "denominator would be zero for every unseen context")
+    sc = _feature_stream(score.df, pairs, qcol(id_col)).select(qcol(id_col), "f.*")
     # per-pair log-probs round to BIGINT micro-nats and SUM as BIGINT
     # (commutative — the DSIR_LP_SCALE discipline): avg_logprob is
     # bit-identical at any partition count or engine; AVG over doubles
@@ -432,26 +520,16 @@ def lm_score(train: OmigoDF, score: OmigoDF, id_col: str = "doc_id",
     # kd * V: DOUBLE * int64 promotes to the same IEEE double multiply
     # the old Python-literal form compiled to (and the DuckDB oracle's
     # in-SQL kd * v.v already computes it this way)
-    kd, _, scale = _micro_consts(k, 0)
-    logp = (sc.join(cb, on="bk", how="left")
-              .join(cu, on="uk", how="left")
-              .crossJoin(F.broadcast(vguard))
-              .selectExpr(id_col,
-                          f"CAST(ROUND(ln((COALESCE(cb, 0L) + {kd}) / "
-                          f"(COALESCE(cu, 0L) + {kd} * __v__)) * {scale}) "
-                          f"AS BIGINT) AS lpu")
-              .groupBy(qcol(id_col))
-              .agg(F.count(F.lit(1)).alias("n_bigrams"),
-                   F.expr(f"ROUND(CAST(SUM(lpu) AS DOUBLE) / "
-                          f"CAST(COUNT(*) AS DOUBLE) / {scale}, 6)")
-                    .alias("avg_logprob")))
-    out = (score.df.select(qcol(id_col))
-           .join(logp, on=id_col, how="left")
-           .selectExpr(id_col,
-                       "COALESCE(n_bigrams, 0L) AS n_bigrams",
-                       "avg_logprob",
-                       "ROUND(exp(-avg_logprob), 4) AS perplexity"))
-    return OmigoDF(out)
+    kd = _micro_consts(k, 0)[0]
+    logp = _per_doc(sc.join(cb, on="bk", how="left")
+                      .join(cu, on="uk", how="left")
+                      .crossJoin(F.broadcast(v)), id_col,
+                    f"ln((COALESCE(cb, 0L) + {kd}) / "
+                    f"(COALESCE(cu, 0L) + {kd} * __v__))",
+                    "n_bigrams", "avg_logprob", mean=True)
+    return _reattach(score, id_col, logp,
+                     "COALESCE(n_bigrams, 0L) AS n_bigrams", "avg_logprob",
+                     "ROUND(exp(-avg_logprob), 4) AS perplexity")
 
 
 def lm_score_sql_duck(train_sql: str, score_sql: str, id_col: str = "doc_id",
@@ -683,62 +761,26 @@ def _dsir_feats(dialect: str, col: str, buckets: int = DSIR_BUCKETS) -> str:
     return let_duck(t, "t0", body)
 
 
-# lp micro-unit scale: per-feature log-ratios round to integer
-# micro-nats and SUM as BIGINT, which commutes — so a document's
-# logweight is bit-identical at any partition count, task order, or
-# engine (the kmeans_centroids micro-unit trick; a double SUM is
-# order-dependent and at billions of documents some doc's sum WILL land
-# on a 6dp rounding boundary and flip across partitionings).
-DSIR_LP_SCALE = 1000000
-
-
-def _micro_consts(k: float, buckets: int) -> tuple[str, str, str]:
-    """The (kd, kb, scale) SQL fragments shared by every micro-nat
-    operator (DSIR, lm_score, nb_classify) in BOTH dialects. One
-    definition on purpose: every term is forced to DOUBLE because a
-    bare ``0.5`` literal is DECIMAL(1,1) in both engines and Spark's
-    decimal division truncates at a scale costing ~1e-5 relative error
-    per feature (measured; breaks 6dp oracle parity on 100-feature
-    docs), and k*B is pre-folded in Python so the literal is the exact
-    float64 both engines then use."""
-    return (f"CAST({k} AS DOUBLE)",
-            f"CAST({float(k * buckets)!r} AS DOUBLE)",
-            f"CAST({DSIR_LP_SCALE} AS DOUBLE)")
-
-
 def _dsir_lp(target: OmigoDF, score: OmigoDF, id_col: str, col: str,
              buckets: int, k: float, source: OmigoDF | None):
     """Per-document (id, n_feats, logweight) aggregate — only documents
     with >= 1 feature appear. Shared core of dsir_weights/dsir_select."""
     feats = _dsir_feats("spark", col, buckets)
-    ct = (ensure_min_parallelism(target.df)
-          .selectExpr(f"explode({feats}) AS f")
-          .groupBy("f").agg(F.count(F.lit(1)).alias("ct")))
-    sc = (ensure_min_parallelism(score.df)
-          .selectExpr(id_col, f"explode({feats}) AS f"))
+    ct = _counts(_feature_stream(target.df, feats), "ct", "f")
+    sc = _feature_stream(score.df, feats, qcol(id_col))
     if source is None:
         # classic DSIR: q models the raw pool itself — derive the source
         # counts from the SAME exploded stream that feeds the scoring
         # join (lazy localCheckpoint, the lm_score shape), so the
         # tokenize+hash map work runs once, not twice
         sc = sc.localCheckpoint(eager=False)
-        cs = sc.groupBy("f").agg(F.count(F.lit(1)).alias("cs"))
-    else:
-        cs = (ensure_min_parallelism(source.df)
-              .selectExpr(f"explode({feats}) AS f")
-              .groupBy("f").agg(F.count(F.lit(1)).alias("cs")))
-
+    cs = _counts(sc if source is None else _feature_stream(source.df, feats),
+                 "cs", "f")
     # Totals as broadcast 1-row scalars over the B-sized count tables; a
     # tokenless corpus (NULL/0 sum) raises at execution — in-plan, like
     # mix_sources, and raise-parity with the oracle's error().
-    def _tot(counts, c, what):
-        s = counts.agg(F.sum(c).alias("__t__"))
-        return s.select(F.when(F.col("__t__") > 0, F.col("__t__"))
-                        .otherwise(F.raise_error(F.lit(
-                            f"dsir_weights: {what} corpus has no tokens — "
-                            "the bag models would be undefined")))
-                        .alias(f"__t{c}__"))
-
+    msg = ("dsir_weights: {} corpus has no tokens — "
+           "the bag models would be undefined")
     # Every arithmetic term is CAST to DOUBLE: a bare `0.5` literal is
     # DECIMAL(1,1) in BOTH engines, and Spark's decimal division
     # truncates at a scale that costs ~1e-5 relative error per feature —
@@ -748,20 +790,18 @@ def _dsir_lp(target: OmigoDF, score: OmigoDF, id_col: str, col: str,
     # double. The per-feature log-ratio is deterministic (pure
     # expression), so rounding it to BIGINT micro-nats is engine-safe,
     # and the BIGINT sum commutes (see DSIR_LP_SCALE).
-    kd, kb, scale = _micro_consts(k, buckets)
-    lpu = (f"CAST(ROUND((ln((COALESCE(ct, 0L) + {kd}) / "
-           f"(CAST(__tct__ AS DOUBLE) + {kb})) - "
-           f"ln((COALESCE(cs, 0L) + {kd}) / "
-           f"(CAST(__tcs__ AS DOUBLE) + {kb}))) * {scale}) AS BIGINT)")
-    return (sc.join(ct, on="f", how="left")
-              .join(cs, on="f", how="left")
-              .crossJoin(F.broadcast(_tot(ct, "ct", "target")))
-              .crossJoin(F.broadcast(_tot(cs, "cs", "source")))
-              .selectExpr(id_col, f"{lpu} AS __lpu__")
-              .groupBy(qcol(id_col))
-              .agg(F.count(F.lit(1)).alias("n_feats"),
-                   F.expr(f"ROUND(CAST(SUM(__lpu__) AS DOUBLE) / {scale}, 6)")
-                    .alias("logweight")))
+    kd, kb, _ = _micro_consts(k, buckets)
+    return _per_doc(
+        sc.join(ct, on="f", how="left")
+          .join(cs, on="f", how="left")
+          .crossJoin(F.broadcast(_positive(ct, F.sum("ct"), "__tct__",
+                                           msg.format("target"))))
+          .crossJoin(F.broadcast(_positive(cs, F.sum("cs"), "__tcs__",
+                                           msg.format("source")))),
+        id_col,
+        f"(ln((COALESCE(ct, 0L) + {kd}) / (CAST(__tct__ AS DOUBLE) + {kb})) - "
+        f"ln((COALESCE(cs, 0L) + {kd}) / (CAST(__tcs__ AS DOUBLE) + {kb})))",
+        "n_feats", "logweight")
 
 
 def dsir_weights(target: OmigoDF, score: OmigoDF, id_col: str = "doc_id",
@@ -803,11 +843,8 @@ def dsir_weights(target: OmigoDF, score: OmigoDF, id_col: str = "doc_id",
     data-selection method; no counterpart exists in the reference.
     """
     lp = _dsir_lp(target, score, id_col, col, buckets, k, source)
-    out = (score.df.select(qcol(id_col))
-           .join(lp, on=id_col, how="left")
-           .selectExpr(id_col, "COALESCE(n_feats, 0L) AS n_feats",
-                       "logweight"))
-    return OmigoDF(out)
+    return _reattach(score, id_col, lp,
+                     "COALESCE(n_feats, 0L) AS n_feats", "logweight")
 
 
 def dsir_select(target: OmigoDF, raw: OmigoDF, n: int,
@@ -832,11 +869,12 @@ def dsir_select(target: OmigoDF, raw: OmigoDF, n: int,
     Output: id, n_feats, logweight, sample_key for the n selected rows.
     """
     lp = _dsir_lp(target, raw, id_col, col, buckets, k, None)
-    key_str = f"concat_ws(chr(9), CAST({id_col} AS STRING), '{seed}')"
+    key_str = f"concat_ws(chr(9), CAST({quote(id_col)} AS STRING), '{seed}')"
     u = (f"(({hash_spark(key_str)}) + CAST(0.5 AS DOUBLE)) / "
          f"CAST({float(HASH_MOD)!r} AS DOUBLE)")
-    out = (lp.selectExpr(id_col, "n_feats", "logweight",
-                         f"ROUND(logweight - ln(-ln({u})), 6) AS sample_key")
+    sample_key = f"ROUND(logweight - ln(-ln({u})), 6)"
+    out = (lp.select(qcol(id_col), "n_feats", "logweight",
+                     F.expr(sample_key).alias("sample_key"))
            .orderBy(F.col("sample_key").desc(), qcol(id_col))
            .limit(n))
     return OmigoDF(out)
@@ -975,19 +1013,18 @@ def nb_classify(train: OmigoDF, score: OmigoDF, label_col: str,
     """
     train._resolve([label_col, col])
     feats = _dsir_feats("spark", col, buckets)
-    kd, kb, scale = _micro_consts(k, buckets)
+    kd, kb, _ = _micro_consts(k, buckets)
     # NULL labels raise per-row, map-side: they would otherwise flow
     # through the null-UNSAFE equi-joins as a ghost class with wrong
     # totals, and Spark's NULLS-FIRST vs DuckDB's NULLS-LAST window
     # order would diverge on its ties — loud beats subtly wrong
-    lbl = (f"CASE WHEN {label_col} IS NULL THEN CAST(raise_error("
-           f"'nb_classify: NULL label in train set') AS STRING) "
-           f"ELSE CAST({label_col} AS STRING) END")
+    label = qcol(label_col)
+    lbl = (F.when(label.isNull(), F.raise_error(F.lit(
+               "nb_classify: NULL label in train set")).cast("string"))
+           .otherwise(label.cast("string")).alias("__lbl__"))
     # no checkpoint on the train stream: cnt is its only consumer, and
     # cnt's own exchange is what tc / the lift join reuse
-    tl = (ensure_min_parallelism(train.df)
-          .selectExpr(f"{lbl} AS __lbl__", f"explode({feats}) AS f"))
-    cnt = tl.groupBy("__lbl__", "f").agg(F.count(F.lit(1)).alias("cfc"))
+    cnt = _counts(_feature_stream(train.df, feats, lbl), "cfc", "__lbl__", "f")
     if top_m is not None:
         # per-class top-m model pruning: the rank window runs over the
         # C x B count table (model-sized, never the corpus); dropped
@@ -1000,63 +1037,52 @@ def nb_classify(train: OmigoDF, score: OmigoDF, label_col: str,
     # C-row class table: per-class feature total, doc count, and the
     # per-feature/prior constants in micro-nats
     tc = cnt.groupBy("__lbl__").agg(F.sum("cfc").alias("tc"))
-    dc = (train.df.selectExpr(f"{lbl} AS __lbl__")
-          .groupBy("__lbl__").agg(F.count(F.lit(1)).alias("dcnt")))
+    dc = _counts(train.df.select(lbl), "dcnt", "__lbl__")
     dtot = dc.agg(F.sum("dcnt").alias("dtot"))
     # dc (classes with >= 1 training DOC) is the label universe; tc
     # attaches via LEFT join so a class whose docs all tokenize empty
     # keeps T_c = 0 instead of silently vanishing from the model
     cls = (dc.join(tc, on="__lbl__", how="left")
              .crossJoin(F.broadcast(dtot))
-             .selectExpr(
+             .select(
                  "__lbl__",
                  # per-feature floor term ln(k) - ln(T_c + kB)
-                 f"CAST(ROUND((ln({kd}) - "
-                 f"ln(CAST(COALESCE(tc, 0L) AS DOUBLE) + {kb}))"
-                 f" * {scale}) AS BIGINT) AS floor_u",
-                 f"CAST(ROUND(ln(CAST(dcnt AS DOUBLE) / CAST(dtot AS DOUBLE))"
-                 f" * {scale}) AS BIGINT) AS prior_u"))
-    sc = (ensure_min_parallelism(score.df)
-          .selectExpr(id_col, f"explode({feats}) AS f")
+                 F.expr(_to_micro(f"(ln({kd}) - ln(CAST(COALESCE(tc, 0L) "
+                                  f"AS DOUBLE) + {kb}))")).alias("floor_u"),
+                 F.expr(_to_micro("ln(CAST(dcnt AS DOUBLE) / "
+                                  "CAST(dtot AS DOUBLE))")).alias("prior_u")))
+    sc = (_feature_stream(score.df, feats, qcol(id_col))
           .localCheckpoint(eager=False))
-    nf = sc.groupBy(qcol(id_col)).agg(F.count(F.lit(1)).alias("__nf__"))
+    nf = _counts(sc, "__nf__", qcol(id_col))
     # matched-pair lift above the floor: ln(c_fc + k) - ln(k), micro-nats
     lift = (sc.join(cnt, on="f")
-            .selectExpr(id_col, "__lbl__",
-                        f"CAST(ROUND((ln(CAST(cfc AS DOUBLE) + {kd}) - "
-                        f"ln({kd})) * {scale}) AS BIGINT) AS __lift_u__")
+            .select(qcol(id_col), "__lbl__", F.expr(_to_micro(
+                f"(ln(CAST(cfc AS DOUBLE) + {kd}) - ln({kd}))"))
+                .alias("__lift_u__"))
             .groupBy(qcol(id_col), "__lbl__")
             .agg(F.sum("__lift_u__").alias("s1")))
     dense = (nf.crossJoin(F.broadcast(cls))
              .join(lift, on=[id_col, "__lbl__"], how="left")
-             .selectExpr(id_col, "__lbl__",
-                         "COALESCE(s1, 0L) + __nf__ * floor_u + prior_u"
-                         " AS score_u"))
-    best = (dense
-            .withColumn("__rk__", F.expr(
-                f"row_number() OVER (PARTITION BY {id_col} "
-                f"ORDER BY score_u DESC, __lbl__ ASC)"))
+             .select(qcol(id_col), "__lbl__", F.expr(
+                 "COALESCE(s1, 0L) + __nf__ * floor_u + prior_u")
+                 .alias("score_u")))
+    argmax = (Window.partitionBy(qcol(id_col))
+              .orderBy(F.col("score_u").desc(), F.col("__lbl__").asc()))
+    best = (dense.withColumn("__rk__", F.row_number().over(argmax))
             .where("__rk__ = 1")
-            .selectExpr(id_col, "__lbl__ AS label",
-                        f"ROUND(CAST(score_u AS DOUBLE) / {scale}, 6)"
-                        " AS log_joint"))
+            .select(qcol(id_col), F.col("__lbl__").alias("label"),
+                    F.expr(_from_micro("score_u")).alias("log_joint")))
     # empty-train guard on the OUTPUT path: an ungrouped aggregate is
     # 1-row even over an empty dc, so AQE's empty-relation propagation
     # cannot prune it the way it prunes a poison inside the (empty) cls
     # join tree; referencing __c__ in the projection forces evaluation
-    guard = (dc.agg(F.count(F.lit(1)).alias("__c__"))
-             .select(F.when(F.col("__c__") > 0, F.col("__c__"))
-                     .otherwise(F.raise_error(F.lit(
-                         "nb_classify: train set has no documents — "
-                         "no classes to score against")))
-                     .alias("__c__")))
-    out = (score.df.select(qcol(id_col))
-           .crossJoin(F.broadcast(guard))
-           .join(best, on=id_col, how="left")
-           .selectExpr(id_col,
-                       "CASE WHEN __c__ > 0 THEN label END AS label",
-                       "CASE WHEN __c__ > 0 THEN log_joint END AS log_joint"))
-    return OmigoDF(out)
+    guard = _positive(dc, F.count(F.lit(1)), "__c__",
+                      "nb_classify: train set has no documents — "
+                      "no classes to score against")
+    return _reattach(score, id_col, best,
+                     "CASE WHEN __c__ > 0 THEN label END AS label",
+                     "CASE WHEN __c__ > 0 THEN log_joint END AS log_joint",
+                     guard=guard)
 
 
 def nb_classify_sql_duck(train_sql: str, score_sql: str, label_col: str,

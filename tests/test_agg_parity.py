@@ -65,3 +65,15 @@ def test_registry_matches_reference_bodies(spark, seed):
         norm = next(n for c, _, n in CASES if c == name)
         got = norm(got_rows[key][f"v:{name}"])
         assert got == exp, (key, got, exp)
+
+
+def test_minmax_int_aggs_nonfinite_null_not_crash(spark):
+    """minint/maxint on NaN/Inf/1e308: the second cast step is try_cast
+    now — one corrupt cell must not kill the whole aggregation job."""
+    rows = [("g", "1.5"), ("g", "nan"), ("g", "inf"), ("g", "1e308"),
+            ("g", "7.2")]
+    d = OmigoDF(spark.createDataFrame(rows, "k string, v string"))
+    r = d.aggregate(["k"], ["v", "v", "v"],
+                    ["minint", "maxint", "get_range_int"]).df.collect()[0]
+    assert r["v:minint"] == 1 and r["v:maxint"] == 7
+    assert r["v:get_range_int"] == 6

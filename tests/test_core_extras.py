@@ -192,6 +192,29 @@ def test_sample_n_per_group_dotted_group_col(spark):
     assert got == picks("gx") and len(got) == 2
 
 
+def test_sample_group_by_max_uniq_values_dotted_cols(spark):
+    """Group and value columns named ``g.x`` and ``v.y`` are plain names in
+    the exact sampler (both orderings) and the approximate one: each
+    keeps the rows the same call keeps on plain names."""
+    rows = [(1, "a"), (1, "b"), (2, "c")]
+
+    def kept(g, v, call):
+        df = OmigoDF(spark.createDataFrame(rows, f"`{g}` int, `{v}` string"))
+        return sorted(tuple(r) for r in call(df, g, v).df.collect())
+
+    calls = {
+        "exact": lambda d, g, v: d.sample_group_by_max_uniq_values_exact(
+            [g], v, 1),
+        "exact_xxhash": lambda d, g, v: d.sample_group_by_max_uniq_values_exact(
+            [g], v, 1, portable=False),
+        "approx": lambda d, g, v: d.sample_group_by_max_uniq_values_approx(
+            [g], v, 1),
+    }
+    for name, call in calls.items():
+        got = kept("g.x", "v.y", call)
+        assert got == kept("gx", "vy", call) and got, name
+
+
 def test_sample_n_per_group_mapside_limit(spark, documents):
     d = documents.sample_n_per_group(["lang"], 2, key_cols=["doc_id"])
     p = d.df._jdf.queryExecution().executedPlan().toString()
@@ -255,3 +278,37 @@ def test_add_seq_num_stable_on_nondeterministic_upstream(spark):
     out = base.add_seq_num("sno")
     nums = sorted(r["sno"] for r in out.df.select("sno").collect())
     assert nums == list(range(1, len(nums) + 1))
+
+
+def test_split_str_pinned_width(spark):
+    """width= pins the part-column schema independent of the data (and
+    skips the width-discovery job); empty input keeps the columns."""
+    d = OmigoDF(spark.createDataFrame([("a,b",), ("c",)], "v string"))
+    out = d.split_str("v", prefix="p", width=3).df
+    assert [c for c in out.columns if c.startswith("p:")] == \
+        ["p:1", "p:2", "p:3"]
+    got = {tuple(r) for r in out.select("p:1", "p:2", "p:3").collect()}
+    assert got == {("a", "b", ""), ("c", "", "")}
+    e = OmigoDF(spark.createDataFrame([], "v string"))
+    assert "p:2" in e.split_str("v", prefix="p", width=2).df.columns
+
+
+def test_reverse_transpose_pinned_values(spark):
+    """key_values= pins pivot columns: no distinct-discovery job, stable
+    schema on empty/filtered input, absent keys come back NULL."""
+    d = OmigoDF(spark.createDataFrame(
+        [("g1", "en", 5), ("g1", "fr", 7)], "g string, k string, n long"))
+    out = d.reverse_transpose(["g"], "k", ["n"], key_values=["en", "fr", "zh"]).df
+    assert sorted(out.columns) == ["g", "n:k:en", "n:k:fr", "n:k:zh"]
+    r = out.collect()[0]
+    assert r["n:k:en"] == 5 and r["n:k:zh"] is None
+    e = OmigoDF(spark.createDataFrame([], "g string, k string, n long"))
+    oute = e.reverse_transpose(["g"], "k", ["n"], key_values=["en"]).df
+    assert sorted(oute.columns) == ["g", "n:k:en"] and oute.count() == 0
+    # and the pinned plan really skips the distinct-values job: the
+    # unpinned path must run >= 1 extra job to discover columns
+    sc = spark.sparkContext
+    t0 = sc.statusTracker().getJobIdsForGroup(None)
+    _ = d.reverse_transpose(["g"], "k", ["n"], key_values=["en", "fr"]).df.schema
+    jobs_pinned = len(spark.sparkContext.statusTracker().getJobIdsForGroup(None) or []) - len(t0 or [])
+    assert jobs_pinned == 0  # schema known without touching the data

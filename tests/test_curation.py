@@ -809,6 +809,97 @@ def test_nb_classify_null_label_raises_both_engines(spark):
         con.execute(CU.nb_classify_sql_duck("trn", "scn", "quality")).fetchall()
 
 
+
+# ---------------------------------------------- count-model scorers
+# A 60-row corpus on a 12-word vocabulary: 2-10 tokens and one of three
+# labels per document. lm_score, DSIR and nb_classify share one skeleton
+# in curation.py; these pin what every caller of it must keep.
+_CM_WORDS = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta",
+             "theta", "iota", "kappa", "lam", "mu"]
+_CM_ROWS = [(i, " ".join(_CM_WORDS[(i * j * 7 + j) % 12]
+                         for j in range(2 + i % 9)),
+             ["en", "fr", "de"][i % 3]) for i in range(60)]
+
+_CM_CALLS = {
+    "lm_score": lambda d, i, lab: CU.lm_score(d, d, id_col=i),
+    "dsir_weights": lambda d, i, lab: CU.dsir_weights(d, d, id_col=i),
+    "dsir_weights_source": lambda d, i, lab: CU.dsir_weights(
+        d, d, id_col=i, source=d),
+    "dsir_select": lambda d, i, lab: CU.dsir_select(d, d, 5, id_col=i),
+    "nb_classify": lambda d, i, lab: CU.nb_classify(d, d, lab, id_col=i),
+    "nb_classify_top_m": lambda d, i, lab: CU.nb_classify(
+        d, d, lab, id_col=i, top_m=4),
+}
+
+
+def _cm_frame(spark):
+    return spark.createDataFrame(_CM_ROWS,
+                                 "doc_id long, text string, lang string")
+
+
+@pytest.mark.parametrize("name", ["doc.id", "doc`id"])
+def test_count_model_scorers_hostile_names(spark, name):
+    """A dot or backtick in id_col, and a dot in label_col, are plain
+    column names in every count-model scorer: each returns the rows of
+    the same call on a doc_id / lang frame."""
+    plain = _cm_frame(spark)
+    hostile = OmigoDF(plain.withColumnRenamed("doc_id", name)
+                      .withColumnRenamed("lang", "la.ng"))
+    for op, call in _CM_CALLS.items():
+        want = sorted(map(tuple, call(OmigoDF(plain), "doc_id",
+                                      "lang").df.collect()), key=repr)
+        assert want, op
+        got = sorted(map(tuple, call(hostile, name, "la.ng").df.collect()),
+                     key=repr)
+        assert got == want, op
+
+
+# The family's deterministic cost layer: Spark jobs submitted while each
+# call is constructed, and by one collect() of its result, on the corpus
+# above. The counts are the same at local[2], local[4] and local[8]. A
+# change that adds or removes a checkpoint or a job must say so and
+# update the table.
+_CM_JOBS = {
+    "lm_score": (0, 12),
+    "dsir_weights": (0, 15),
+    "dsir_weights_source": (0, 11),
+    "dsir_select": (0, 13),
+    "nb_classify": (0, 18),
+    "nb_classify_top_m": (0, 17),
+}
+
+
+def _jobs_in_group(spark, fn):
+    """(fn(), number of Spark jobs fn submitted), counted through a job
+    group of its own. Status-tracker updates arrive from the listener
+    bus, so the count is read until two reads agree."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count-model job-count pin")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    n, prev = -1, None
+    while n != prev:
+        prev = n
+        time.sleep(0.2)
+        n = len(sc.statusTracker().getJobIdsForGroup(group) or [])
+    return out, n
+
+
+@pytest.mark.parametrize("call", sorted(_CM_JOBS))
+def test_count_model_job_count_pins(spark, call):
+    d = OmigoDF(_cm_frame(spark))
+    out, construct = _jobs_in_group(
+        spark, lambda: _CM_CALLS[call](d, "doc_id", "lang"))
+    _, collect = _jobs_in_group(spark, out.df.collect)
+    assert (construct, collect) == _CM_JOBS[call]
+
+
 def test_decontaminate_semantic_clustered_pretrained_centroids(spark):
     """The centroids passthrough (semdedup convention): a pre-trained
     quantizer must reproduce the in-query-trained result exactly and

@@ -1,5 +1,5 @@
-"""Name-resolution lint over operators/dedup.py and operators/fuzzy.py
-(static, no Spark session).
+"""Name-resolution lint over operators/dedup.py, operators/fuzzy.py and
+operators/curation.py (static, no Spark session).
 
 ``F.col(name)``, ``F.expr(text)``, ``select(name)``, ``selectExpr(name)``
 and ``F.min`` / ``F.max`` of a string all PARSE the name, so a dot or a
@@ -20,6 +20,7 @@ OPERATORS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
     __file__))), "omigo_data_analytics_spark", "operators")
 DEDUP = os.path.join(OPERATORS, "dedup.py")
 FUZZY = os.path.join(OPERATORS, "fuzzy.py")
+CURATION = os.path.join(OPERATORS, "curation.py")
 
 _NAME_ARG_METHODS = {"select", "selectExpr"}
 _NAME_ARG_FUNCS = {"min", "max"}
@@ -71,6 +72,13 @@ def test_fuzzy_resolves_every_name_safely():
     with open(FUZZY) as fh:
         bad = violations(fh.read())
     assert not bad, "operators/fuzzy.py parses a column name:\n" + \
+        "\n".join(bad)
+
+
+def test_curation_resolves_every_name_safely():
+    with open(CURATION) as fh:
+        bad = violations(fh.read())
+    assert not bad, "operators/curation.py parses a column name:\n" + \
         "\n".join(bad)
 
 

@@ -200,3 +200,11 @@ def test_enrich_hostile_input_names(spark):
             got = {r["id"]: r["p:response"] for r in ws.df.collect()}
             assert got == {1: "echo:http://x/a", 2: "echo:http://x/",
                            3: "echo:http://x/a"}, (name, dedup)
+
+
+def test_ws_placeholder_null_substitutes_empty(spark):
+    """NULL cells substitute as '' in templates (reference TSV model) —
+    literal 'None' must never leak into a request URL."""
+    from omigo_data_analytics_spark.operators.enrich import _resolve
+    assert _resolve("http://svc/{a}?q={b}", {"a": None, "b": 7}) == \
+        "http://svc/?q=7"

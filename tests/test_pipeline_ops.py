@@ -377,3 +377,38 @@ def test_connected_components_signature_rides_checkpoint(spark):
               OmigoDF(spark.createDataFrame(rows, ["id_a", "id_b"])),
               max_iter=20).df.collect()}
     assert set(cc.values()) == {"n0"} and len(cc) == n + 1
+
+
+def test_profile_exact_total_on_empty(spark):
+    """profile(exact=True) on an empty table still emits one row per
+    column with zero counts (schema-independent row set)."""
+    e = OmigoDF(spark.createDataFrame([], "a string, b long"))
+    rows = {r["column"]: r for r in e.profile(exact=True).df.collect()}
+    assert set(rows) == {"a", "b"}
+    assert rows["a"]["n_rows"] == 0 and rows["a"]["n_distinct"] == 0
+    assert rows["b"]["min_str"] is None
+    # non-empty parity with the approx path's row set
+    d = OmigoDF(spark.createDataFrame([("x", 1), (None, 2)], "a string, b long"))
+    got = {r["column"]: r for r in d.profile(exact=True).df.collect()}
+    assert got["a"]["n_rows"] == 2 and got["a"]["n_null"] == 1
+    assert got["a"]["n_distinct"] == 1 and got["b"]["n_distinct"] == 2
+
+
+def test_normalize_null_values_score_null(spark):
+    """NULL x (or junk via try_cast) must yield a NULL score, not the
+    constant-group 0.0/0.5 fallback; NULL group keys (no stats match
+    via the left join) likewise."""
+    rows = [("A", "10"), ("A", "20"), ("A", None), ("A", "junk"),
+            (None, "30")]
+    d = OmigoDF(spark.createDataFrame(rows, "g string, v string"))
+    z = {(r["g"], r["v"]): r["v:norm"] for r in
+         d.normalize(["v"], method="zscore", group_cols=["g"]).df.collect()}
+    assert z[("A", None)] is None and z[("A", "junk")] is None
+    assert z[(None, "30")] is None          # NULL group: no stats row
+    assert z[("A", "10")] is not None
+    mm = {(r["g"], r["v"]): r["v:norm"] for r in
+          d.normalize(["v"], method="minmax", group_cols=["g"]).df.collect()}
+    assert mm[("A", None)] is None and mm[(None, "30")] is None
+    assert mm[("A", "10")] == 0.0 and mm[("A", "20")] == 1.0
+    # row preservation: no row is dropped
+    assert d.normalize(["v"], group_cols=["g"]).df.count() == 5

@@ -748,3 +748,59 @@ def test_plain_carries_single_sort_fused_counter(spark):
     assert _phys_nodes(mi, "Sort")["Sort"] == 1
     ra = TS.rolling_aggregate(d, "k", "s", ["e"], ["sum"], window_rows=3).df
     assert _phys_nodes(ra, "Sort")["Sort"] == 1
+
+
+def _mk(spark, rows, schema):
+    return OmigoDF(spark.createDataFrame(rows, schema))
+
+
+def test_asof_null_payload_cell_not_backfilled(spark):
+    """Winning right row carries a NULL cell -> output keeps it NULL
+    (torn-row advice fix). Earlier right row has a non-NULL value in
+    that column; the old per-column carry leaked it through."""
+    left = _mk(spark, [("k", 10.0)], "k string, t double")
+    right = _mk(spark, [("k", 1.0, "old_a", "old_b"),
+                        ("k", 5.0, None, "new_b")],
+                "k string, t double, a string, b string")
+    out = TS.asof_join(left, right, on="k", left_time="t",
+                       suffix="q").df.collect()[0]
+    assert out["q:b"] == "new_b"     # winning row's non-NULL cell
+    assert out["q:a"] is None        # winning row's NULL cell stays NULL
+    assert out["q:t"] == 5.0
+
+
+def test_asof_null_payload_atomic_under_tiebreak(spark):
+    """Same torn-row hazard at EQUAL times with tiebreak_cols: the
+    max-tiebreak row wins as a whole row, NULL cells included."""
+    left = _mk(spark, [("k", 10.0)], "k string, t double")
+    right = _mk(spark, [("k", 5.0, 1, "lo"),
+                        ("k", 5.0, 2, None)],
+                "k string, t double, seq int, v string")
+    out = TS.asof_join(left, right, on="k", left_time="t",
+                       suffix="q", tiebreak_cols=["seq"]).df.collect()[0]
+    assert out["q:seq"] == 2
+    assert out["q:v"] is None        # the winner's NULL, not 'lo'
+
+
+def test_asof_nearest_null_payload_atomic(spark):
+    """direction='nearest' picks one whole row per direction too."""
+    left = _mk(spark, [("k", 10.0)], "k string, t double")
+    # forward match (t=11) is nearer than backward (t=1); its NULL cell
+    # must survive, not fall back to the backward row's value
+    right = _mk(spark, [("k", 1.0, "b_val", "x"),
+                        ("k", 11.0, None, "y")],
+                "k string, t double, a string, b string")
+    out = TS.asof_join(left, right, on="k", left_time="t",
+                       direction="nearest", suffix="q").df.collect()[0]
+    assert out["q:b"] == "y"
+    assert out["q:a"] is None
+
+
+def test_asof_empty_right_payload_returns_left(spark):
+    """Right side with only the key column: nothing to carry, left
+    comes back unchanged (degenerate guard on the struct carry)."""
+    left = _mk(spark, [("k", 1.0), ("z", 2.0)], "k string, t double")
+    right = _mk(spark, [("k",)], "k string")
+    out = TS.asof_join(left, right, on="k", left_time="t").df
+    assert sorted(out.columns) == ["k", "t"]
+    assert out.count() == 2
