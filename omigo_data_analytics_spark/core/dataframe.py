@@ -2136,12 +2136,12 @@ class OmigoDF(CompatMixin):
         """Global distinct-value cap (reference dataframe.py:3278-3297):
         sample the distinct values, semi-join rows back."""
         self._resolve(col)
-        vals = self._df.select(col).distinct()
+        vals = self._df.select(colutils.qcol(col)).distinct()
         # distributed top-K (TakeOrderedAndProject: K per partition, merged),
         # not a global row_number window over all distinct values
-        keep = vals.orderBy(abs64(F.xxhash64(F.col(col).cast("string"),
+        keep = vals.orderBy(abs64(F.xxhash64(colutils.qcol(col).cast("string"),
                                              F.lit(seed))),
-                            F.col(colutils.quote(col))).limit(max_uniq_values)
+                            colutils.qcol(col)).limit(max_uniq_values)
         return self._wrap(self._df.join(keep, on=[col], how="left_semi"))
 
     # ------------------------------------------------- existence filters

@@ -475,8 +475,8 @@ def lm_score(train: OmigoDF, score: OmigoDF, id_col: str = "doc_id",
     counts are two partial-agg shuffles over the SAME checkpointed train
     stream and are vocabulary-sized, so at 100 TB AQE typically
     broadcasts them to the score-side joins; the per-document average is
-    one final shuffle on id. V is the one scalar driver value (exact
-    distinct over tokens). Unseen bigrams/contexts hit the smoothing
+    one final shuffle on id. V (exact distinct over tokens) is a 1-row
+    in-plan scalar. Unseen bigrams/contexts hit the smoothing
     floor via left joins — no lookup misses, no UDFs anywhere.
 
     Output: one row per score row — id, n_bigrams, avg_logprob (6dp),
@@ -496,30 +496,17 @@ def lm_score(train: OmigoDF, score: OmigoDF, id_col: str = "doc_id",
           .localCheckpoint(eager=False))
     cb = _counts(tr, "cb", "bk")
     cu = _counts(tr, "cu", "uk")
-    # V rides IN-PLAN as a broadcast 1-row scalar (r14): the previous
-    # eager .collect() was a separate full train-corpus scan job at
-    # plan-construction time — the dsir_weights/_tot pattern instead
-    # lets the scan run inside the main action, overlapped with the
-    # other stages. The V=0 guard raises at execution (raise-parity
-    # with the dsir/mix_sources guards).
+    # V rides in-plan as a broadcast 1-row scalar, so its train scan
+    # runs inside the main action instead of as a separate eager job
     v = _positive(_feature_stream(train.df, _tokens("spark", col)),
                   F.countDistinct("f"), "__v__",
                   "lm_score: train corpus has no tokens (V=0) — the smoothing "
                   "denominator would be zero for every unseen context")
     sc = _feature_stream(score.df, pairs, qcol(id_col)).select(qcol(id_col), "f.*")
-    # per-pair log-probs round to BIGINT micro-nats and SUM as BIGINT
-    # (commutative — the DSIR_LP_SCALE discipline): avg_logprob is
-    # bit-identical at any partition count or engine; AVG over doubles
-    # was order-dependent, with per-doc 6dp-boundary flips invisible at
-    # test scale but near-certain across billions of documents.
-    # kd (CAST(k AS DOUBLE)) everywhere a bare {k} literal would parse
-    # as DECIMAL — the exact truncation hazard _micro_consts documents
-    # as measured to break 6dp parity for DSIR (r8 advice): parity must
-    # rest on IEEE doubles, not on the engines' decimal semantics
-    # happening to agree at test scale.
-    # kd * V: DOUBLE * int64 promotes to the same IEEE double multiply
-    # the old Python-literal form compiled to (and the DuckDB oracle's
-    # in-SQL kd * v.v already computes it this way)
+    # per-pair log-probs summed as BIGINT micro-nats (see DSIR_LP_SCALE),
+    # so avg_logprob is bit-identical at any partition count or engine;
+    # kd * V: DOUBLE * int64 is the same IEEE double multiply as the
+    # DuckDB oracle's in-SQL kd * v.v
     kd = _micro_consts(k, 0)[0]
     logp = _per_doc(sc.join(cb, on="bk", how="left")
                       .join(cu, on="uk", how="left")
@@ -777,19 +764,11 @@ def _dsir_lp(target: OmigoDF, score: OmigoDF, id_col: str, col: str,
     cs = _counts(sc if source is None else _feature_stream(source.df, feats),
                  "cs", "f")
     # Totals as broadcast 1-row scalars over the B-sized count tables; a
-    # tokenless corpus (NULL/0 sum) raises at execution — in-plan, like
-    # mix_sources, and raise-parity with the oracle's error().
+    # tokenless corpus (NULL/0 sum) raises at execution, like the
+    # oracle's error(). T + k*B is exact in float64 (T is an exact
+    # BIGINT), so the oracle's in-SQL (T + k*B) is the identical double.
     msg = ("dsir_weights: {} corpus has no tokens — "
            "the bag models would be undefined")
-    # Every arithmetic term is CAST to DOUBLE: a bare `0.5` literal is
-    # DECIMAL(1,1) in BOTH engines, and Spark's decimal division
-    # truncates at a scale that costs ~1e-5 relative error per feature —
-    # enough to break 6dp oracle parity on 100-feature documents
-    # (measured, not theoretical). T + k*B is exact in float64 (T is an
-    # exact BIGINT), so the oracle's in-SQL (T + k*B) is the identical
-    # double. The per-feature log-ratio is deterministic (pure
-    # expression), so rounding it to BIGINT micro-nats is engine-safe,
-    # and the BIGINT sum commutes (see DSIR_LP_SCALE).
     kd, kb, _ = _micro_consts(k, buckets)
     return _per_doc(
         sc.join(ct, on="f", how="left")

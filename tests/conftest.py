@@ -25,6 +25,33 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def jobs_in_group(spark):
+    """fn -> (fn(), number of Spark jobs fn submitted), counted through a
+    job group of its own: the job-count pins. Status-tracker updates
+    arrive from the listener bus, so the count is read until two reads
+    agree."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"pin-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job-count pin")
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        n, prev = -1, None
+        while n != prev:
+            prev = n
+            time.sleep(0.2)
+            n = len(sc.statusTracker().getJobIdsForGroup(group) or [])
+        return out, n
+    return run
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
 

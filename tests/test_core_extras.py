@@ -194,8 +194,9 @@ def test_sample_n_per_group_dotted_group_col(spark):
 
 def test_sample_group_by_max_uniq_values_dotted_cols(spark):
     """Group and value columns named ``g.x`` and ``v.y`` are plain names in
-    the exact sampler (both orderings) and the approximate one: each
-    keeps the rows the same call keeps on plain names."""
+    the exact sampler (both orderings), the approximate one and the
+    global distinct-value cap: each keeps the rows the same call keeps
+    on plain names."""
     rows = [(1, "a"), (1, "b"), (2, "c")]
 
     def kept(g, v, call):
@@ -209,6 +210,7 @@ def test_sample_group_by_max_uniq_values_dotted_cols(spark):
             [g], v, 1, portable=False),
         "approx": lambda d, g, v: d.sample_group_by_max_uniq_values_approx(
             [g], v, 1),
+        "column": lambda d, g, v: d.sample_column_by_max_uniq_values(v, 1),
     }
     for name, call in calls.items():
         got = kept("g.x", "v.y", call)

@@ -809,7 +809,6 @@ def test_nb_classify_null_label_raises_both_engines(spark):
         con.execute(CU.nb_classify_sql_duck("trn", "scn", "quality")).fetchall()
 
 
-
 # ---------------------------------------------- count-model scorers
 # A 60-row corpus on a 12-word vocabulary: 2-10 tokens and one of three
 # labels per document. lm_score, DSIR and nb_classify share one skeleton
@@ -869,34 +868,12 @@ _CM_JOBS = {
 }
 
 
-def _jobs_in_group(spark, fn):
-    """(fn(), number of Spark jobs fn submitted), counted through a job
-    group of its own. Status-tracker updates arrive from the listener
-    bus, so the count is read until two reads agree."""
-    import time
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"pin-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "count-model job-count pin")
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    n, prev = -1, None
-    while n != prev:
-        prev = n
-        time.sleep(0.2)
-        n = len(sc.statusTracker().getJobIdsForGroup(group) or [])
-    return out, n
-
-
 @pytest.mark.parametrize("call", sorted(_CM_JOBS))
-def test_count_model_job_count_pins(spark, call):
+def test_count_model_job_count_pins(spark, jobs_in_group, call):
     d = OmigoDF(_cm_frame(spark))
-    out, construct = _jobs_in_group(
-        spark, lambda: _CM_CALLS[call](d, "doc_id", "lang"))
-    _, collect = _jobs_in_group(spark, out.df.collect)
+    out, construct = jobs_in_group(
+        lambda: _CM_CALLS[call](d, "doc_id", "lang"))
+    _, collect = jobs_in_group(out.df.collect)
     assert (construct, collect) == _CM_JOBS[call]
 
 

@@ -373,36 +373,14 @@ _PIN_JOBS = {
 }
 
 
-def _jobs_in_group(spark, fn):
-    """(fn(), number of Spark jobs fn submitted), counted through a job
-    group of its own. Status-tracker updates arrive from the listener
-    bus, so the count is read until two reads agree."""
-    import time
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"pin-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "graph job-count pin")
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    n, prev = -1, None
-    while n != prev:
-        prev = n
-        time.sleep(0.2)
-        n = len(sc.statusTracker().getJobIdsForGroup(group) or [])
-    return out, n
-
-
 @pytest.mark.parametrize("call,enc", sorted(_PIN_JOBS),
                          ids=[f"{c}-{'enc' if e else 'plain'}"
                               for c, e in sorted(_PIN_JOBS)])
-def test_graph_job_count_pins(spark, call, enc):
+def test_graph_job_count_pins(spark, jobs_in_group, call, enc):
     e = OmigoDF(spark.createDataFrame(_PIN_EDGES, "src string, dst string, "
                                                   "ts int"))
-    out, construct = _jobs_in_group(spark, lambda: _PIN_CALLS[call](e, enc))
-    _, collect = _jobs_in_group(spark, out.df.collect)
+    out, construct = jobs_in_group(lambda: _PIN_CALLS[call](e, enc))
+    _, collect = jobs_in_group(out.df.collect)
     assert (construct, collect) == _PIN_JOBS[(call, enc)]
 
 
