@@ -55,6 +55,48 @@ def abs64(c: Column) -> Column:
             .otherwise(F.abs(c)))
 
 
+# The sampler skeleton: the seeded row key, its hash and hash bucket, and
+# the per-group rank ≤ k. Portable hashes are replayed byte for byte by the
+# DuckDB oracles, so each sampler keeps its own hash choice and seed place.
+_BUCKETS = 1000000
+
+
+def _row_key(cols: list[str], seed=None) -> str:
+    """SQL text of the row key: each column as a string (NULL reads as
+    ''), tab-joined, then the seed when one is given."""
+    parts = [f"coalesce(CAST({colutils.quote(c)} AS STRING), '')" for c in cols]
+    if seed is not None:
+        parts.append(f"'{seed}'")
+    return f"concat_ws('\\t', {', '.join(parts)})"
+
+
+def _hash(key: str, portable: bool = True, salt=None) -> Column:
+    """Non-negative 64-bit hash of the SQL expression ``key``: the portable
+    md5-polynomial (``text.hash_spark``), or ``abs64(xxhash64(key[,
+    salt]))``. Only xxhash64 takes a ``salt``; portable keys carry the
+    seed inside."""
+    from ..operators.text import hash_spark
+    if portable:
+        return F.expr(hash_spark(key))
+    return abs64(F.xxhash64(F.expr(key), *([] if salt is None else [F.lit(salt)])))
+
+
+def _bucket(key: str, portable: bool = True, salt=None, n: int = _BUCKETS) -> Column:
+    """``pmod(_hash(key), n)``: the hash bucket a sampler compares with a
+    threshold (or, with ``n`` batches, the batch id)."""
+    return F.pmod(_hash(key, portable, salt), F.lit(n))
+
+
+def _top_k_per_group(df: DataFrame, by: list[str], order: list[Column],
+                     k: int) -> DataFrame:
+    """Rows ranked ≤ k within each ``by`` group under ``order``. The
+    row_number + filter shape plans as WindowGroupLimit: every map task
+    pre-limits its local top-k per group before the exchange."""
+    w = Window.partitionBy(*map(colutils.qcol, by)).orderBy(*order)
+    return (df.withColumn("__omigo_rn__", F.row_number().over(w))
+            .filter(F.col("__omigo_rn__") <= k).drop("__omigo_rn__"))
+
+
 def _is_numeric_type(dt: T.DataType) -> bool:
     return isinstance(dt, T.NumericType)
 
@@ -1767,33 +1809,20 @@ class OmigoDF(CompatMixin):
         key, no per-row RNG, no shuffle. Default is the portable
         md5-polynomial bucket (reproducible cross-engine, like the
         reference's seeded mmh3); ``portable=False`` uses xxhash64."""
-        from ..operators.text import hash_spark
-        gcols = self._resolve(grouping_cols)
-        key = F.concat_ws("\t", *[
-            F.coalesce(F.col(colutils.quote(c)).cast("string"), F.lit(""))
-            for c in gcols], F.lit(str(seed)))
-        if portable:
-            bucket = F.pmod(F.expr(hash_spark("__sgbk__")), F.lit(1000000))
-            out = (self._df.withColumn("__sgbk__", key)
-                   .filter(bucket < int(sampling_ratio * 1000000)).drop("__sgbk__"))
-            return self._wrap(out)
-        bucket = F.pmod(abs64(F.xxhash64(key)), F.lit(1000000))
-        return self._wrap(self._df.filter(bucket < int(sampling_ratio * 1000000)))
+        bucket = _bucket(_row_key(self._resolve(grouping_cols), seed), portable)
+        return self._wrap(self._df.filter(bucket < int(sampling_ratio * _BUCKETS)))
 
     def sample_class_by_max_values(self, col: str, max_rows: int, seed: int = 0) -> "OmigoDF":
         """Cap rows per class (reference dataframe.py:3314-3325)."""
         self._resolve(col)
-        w = Window.partitionBy(F.col(colutils.quote(col))).orderBy(F.rand(seed))
-        tmp = "__omigo_rn__"
-        return self._wrap(
-            self._df.withColumn(tmp, F.row_number().over(w)).filter(F.col(tmp) <= max_rows).drop(tmp))
+        return self._wrap(_top_k_per_group(self._df, [col], [F.rand(seed)], max_rows))
 
     def sample_class_by_min_class_count(self, col: str, seed: int = 0) -> "OmigoDF":
         """Balance all classes to the minority count (reference
         dataframe.py:3299-3312). The min count is a scalar aggregate
         (driver-safe at any scale)."""
         self._resolve(col)
-        min_cnt = (self._df.groupBy(col).agg(F.count(F.lit(1)).alias("c"))
+        min_cnt = (self._df.groupBy(colutils.qcol(col)).agg(F.count(F.lit(1)).alias("c"))
                    .agg(F.min("c")).first()[0])
         return self.sample_class_by_max_values(col, int(min_cnt or 0), seed)
 
@@ -1812,10 +1841,7 @@ class OmigoDF(CompatMixin):
         order = [s.desc() if reverse else s.asc()]
         if tie_break_cols:
             order += [F.col(colutils.quote(c)).asc() for c in self._resolve(tie_break_cols)]
-        w = Window.partitionBy(*[F.col(colutils.quote(g)) for g in gcols]).orderBy(*order)
-        tmp = "__omigo_rn__"
-        return self._wrap(
-            self._df.withColumn(tmp, F.row_number().over(w)).filter(F.col(tmp) <= k).drop(tmp))
+        return self._wrap(_top_k_per_group(self._df, gcols, order, k))
 
     def split_batches(self, num_batches: int, cols=None, seed: int = 0,
                       materialize: bool = False) -> list["OmigoDF"]:
@@ -1835,15 +1861,9 @@ class OmigoDF(CompatMixin):
         keyed split is re-execution-stable as long as the upstream is
         deterministic, the same assumption every hash-keyed operator
         here makes."""
-        if cols is not None:
-            gcols = self._resolve(cols)
-            key = F.concat_ws("\t", *[
-                F.coalesce(F.col(colutils.quote(c)).cast("string"), F.lit(""))
-                for c in gcols])
-            bucket = F.pmod(abs64(F.xxhash64(key, F.lit(seed))), F.lit(num_batches))
-        else:
-            bucket = F.pmod(abs64(F.xxhash64(F.monotonically_increasing_id(), F.lit(seed))),
-                            F.lit(num_batches))
+        key = (_row_key(self._resolve(cols)) if cols is not None
+               else "monotonically_increasing_id()")
+        bucket = _bucket(key, portable=False, salt=seed, n=num_batches)
         tmp = "__omigo_bucket__"
         tagged = self._df.withColumn(tmp, bucket)
         if materialize or cols is None:
@@ -1859,13 +1879,9 @@ class OmigoDF(CompatMixin):
         reproducible across runs/engines (DuckDB oracle checks it
         exactly) and stable per key when the corpus regrows. Map-side,
         no shuffle."""
-        from ..operators.text import hash_spark
         gcols = self._resolve(key_cols)
         self._resolve(weight_col)
-        key = "concat_ws('\\t', " + ", ".join(
-            f"coalesce(CAST({colutils.quote(c)} AS STRING), '')"
-            for c in gcols) + f", '{seed}')"
-        u = F.pmod(F.expr(hash_spark(key)), F.lit(1000000)) / F.lit(1000000.0)
+        u = _bucket(_row_key(gcols, seed)) / F.lit(float(_BUCKETS))
         w = F.least(F.greatest(F.col(colutils.quote(weight_col)).try_cast("double"),
                                F.lit(0.0)), F.lit(1.0))
         return self._wrap(self._df.filter(u < w))
@@ -2017,17 +2033,10 @@ class OmigoDF(CompatMixin):
         WindowGroupLimit pushdown, so each map task pre-filters to its
         local top-n per group before the exchange — the shuffle carries
         n rows per group per task, never the corpus."""
-        from ..operators.text import hash_spark
         gcols = self._resolve(group_cols)
         kcols = (self._resolve(key_cols) if key_cols is not None
                  else list(self._df.columns))
-        key = "concat_ws('\\t', " + ", ".join(
-            f"coalesce(CAST({colutils.quote(c)} AS STRING), '')"
-            for c in kcols) + f", '{seed}')"
-        # the key identity; a NULL part reads as ''
-        tie = F.concat_ws("\t", *[
-            F.coalesce(colutils.qcol(c).cast("string"), F.lit(""))
-            for c in kcols])
+        tie = F.expr(_row_key(kcols))  # the key identity
         if check_unique and key_cols is not None and (
                 counts := nonunique_counts(self._df, tie)):
             import warnings
@@ -2036,13 +2045,8 @@ class OmigoDF(CompatMixin):
                 f"identify rows ({counts[0]} rows, {counts[1]} distinct "
                 "keys) — which duplicate-key row survives the cutoff is "
                 "partition-order-dependent", UserWarning, stacklevel=2)
-        u = F.expr(hash_spark(key))
-        w = Window.partitionBy(*[colutils.qcol(g) for g in gcols]).orderBy(
-            u.asc(), tie.asc())
-        return self._wrap(self._df
-                          .withColumn("__rn__", F.row_number().over(w))
-                          .filter(F.col("__rn__") <= n)
-                          .drop("__rn__"))
+        order = [_hash(_row_key(kcols, seed)).asc(), tie.asc()]
+        return self._wrap(_top_k_per_group(self._df, gcols, order, n))
 
     def hash_split(self, key_cols, fractions=None, seed: int = 0,
                    split_col: str = "split") -> "OmigoDF":
@@ -2055,23 +2059,19 @@ class OmigoDF(CompatMixin):
         cumulative threshold over hash(key, seed) mod 1e6. Keys hash with
         the portable md5-polynomial, so the split is reproducible in any
         engine with md5 (the DuckDB oracle checks it exactly)."""
-        from ..operators.text import hash_spark
         gcols = self._resolve(key_cols)
         fracs = list((fractions or
                       {"train": 0.8, "val": 0.1, "test": 0.1}).items())
         total = sum(f for _, f in fracs)
         if not 0.999 <= total <= 1.001:
             raise ValueError(f"hash_split: fractions sum to {total}, want 1")
-        key = "concat_ws('\\t', " + ", ".join(
-            f"coalesce(CAST({colutils.quote(c)} AS STRING), '')"
-            for c in gcols) + f", '{seed}')"
-        bucket = F.pmod(F.expr(hash_spark(key)), F.lit(1000000))
+        bucket = _bucket(_row_key(gcols, seed))
         expr = F.lit(fracs[-1][0])
         acc = 0.0
         branches = []
         for name, frac in fracs[:-1]:
             acc += frac
-            branches.append((int(round(acc * 1000000)), name))
+            branches.append((int(round(acc * _BUCKETS)), name))
         for threshold, name in reversed(branches):
             expr = F.when(bucket < threshold, F.lit(name)).otherwise(expr)
         return self._wrap(self._df.withColumn(split_col, expr))
@@ -2095,20 +2095,14 @@ class OmigoDF(CompatMixin):
         the distinct (group, value) projection; rows join back semi-style.
         Default ordering is the portable md5-polynomial of (value, seed) —
         reproducible cross-engine; ``portable=False`` uses xxhash64."""
-        from ..operators.text import hash_spark
         gcols = self._resolve(grouping_cols)
         self._resolve(col)
         pairs = self._df.select(*map(colutils.qcol, gcols), colutils.qcol(col)).distinct()
-        if portable:
-            pairs = pairs.withColumn("__omigo_h__", F.expr(hash_spark(
-                f"concat_ws('\\t', CAST({colutils.quote(col)} AS STRING), '{seed}')")))
-            order = F.col("__omigo_h__")
-        else:
-            order = abs64(F.xxhash64(colutils.qcol(col).cast("string"), F.lit(seed)))
-        w = Window.partitionBy(*map(colutils.qcol, gcols)).orderBy(order, colutils.qcol(col))
-        keep = (pairs.withColumn("__omigo_rk__", F.row_number().over(w))
-                .filter(F.col("__omigo_rk__") <= max_uniq_values)
-                .drop("__omigo_rk__", "__omigo_h__"))
+        # the value key has no coalesce, as in the oracle (sample_uniq_cap)
+        v = f"CAST({colutils.quote(col)} AS STRING)"
+        order = (_hash(f"concat_ws('\\t', {v}, '{seed}')") if portable
+                 else _hash(v, portable=False, salt=seed))
+        keep = _top_k_per_group(pairs, gcols, [order, colutils.qcol(col)], max_uniq_values)
         return self._wrap(self._df.join(keep, on=gcols + [col], how="left_semi"))
 
     def sample_group_by_max_uniq_values_approx(self, grouping_cols, col: str,
@@ -2123,9 +2117,8 @@ class OmigoDF(CompatMixin):
         ratios = (self._df.groupBy(*map(colutils.qcol, gcols))
                   .agg(F.countDistinct(colutils.qcol(col)).alias("__omigo_nu__")))
         joined = self._df.join(ratios, on=gcols, how="left")
-        bucket = F.pmod(abs64(F.xxhash64(colutils.qcol(col).cast("string"),
-                                         F.lit(seed))), F.lit(1000000))
-        keep = bucket < (F.lit(max_uniq_values * 1000000) / F.col("__omigo_nu__"))
+        bucket = _bucket(f"CAST({colutils.quote(col)} AS STRING)", portable=False, salt=seed)
+        keep = bucket < (F.lit(max_uniq_values * _BUCKETS) / F.col("__omigo_nu__"))
         return self._wrap(joined.filter(F.col("__omigo_nu__").isNull() | keep)
                           .drop("__omigo_nu__"))
 
@@ -2139,8 +2132,8 @@ class OmigoDF(CompatMixin):
         vals = self._df.select(colutils.qcol(col)).distinct()
         # distributed top-K (TakeOrderedAndProject: K per partition, merged),
         # not a global row_number window over all distinct values
-        keep = vals.orderBy(abs64(F.xxhash64(colutils.qcol(col).cast("string"),
-                                             F.lit(seed))),
+        keep = vals.orderBy(_hash(f"CAST({colutils.quote(col)} AS STRING)",
+                                  portable=False, salt=seed),
                             colutils.qcol(col)).limit(max_uniq_values)
         return self._wrap(self._df.join(keep, on=[col], how="left_semi"))
 
@@ -2615,24 +2608,25 @@ class OmigoDF(CompatMixin):
     def to_tuples(self, cols=None) -> list[tuple]:
         """(reference dataframe.py:4847-4879) — driver action."""
         use = self._resolve(cols) if cols is not None else list(self._df.columns)
-        return [tuple(r[c] for c in use) for r in self._df.select(*use).collect()]
+        return [tuple(r) for r in self._df.select(*map(colutils.qcol, use)).collect()]
 
     def col_as_array(self, col: str) -> list[str]:
         """(reference dataframe.py:1912-1920)"""
         self._resolve(col)
-        return [("" if r[0] is None else str(r[0])) for r in self._df.select(col).collect()]
+        return [("" if r[0] is None else str(r[0]))
+                for r in self._df.select(colutils.qcol(col)).collect()]
 
     def col_as_array_uniq(self, col: str) -> list[str]:
         self._resolve(col)
         return [("" if r[0] is None else str(r[0]))
-                for r in self._df.select(col).distinct().collect()]
+                for r in self._df.select(colutils.qcol(col)).distinct().collect()]
 
     def col_as_array_uniq_non_empty(self, col: str) -> list[str]:
         return [v for v in self.col_as_array_uniq(col) if v != ""]
 
     def col_as_float_array(self, col: str) -> list[float]:
         self._resolve(col)
-        return [float(r[0]) for r in self._df.select(col).collect()]
+        return [float(r[0]) for r in self._df.select(colutils.qcol(col)).collect()]
 
     def col_as_int_array(self, col: str) -> list[int]:
         return [int(float(v)) for v in self.col_as_array(col)]
@@ -2644,9 +2638,9 @@ class OmigoDF(CompatMixin):
         out = {}
         # NULL renders as '' (the missing marker), matching col_as_array —
         # not the literal string 'None' (r10 review)
-        for r in self._df.select(*(kc + vc)).collect():
-            k = tuple("" if r[c] is None else str(r[c]) for c in kc)
-            v = tuple("" if r[c] is None else str(r[c]) for c in vc)
+        for r in self._df.select(*map(colutils.qcol, kc + vc)).collect():
+            cells = tuple("" if x is None else str(x) for x in r)
+            k, v = cells[:len(kc)], cells[len(kc):]
             out[k[0] if len(k) == 1 else k] = v[0] if len(v) == 1 else v
         return out
 
@@ -2654,7 +2648,7 @@ class OmigoDF(CompatMixin):
         """(reference dataframe.py:5383-5393)"""
         if col not in self._df.columns:
             return default
-        row = self._df.select(col).first()
+        row = self._df.select(colutils.qcol(col)).first()
         if row is None or row[0] is None or str(row[0]) == "":
             return default
         return str(row[0])

@@ -18,7 +18,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..core.colutils import qcol, quote
-from ..core.dataframe import OmigoDF
+from ..core.dataframe import OmigoDF, _hash, _row_key
 from ..core.jobs import nonunique_counts
 
 # ------------------------------------------------------------------ shared
@@ -526,18 +526,11 @@ def pack_sequences(odf: OmigoDF, token_col: str, budget: int,
     within-bucket running sum is a window partitioned BY BUCKET. Every
     shuffle is either n_buckets rows or hash-partitioned by bucket —
     nothing single-partition, any corpus size."""
-    from ..core import colutils
-
     tks = odf._resolve([token_col])[0]
     gcols = odf._resolve(key_cols)
     if budget <= 0:
         raise ValueError("pack_sequences: budget must be positive")
-    key = "concat_ws('\\t', " + ", ".join(
-        f"coalesce(CAST({colutils.quote(c)} AS STRING), '')"
-        for c in gcols) + f", '{seed}')"
-    # the key identity; a NULL part reads as ''
-    tie = F.concat_ws("\t", *[
-        F.coalesce(qcol(c).cast("string"), F.lit("")) for c in gcols])
+    tie = F.expr(_row_key(gcols))  # the key identity
     if check_unique and (counts := nonunique_counts(odf.df, tie)):
         import warnings
         warnings.warn(
@@ -546,9 +539,8 @@ def pack_sequences(odf: OmigoDF, token_col: str, budget: int,
             "keys) — duplicate-key rows' relative cumsum order (and so "
             "bin assignment) is partition-order-dependent",
             UserWarning, stacklevel=2)
-    h = F.expr(hash_spark(key))
     d = (odf.df
-         .withColumn("__h__", h)
+         .withColumn("__h__", _hash(_row_key(gcols, seed)))
          .withColumn("__bkt__", F.pmod(F.col("__h__"), F.lit(n_buckets))))
     per_bucket = (d.groupBy("__bkt__")
                   .agg(F.sum(qcol(tks).cast("long")).alias("__btot__")))

@@ -192,29 +192,95 @@ def test_sample_n_per_group_dotted_group_col(spark):
     assert got == picks("gx") and len(got) == 2
 
 
-def test_sample_group_by_max_uniq_values_dotted_cols(spark):
-    """Group and value columns named ``g.x`` and ``v.y`` are plain names in
-    the exact sampler (both orderings), the approximate one and the
-    global distinct-value cap: each keeps the rows the same call keeps
-    on plain names."""
-    rows = [(1, "a"), (1, "b"), (2, "c")]
+# Every sampler that takes column names, called through a name map ``n``
+# (group g, key k, value v, weight w, sort s) on ``_sampler_frame``.
+_SAMPLERS = {
+    "class": lambda d, n: d.sample_class(n["v"], "y", 0.0),
+    "group_by_key": lambda d, n: d.sample_group_by_key([n["g"], n["k"]], 0.5),
+    "group_by_key_xxhash": lambda d, n: d.sample_group_by_key(
+        [n["g"], n["k"]], 0.5, portable=False),
+    "class_by_max_values": lambda d, n: d.sample_class_by_max_values(n["g"], 1),
+    "class_by_min_class_count": lambda d, n: d.sample_class_by_min_class_count(
+        n["g"]),
+    "group_by_topk": lambda d, n: d.sample_group_by_topk(
+        [n["g"]], n["s"], 1, tie_break_cols=[n["k"]]),
+    "group_by_topk_typed": lambda d, n: d.sample_group_by_topk(
+        [n["g"]], n["w"], 1, reverse=False, tie_break_cols=[n["k"]]),
+    "split_batches": lambda d, n: d.split_batches(2, cols=[n["k"]]),
+    "split_batches_uniform": lambda d, n: d.split_batches(2),
+    "weighted": lambda d, n: d.sample_weighted(n["w"], [n["k"]]),
+    "n_per_group": lambda d, n: d.sample_n_per_group([n["g"]], 1,
+                                                     key_cols=[n["k"]]),
+    "hash_split": lambda d, n: d.hash_split([n["k"]]),
+    "group_by_col_value": lambda d, n: d.sample_group_by_col_value(
+        [n["g"]], n["v"], "y", 0.0),
+    "exact": lambda d, n: d.sample_group_by_max_uniq_values_exact(
+        [n["g"]], n["v"], 1),
+    "exact_xxhash": lambda d, n: d.sample_group_by_max_uniq_values_exact(
+        [n["g"]], n["v"], 1, portable=False),
+    "approx": lambda d, n: d.sample_group_by_max_uniq_values_approx(
+        [n["g"]], n["v"], 1),
+    "column": lambda d, n: d.sample_column_by_max_uniq_values(n["v"], 1),
+}
+_PLAIN = {c: c for c in "gkvws"}
 
-    def kept(g, v, call):
-        df = OmigoDF(spark.createDataFrame(rows, f"`{g}` int, `{v}` string"))
-        return sorted(tuple(r) for r in call(df, g, v).df.collect())
 
-    calls = {
-        "exact": lambda d, g, v: d.sample_group_by_max_uniq_values_exact(
-            [g], v, 1),
-        "exact_xxhash": lambda d, g, v: d.sample_group_by_max_uniq_values_exact(
-            [g], v, 1, portable=False),
-        "approx": lambda d, g, v: d.sample_group_by_max_uniq_values_approx(
-            [g], v, 1),
-        "column": lambda d, g, v: d.sample_column_by_max_uniq_values(v, 1),
-    }
-    for name, call in calls.items():
-        got = kept("g.x", "v.y", call)
-        assert got == kept("gx", "vy", call) and got, name
+def _sampler_frame(spark, n):
+    from omigo_data_analytics_spark.core import colutils
+
+    types = dict(g="int", k="string", v="string", w="double", s="string")
+    return OmigoDF(spark.createDataFrame(
+        [(1, "a", "x", 1.0, "3"), (1, "b", "y", 1.0, "1"),
+         (1, "c", "y", 0.0, "2"), (2, "d", "z", 1.0, "5"),
+         (2, "e", "x", 0.5, "4")],
+        ", ".join(f"{colutils.quote(n[c])} {t}" for c, t in types.items())))
+
+
+def test_sampler_family_hostile_names(spark):
+    """Group, key, value, weight and sort columns named ``g.x``, ``k`y``,
+    ``v.y``, ``w`t`` and ``s.o`` are plain names in every sampler: each
+    keeps the rows the same call keeps on plain names."""
+    def kept(n, call):
+        out = call(_sampler_frame(spark, n), n)
+        return [sorted(tuple(r) for r in o.df.collect())
+                for o in (out if isinstance(out, list) else [out])]
+
+    hostile = dict(g="g.x", k="k`y", v="v.y", w="w`t", s="s.o")
+    for name, call in _SAMPLERS.items():
+        got = kept(hostile, call)
+        assert got == kept(_PLAIN, call) and all(got), name
+
+
+def test_sampler_construction_jobs(spark, jobs_in_group):
+    """Two samplers run Spark jobs while they build their frame:
+    sample_class_by_min_class_count reads the minority class count (3
+    jobs), and sample_group_by_topk sniffs a string sort column for
+    all-numeric values (2 jobs; none on a typed one). Every other sampler
+    is lazy. The same at local[2], [4] and [8]."""
+    d = _sampler_frame(spark, _PLAIN)
+    eager = {"class_by_min_class_count": 3, "group_by_topk": 2}
+    for name, call in _SAMPLERS.items():
+        assert jobs_in_group(lambda: call(d, _PLAIN))[1] == eager.get(name, 0), name
+
+
+def test_driver_bridges_hostile_names(spark):
+    """The six driver bridges read ``g.x`` and ``v`y`` as plain names."""
+    from omigo_data_analytics_spark.core import colutils
+
+    def bridges(g, v, f):
+        d = OmigoDF(spark.createDataFrame(
+            [(1, "a", 0.5), (2, None, 1.5)],
+            f"{colutils.quote(g)} int, {colutils.quote(v)} string, "
+            f"{colutils.quote(f)} double"))
+        return [sorted(d.to_tuples([g, v])), sorted(d.col_as_array(v)),
+                sorted(d.col_as_array_uniq(v)), sorted(d.col_as_float_array(f)),
+                d.cols_as_map([g], [v, f]),
+                d.first_value_with_default_if_missing(v, "-")]
+
+    want = [[(1, "a"), (2, None)], ["", "a"], ["", "a"], [0.5, 1.5],
+            {"1": ("a", "0.5"), "2": ("", "1.5")}, "a"]
+    assert bridges("g.x", "v`y", "f.z") == want
+    assert bridges("g", "v", "f") == want
 
 
 def test_sample_n_per_group_mapside_limit(spark, documents):
@@ -314,3 +380,39 @@ def test_reverse_transpose_pinned_values(spark):
     _ = d.reverse_transpose(["g"], "k", ["n"], key_values=["en", "fr"]).df.schema
     jobs_pinned = len(spark.sparkContext.statusTracker().getJobIdsForGroup(None) or []) - len(t0 or [])
     assert jobs_pinned == 0  # schema known without touching the data
+
+
+def test_split_batches_uniform_is_stable_across_actions(spark):
+    """cols=None buckets come from monotonically_increasing_id; without
+    the unconditional checkpoint each returned batch would re-execute the
+    plan with fresh ids and rows could appear in 0 or 2 batches."""
+    df = spark.range(2000).withColumnRenamed("id", "k").repartition(8)
+    batches = OmigoDF(df).split_batches(4)
+    ids = [sorted(r["k"] for r in b.df.collect()) for b in batches]
+    flat = sorted(x for part in ids for x in part)
+    assert flat == list(range(2000))  # every row exactly once
+    # second action sees the identical assignment
+    ids2 = [sorted(r["k"] for r in b.df.collect()) for b in batches]
+    assert ids == ids2
+
+
+def test_sample_group_by_col_value_delegates(spark):
+    df = spark.createDataFrame(
+        [("g", "spam"), ("g", "ham")], "g string, v string")
+    out = OmigoDF(df).sample_group_by_col_value(
+        ["g"], "v", "spam", 0.0, seed=1)
+    assert [r["v"] for r in out.df.collect()] == ["ham"]
+
+
+def test_abs64_min_value_saturates_not_ansi_overflow(spark):
+    """F.abs(Long.MinValue) throws ARITHMETIC_OVERFLOW under ANSI — a
+    2^-64 per-row hazard for every xxhash64 bucket/sort site. abs64
+    saturates MinValue to MaxValue and is identity-abs elsewhere."""
+    from pyspark.sql import functions as F
+
+    from omigo_data_analytics_spark.core.dataframe import abs64
+
+    df = spark.createDataFrame(
+        [(-(1 << 63),), (-7,), (0,), (7,), ((1 << 63) - 1,)], "h long")
+    got = [r["a"] for r in df.select(abs64(F.col("h")).alias("a")).collect()]
+    assert got == [(1 << 63) - 1, 7, 0, 7, (1 << 63) - 1]

@@ -214,6 +214,27 @@ def test_arg_minmax_mapside_topk(spark):
         "no map-side partial window-group limit below the exchange"
 
 
+@pytest.mark.parametrize("call", [
+    lambda d: d.sample_class_by_max_values("lang", 2),
+    lambda d: d.sample_group_by_topk(["lang"], "n_chars", 2),
+    lambda d: d.sample_n_per_group(["lang"], 2, key_cols=["doc_id"]),
+    lambda d: d.sample_group_by_max_uniq_values_exact(["lang"], "source", 1),
+], ids=["class_by_max_values", "group_by_topk", "n_per_group",
+        "max_uniq_values_exact"])
+def test_per_group_rank_samplers_mapside_limit(spark, call):
+    """Every sampler ranking rows ≤ k per group feeds its group exchange
+    from a Partial WindowGroupLimit: each map task ships at most k rows
+    per group, never the whole group."""
+    import re
+
+    from omigo_data_analytics_spark.sources.io import load_testdata
+
+    d = call(load_testdata(spark, SF, "documents"))
+    p = d.df._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"Exchange hashpartitioning\(lang#\d+, \d+\)[^\n]*\n"
+                     r"\W*WindowGroupLimit \[lang#\d+\][^\n]*Partial", p), p
+
+
 def test_plan_shapes_match_golden(spark):
     """Every registry query's physical-plan node counts (Exchange, Sort,
     Window, joins, aggregates, Union, Python evals, CollectMetrics) equal

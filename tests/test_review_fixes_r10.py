@@ -1,7 +1,7 @@
 """Regression tests for the r10 self-review findings over core/dataframe.py:
 ANSI cast edges, NULL-slot key hashing, group_by_key missing-value contract,
-reorder's use_existing_order, split_batches determinism, cols_as_map NULLs,
-normalize's broadcast, and the int(float(x)) convention in cumulative_sum."""
+reorder's use_existing_order, cols_as_map NULLs, normalize's broadcast,
+and the int(float(x)) convention in cumulative_sum."""
 
 from pyspark.sql import functions as F
 
@@ -115,20 +115,6 @@ def test_cols_as_map_null_is_empty_string(spark):
     assert OmigoDF(df).cols_as_map("k", "v") == {"k": ""}
 
 
-def test_split_batches_uniform_is_stable_across_actions(spark):
-    """cols=None buckets come from monotonically_increasing_id; without
-    the unconditional checkpoint each returned batch would re-execute the
-    plan with fresh ids and rows could appear in 0 or 2 batches."""
-    df = spark.range(2000).withColumnRenamed("id", "k").repartition(8)
-    batches = OmigoDF(df).split_batches(4)
-    ids = [sorted(r["k"] for r in b.df.collect()) for b in batches]
-    flat = sorted(x for part in ids for x in part)
-    assert flat == list(range(2000))  # every row exactly once
-    # second action sees the identical assignment
-    ids2 = [sorted(r["k"] for r in b.df.collect()) for b in batches]
-    assert ids == ids2
-
-
 def test_normalize_grouped_no_forced_broadcast(spark):
     """Per-group stats must not be force-broadcast (OOM at high group
     cardinality) — AQE picks broadcast when actually small."""
@@ -140,14 +126,6 @@ def test_normalize_grouped_no_forced_broadcast(spark):
     # the logical plan carries no user ResolvedHint for the grouped join
     assert "UnresolvedHint" not in pre and "broadcast" not in pre.lower()
     assert out.df.count() == ev.df.count()
-
-
-def test_sample_group_by_col_value_delegates(spark):
-    df = spark.createDataFrame(
-        [("g", "spam"), ("g", "ham")], "g string, v string")
-    out = OmigoDF(df).sample_group_by_col_value(
-        ["g"], "v", "spam", 0.0, seed=1)
-    assert [r["v"] for r in out.df.collect()] == ["ham"]
 
 
 def test_profile_handles_hostile_column_names(spark):
@@ -328,20 +306,6 @@ def test_image_features_empty_array_no_ansi_crash(spark):
            MM.image_features(OmigoDF(df)).df.collect()}
     assert abs(out[1] - 0.3) < 1e-9
     assert out[2] is None and out[3] is None
-
-
-def test_abs64_min_value_saturates_not_ansi_overflow(spark):
-    """F.abs(Long.MinValue) throws ARITHMETIC_OVERFLOW under ANSI — a
-    2^-64 per-row hazard for every xxhash64 bucket/sort site. abs64
-    saturates MinValue to MaxValue and is identity-abs elsewhere."""
-    from pyspark.sql import functions as F
-
-    from omigo_data_analytics_spark.core.dataframe import abs64
-
-    df = spark.createDataFrame(
-        [(-(1 << 63),), (-7,), (0,), (7,), ((1 << 63) - 1,)], "h long")
-    got = [r["a"] for r in df.select(abs64(F.col("h")).alias("a")).collect()]
-    assert got == [(1 << 63) - 1, 7, 0, 7, (1 << 63) - 1]
 
 
 def test_asof_join_tiebreak_cols_deterministic(spark):
